@@ -7,7 +7,7 @@ reference binary (show_usage, erigon_extract.c:2595-2611), Spark-side.
     python -m erigon_extract_spark.cli copy -T <in> <out>   # transcode (copy_file, 2047-2100)
     python -m erigon_extract_spark.cli build --fixtures <outdir>   # pipeline -> sorted parquet
     python -m erigon_extract_spark.cli dump <state_history_parquet>  # K5 canonical dump
-    python -m erigon_extract_spark.cli state-at <parquet> --block N [--address hex]
+    python -m erigon_extract_spark.cli state-at <parquet> --block N [--address hex [--slot hex]]
     python -m erigon_extract_spark.cli state-at <merged.dat> --ref-file --block N --address hex [--slot hex]
     python -m erigon_extract_spark.cli ann-build <emb.parquet> <idx> # persisted IVFPQ
     python -m erigon_extract_spark.cli ann-query <idx> <probes.parquet> -k 10
@@ -176,18 +176,29 @@ def _dump(args) -> int:
 def _state_at(args) -> int:
     if args.ref_file:
         return _state_at_ref_file(args)
+    from pyspark.sql import functions as F
+
     from erigon_extract_spark.operators.dump import canonical_dump
-    from erigon_extract_spark.plans.state import account_state_at
+    from erigon_extract_spark.plans.state import account_state_at, storage_state_at
+    from erigon_extract_spark.schemas import STATE_HISTORY
 
     spark = _spark()
     sh = spark.read.parquet(args.store)
     address = bytes.fromhex(args.address) if args.address else None
-    out = account_state_at(sh, block=args.block, address=address)
-    from pyspark.sql import functions as F
-
-    rows = out.withColumn("kind", F.lit(0)).withColumn(
-        "slot", F.lit(None).cast("binary")
-    ).withColumn("value", F.lit(None).cast("binary"))
+    if args.slot is None:
+        rows = account_state_at(sh, block=args.block, address=address)
+        kind = 0
+    else:
+        rows = storage_state_at(
+            sh, block=args.block, address=address, slot=bytes.fromhex(args.slot)
+        )
+        kind = 1
+        if args.incarnation is not None:
+            rows = rows.filter(F.col("incarnation") == args.incarnation)
+    rows = rows.withColumn("kind", F.lit(kind))
+    for f in STATE_HISTORY.fields:  # the other kind's columns, for the dump
+        if f.name not in rows.columns:
+            rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
     for r in canonical_dump(rows).collect():
         print(r["line"])
     return 0
@@ -566,10 +577,11 @@ def main(argv=None) -> int:
                    "answer via O(log N) restart-page binary search "
                    "(no Spark, no full decode)")
     p.add_argument("--slot", default=None,
-                   help="hex storage slot (--ref-file only): storage "
-                   "as-of lookup, incarnation resolved via the account")
+                   help="hex storage slot: storage as-of lookup (on a "
+                   "parquet store, one line per incarnation; with "
+                   "--ref-file, the incarnation is resolved via the account)")
     p.add_argument("--incarnation", type=int, default=None,
-                   help="override the slot lookup's incarnation")
+                   help="the slot lookup's incarnation")
     p.set_defaults(fn=_state_at)
 
     p = sub.add_parser("profile", help="per-column stats of a parquet table")

@@ -41,7 +41,11 @@ surfaces both interpretations.
 
 from __future__ import annotations
 
+import mmap
+import os
 import struct
+import threading
+from collections import OrderedDict
 from collections.abc import Iterable, Iterator
 
 CODE_PAGE_PADDING = 0
@@ -528,7 +532,11 @@ class RefReader:
         any codes have been read", erigon_extract.c:1350-1356; padding is
         exempt so page-boundary slices with padded tails stay decodable).
         """
-        cur = _Cursor(data, start, len(data) if end is None else end)
+        return self._items(_Cursor(data, start, len(data) if end is None else end))
+
+    def _items(self, cur: _Cursor) -> Iterator:
+        """``items`` over a caller-held cursor: after each yield,
+        ``cur.pos`` is the offset just past the yielded item."""
         while cur.pos < cur.end:
             self.bytecode_incarnation = 0
             self._significant_prefix = False
@@ -718,16 +726,29 @@ def page_tasks(file_size: int, page_shift: int = 12,
     return tasks
 
 
+def _page_layout(hdr: dict, end: int) -> tuple[int, int, int, int]:
+    """(page 0 start, page 1 start, page size, page count) of the restart
+    pages below ``end``: page 0 is the region after the header, page i >= 1
+    starts at the i-th aligned page boundary after the header."""
+    header = hdr["header_size"]
+    page = 1 << (hdr["page_shift"] or 12)
+    second = (header // page + 1) * page
+    n = 0 if header >= end else 1 + max(0, -(-(end - second) // page))
+    return header, second, page, n
+
+
+def _page_start(layout: tuple[int, int, int, int], i: int) -> int:
+    header, second, page, _n = layout
+    return header if i == 0 else second + (i - 1) * page
+
+
 def merged_page_starts(hdr: dict, file_size: int) -> list[int]:
     """Byte offsets of the independently-decodable restart pages of a
     merged full-history file, in order: the region after the header, then
     every aligned page boundary up to end_of_states (the same layout
     ``page_tasks`` chunks into scan ranges)."""
-    end = min(file_size, hdr["end_of_states"])
-    page = 1 << (hdr["page_shift"] or 12)
-    first_boundary = ((hdr["header_size"] + page - 1) // page) * page
-    starts = [hdr["header_size"]] + list(range(first_boundary, end, page))
-    return sorted(set(s for s in starts if s < end))
+    layout = _page_layout(hdr, min(file_size, hdr["end_of_states"]))
+    return [_page_start(layout, i) for i in range(layout[3])]
 
 
 def _item_sort_key(it) -> tuple:
@@ -737,6 +758,83 @@ def _item_sort_key(it) -> tuple:
     if it.is_storage:
         return (it.address, 1, it.incarnation, it.slot, it.block)
     return (it.address, 0, 0, b"", it.block)
+
+
+_UNPROBED = object()
+
+
+class _ArchiveReader:
+    """One merged full-history file, opened once: the validated header,
+    an mmap of the file, the page layout, and the first-item key ("fence")
+    of every page probed so far."""
+
+    def __init__(self, path: str, identity: tuple):
+        self.identity = identity
+        size = identity[1]
+        with open(path, "rb") as f:
+            head = f.read(HEADER_SIZE)
+            if len(head) < HEADER_SIZE:
+                raise ValueError(
+                    f"{path}: {len(head)} bytes, shorter than the "
+                    f"{HEADER_SIZE}-byte archive header"
+                )
+            self.hdr = decode_header(head)
+            if self.hdr["end_of_states"] > size:
+                raise ValueError(
+                    f"{path}: truncated archive: header end_of_states "
+                    f"{self.hdr['end_of_states']} is past the file size {size}"
+                )
+            self.data = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+        self.end = self.hdr["end_of_states"]
+        self.layout = _page_layout(self.hdr, self.end)
+        self.n_pages = self.layout[3]
+        self.fences = [_UNPROBED] * self.n_pages
+
+    def page(self, i: int) -> _Cursor:
+        """A cursor over page ``i``'s bytes."""
+        e = _page_start(self.layout, i + 1) if i + 1 < self.n_pages else self.end
+        return _Cursor(self.data, _page_start(self.layout, i), e)
+
+    def fence(self, i: int, stats: dict):
+        """Sort key of page ``i``'s first item (None for an empty page),
+        decoded on first use only."""
+        k = self.fences[i]
+        if k is _UNPROBED:
+            stats["page_probes"] += 1
+            cur = self.page(i)
+            start = cur.pos
+            it = next(RefReader(0)._items(cur), None)
+            stats["bytes_read"] += cur.pos - start
+            k = self.fences[i] = None if it is None else _item_sort_key(it)
+        return k
+
+
+# Open readers by path, least recently used first. Small and fixed: each
+# holds one file descriptor (its mmap's).
+_READERS: OrderedDict[str, _ArchiveReader] = OrderedDict()
+_MAX_READERS = 8
+_READERS_LOCK = threading.Lock()
+
+
+def _reader(path: str, stats: dict) -> _ArchiveReader:
+    """The cached reader of ``path``, reopened when the file's inode, size
+    or mtime changed since it was opened (replaced or rewritten)."""
+    st = os.stat(path)
+    identity = (st.st_ino, st.st_size, st.st_mtime_ns)
+    with _READERS_LOCK:
+        r = _READERS.get(path)
+        if r is not None and r.identity == identity:
+            _READERS.move_to_end(path)
+            return r
+        _READERS.pop(path, None)
+    r = _ArchiveReader(path, identity)
+    stats["bytes_read"] += HEADER_SIZE
+    with _READERS_LOCK:
+        _READERS[path] = r
+        # an evicted reader's mmap closes once no lookup holds it any more
+        while len(_READERS) > _MAX_READERS:
+            _READERS.popitem(last=False)
+    return r
 
 
 def point_lookup(
@@ -753,70 +851,60 @@ def point_lookup(
     time"; the 4 KiB restart pages at erigon_extract.c:802-822 exist
     precisely so a seek can land mid-file and decode).
 
-    Binary search over restart pages: each probe decodes only the FIRST
-    item of one page (pages start with a fresh-state entry by writer
-    construction), narrowing to the single page that contains the
-    greatest key <= (address [, incarnation, slot], block) — the merged
-    file is address-major, so the as-of version of a key is exactly that
-    greatest entry. One final page decodes fully. Total IO:
-    ceil(log2(pages)) + 1 pages, independent of file size.
+    Binary search over restart pages: pages start with a fresh-state entry
+    by writer construction, so each page's first item is its fence. The
+    search narrows to the single page that contains the greatest key <=
+    (address [, incarnation, slot], block) — the merged file is
+    address-major, so the as-of version of a key is exactly that greatest
+    entry — and decodes that page only up to the first key past the
+    target. The file is opened and mmapped once per process (a small
+    cache, revalidated by inode, size and mtime on every call) and fences
+    are remembered once probed, so a cold search decodes the first item of
+    at most ceil(log2(pages)) + 1 pages and a warm one touches at most one
+    page.
 
     Returns ``(item | None, stats)`` — None when the key has no version
-    at or before ``block``. ``stats`` counts the probes so tests (and
-    the CLI) can assert the logarithmic bound rather than trust it.
+    at or before ``block``. ``stats`` counts this call's fence probes
+    (``page_probes``), target pages decoded (``pages_fully_decoded``, 0 or
+    1; the decode stops past the target) and bytes decoded (plus the
+    header when the call opened the file), so tests and the CLI can
+    assert the logarithmic bound rather than trust it. Raises ``ValueError`` for a file shorter
+    than the header, a bad magic, or an end_of_states past the file's end
+    (a truncated archive).
 
-    The engine's own store answers the same query from sorted Parquet +
-    column stats + bloom filters (plans/state.account_state_at); this is
-    the format-fidelity twin for archives living in the reference dialect.
+    The engine's own store answers the same query from sorted Parquet and
+    row-group min/max stats (plans/state.account_state_at); this is the
+    format-fidelity twin for archives living in the reference dialect.
     """
-    import os
-
-    kind = 0 if slot is None else 1
-    size = os.path.getsize(path)
     stats = {"page_probes": 0, "pages_fully_decoded": 0, "bytes_read": 0}
-    with open(path, "rb") as f:
-        hdr = decode_header(f.read(HEADER_SIZE))
-        stats["bytes_read"] += HEADER_SIZE
-        end = min(size, hdr["end_of_states"])
-        starts = merged_page_starts(hdr, size)
-        stats["pages_total"] = len(starts)
-        if not starts:
-            return None, stats
-        target = (address, kind, incarnation if kind else 0, slot or b"", block)
+    r = _reader(path, stats)
+    stats["pages_total"] = r.n_pages
+    kind = 0 if slot is None else 1
+    target = (address, kind, incarnation if kind else 0, slot or b"", block)
 
-        def read_page(i: int) -> bytes:
-            s = starts[i]
-            e = starts[i + 1] if i + 1 < len(starts) else end
-            f.seek(s)
-            blob = f.read(e - s)
-            stats["bytes_read"] += len(blob)
-            return blob
-
-        def first_key(i: int):
-            stats["page_probes"] += 1
-            it = next(RefReader(0).items(read_page(i)), None)
-            return None if it is None else _item_sort_key(it)
-
-        lo, hi, best = 0, len(starts) - 1, None
-        while lo <= hi:
-            mid = (lo + hi) // 2
-            k = first_key(mid)
-            if k is not None and k <= target:
-                best, lo = mid, mid + 1
-            else:
-                hi = mid - 1
-        if best is None:
-            return None, stats
-        stats["pages_fully_decoded"] += 1
-        found = None
-        for it in RefReader(0).items(read_page(best)):
-            k = _item_sort_key(it)
-            if k > target:
-                break
-            found, found_key = it, k
-        if found is None or found_key[:4] != target[:4]:
-            return None, stats  # no version of this key at or before block
-        return found, stats
+    lo, hi, best = 0, r.n_pages - 1, None
+    while lo <= hi:
+        mid = (lo + hi) // 2
+        k = r.fence(mid, stats)
+        if k is not None and k <= target:
+            best, lo = mid, mid + 1
+        else:
+            hi = mid - 1
+    if best is None:
+        return None, stats
+    stats["pages_fully_decoded"] += 1
+    cur = r.page(best)
+    start = cur.pos
+    found = found_key = None
+    for it in RefReader(0)._items(cur):
+        k = _item_sort_key(it)
+        if k > target:
+            break
+        found, found_key = it, k
+    stats["bytes_read"] += cur.pos - start
+    if found is None or found_key[:4] != target[:4]:
+        return None, stats  # no version of this key at or before block
+    return found, stats
 
 
 def read_ref_file_df(spark, path: str, strategy: int = 0,
@@ -834,8 +922,6 @@ def read_ref_file_df(spark, path: str, strategy: int = 0,
     those into one file per 100k-block range, which Spark parallelizes
     across files.
     """
-    import os
-
     import pandas as pd
     from pyspark.sql import functions as F  # noqa: F401
 
@@ -899,8 +985,6 @@ def write_ref_files(df, out_dir: str, strategy: int = 1) -> list[dict]:
     address-major strategy-1 transpose files or block-major strategy-0
     extracts). Returns the written manifest rows (path, items, bytes).
     """
-    import os
-
     import pandas as pd
     from pyspark import TaskContext
 

@@ -9,6 +9,8 @@ property the parallel Spark reader relies on.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from erigon_extract_spark import fixtures as fxmod
@@ -456,3 +458,101 @@ def test_point_lookup_touches_olog_pages(tmp_path):
         assert stats["bytes_read"] <= (stats["page_probes"] + 1) * 4096 + 256
         max_probes = max(max_probes, stats["page_probes"])
     assert max_probes >= 2  # the search actually bisected
+
+
+def _archive(path, items, block_end=121):
+    path.write_bytes(rs.encode_full_history_file(items, 0, block_end))
+    return str(path)
+
+
+def _account_answer(path, item):
+    got, _ = rs.point_lookup(path, item.address, item.block)
+    return None if got is None else got.astuple()
+
+
+@pytest.mark.parametrize(
+    "damage, message",
+    [
+        (lambda blob: blob[: len(blob) - 100], "truncated archive"),
+        (lambda blob: blob[: rs.HEADER_SIZE - 1], "shorter than the 256-byte archive header"),
+        (lambda blob: b"\0" * 8 + blob[8:], "bad header magic"),
+    ],
+    ids=["end_of_states_past_eof", "short_header", "bad_magic"],
+)
+def test_point_lookup_rejects_a_damaged_archive(tmp_path, damage, message):
+    """A damaged archive raises a ValueError naming the defect; it never
+    answers from what is left (a lost tail would otherwise yield an older
+    version or None)."""
+    items = _fixture_items()
+    path = tmp_path / "damaged.dat"
+    path.write_bytes(damage(rs.encode_full_history_file(items, 0, 121)))
+    last = max(items, key=rs._item_sort_key)
+    with pytest.raises(ValueError, match=message):
+        rs.point_lookup(str(path), last.address, 10**9)
+
+
+def _bumped(items):
+    """The same keys with every account nonce changed: new file bytes."""
+    return [
+        rs.AccountItem(i.block, i.address, i.nonce + 5, i.balance, i.incarnation, i.code_hash)
+        if not i.is_storage else i
+        for i in items
+    ]
+
+
+def test_point_lookup_follows_an_archive_replaced_at_its_path(tmp_path):
+    items = _fixture_items()
+    path = _archive(tmp_path / "a.dat", items)
+    probe = [i for i in items if not i.is_storage][-1]
+    assert _account_answer(path, probe) == probe.astuple()
+    os.replace(_archive(tmp_path / "next.dat", _bumped(items)), path)
+    assert _account_answer(path, probe) == _bumped([probe])[0].astuple()
+
+
+def test_point_lookup_follows_an_archive_rewritten_in_place(tmp_path):
+    """The reader cache revalidates on (inode, size, mtime): a rewrite of
+    the same inode that changes the file is seen on the next call, even
+    though the old reader's mapping shows the new bytes under its stale
+    page fences (a new lowest address shifts every item by pages)."""
+    items = _fixture_items()
+    path = _archive(tmp_path / "a.dat", items)
+    probe = [i for i in items if not i.is_storage][-1]
+    assert _account_answer(path, probe) == probe.astuple()
+    inode = os.stat(path).st_ino
+    first = [rs.AccountItem(b, bytes(20), b, b32(b), 0, bytes(32)) for b in range(1, 400)]
+    with open(path, "r+b") as f:
+        f.write(rs.encode_full_history_file(first + _bumped(items), 0, 400))
+    assert os.stat(path).st_ino == inode
+    assert _account_answer(path, probe) == _bumped([probe])[0].astuple()
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc/self/fd"), reason="needs /proc/self/fd")
+def test_point_lookup_keeps_a_fixed_number_of_open_archives(tmp_path):
+    items = _fixture_items()
+    probe = items[0]
+    before = len(os.listdir("/proc/self/fd"))
+    for n in range(3 * rs._MAX_READERS):
+        path = _archive(tmp_path / f"a{n}.dat", items)
+        assert _account_answer(path, probe) == probe.astuple()
+    assert len(rs._READERS) == rs._MAX_READERS
+    assert len(os.listdir("/proc/self/fd")) - before <= rs._MAX_READERS
+
+
+def test_warm_point_lookup_reads_at_most_one_page(tmp_path):
+    """Once a search path's fences are known, a repeated lookup probes no
+    page and decodes part of one page only."""
+    fx = fxmod.generate(seed=7, n_addresses=300, n_blocks=2000, n_body_blocks=10)
+    items = [
+        rs.AccountItem(r[4], r[0], r[5], r[6], r[2], r[7]) if r[1] == 0
+        else rs.StorageItem(r[4], r[0], r[2], r[3], r[8])
+        for r in fxmod.expected_state_history(fx)
+    ]
+    path = _archive(tmp_path / "warm.dat", items, 2001)
+    for it in items[:: max(1, len(items) // 20)]:
+        kw = {"slot": it.slot, "incarnation": it.incarnation} if it.is_storage else {}
+        cold, _ = rs.point_lookup(path, it.address, it.block, **kw)
+        warm, stats = rs.point_lookup(path, it.address, it.block, **kw)
+        assert stats["pages_total"] >= 16, stats
+        assert warm.astuple() == cold.astuple() == it.astuple()
+        assert stats["page_probes"] == 0, stats
+        assert 0 < stats["bytes_read"] <= 4096, stats
