@@ -112,56 +112,30 @@ def _spark():
 
 
 def _build(args) -> int:
-    """Run the flagship pipeline end-to-end and write the sorted store
-    (the reference's full transformation run, erigon_extract.c:2663-2706)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
+    """Run the strict pipeline end-to-end and commit the sorted store with
+    its manifest (the reference's full transformation run,
+    erigon_extract.c:2663-2706). The raw tables carry no SyncStage, so the
+    upper bound is the latest account-changeset block."""
     from erigon_extract_spark import fixture_store
-    from erigon_extract_spark.plans.extract import (
-        decode_account_changesets,
-        decode_storage_changesets,
-        recover_code_hashes,
-        split_plain_state,
+    from erigon_extract_spark.plans.pipeline import (
+        PipelineTables,
+        build_full_history,
+        write_full_history,
     )
-    from erigon_extract_spark.plans.transpose import build_state_history
-    from erigon_extract_spark.schemas import (
-        ACCOUNT_CHANGESETS,
-        PLAIN_CODE_HASH,
-        PLAIN_STATE,
-        STORAGE_CHANGESETS,
-    )
-    from erigon_extract_spark.sources.tables import (
-        write_manifest,
-        write_sorted_parquet,
-    )
+    from erigon_extract_spark.schemas import SYNC_STAGE
+    from erigon_extract_spark.sources.tables import read_table
 
     spark = _spark()
     src = args.fixtures or str(fixture_store.ensure())
-    acs = spark.read.schema(ACCOUNT_CHANGESETS).parquet(
-        f"{src}/account_changesets.parquet"
+    tables = PipelineTables(
+        sync_stage=spark.createDataFrame([], SYNC_STAGE),
+        **{
+            name: read_table(spark, f"{src}/{name}.parquet", name)
+            for name in fixture_store.RAW_TABLES
+        },
     )
-    scs = spark.read.schema(STORAGE_CHANGESETS).parquet(
-        f"{src}/storage_changesets.parquet"
-    )
-    ps = spark.read.schema(PLAIN_STATE).parquet(f"{src}/plain_state.parquet")
-    pch = spark.read.schema(PLAIN_CODE_HASH).parquet(
-        f"{src}/plain_code_hash.parquet"
-    )
-    acct = recover_code_hashes(decode_account_changesets(acs).drop("decode_error"), pch)
-    stor = decode_storage_changesets(scs).drop("decode_error")
-    ps_a, ps_s = split_plain_state(ps)
-    ps_acct = recover_code_hashes(
-        decode_account_changesets(ps_a).drop("decode_error"), pch
-    )
-    ps_stor = decode_storage_changesets(ps_s).drop("decode_error")
-    sh = build_state_history(acct, stor, ps_acct, ps_stor,
-                             num_partitions=args.partitions)
-    write_sorted_parquet(
-        sh, args.out, ["address", "kind", "incarnation", "slot", "block_from"],
-        num_partitions=args.partitions,
-    )
-    manifest = write_manifest(spark.read.parquet(args.out), args.out)
-    print(manifest)
+    sh = build_full_history(spark, tables, num_partitions=args.partitions)
+    print(write_full_history(sh, args.out, num_partitions=args.partitions))
     return 0
 
 

@@ -11,7 +11,7 @@ recovery is a broadcast left join instead of 10^9 point lookups.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from erigon_extract_spark.functions.decode import (
@@ -25,15 +25,15 @@ def decode_account_changesets(
     acs: DataFrame,
     block_start: int | None = None,
     block_end: int | None = None,
-    strict: bool = True,
 ) -> DataFrame:
     """AccountChangeSet(block, address, account_blob) → decoded columns.
 
     Range predicates (reference seek/stop, erigon_extract.c:1537,
     1598-1600) are plain filters — Catalyst pushes them into the scan.
-    Malformed blobs surface in ``decode_error``; with strict=True the
-    caller should assert_empty on the error subset (reference hard-errors,
-    erigon_extract.c:1561-1567).
+    Malformed blobs surface in ``decode_error``, not as an exception; the
+    reference hard-errors (erigon_extract.c:1561-1567), and so does a
+    strict ``plans.pipeline.build_full_history``, which counts the
+    non-null errors on the store write.
     """
     if block_start is not None:
         acs = acs.filter(F.col("block") >= block_start)
@@ -104,9 +104,7 @@ def plain_state_malformed(plain_state: DataFrame) -> DataFrame:
     return plain_state.filter(~F.length("key").isin(20, 28))
 
 
-def recover_code_hashes(
-    accounts: DataFrame, plain_code_hash: DataFrame, strict: bool = True
-) -> DataFrame:
+def recover_code_hashes(accounts: DataFrame, plain_code_hash: DataFrame) -> DataFrame:
     """J1 lookup join: recover code hashes Erigon elided from history rows.
 
     Reference semantics (erigon_extract.c:262-300): when the decoded
@@ -149,10 +147,13 @@ def recover_code_hashes(
     return out
 
 
+def code_hash_inconsistent() -> Column:
+    """True on a row violating the incarnation/code-hash consistency rule
+    (erigon_extract.c:294-300, 840-846): incarnation == 0 requires an
+    all-zero code_hash."""
+    return (F.col("incarnation") == 0) & (F.col("code_hash") != F.lit(ZERO_HASH))
+
+
 def code_hash_inconsistencies(accounts: DataFrame) -> DataFrame:
-    """Violations of the incarnation/code-hash consistency rule
-    (erigon_extract.c:294-300, 840-846): incarnation == 0 requires all-zero
-    code_hash. Use with assert_empty."""
-    return accounts.filter(
-        (F.col("incarnation") == 0) & (F.col("code_hash") != F.lit(ZERO_HASH))
-    )
+    """The rows violating ``code_hash_inconsistent``. Use with assert_empty."""
+    return accounts.filter(code_hash_inconsistent())

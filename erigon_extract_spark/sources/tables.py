@@ -3,7 +3,8 @@
 The reference's "schema system" is hand-written key/value length checks at
 cursor time plus a 256-byte binary header rewritten at job end
 (erigon_extract.c:2266-2288). Spark-natively: explicit read schemas, and a
-JSON manifest sidecar written from real aggregates — which also fixes the
+JSON manifest sidecar whose counts are observed on the store's own write
+job (no re-read, no extra job) — which also fixes the
 reference's header defect where the account count is overwritten by the
 storage count (words[6] assigned twice, erigon_extract.c:2281-2282; noted
 in SURVEY.md K3 as "do not replicate; test for it").
@@ -17,11 +18,15 @@ reference's paged format (reference README.md:37-41) without custom I/O.
 from __future__ import annotations
 
 import json
+import posixpath
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from erigon_extract_spark import schemas as S
+from erigon_extract_spark.plans.transpose import KIND_ACCOUNT, KIND_STORAGE
 
 _SCHEMAS: dict[str, T.StructType] = {
     "sync_stage": S.SYNC_STAGE,
@@ -94,6 +99,7 @@ def write_sorted_parquet(
     max_records_per_file: int = 5_000_000,
     bloom_cols: list[str] | None = None,
     bloom_ndv: int = 1_000_000,
+    counts: Observation | None = None,
 ) -> None:
     """Range-partition by the sort prefix, sort within partitions, write.
 
@@ -108,15 +114,29 @@ def write_sorted_parquet(
     during row-group filtering on equality predicates, so a miss skips
     the group without reading data pages. ``bloom_ndv`` sizes the filter
     (expected distinct values per row group; over-sizing costs footer
-    bytes, under-sizing raises the false-positive rate)."""
+    bytes, under-sizing raises the false-positive rate).
+
+    ``counts``, when given, counts the rows written (per ``kind`` when the
+    frame has that column) in the write job itself; read them with
+    ``observed_counts``. (They travel in the caller's Observation rather
+    than a return value, which a wrapper around this function could
+    drop.) The counter sits after the sort, past the last exchange, so
+    each row passes it exactly once: below a range shuffle the sampling
+    job that picks the range bounds would run it too."""
     if num_partitions:
         df = df.repartitionByRange(num_partitions, *sort_cols)
     else:
         df = df.repartitionByRange(*sort_cols)
-    writer = (
-        df.sortWithinPartitions(*sort_cols)
-        .write.option("maxRecordsPerFile", max_records_per_file)
-    )
+    df = df.sortWithinPartitions(*sort_cols)
+    if counts is not None:
+        counters = [F.count(F.lit(1)).alias("total")]
+        if "kind" in df.columns:
+            counters += [
+                F.count_if(F.col("kind") == k).alias(f"kind_{k}")
+                for k in (KIND_ACCOUNT, KIND_STORAGE)
+            ]
+        df = df.observe(counts, *counters)
+    writer = df.write.option("maxRecordsPerFile", max_records_per_file)
     for c in bloom_cols or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer = writer.option(
@@ -235,37 +255,93 @@ def read_block_range(
     )
 
 
-def write_manifest(df: DataFrame, path: str, extra: dict | None = None) -> dict:
-    """Compute row counts (per kind when present) and write a JSON manifest
-    next to the data. Counts come from real aggregation — one job."""
-    counts: dict[str, int] = {}
-    if "kind" in df.columns:
-        for row in df.groupBy("kind").count().collect():
-            counts[f"kind_{row['kind']}"] = row["count"]
-        counts["total"] = sum(counts.values())
-    else:
-        counts["total"] = df.count()
-    manifest = {"counts": counts, **(extra or {})}
-    sc = df.sparkSession.sparkContext
-    # write via the driver-side Hadoop FS so the manifest lands atomically
-    jvm = sc._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")
-    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())
+def observed_metrics(observation: Observation) -> dict:
+    """The metrics ``observation`` collected, waiting (as
+    ``Observation.get`` does) for the first action on its frame to finish.
+    Empty when no row reached the observer: Spark then reports a row with
+    no fields, which ``Observation.get`` cannot convert."""
+    if observation._jo.getRow().length() == 0:
+        return {}
+    return observation.get
+
+
+def observed_counts(counts: Observation) -> dict[str, int]:
+    """The manifest counts of a ``write_sorted_parquet(..., counts=...)``
+    call: ``kind_<k>`` for each kind present, then ``total``."""
+    metrics = observed_metrics(counts)
+    out = {k: v for k, v in metrics.items() if k != "total" and v}
+    out["total"] = metrics.get("total", 0)
+    return out
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path``, for driver-side file work."""
+    sc = spark.sparkContext
+    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration()), hadoop_path
+
+
+def write_manifest(spark: SparkSession, path: str, counts: dict[str, int]) -> dict:
+    """Write ``{"counts": counts}`` as ``_manifest.json`` in the store
+    directory ``path`` and return it. The counts come from the caller
+    (``observed_counts`` of the store's write): this runs no job."""
+    manifest = {"counts": counts}
+    fs, hadoop_path = _hadoop_path(spark, f"{path}/_manifest.json")
     out = fs.create(hadoop_path, True)
-    out.write(bytearray(json.dumps(manifest, indent=2).encode()))
-    out.close()
+    try:
+        out.write(bytearray(json.dumps(manifest, indent=2).encode()))
+    finally:
+        out.close()
     return manifest
 
 
+def sibling_path(path: str, tag: str) -> str:
+    """A fresh hidden name in ``path``'s directory (Spark's listing skips
+    names starting with '.'): ``.<name>.<tag>-<random>``."""
+    path = path.rstrip("/")
+    name = f".{posixpath.basename(path)}.{tag}-{uuid.uuid4().hex[:12]}"
+    return posixpath.join(posixpath.dirname(path), name)
+
+
+def remove_dir(spark: SparkSession, path: str) -> None:
+    """Delete ``path`` and everything under it, if it exists."""
+    fs, hadoop_path = _hadoop_path(spark, path)
+    fs.delete(hadoop_path, True)
+
+
+def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
+    """Publish directory ``src`` at ``dst`` by rename. A directory already
+    at ``dst`` is renamed aside first and deleted only once ``src`` is in
+    place; if moving ``src`` fails it is renamed back. ``src`` must be a
+    sibling of ``dst`` (``sibling_path``), so that both renames stay on
+    one file system."""
+    fs, src_path = _hadoop_path(spark, src)
+    _, dst_path = _hadoop_path(spark, dst)
+
+    def rename(a, b):
+        if not fs.rename(a, b):
+            raise OSError(f"could not rename {a.toString()} to {b.toString()}")
+
+    old = None
+    if fs.exists(dst_path):
+        old = _hadoop_path(spark, sibling_path(dst, "replaced"))[1]
+        rename(dst_path, old)
+    try:
+        rename(src_path, dst_path)
+    except BaseException:
+        if old is not None:
+            rename(old, dst_path)
+        raise
+    if old is not None:
+        fs.delete(old, True)
+
+
 def read_manifest(spark: SparkSession, path: str) -> dict:
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")
-    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, hadoop_path = _hadoop_path(spark, f"{path}/_manifest.json")
     stream = fs.open(hadoop_path)
     try:
         data = bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
         )
     finally:
         stream.close()

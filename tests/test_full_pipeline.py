@@ -1,4 +1,4 @@
-"""run_full_pipeline orchestration: full + pruned modes, manifest write."""
+"""build_full_history + write_full_history: full and pruned modes, manifest write."""
 
 from __future__ import annotations
 
