@@ -1,9 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""The package's entry contract: ``entry``, ``queries`` and ``oracle_sql``.
 
 ``entry(spark)`` runs the flagship as-of state query at sf0.001;
 ``queries()``/``oracle_sql()`` expose the engine's declared operator surface
 (SURVEY.md §2 + training-data ops) for the DuckDB correctness gate.
 Implementations live in ``erigon_extract_spark.queries``.
+
+The three functions stay as the contract. ``queries()`` is the registry
+of kept code only: retiring a module family removes its registrations and
+their ``oracle_sql()`` entries in the same change, so no entry points at
+deleted code. ``asof_state_at`` (the ``entry`` query) and every query in
+``tests/test_oracle_gate.py``'s ``SUBSET`` stay registered.
 """
 
 from __future__ import annotations

@@ -69,7 +69,6 @@ HEADLINE = [
     "text_top_terms",  # integer-exact TF-IDF keyword extraction
     # --- round-4 additions ---
     "agg_bloom_membership",  # broadcast membership sketch + probe
-    "multimodal_png_scale",  # 2k-image real PNG decode+resize throughput
     # --- round-6 additions ---
     "events_ohlc_hourly",  # single-agg time-bucket OHLC rollup
     "events_interpolate_grid",  # union-and-window grid interpolation
@@ -83,10 +82,8 @@ HEADLINE = [
     "graph_pagerank_web",  # links->host edges->10 integer PR iterations
     # --- round-8 additions ---
     "source_bucketed_join",  # zero-Exchange co-located bucketed SMJ
-    "multimodal_video_frames",  # AVI walk + JPEG frame decode + PNG re-encode
     "corpus_route_by_language",  # lang-id + broadcast policy routing
     # --- round-9 additions ---
-    "multimodal_mp4_frames",  # ISO-BMFF box walk + JPEG frame decode
     "sim_hard_negatives",  # broadcast anchor batch x corpus, label guard
     "stream_band_join_batch",  # stream-stream band join, batch-mode gate
     "sim_mmr_rerank",  # top-N candidates + bounded per-anchor MMR greedy
@@ -264,7 +261,6 @@ def main() -> None:
             "erigon_transpose_scale",
             "dedup_scale",
             "curation_scale",
-            "multimodal_png_scale",
         ):
             try:
                 # min-of-2 (same rationale as the sf1 section): identical-
@@ -290,14 +286,13 @@ def main() -> None:
     # at 10x the data (pyarrow-replicated, key-shifted — tools/make_sf1),
     # ratio'd against the sf0.1 min. Plans are codegen-warm from the
     # loop above, so this measures data scaling, not compilation. The
-    # seven fixture/synthetic-bound queries don't read the sf dir; they
+    # six fixture/synthetic-bound queries don't read the sf dir; they
     # ride along tagged sf_independent (expect ratio ~1) rather than
     # silently padding the section. SPARK_GRAFT_SF1=0 skips.
     SF_INDEPENDENT = {
         "erigon_state_history", "ref_dialect_decode",
         "erigon_transpose_scale", "dedup_scale", "keccak_scale",
-        "curation_scale", "multimodal_png_scale",
-        "multimodal_video_frames",  # fixed 20-doc synthetic AVI fixture
+        "curation_scale",
     }
     # output-bound: the band self-join's pair count is a DATA property
     # (pairs ∝ per-key density x band x rows — operators/rangejoin.py

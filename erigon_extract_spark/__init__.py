@@ -5,7 +5,7 @@ capabilities of the reference ETL (jlokier/erigon-extract): Ethereum state
 history extraction, transpose to address-major order, first-block re-keying,
 as-of state queries — plus the generic analytic operator surface and
 large-scale training-data pipeline operators (dedup, similarity search,
-text analysis, multimodal plumbing).
+text analysis).
 
 Design notes
 ------------

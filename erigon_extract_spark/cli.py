@@ -9,7 +9,10 @@ reference binary (show_usage, erigon_extract.c:2595-2611), Spark-side.
     python -m erigon_extract_spark.cli dump <state_history_parquet>  # K5 canonical dump
     python -m erigon_extract_spark.cli state-at <parquet> --block N [--address hex [--slot hex]]
     python -m erigon_extract_spark.cli state-at <merged.dat> --ref-file --block N --address hex [--slot hex]
+    python -m erigon_extract_spark.cli profile <parquet> [--approx]  # per-column stats
+    python -m erigon_extract_spark.cli compact <src> <dst> [--rows-per-file N] [--sort-by cols]
     python -m erigon_extract_spark.cli ann-build <emb.parquet> <idx> # persisted IVFPQ
+    python -m erigon_extract_spark.cli ann-add <idx> <new.parquet>   # frozen codebooks, append
     python -m erigon_extract_spark.cli ann-query <idx> <probes.parquet> -k 10
     python -m erigon_extract_spark.cli index-build <docs.parquet> <idx>  # inverted text index
     python -m erigon_extract_spark.cli index-query <idx> term1 term2 --mode and
@@ -19,6 +22,9 @@ reference binary (show_usage, erigon_extract.c:2595-2611), Spark-side.
 ``show`` mirrors the reference's output line formats (print_account /
 print_storage / the dim "(set ...)" trace lines, erigon_extract.c:361-424)
 without ANSI color, so dumps diff cleanly against reference output.
+``show -T`` and ``copy -T`` check a merged file's header first (the same
+check as every other merged-layout reader), so a damaged archive raises
+``ValueError`` instead of printing or copying part of it.
 """
 
 from __future__ import annotations
@@ -41,7 +47,7 @@ def _show(args) -> int:
     start = 256 if args.merged else 0
     end = None
     if args.merged:
-        hdr = rs.decode_header(data)
+        hdr = rs.checked_header(data, len(data), args.file)
         start, end = hdr["header_size"], hdr["end_of_states"]
         print(f"(header end_of_states={end} page_shift={hdr['page_shift']} "
               f"blocks={hdr['block_start']}..{hdr['block_end']})")
@@ -85,7 +91,7 @@ def _copy(args) -> int:
     start, end = 0, None
     blocks = None
     if args.merged:
-        hdr = rs.decode_header(data)
+        hdr = rs.checked_header(data, len(data), args.infile)
         start, end = hdr["header_size"], hdr["end_of_states"]
         blocks = (hdr["block_start"], hdr["block_end"])
     items = rs.decode_items(data, strategy=args.strategy, start=start, end=end)
@@ -260,37 +266,6 @@ def _compact(args) -> int:
         sort_cols=args.sort_by.split(",") if args.sort_by else None,
     )
     print(f"compacted {args.src} -> {args.dst} ({n} files)")
-    return 0
-
-
-def _wds_pack(args) -> int:
-    from erigon_extract_spark.session import get_spark
-    from erigon_extract_spark.sources.webdataset import documents_to_shards
-
-    spark = get_spark(app_name="cli-wds-pack")
-    docs = spark.read.parquet(args.parquet)
-    manifest = documents_to_shards(
-        spark, docs, args.out_dir, n_shards=args.shards
-    ).collect()
-    for r in sorted(manifest, key=lambda r: r.shard):
-        print(f"{r.shard}: {r.n_samples} samples, {r.n_bytes} bytes")
-    print(f"packed {sum(r.n_samples for r in manifest)} samples "
-          f"into {len(manifest)} shards at {args.out_dir}")
-    return 0
-
-
-def _media_probe(args) -> int:
-    """Probe a local media file with the REAL kernels (PNG/WAV/GIF
-    native, PIL fallback) — the single-file spot check for the cluster
-    path."""
-    with open(args.file, "rb") as f:
-        payload = f.read()
-    from erigon_extract_spark.operators.multimodal import _real_probe
-
-    w, h, dur = _real_probe(payload)
-    kind = "audio" if w is None else "image"
-    print(f"{args.file}: {kind} bytes={len(payload)} "
-          f"width={w} height={h} duration_ms={dur}")
     return 0
 
 
@@ -570,18 +545,6 @@ def main(argv=None) -> int:
     p.add_argument("--rows-per-file", type=int, default=1_000_000)
     p.add_argument("--sort-by", default=None, help="comma-separated columns")
     p.set_defaults(fn=_compact)
-
-    p = sub.add_parser("wds-pack",
-                       help="pack a documents parquet into WebDataset tars")
-    p.add_argument("parquet")
-    p.add_argument("out_dir")
-    p.add_argument("--shards", type=int, default=4)
-    p.set_defaults(fn=_wds_pack)
-
-    p = sub.add_parser("media-probe",
-                       help="probe one media file with the real kernels")
-    p.add_argument("file")
-    p.set_defaults(fn=_media_probe)
 
     p = sub.add_parser("ann-build",
                        help="build a persisted IVFPQ ANN index")

@@ -465,6 +465,27 @@ def decode_header(data: bytes) -> dict:
     }
 
 
+def checked_header(head: bytes, size: int, source: str = "archive") -> dict:
+    """The header of a merged full-history file of ``size`` bytes that
+    begins with ``head``, after the checks every merged-layout reader makes
+    before it decodes: the file holds a whole header, the magic matches,
+    and end_of_states is not past the file's end (a truncated archive, which
+    would otherwise decode its remaining pages as if they were all).
+    Raises ``ValueError`` naming the defect."""
+    if len(head) < HEADER_SIZE:
+        raise ValueError(
+            f"{source}: {len(head)} bytes, shorter than the "
+            f"{HEADER_SIZE}-byte archive header"
+        )
+    hdr = decode_header(head)
+    if hdr["end_of_states"] > size:
+        raise ValueError(
+            f"{source}: truncated archive: header end_of_states "
+            f"{hdr['end_of_states']} is past the file size {size}"
+        )
+    return hdr
+
+
 class _Cursor:
     __slots__ = ("data", "pos", "end")
 
@@ -699,7 +720,7 @@ def decode_items(data: bytes, strategy: int = 0,
 
 
 def decode_full_history_file(data: bytes) -> tuple[dict, list]:
-    hdr = decode_header(data)
+    hdr = checked_header(data, len(data))
     items = decode_items(
         data, strategy=0, start=hdr["header_size"], end=hdr["end_of_states"]
     )
@@ -713,25 +734,19 @@ def page_tasks(file_size: int, page_shift: int = 12,
     reset all reader state at each page boundary (the writer guarantees no
     entry straddles one), so a 100 TB archive splits into byte-range tasks
     with zero coordination — each Spark task seeks to its range and
-    decodes. The first range starts after the header."""
-    page = 1 << page_shift
-    first_boundary = ((header_size + page - 1) // page) * page
-    starts = [header_size] + list(range(first_boundary, file_size, page))
-    starts = sorted(set(s for s in starts if s < file_size))
-    tasks = []
-    for i in range(0, len(starts), pages_per_task):
-        chunk = starts[i : i + pages_per_task]
-        end = starts[i + pages_per_task] if i + pages_per_task < len(starts) else file_size
-        tasks.append((chunk[0], end))
-    return tasks
+    decodes. The first range starts after the header; each range holds
+    ``pages_per_task`` of the pages ``merged_page_starts`` lists."""
+    starts = _page_starts(_page_layout(header_size, page_shift, file_size))
+    ends = starts[pages_per_task::pages_per_task] + [file_size]
+    return list(zip(starts[::pages_per_task], ends))
 
 
-def _page_layout(hdr: dict, end: int) -> tuple[int, int, int, int]:
+def _page_layout(header: int, page_shift: int,
+                 end: int) -> tuple[int, int, int, int]:
     """(page 0 start, page 1 start, page size, page count) of the restart
     pages below ``end``: page 0 is the region after the header, page i >= 1
     starts at the i-th aligned page boundary after the header."""
-    header = hdr["header_size"]
-    page = 1 << (hdr["page_shift"] or 12)
+    page = 1 << (page_shift or 12)
     second = (header // page + 1) * page
     n = 0 if header >= end else 1 + max(0, -(-(end - second) // page))
     return header, second, page, n
@@ -742,13 +757,17 @@ def _page_start(layout: tuple[int, int, int, int], i: int) -> int:
     return header if i == 0 else second + (i - 1) * page
 
 
+def _page_starts(layout: tuple[int, int, int, int]) -> list[int]:
+    return [_page_start(layout, i) for i in range(layout[3])]
+
+
 def merged_page_starts(hdr: dict, file_size: int) -> list[int]:
     """Byte offsets of the independently-decodable restart pages of a
     merged full-history file, in order: the region after the header, then
     every aligned page boundary up to end_of_states (the same layout
     ``page_tasks`` chunks into scan ranges)."""
-    layout = _page_layout(hdr, min(file_size, hdr["end_of_states"]))
-    return [_page_start(layout, i) for i in range(layout[3])]
+    end = min(file_size, hdr["end_of_states"])
+    return _page_starts(_page_layout(hdr["header_size"], hdr["page_shift"], end))
 
 
 def _item_sort_key(it) -> tuple:
@@ -770,23 +789,13 @@ class _ArchiveReader:
 
     def __init__(self, path: str, identity: tuple):
         self.identity = identity
-        size = identity[1]
         with open(path, "rb") as f:
-            head = f.read(HEADER_SIZE)
-            if len(head) < HEADER_SIZE:
-                raise ValueError(
-                    f"{path}: {len(head)} bytes, shorter than the "
-                    f"{HEADER_SIZE}-byte archive header"
-                )
-            self.hdr = decode_header(head)
-            if self.hdr["end_of_states"] > size:
-                raise ValueError(
-                    f"{path}: truncated archive: header end_of_states "
-                    f"{self.hdr['end_of_states']} is past the file size {size}"
-                )
+            self.hdr = checked_header(f.read(HEADER_SIZE), identity[1], path)
             self.data = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
         self.end = self.hdr["end_of_states"]
-        self.layout = _page_layout(self.hdr, self.end)
+        self.layout = _page_layout(
+            self.hdr["header_size"], self.hdr["page_shift"], self.end
+        )
         self.n_pages = self.layout[3]
         self.fences = [_UNPROBED] * self.n_pages
 
@@ -908,7 +917,7 @@ def point_lookup(
 
 
 def read_ref_file_df(spark, path: str, strategy: int = 0,
-                     paged: bool | None = None, pages_per_task: int = 256):
+                     pages_per_task: int = 256):
     """Decode a reference-dialect file into a DataFrame of unified items
     (is_storage, block, address, nonce, balance, incarnation, code_hash,
     slot, value).
@@ -921,23 +930,21 @@ def read_ref_file_df(spark, path: str, strategy: int = 0,
     and decode in one task per file; at scale the reference itself shards
     those into one file per 100k-block range, which Spark parallelizes
     across files.
+
+    The header magic, or a leading 0 (padding, which the writer emits only
+    at restart-page boundaries, never first), marks a merged file; its
+    header is checked (``checked_header``) before any task is planned.
     """
     import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
 
     size = os.path.getsize(path)
     with open(path, "rb") as f:
-        head = f.read(8)
-    has_header = len(head) == 8 and struct.unpack("<Q", head)[0] == HEADER_MAGIC
-    if paged is None:
-        paged = has_header
-
-    if paged:
-        with open(path, "rb") as f:
-            hdr = decode_header(f.read(HEADER_SIZE))
+        head = f.read(HEADER_SIZE)
+    if head[:1] == b"\0" or head[:8] == struct.pack("<Q", HEADER_MAGIC):
+        hdr = checked_header(head, size, path)
         ranges = page_tasks(
-            min(size, hdr["end_of_states"]),
-            page_shift=hdr["page_shift"] or 12,
+            hdr["end_of_states"],
+            page_shift=hdr["page_shift"],
             header_size=hdr["header_size"],
             pages_per_task=pages_per_task,
         )

@@ -979,52 +979,6 @@ def corpus_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stable_split(kept, "doc_id").select("doc_id", "split")
 
 
-@query(
-    "multimodal_resize",
-    """
-    WITH payload AS (
-      SELECT doc_id, regexp_replace(text, '[^\\x20-\\x7e]', '', 'g') AS s
-      FROM documents
-    ),
-    h AS (
-      SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(
-                   regexp_split_to_array(substring(s, 1, 64), ''),
-                   c -> CAST(unicode(c) AS BIGINT))),
-               (a, x) -> (a * 131 + x) & 2147483647) AS hv
-      FROM payload
-    )
-    SELECT doc_id, 'image/png' AS mime,
-           CAST(224 AS INTEGER) AS target_w, CAST(224 AS INTEGER) AS target_h,
-           '000000E0' || '000000E0' || lpad(to_hex(hv), 8, '0') AS payload_hex
-    FROM h
-    """,
-)
-def multimodal_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-resize plumbing through the real Arrow-batched kernel
-    (payload-in/payload-out mapInPandas): the stubbed pixel op emits
-    dims-header + content digest, which the oracle rebuilds byte-for-byte
-    as hex — so batching, schema, and the digest fold are value-verified;
-    swapping PIL in changes only the inner function."""
-    from erigon_extract_spark.operators.multimodal import resize_images
-
-    docs = _load(spark, sf_dir, "documents")
-    media = docs.select(
-        "doc_id",
-        F.lit("image/png").alias("mime"),
-        F.encode(
-            F.regexp_replace(F.col("text"), r"[^\x20-\x7e]", ""), "utf-8"
-        ).alias("payload"),
-    )
-    out = resize_images(media, target_w=224, target_h=224, fake_decode=True)
-    return out.select(
-        "doc_id", "mime", "target_w", "target_h",
-        F.hex("payload").alias("payload_hex"),
-    )
-
-
 # The murmur3/xxhash64 fast-path variants (minhash_lsh_candidates,
 # simhash_near_pairs) are deliberately NOT registered as gate queries:
 # their hashes have no DuckDB counterpart, so a registry row could only
@@ -4463,98 +4417,6 @@ def window_hopping_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "multimodal_probe",
-    """
-    WITH payload AS (
-      SELECT doc_id, regexp_replace(text, '[^\\x20-\\x7e]', '', 'g') AS s
-      FROM documents
-    ),
-    h AS (
-      SELECT doc_id, length(s) AS n_bytes,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(
-                   regexp_split_to_array(substring(s, 1, 64), ''),
-                   c -> CAST(unicode(c) AS BIGINT))),
-               (a, x) -> (a * 131 + x) & 2147483647) AS hv
-      FROM payload
-    )
-    SELECT doc_id, 'image/png' AS mime, n_bytes,
-           CAST(64 + hv % 1920 AS INTEGER) AS width,
-           CAST(64 + (hv // 256) % 1080 AS INTEGER) AS height,
-           (hv // 65536) % 60000 AS duration_ms
-    FROM h
-    """,
-)
-def multimodal_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal metadata extraction through the REAL mapInPandas decode
-    path (operators/multimodal.py). Payloads are printable-ASCII text bytes,
-    so the stub probe's byte fold is mirrorable as a char-code fold in SQL —
-    the one payload family where the Arrow-batched binary pipeline gets a
-    full value oracle rather than a rows-only check."""
-    from erigon_extract_spark.operators.multimodal import extract_media_metadata
-
-    docs = _load(spark, sf_dir, "documents")
-    media = docs.select(
-        "doc_id",
-        F.lit("image/png").alias("mime"),
-        F.encode(
-            F.regexp_replace(F.col("text"), r"[^\x20-\x7e]", ""), "utf-8"
-        ).alias("payload"),
-    )
-    meta = extract_media_metadata(media, fake_decode=True)
-    return meta.select(
-        "doc_id", "mime", "n_bytes", "width", "height", "duration_ms"
-    )
-
-
-@query(
-    "multimodal_framesample",
-    """
-    WITH payload AS (
-      SELECT doc_id, regexp_replace(text, '[^\\x20-\\x7e]', '', 'g') AS s
-      FROM documents
-    ),
-    h AS (
-      SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(
-                   regexp_split_to_array(substring(s, 1, 64), ''),
-                   c -> CAST(unicode(c) AS BIGINT))),
-               (a, x) -> (a * 131 + x) & 2147483647) AS hv
-      FROM payload
-    ),
-    durations AS (
-      SELECT doc_id, (hv // 65536) % 60000 AS duration_ms FROM h
-      WHERE (hv // 65536) % 60000 > 0
-    )
-    SELECT doc_id, u.frame_ts_ms
-    FROM durations,
-         UNNEST(generate_series(0, CAST(duration_ms AS BIGINT) - 1, 1000))
-           AS u(frame_ts_ms)
-    """,
-)
-def multimodal_framesample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling WORK PLAN through the real metadata path: one row per
-    (doc, frame timestamp) at 1 fps over the probed duration — the
-    explode that turns opaque media into independently-schedulable work
-    items. The oracle re-derives the stub probe's duration fold and the
-    series expansion in SQL."""
-    from erigon_extract_spark.operators.multimodal import frame_sample_plan
-
-    docs = _load(spark, sf_dir, "documents")
-    media = docs.select(
-        "doc_id",
-        F.lit("image/png").alias("mime"),
-        F.encode(
-            F.regexp_replace(F.col("text"), r"[^\x20-\x7e]", ""), "utf-8"
-        ).alias("payload"),
-    )
-    return frame_sample_plan(media, every_ms=1000)
-
-
-@query(
     "sample_stable_split",
     """
     WITH b AS (
@@ -5669,654 +5531,6 @@ def graph_triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "multimodal_audio_features",
-    """
-    WITH s AS (
-      SELECT d.d AS doc_id, i.i AS i,
-             ((i.i * (d.d + 3)) % 256 - 128) * 100 AS x
-      FROM UNNEST(generate_series(0, 49)) AS d(d),
-           UNNEST(generate_series(0, 1599)) AS i(i)
-    ),
-    sgn AS (
-      SELECT doc_id, i,
-             CASE WHEN x > 0 THEN 1 WHEN x < 0 THEN -1 END AS sg
-      FROM s WHERE x != 0
-    ),
-    cross_cnt AS (
-      SELECT doc_id, CAST(COUNT(*) FILTER (WHERE sg != prev) AS BIGINT)
-               AS crossings
-      FROM (SELECT doc_id, sg,
-                   LAG(sg) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-            FROM sgn)
-      GROUP BY doc_id
-    ),
-    agg AS (
-      SELECT doc_id,
-             CAST(SUM(x * x) AS BIGINT) AS ss,
-             CAST(MAX(abs(x)) AS BIGINT) AS mx
-      FROM s GROUP BY doc_id
-    )
-    SELECT a.doc_id,
-           8000 AS sample_rate,
-           CAST(200 AS BIGINT) AS duration_ms,
-           ROUND(sqrt(CAST(ss AS DOUBLE) / 1600.0) / 32768.0, 9) AS rms,
-           ROUND(CAST(mx AS DOUBLE) / 32768.0, 9) AS peak,
-           ROUND(CAST(crossings AS DOUBLE) * 8000.0 / 1600.0, 6)
-             AS zcr_per_s,
-           sqrt(CAST(ss AS DOUBLE) / 1600.0) / 32768.0 < 0.01 AS silent
-    FROM agg a JOIN cross_cnt USING (doc_id)
-    """,
-)
-def multimodal_audio_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL audio kernel under the value hash: 50 deterministic
-    integer-PCM clips are synthesized per executor, encoded to actual WAV
-    bytes (functions/wav.encode_wav), then parsed back and
-    feature-extracted by the real RIFF kernel
-    (operators/multimodal.extract_audio_features) — while the oracle
-    derives RMS/peak/zero-crossing rate relationally from the same sample
-    formula. Hash-matching proves the full byte round trip AND the
-    feature math: sums of squares stay integer-exact (all partial sums <
-    2^53, so numpy's float64 accumulation is exact and order-free), and
-    the only irrational ops (sqrt, one division) are IEEE
-    correctly-rounded on both engines."""
-    import pandas as pd
-
-    def synth(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.wav import encode_wav
-
-        for pdf in batches:
-            i = np.arange(1600, dtype=np.int64)
-            rows = []
-            for d in pdf["id"]:
-                x = (((i * (int(d) + 3)) % 256) - 128) * 100
-                rows.append(
-                    (int(d), bytearray(encode_wav(x.astype("int16"), 8000)))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    from erigon_extract_spark.operators.multimodal import (
-        extract_audio_features,
-    )
-
-    media = spark.range(50).mapInPandas(
-        synth, schema="doc_id long, payload binary"
-    )
-    out = extract_audio_features(media)
-    return out.select(
-        "doc_id",
-        "sample_rate",
-        "duration_ms",
-        "rms",
-        "peak",
-        "zcr_per_s",
-        "silent",
-    )
-
-
-@query(
-    "multimodal_png_roundtrip",
-    """
-    WITH px AS (
-      SELECT d.d AS doc_id, y.y AS y, x.x AS x,
-             (d.d * 37 + y.y * 19 + x.x * 7 + (y.y * x.x) % 11) % 256 AS v
-      FROM UNNEST(generate_series(0, 29)) AS d(d),
-           UNNEST(generate_series(0, 14)) AS y(y),
-           UNNEST(generate_series(0, 14)) AS x(x)
-    ),
-    resized AS (
-      -- 15 -> 5 bilinear sample points land exactly on source pixels
-      -- ((j + 0.5) * 3 - 0.5 = 3j + 1): pure gather, no interpolation
-      SELECT doc_id, v FROM px
-      WHERE y % 3 = 1 AND x % 3 = 1
-    )
-    SELECT doc_id,
-           CAST(SUM(v) AS BIGINT) AS px_sum,
-           CAST(MIN(v) AS BIGINT) AS px_min,
-           CAST(MAX(v) AS BIGINT) AS px_max,
-           CAST(COUNT(*) AS BIGINT) AS n_px
-    FROM resized GROUP BY doc_id
-    """,
-)
-def multimodal_png_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL image kernel under the value hash: 30 deterministic 15x15
-    grayscale images are synthesized per executor, pushed through the
-    actual PNG encoder, DECODER, and bilinear resize (functions/png.py —
-    real zlib deflate round trip, real pixel gather), and reduced to
-    per-image pixel statistics — while the oracle derives the same stats
-    straight from the pixel formula. The 15->5 resize is chosen so every
-    bilinear sample point lands exactly on a source pixel (3j+1), making
-    the resized pixels integer-exact with no rounding-mode dependence;
-    the interpolating case is pytest-pinned instead."""
-    import pandas as pd
-
-    def roundtrip(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.png import (
-            decode_png,
-            encode_png,
-            resize_bilinear,
-        )
-
-        for pdf in batches:
-            yy, xx = np.mgrid[0:15, 0:15]
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                img = (
-                    (d * 37 + yy * 19 + xx * 7 + (yy * xx) % 11) % 256
-                ).astype("uint8")
-                small = resize_bilinear(
-                    decode_png(encode_png(img)), 5, 5
-                )[:, :, 0].astype("int64")
-                rows.append(
-                    (d, int(small.sum()), int(small.min()),
-                     int(small.max()), int(small.size))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "px_sum", "px_min", "px_max", "n_px"],
-            )
-
-    return spark.range(30).mapInPandas(
-        roundtrip,
-        schema="doc_id long, px_sum long, px_min long, px_max long, "
-               "n_px long",
-    )
-
-
-@query(
-    "multimodal_jpeg_roundtrip",
-    """
-    WITH tiles AS (
-      SELECT d.d AS doc_id, ty.ty AS ty, tx.tx AS tx,
-             128 + 2 * ((d.d * 7 + ty.ty * 5 + tx.tx * 3) % 53 - 26) AS v
-      FROM UNNEST(generate_series(0, 29)) AS d(d),
-           UNNEST(generate_series(0, 3)) AS ty(ty),
-           UNNEST(generate_series(0, 3)) AS tx(tx)
-    )
-    SELECT doc_id,
-           CAST(64 * SUM(v) AS BIGINT) AS px_sum,
-           CAST(MIN(v) AS BIGINT) AS px_min,
-           CAST(MAX(v) AS BIGINT) AS px_max,
-           CAST(64 * COUNT(*) AS BIGINT) AS n_px
-    FROM tiles GROUP BY doc_id
-    """,
-)
-def multimodal_jpeg_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL JPEG kernel under the value hash (functions/jpeg.py —
-    actual Huffman entropy coding, DCT, quantization, restart markers):
-    30 deterministic 32x32 grayscale images built from 8x8-constant
-    tiles are encoded and decoded per executor, and reduced to per-image
-    pixel statistics the oracle derives straight from the tile formula.
-
-    Why this is EXACT despite JPEG being lossy: a constant 8x8 block has
-    only a DC coefficient (orthonormal DCT: 8*(v-128)); at quality 50
-    the Annex K luminance DC quantizer is 16, and tile values are even
-    offsets from 128, so 8*(v-128) is divisible by 16 — quantization
-    loses nothing and the IDCT reconstructs v bit-exactly (the float
-    epsilon is ~1e-14, killed by the final round). The tile grid still
-    exercises the full codec: per-block DC prediction with negative
-    diffs, Huffman tables, bit packing with FF-stuffing, and the
-    restart-marker resync path (restart_interval=3 — 16 MCUs per image
-    means five RSTn markers under the hash). Lossy-path fidelity is
-    pytest-pinned by PSNR floors instead (tests/test_jpeg.py)."""
-    import pandas as pd
-
-    def roundtrip(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-        )
-
-        for pdf in batches:
-            ty, tx = np.mgrid[0:4, 0:4]
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                tiles = 128 + 2 * ((d * 7 + ty * 5 + tx * 3) % 53 - 26)
-                img = np.repeat(
-                    np.repeat(tiles, 8, axis=0), 8, axis=1
-                ).astype("uint8")
-                back = decode_jpeg(
-                    encode_jpeg(img, quality=50, restart_interval=3)
-                )[:, :, 0].astype("int64")
-                rows.append(
-                    (d, int(back.sum()), int(back.min()),
-                     int(back.max()), int(back.size))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "px_sum", "px_min", "px_max", "n_px"],
-            )
-
-    return spark.range(30).mapInPandas(
-        roundtrip,
-        schema="doc_id long, px_sum long, px_min long, px_max long, "
-               "n_px long",
-    )
-
-
-# Formula-derived oracle (VERDICT r5 #4; replaces the r4 pinned
-# constant 783592384): PNG is lossless, so the decoded pixels ARE the
-# generator formula, and the 64->32 bilinear resize with
-# align-corners=False samples output centers at 2i+0.5 — exactly the
-# mean of each 2x2 block, rounded half-to-even per channel (np.rint).
-# The oracle recomputes the checksum from that closed form (s = the 2x2
-# block sum; round-half-even of s/4 is the CASE on s % 4), independent
-# of the engine's codec path.
-@query(
-    "multimodal_png_scale",
-    """
-    WITH px AS (
-      SELECT d.d AS d, i.i AS i, j.j AS j, c.c AS c,
-             SUM(CASE c.c
-                   WHEN 0 THEN ((2*i.i + dy.dy) * 3 + (2*j.j + dx.dx) * 5 + d.d) % 256
-                   WHEN 1 THEN ((2*i.i + dy.dy) * 7 + (2*j.j + dx.dx) + d.d * 11) % 256
-                   ELSE        ((2*i.i + dy.dy) + (2*j.j + dx.dx) * 13 + d.d * 2) % 256
-                 END) AS s
-      FROM UNNEST(generate_series(0, 1999)) AS d(d),
-           UNNEST(generate_series(0, 31)) AS i(i),
-           UNNEST(generate_series(0, 31)) AS j(j),
-           UNNEST(generate_series(0, 2)) AS c(c),
-           UNNEST(generate_series(0, 1)) AS dy(dy),
-           UNNEST(generate_series(0, 1)) AS dx(dx)
-      GROUP BY 1, 2, 3, 4
-    )
-    SELECT CAST(2000 AS BIGINT) AS n_images,
-           CAST(SUM(CASE WHEN s % 4 = 3 THEN s // 4 + 1
-                         WHEN s % 4 = 2 THEN s // 4 + (s // 4) % 2
-                         ELSE s // 4 END) AS BIGINT) AS checksum
-    FROM px
-    """,
-)
-def multimodal_png_scale_q(
-    spark: SparkSession, sf_dir: str, scale: int = 1
-) -> DataFrame:
-    """Real-PNG kernel throughput at benchmark volume: 2,000 synthetic
-    64x64 RGB images per run, each taking the full encode -> zlib ->
-    decode -> bilinear-resize-to-32x32 round trip inside the
-    Arrow-batched executor path, reduced to one checksum row. The
-    measured witness that the pure-numpy codec sustains corpus-scale
-    image preprocessing (the fake-decode queries measure plumbing; this
-    measures the kernel). ``scale`` multiplies the image count;
-    bench.py's scale section runs scale=10 (embarrassingly parallel —
-    the curve should be the flattest of the four probes)."""
-    import pandas as pd
-
-    def work(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.png import (
-            decode_png,
-            encode_png,
-            resize_bilinear,
-        )
-
-        for pdf in batches:
-            yy, xx = np.mgrid[0:64, 0:64]
-            total = 0
-            n = 0
-            for d in pdf["id"]:
-                d = int(d)
-                img = np.stack(
-                    [
-                        (yy * 3 + xx * 5 + d) % 256,
-                        (yy * 7 + xx + d * 11) % 256,
-                        (yy + xx * 13 + d * 2) % 256,
-                    ],
-                    axis=2,
-                ).astype("uint8")
-                out = resize_bilinear(decode_png(encode_png(img)), 32, 32)
-                total += int(out.sum())
-                n += 1
-            yield pd.DataFrame({"n_images": [n], "checksum": [total]})
-
-    return (
-        spark.range(2_000 * scale)
-        .repartition(32)
-        .mapInPandas(work, schema="n_images long, checksum long")
-        .groupBy()
-        .agg(
-            F.sum("n_images").alias("n_images"),
-            F.sum("checksum").alias("checksum"),
-        )
-    )
-
-
-@query(
-    "source_webdataset_roundtrip",
-    """
-    SELECT doc_id,
-           'txt' AS ext,
-           CAST(length(coalesce(text, '')) AS BIGINT) AS text_len,
-           lang, source
-    FROM documents
-    """,
-)
-def source_webdataset_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset tar shards under the value hash: the documents table is
-    packed into real tar shards (sources/webdataset.py — executor-side
-    tarfile writers, one shard per partition) and read back through the
-    binaryFile + tarfile path; the reassembled rows must hash-match the
-    original table. Shards are built once per dataset fingerprint in a
-    uid-scoped 0o700 cache (the sim_lsh_index_topk convention)."""
-    import os
-
-    from erigon_extract_spark.sources.webdataset import (
-        documents_to_shards,
-        read_shards,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    out_dir = _cached_artifact(
-        sf_dir, "documents", "wds", "n_shards=4",
-        lambda tmp: documents_to_shards(
-            spark, docs, tmp, n_shards=4
-        ).collect(),
-    )
-    back = read_shards(spark, out_dir)
-    return back.select(
-        F.col("key").cast("long").alias("doc_id"),
-        "ext",
-        F.length(F.decode("payload", "utf-8")).cast("long").alias("text_len"),
-        F.get_json_object("meta", "$.lang").alias("lang"),
-        F.get_json_object("meta", "$.source").alias("source"),
-    )
-
-
-@query(
-    "multimodal_gif_frames",
-    """
-    WITH f AS (
-      -- doc d has 3 frames of 8x8 palette indices (d + fi + y*x) % 4,
-      -- delays 200/300/500ms; ticks every 250ms over [0, 1000):
-      -- tick 0 -> frame 0, 250 -> 1, 500 -> 2, 750 -> 2
-      SELECT d.d AS doc_id, t.k AS frame_idx,
-             CAST(t.k * 250 AS BIGINT) AS frame_ts_ms,
-             CASE t.k WHEN 0 THEN 0 WHEN 1 THEN 1 ELSE 2 END AS fi
-      FROM UNNEST(generate_series(0, 19)) AS d(d),
-           UNNEST(generate_series(0, 3)) AS t(k)
-    ),
-    px AS (
-      SELECT doc_id, frame_idx, frame_ts_ms,
-             -- palette: index i -> gray value i*80; frame pixel sum over
-             -- the 8x8 grid of ((d + fi + y*x) % 4) * 80 * 3 channels
-             (SELECT SUM(((f.doc_id + f.fi + y.y * x.x) % 4) * 80 * 3)
-              FROM UNNEST(generate_series(0, 7)) AS y(y),
-                   UNNEST(generate_series(0, 7)) AS x(x)) AS px_sum
-      FROM f
-    )
-    SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx, frame_ts_ms,
-           CAST(px_sum AS BIGINT) AS px_sum
-    FROM px
-    """,
-)
-def multimodal_gif_frames_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL animation kernel under the value hash: 20 deterministic
-    3-frame animated GIFs are built per executor (palette frames via
-    encode_gif), decoded by the full standard LZW path, timeline-sampled
-    at 250 ms, PNG-decoded back, and reduced to per-frame pixel sums —
-    while the oracle derives the same sums from the index formula. The
-    whole chain (GIF container, LZW, frame composition, timeline
-    selection, PNG round trip) sits under one hash."""
-    import pandas as pd
-
-    from erigon_extract_spark.operators.multimodal import extract_gif_frames
-
-    def synth(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.gif import encode_gif
-
-        pal = np.stack([np.arange(4) * 80] * 3, axis=1).astype("uint8")
-        yy, xx = np.mgrid[0:8, 0:8]
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                frames = [
-                    (delay, ((d + fi + yy * xx) % 4).astype("uint8"))
-                    for fi, delay in enumerate((200, 300, 500))
-                ]
-                rows.append((d, bytearray(encode_gif(frames, pal))))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    def summarize(batches):
-        import numpy as np  # noqa: F401
-
-        from erigon_extract_spark.functions.png import decode_png
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_ts_ms": pdf["frame_ts_ms"],
-                    "px_sum": [
-                        int(decode_png(bytes(p)).astype("int64").sum())
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    media = spark.range(20).mapInPandas(
-        synth, schema="doc_id long, payload binary"
-    )
-    frames = extract_gif_frames(media, every_ms=250)
-    return frames.select(
-        "doc_id", "frame_idx", "frame_ts_ms", "payload"
-    ).mapInPandas(
-        summarize,
-        schema="doc_id long, frame_idx int, frame_ts_ms long, px_sum long",
-    )
-
-
-@query(
-    "multimodal_video_frames",
-    """
-    WITH f AS (
-      -- doc d is a 3-frame MJPEG AVI at 4 fps (250ms/frame); ticks every
-      -- 250ms over [0, 750) hit each frame exactly once
-      SELECT d.d AS doc_id, t.k AS frame_idx,
-             CAST(t.k * 250 AS BIGINT) AS frame_ts_ms
-      FROM UNNEST(generate_series(0, 19)) AS d(d),
-           UNNEST(generate_series(0, 2)) AS t(k)
-    ),
-    px AS (
-      SELECT doc_id, frame_idx, frame_ts_ms,
-             -- 32x32 of 8x8-constant tiles: per-tile value repeated 64x;
-             -- DC-exact at quality 50 so the decoded sum IS the formula
-             (SELECT SUM(64 * (128 + 2 * ((f.doc_id * 7 + f.frame_idx * 11
-                                           + ty.ty * 5 + tx.tx * 3)
-                                          % 53 - 26)))
-              FROM UNNEST(generate_series(0, 3)) AS ty(ty),
-                   UNNEST(generate_series(0, 3)) AS tx(tx)) AS px_sum
-      FROM f
-    )
-    SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx, frame_ts_ms,
-           CAST(px_sum AS BIGINT) AS px_sum
-    FROM px
-    """,
-)
-def multimodal_video_frames_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The video modality under the value hash (VERDICT r7 #8): 20
-    deterministic 3-frame MJPEG AVIs are containerized per executor
-    (functions/avi.py), walked back out, each sampled frame JPEG-decoded
-    (functions/jpeg.py) and PNG re-encoded by
-    operators/multimodal.extract_video_frames, then reduced to per-frame
-    pixel sums the oracle derives straight from the tile formula. The
-    whole chain — RIFF container build/parse, frame timeline, baseline
-    JPEG entropy decode, PNG round trip — sits under one hash. Exactness
-    despite lossy JPEG: the multimodal_jpeg_roundtrip DC-quantization
-    argument (8x8-constant tiles, even offsets from 128, quality 50)."""
-    import pandas as pd
-
-    from erigon_extract_spark.operators.multimodal import (
-        extract_video_frames,
-    )
-
-    def synth(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.avi import encode_avi_mjpeg
-        from erigon_extract_spark.functions.jpeg import encode_jpeg
-
-        ty, tx = np.mgrid[0:4, 0:4]
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                frames = []
-                for fi in range(3):
-                    tiles = 128 + 2 * (
-                        (d * 7 + fi * 11 + ty * 5 + tx * 3) % 53 - 26
-                    )
-                    img = np.repeat(
-                        np.repeat(tiles, 8, axis=0), 8, axis=1
-                    ).astype("uint8")
-                    frames.append(
-                        encode_jpeg(img, quality=50, restart_interval=3)
-                    )
-                rows.append((d, bytearray(encode_avi_mjpeg(
-                    frames, width=32, height=32, fps=4
-                ))))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    def summarize(batches):
-        from erigon_extract_spark.functions.png import decode_png
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_ts_ms": pdf["frame_ts_ms"],
-                    "px_sum": [
-                        int(decode_png(bytes(p)).astype("int64").sum())
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    media = spark.range(20).mapInPandas(
-        synth, schema="doc_id long, payload binary"
-    )
-    frames = extract_video_frames(media, every_ms=250)
-    return frames.select(
-        "doc_id", "frame_idx", "frame_ts_ms", "payload"
-    ).mapInPandas(
-        summarize,
-        schema="doc_id long, frame_idx int, frame_ts_ms long, px_sum long",
-    )
-
-
-@query(
-    "multimodal_mp4_frames",
-    """
-    WITH f AS (
-      -- doc d is a 3-frame MJPEG MP4 at 4 fps (250ms/frame); ticks every
-      -- 250ms over [0, 750) hit each frame exactly once
-      SELECT d.d AS doc_id, t.k AS frame_idx,
-             CAST(t.k * 250 AS BIGINT) AS frame_ts_ms
-      FROM UNNEST(generate_series(0, 19)) AS d(d),
-           UNNEST(generate_series(0, 2)) AS t(k)
-    ),
-    px AS (
-      SELECT doc_id, frame_idx, frame_ts_ms,
-             -- 32x32 of 8x8-constant tiles: per-tile value repeated 64x;
-             -- DC-exact at quality 50 so the decoded sum IS the formula
-             (SELECT SUM(64 * (128 + 2 * ((f.doc_id * 13 + f.frame_idx * 17
-                                           + ty.ty * 5 + tx.tx * 3)
-                                          % 53 - 26)))
-              FROM UNNEST(generate_series(0, 3)) AS ty(ty),
-                   UNNEST(generate_series(0, 3)) AS tx(tx)) AS px_sum
-      FROM f
-    )
-    SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx, frame_ts_ms,
-           CAST(px_sum AS BIGINT) AS px_sum
-    FROM px
-    """,
-)
-def multimodal_mp4_frames_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ISO-BMFF container under the value hash — the MP4 twin of
-    multimodal_video_frames (VERDICT r8 stretch #8): 20 deterministic
-    3-frame MJPEG MP4s are containerized per executor (functions/mp4.py
-    box tree: ftyp + mdat + moov sample tables), sniffed and walked back
-    out by the SAME operator (extract_video_frames auto-detects the
-    container per payload), each sampled frame JPEG-decoded and PNG
-    re-encoded, then reduced to per-frame pixel sums the oracle derives
-    from the tile formula. Constants differ from the AVI gate (13/17 vs
-    7/11) so the two container paths cannot cross-pass on copied
-    output. Exactness despite lossy JPEG: the multimodal_jpeg_roundtrip
-    DC-quantization argument (8x8-constant tiles, even offsets from
-    128, quality 50)."""
-    import pandas as pd
-
-    from erigon_extract_spark.operators.multimodal import (
-        extract_video_frames,
-    )
-
-    def synth(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.jpeg import encode_jpeg
-        from erigon_extract_spark.functions.mp4 import encode_mp4_mjpeg
-
-        ty, tx = np.mgrid[0:4, 0:4]
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                frames = []
-                for fi in range(3):
-                    tiles = 128 + 2 * (
-                        (d * 13 + fi * 17 + ty * 5 + tx * 3) % 53 - 26
-                    )
-                    img = np.repeat(
-                        np.repeat(tiles, 8, axis=0), 8, axis=1
-                    ).astype("uint8")
-                    frames.append(
-                        encode_jpeg(img, quality=50, restart_interval=3)
-                    )
-                rows.append((d, bytearray(encode_mp4_mjpeg(
-                    frames, width=32, height=32, fps=4
-                ))))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    def summarize(batches):
-        from erigon_extract_spark.functions.png import decode_png
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_ts_ms": pdf["frame_ts_ms"],
-                    "px_sum": [
-                        int(decode_png(bytes(p)).astype("int64").sum())
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    media = spark.range(20).mapInPandas(
-        synth, schema="doc_id long, payload binary"
-    )
-    frames = extract_video_frames(media, every_ms=250)
-    return frames.select(
-        "doc_id", "frame_idx", "frame_ts_ms", "payload"
-    ).mapInPandas(
-        summarize,
-        schema="doc_id long, frame_idx int, frame_ts_ms long, px_sum long",
-    )
-
-
-@query(
     "sim_hard_negatives",
     """
     WITH anchors AS (
@@ -7403,7 +6617,7 @@ def join_salted_skew_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the trained-model math against drift.
 @query(
     "curation_scale",
-    # DERIVED oracle (r6 verdict directive #7, the transpose/PNG template):
+    # DERIVED oracle (r6 verdict directive #7, the transpose template):
     # the synthetic corpus is a pure md5 formula of (id % 10000, i), so
     # DuckDB REBUILDS the whole probe — token generation, classifier
     # weights, bigram familiarity model — instead of riding pinned
@@ -8444,8 +7658,7 @@ def source_csv_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange format every upstream dump eventually arrives in) and
     read back with the explicit contract schema (no inferSchema pass;
     multiLine + escape so embedded quotes/newlines survive). The
-    reassembled rows must hash-match the original table — the same
-    roundtrip discipline as source_webdataset_roundtrip. Shards are
+    reassembled rows must hash-match the original table. Shards are
     built once per dataset fingerprint in the uid-scoped cache."""
     import os
 
@@ -8569,95 +7782,6 @@ def dedup_levenshtein_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return levenshtein_near_pairs(docs, max_dist=16).select(
         "doc_id_a", "doc_id_b", F.col("dist").cast("long").alias("dist")
     )
-
-
-@query(
-    "multimodal_image_ahash",
-    """
-    WITH px AS (
-      SELECT d.d AS d, (y.y // 8) * 8 + (x.x // 8) AS blk,
-             ((y.y * (3 + d.d % 40) + x.x * (5 + 2 * (d.d % 40))
-               + y.y * x.x) % 251
-              + CASE WHEN (y.y * 64 + x.x) % 101 < d.d // 40
-                     THEN d.d // 40 ELSE 0 END) AS v
-      FROM UNNEST(generate_series(0, 199)) AS d(d),
-           UNNEST(generate_series(0, 63)) AS y(y),
-           UNNEST(generate_series(0, 63)) AS x(x)
-    ),
-    blocks AS (SELECT d, blk, SUM(v) AS bs FROM px GROUP BY 1, 2),
-    tot AS (SELECT d, SUM(bs) AS t FROM blocks GROUP BY 1),
-    bands AS (
-      SELECT b.d, b.blk // 16 AS k,
-             CAST(SUM(CASE WHEN b.bs * 64 > t.t
-                           THEN 1 << (b.blk % 16) ELSE 0 END) AS BIGINT)
-               AS bv
-      FROM blocks b JOIN tot t USING (d)
-      GROUP BY 1, 2
-    ),
-    cand AS (
-      SELECT DISTINCT a.d AS img_a, b.d AS img_b
-      FROM bands a JOIN bands b
-        ON a.k = b.k AND a.bv = b.bv AND a.d < b.d
-    ),
-    wide AS (
-      SELECT d,
-             MAX(CASE WHEN k = 0 THEN bv END) AS b0,
-             MAX(CASE WHEN k = 1 THEN bv END) AS b1,
-             MAX(CASE WHEN k = 2 THEN bv END) AS b2,
-             MAX(CASE WHEN k = 3 THEN bv END) AS b3
-      FROM bands GROUP BY d
-    )
-    SELECT c.img_a, c.img_b,
-           CAST(bit_count(xor(wa.b0, wb.b0)) + bit_count(xor(wa.b1, wb.b1))
-              + bit_count(xor(wa.b2, wb.b2)) + bit_count(xor(wa.b3, wb.b3))
-             AS BIGINT) AS hamming
-    FROM cand c
-    JOIN wide wa ON wa.d = c.img_a
-    JOIN wide wb ON wb.d = c.img_b
-    WHERE bit_count(xor(wa.b0, wb.b0)) + bit_count(xor(wa.b1, wb.b1))
-        + bit_count(xor(wa.b2, wb.b2)) + bit_count(xor(wa.b3, wb.b3)) <= 3
-    """,
-)
-def multimodal_image_ahash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate detection by perceptual average-hash over a
-    REAL binary image column (operators/multimodal.ahash_from_png +
-    ahash_near_pairs): 200 synthetic 64x64 grayscale images — 40 base
-    patterns x 5 noise replicas — are PNG-encoded, carried as a binary
-    column, decoded through the real codec (functions/png.py), hashed
-    with the integer-exact aHash (bit = block_sum*64 > grand_sum — no
-    float mean, so the hash is engine-independent), and paired via the
-    16-bit-band pigeonhole blocking at hamming <= 3. Replicas measure
-    <= 3 bits apart, distinct bases >= 17, so the result is exactly
-    the 400 intra-group pairs. Oracle: DuckDB rebuilds the hash from
-    the pixel formula (PNG is lossless, so decoded pixels ARE the
-    formula) and pairs with the same blocking."""
-    import pandas as pd
-
-    from erigon_extract_spark.operators.multimodal import (
-        ahash_from_png,
-        ahash_near_pairs,
-    )
-
-    def synth(batches):
-        import numpy as np
-
-        from erigon_extract_spark.functions.png import encode_png
-
-        for pdf in batches:
-            yy, xx = np.mgrid[0:64, 0:64]
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                g, p = d % 40, d // 40
-                base = (yy * (3 + g) + xx * (5 + 2 * g) + yy * xx) % 251
-                img = (base + np.where((yy * 64 + xx) % 101 < p, p, 0))
-                rows.append((d, encode_png(img.astype("uint8"))))
-            yield pd.DataFrame(rows, columns=["img_id", "png"])
-
-    images = spark.range(200).mapInPandas(
-        synth, schema="img_id long, png binary"
-    )
-    return ahash_near_pairs(ahash_from_png(images), threshold=3)
 
 
 @query(
@@ -11290,7 +10414,7 @@ def corpus_cluster_balanced_sample_q(
 #      hash-verifiable queries from the window)
 # with registration order breaking ties. On the r1-r5 ledger this
 # composes: agg_approx_distinct, then the 13 never-gated oracle-backed
-# r5 additions (JPEG roundtrip, PQ/IVF/IVFPQ + persisted index,
+# r5 additions (a since-retired codec roundtrip, PQ/IVF/IVFPQ + persisted index,
 # SemDeDup, BPE/pack synthetic gates, the golden-value scale probes),
 # then the 3 rows-only surfaces (scalar_keccak256, text_bpe_tokenize,
 # pack_by_bpe_budget — a driver row count is still evidence), then 33

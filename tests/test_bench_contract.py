@@ -39,7 +39,7 @@ def _summary(n_queries, name_len=24):
 
 
 def test_current_headline_set_fits_with_ratios():
-    """The real 61-name headline set must fit the budget without
+    """The real headline set must fit the budget without
     touching the queries map (ratio summaries may be shed but the
     per-query values stay at 3 decimals)."""
     s = {

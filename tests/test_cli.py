@@ -105,36 +105,6 @@ def test_cli_profile_and_compact(spark, sf_dir, tmp_path, capsys):
             == spark.read.parquet(src).count())
 
 
-def test_cli_media_probe_and_wds_pack(tmp_path, capsys, spark):
-    import numpy as np
-
-    from erigon_extract_spark.cli import main
-    from erigon_extract_spark.functions.png import encode_png
-    from erigon_extract_spark.functions.wav import encode_wav
-
-    png = tmp_path / "a.png"
-    png.write_bytes(encode_png(np.zeros((6, 9, 3), dtype=np.uint8)))
-    assert main(["media-probe", str(png)]) == 0
-    out = capsys.readouterr().out
-    assert "image" in out and "width=9" in out and "height=6" in out
-
-    wav = tmp_path / "b.wav"
-    wav.write_bytes(encode_wav(np.zeros(4000, dtype=np.int16), 8000))
-    assert main(["media-probe", str(wav)]) == 0
-    out = capsys.readouterr().out
-    assert "audio" in out and "duration_ms=500" in out
-
-    src = tmp_path / "docs.parquet"
-    spark.createDataFrame(
-        [(1, "hello", "en", "s0"), (2, "welt", "de", "s1")],
-        "doc_id long, text string, lang string, source string",
-    ).write.parquet(str(src))
-    dst = tmp_path / "wds"
-    assert main(["wds-pack", str(src), str(dst), "--shards", "2"]) == 0
-    out = capsys.readouterr().out
-    assert "packed 2 samples into 2 shards" in out
-
-
 def test_cli_ann_build_and_query(spark, sf_dir, tmp_path, capsys):
     """End-to-end persisted-ANN CLI: build an IVFPQ index from the
     embeddings parquet, query it with a small probe set, and check the

@@ -135,43 +135,6 @@ def test_gif_real_decode_of_textbook_compressed_image():
     assert np.array_equal(frames[0][1], pal[idx])
 
 
-def test_extract_gif_frames_end_to_end(spark):
-    """Real animated-GIF frame sampling through Spark: composed frames
-    come back as decodable PNGs with correct timeline sampling."""
-    from erigon_extract_spark.functions.png import decode_png
-    from erigon_extract_spark.operators.multimodal import (
-        extract_gif_frames,
-        extract_media_metadata,
-    )
-
-    pal = np.array(
-        [[0, 0, 0], [255, 0, 0], [0, 255, 0]], dtype=np.uint8
-    )
-    f0 = np.zeros((5, 5), dtype=np.uint8)
-    f1 = np.full((5, 5), 1, dtype=np.uint8)
-    f2 = np.full((5, 5), 2, dtype=np.uint8)
-    gif = encode_gif([(300, f0), (300, f1), (400, f2)], pal)
-    media = spark.createDataFrame(
-        [(1, "image/gif", bytearray(gif)), (2, "image/gif", b"junk")],
-        "doc_id long, mime string, payload binary",
-    )
-    rows = [r for r in extract_gif_frames(media, every_ms=250).collect()
-            if r.doc_id == 1]
-    # timeline: 0-300 f0, 300-600 f1, 600-1000 f2; ticks 0,250,500,750
-    assert [r.frame_ts_ms for r in rows] == [0, 250, 500, 750]
-    expected = [pal[f0], pal[f0], pal[f1], pal[f2]]
-    for r, want in zip(rows, expected):
-        assert np.array_equal(decode_png(bytes(r.payload)), want)
-    bad = [r for r in extract_gif_frames(media, every_ms=250).collect()
-           if r.doc_id == 2]
-    assert len(bad) == 1 and "GifFormatError" in bad[0].decode_error
-    # the generic probe routes GIF natively: real dims AND duration
-    meta = {r.doc_id: r for r in extract_media_metadata(
-        media.filter("doc_id = 1"), fake_decode=False
-    ).collect()}
-    assert (meta[1].width, meta[1].height, meta[1].duration_ms) == (5, 5, 1000)
-
-
 def _minimal_gif(
     *, min_code_byte: int = 2, left: int = 0, top: int = 0,
     iw: int = 3, ih: int = 3, cw: int = 3, ch: int = 3

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
 from erigon_extract_spark.operators.asof import as_of_join, state_at
 from erigon_extract_spark.operators.asserts import (
@@ -17,10 +17,6 @@ from erigon_extract_spark.operators.dedup import (
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash_near_pairs,
-)
-from erigon_extract_spark.operators.multimodal import (
-    extract_media_metadata,
-    frame_sample_plan,
 )
 from erigon_extract_spark.operators.windows import delta_encode, delta_decode
 
@@ -135,51 +131,6 @@ def test_asserts(spark):
     with pytest.raises(AssertionViolation):
         assert_contiguous(gap, "s", ["k"])
     assert_empty(df.filter(F.col("k") > 99))
-
-
-def test_multimodal_metadata_and_frame_plan(spark):
-    media = spark.createDataFrame(
-        [
-            Row(doc_id=1, mime="video/fake", payload=b"\x01\x02\x03" * 40),
-            Row(doc_id=2, mime="image/fake", payload=b"\xff" * 10),
-            Row(doc_id=3, mime="image/fake", payload=None),
-        ]
-    )
-    meta = {r.doc_id: r for r in extract_media_metadata(media).collect()}
-    assert meta[1].n_bytes == 120 and meta[1].width >= 64
-    assert meta[3].decode_error == "null payload"
-    # determinism: same payload → same fake probe
-    again = {r.doc_id: r for r in extract_media_metadata(media).collect()}
-    assert meta[1].width == again[1].width
-    frames = frame_sample_plan(media, every_ms=10_000).collect()
-    assert all(f.frame_ts_ms % 10_000 == 0 for f in frames)
-
-
-def test_multimodal_resize_stub(spark):
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [(1, "image/png", b"payload-bytes-1"), (2, "image/png", None)],
-        "doc_id long, mime string, payload binary",
-    )
-    out = {r.doc_id: r for r in resize_images(media, 224, 224).collect()}
-    ok = out[1]
-    assert (ok.target_w, ok.target_h) == (224, 224)
-    assert ok.resize_error is None
-    # deterministic fake payload: dims header + content digest
-    assert len(ok.payload) == 12
-    assert int.from_bytes(bytes(ok.payload)[:4], "big") == 224
-    bad = out[2]
-    assert bad.payload is None and bad.resize_error == "null payload"
-    # real-decode of an unsupported format quarantines per-row (the
-    # error column names the PIL gap), never fails the whole job
-    real = {r.doc_id: r for r in resize_images(
-        media, fake_decode=False
-    ).collect()}
-    assert real[1].payload is None and "PIL" in real[1].resize_error
-    assert real[2].resize_error == "null payload"
 
 
 def test_lsh_bucket_cap_drops_degenerate_boilerplate(spark):
@@ -876,93 +827,6 @@ def test_triangle_count_reference_and_star_graph(spark):
     )
     (srow,) = triangle_count(star).collect()
     assert srow.n_triangles == 0
-
-
-def test_multimodal_real_png_kernels_end_to_end(spark):
-    """REAL pixels through Spark: PNG payloads (pure numpy+zlib codec)
-    probe and resize natively — no PIL, no fake metadata."""
-    import numpy as np
-
-    from erigon_extract_spark.functions.png import decode_png, encode_png
-    from erigon_extract_spark.operators.multimodal import (
-        extract_media_metadata,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(17)
-    imgs = {
-        1: rng.integers(0, 256, size=(48, 64, 3), dtype=np.uint8),
-        2: rng.integers(0, 256, size=(100, 30, 4), dtype=np.uint8),
-    }
-    media = spark.createDataFrame(
-        [(i, "image/png", bytearray(encode_png(a))) for i, a in imgs.items()],
-        "doc_id long, mime string, payload binary",
-    )
-    meta = {r.doc_id: r for r in extract_media_metadata(
-        media, fake_decode=False
-    ).collect()}
-    assert (meta[1].width, meta[1].height) == (64, 48)
-    assert (meta[2].width, meta[2].height) == (30, 100)
-    out = {r.doc_id: r for r in resize_images(
-        media, 16, 12, fake_decode=False
-    ).collect()}
-    for i, src in imgs.items():
-        resized = decode_png(bytes(out[i].payload))
-        assert resized.shape == (12, 16, src.shape[2])
-        # real interpolation: the resized image of a random source is not
-        # constant, and a constant source resizes to the same constant
-    const = np.full((40, 40, 3), 123, dtype=np.uint8)
-    cmedia = spark.createDataFrame(
-        [(9, "image/png", bytearray(encode_png(const)))],
-        "doc_id long, mime string, payload binary",
-    )
-    (crow,) = resize_images(cmedia, 8, 8, fake_decode=False).collect()
-    assert np.all(decode_png(bytes(crow.payload)) == 123)
-
-
-def test_wav_real_audio_kernel_end_to_end(spark):
-    """REAL waveforms through Spark: WAV payloads (pure numpy RIFF/PCM
-    parser) probe and feature-extract natively — no audio library."""
-    import numpy as np
-
-    from erigon_extract_spark.functions.wav import encode_wav
-    from erigon_extract_spark.operators.multimodal import (
-        extract_audio_features,
-        extract_media_metadata,
-    )
-
-    rate = 8000
-    t = np.arange(rate)  # 1 second
-    sine = (np.sin(2 * np.pi * 440 * t / rate) * 20000).astype(np.int16)
-    silence = np.zeros(rate // 2, dtype=np.int16)
-    stereo = np.stack([sine, -sine], axis=1)
-    media = spark.createDataFrame(
-        [
-            (1, "audio/wav", bytearray(encode_wav(sine, rate))),
-            (2, "audio/wav", bytearray(encode_wav(silence, rate))),
-            (3, "audio/wav", bytearray(encode_wav(stereo, rate))),
-            (4, "audio/wav", b"not a wav"),
-            (5, "audio/wav", None),
-        ],
-        "doc_id long, mime string, payload binary",
-    )
-    out = {r.doc_id: r for r in extract_audio_features(media).collect()}
-    assert out[1].sample_rate == rate and out[1].duration_ms == 1000
-    # 440 Hz sine: ~880 zero crossings/s; RMS of a sine = peak/sqrt(2)
-    assert abs(out[1].zcr_per_s - 880) < 10
-    assert abs(out[1].rms - out[1].peak / 2**0.5) < 0.01
-    assert not out[1].silent
-    assert out[2].silent and out[2].rms == 0.0
-    assert out[3].n_channels == 2
-    # stereo mix of (x, -x) is digital silence — the mono-mix contract
-    assert out[3].silent
-    assert out[4].decode_error and "WavFormatError" in out[4].decode_error
-    assert out[5].decode_error == "null payload"
-    # the generic probe routes RIFF to the native WAV path: real duration
-    meta = {r.doc_id: r for r in extract_media_metadata(
-        media.filter("doc_id = 1"), fake_decode=False
-    ).collect()}
-    assert meta[1].duration_ms == 1000 and meta[1].width is None
 
 
 def test_lsh_recall_report_scurve(spark, sf_dir):

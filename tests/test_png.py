@@ -173,36 +173,6 @@ def test_wav_truncation_and_bad_fmt_fail_loudly():
     assert dur == len(samples) * 1000 // r2
 
 
-def test_image_kernels_quarantine_malformed_payloads(spark):
-    import numpy as np
-
-    from erigon_extract_spark.operators.multimodal import (
-        extract_media_metadata,
-        resize_images,
-    )
-
-    good = encode_png(np.full((8, 8, 3), 5, dtype=np.uint8))
-    bad16 = bytearray(good)
-    bad16[24] = 16
-    media = spark.createDataFrame(
-        [(1, "image/png", bytearray(good)),
-         (2, "image/png", bytes(bad16)),
-         (3, "image/png", good[:30])],
-        "doc_id long, mime string, payload binary",
-    )
-    meta = {r.doc_id: r for r in extract_media_metadata(
-        media, fake_decode=False
-    ).collect()}
-    assert meta[1].decode_error is None and meta[1].width == 8
-    assert "PngFormatError" in meta[2].decode_error
-    assert meta[3].decode_error is not None
-    out = {r.doc_id: r for r in resize_images(
-        media, 4, 4, fake_decode=False
-    ).collect()}
-    assert out[1].resize_error is None and out[1].payload is not None
-    assert out[2].payload is None and "PngFormatError" in out[2].resize_error
-
-
 def test_codecs_never_raise_untyped_errors_on_fuzz():
     """Decoders facing arbitrary bytes must either succeed or raise their
     typed FormatError — a stray struct/index/numpy error would escape the

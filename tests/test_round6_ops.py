@@ -1,5 +1,5 @@
 """Unit tests for the round-6 operators: integer PageRank, exact
-edit-distance dedup, perceptual aHash, and bigram-LM scoring.
+edit-distance dedup, and bigram-LM scoring.
 
 Each pins the operator against an independently computed expectation
 (closed form or plain-python recompute), not against the engine's own
@@ -16,10 +16,6 @@ from pyspark.sql import functions as F
 
 from erigon_extract_spark.operators.dedup import levenshtein_near_pairs
 from erigon_extract_spark.operators.graph import pagerank
-from erigon_extract_spark.operators.multimodal import (
-    ahash_from_png,
-    ahash_near_pairs,
-)
 from erigon_extract_spark.operators.text import bigram_lm_logprob
 
 SCALE = 1_000_000_000
@@ -116,62 +112,6 @@ def test_levenshtein_length_gap_beyond_k_excluded(spark):
         [(1, "en", "a" * 10), (2, "en", "a" * 40)],
     )
     assert levenshtein_near_pairs(docs, max_dist=16).count() == 0
-
-
-# ----------------------------------------------------------------- ahash
-
-
-def _encode_img(arr):
-    from erigon_extract_spark.functions.png import encode_png
-
-    return encode_png(arr.astype("uint8"))
-
-
-def test_ahash_bits_match_numpy_recompute(spark):
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(64, 64), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(_encode_img(img)))], "img_id long, png binary"
-    )
-    row = ahash_from_png(df).collect()[0]
-    a = img.astype(np.int64)
-    total = int(a.sum())
-    bs = a.reshape(8, 8, 8, 8).sum(axis=(1, 3)).reshape(-1)
-    bits = (bs * 64 > total).astype(int)
-    for k in range(4):
-        expect = sum(int(bits[k * 16 + j]) << j for j in range(16))
-        assert getattr(row, f"b{k}") == expect
-
-
-def test_ahash_near_pairs_pigeonhole_and_threshold(spark):
-    # Hand-built band rows: b differs from a in exactly 2 bits of band
-    # 0 (hamming 2 -> kept, bands 1-3 agree so the pigeonhole bucket
-    # join finds it); c differs from a in 1 bit of EVERY band (hamming
-    # 4 AND no agreeing band -> correctly absent either way).
-    bands = spark.createDataFrame(
-        [
-            (1, 0b0000, 7, 9, 11),
-            (2, 0b0011, 7, 9, 11),
-            (3, 0b0001, 6, 8, 10),
-        ],
-        "img_id long, b0 long, b1 long, b2 long, b3 long",
-    )
-    got = {
-        (r.img_a, r.img_b): r.hamming
-        for r in ahash_near_pairs(bands, threshold=3).collect()
-    }
-    assert got == {(1, 2): 2}
-    with pytest.raises(ValueError):
-        ahash_near_pairs(bands, threshold=4)
-
-
-def test_ahash_rejects_wrong_size(spark):
-    img = np.zeros((32, 32), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(_encode_img(img)))], "img_id long, png binary"
-    )
-    with pytest.raises(Exception, match="64x64"):
-        ahash_from_png(df).collect()
 
 
 # ---------------------------------------------------- bigram_lm_logprob

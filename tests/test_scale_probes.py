@@ -18,10 +18,6 @@ def test_scale_parameter_multiplies_work(spark, sf_dir):
     r2 = q.QUERIES["curation_scale"](spark, sf, scale=2).collect()[0]
     assert r1.n_scored == 200_000 and r2.n_scored == 400_000
 
-    p1 = q.QUERIES["multimodal_png_scale"](spark, sf).collect()[0]
-    p2 = q.QUERIES["multimodal_png_scale"](spark, sf, scale=2).collect()[0]
-    assert p1.n_images == 2_000 and p2.n_images == 4_000
-
     t2 = q.QUERIES["erigon_transpose_scale"](spark, sf, scale=2).collect()[0]
     # 2x accounts (4M) + 2x storage (2M), minus the genesis filter (P7):
     # block-0 carries one row per account address (50k) and one per

@@ -8,8 +8,8 @@ with identical shuffle/spill readings — SCALE.md).
 
 Usage: python tools/probe_scale.py <query> [scales...]  (default 1 10 100)
 Generalizes tools/probe_dedup_100x.py to every probe taking ``scale=``
-(dedup_scale, curation_scale, erigon_transpose_scale,
-multimodal_png_scale). Emits one JSON line; per-run detail on stderr.
+(dedup_scale, curation_scale, erigon_transpose_scale). Emits one JSON
+line; per-run detail on stderr.
 """
 
 from __future__ import annotations
