@@ -73,7 +73,6 @@ HEADLINE = [
     "events_ohlc_hourly",  # single-agg time-bucket OHLC rollup
     "events_interpolate_grid",  # union-and-window grid interpolation
     "events_asof_nearest",  # nearest-match as-of merge join
-    "embedding_pca_invariants",  # one-pass covariance + projection
     "dedup_unicode_fold",  # pandas-UDF fold + fingerprint shuffle
     # --- round-7 additions ---
     "text_html_extract",  # zero-shuffle HTML extraction projection
@@ -84,10 +83,7 @@ HEADLINE = [
     "source_bucketed_join",  # zero-Exchange co-located bucketed SMJ
     "corpus_route_by_language",  # lang-id + broadcast policy routing
     # --- round-9 additions ---
-    "sim_hard_negatives",  # broadcast anchor batch x corpus, label guard
     "stream_band_join_batch",  # stream-stream band join, batch-mode gate
-    "sim_mmr_rerank",  # top-N candidates + bounded per-anchor MMR greedy
-    "sim_recall_eval",  # LSH-vs-exact recall@10 evaluation harness
     "source_xml_documents",  # legacy-tokenizer XML ingest (fixture-bound)
     "source_warc_documents",  # WARC shard parse + quarantine (fixture-bound)
     "dedup_recall_eval",  # banded-LSH vs exact-Jaccard recall s-curve
@@ -97,7 +93,6 @@ HEADLINE = [
     "erigon_chained_increments",  # base + 2 appended increments == tip
     "erigon_ref_file_lookup",  # O(log N) page binary search, no Spark scan
     "dedup_cdc_savings",  # map-only CDC chunking + chunk-store dedup report
-    "embedding_kmeans_assign",  # 3 deterministic Lloyd iterations, map-only
     # --- round-11 additions ---
     "dedup_cdc_chunks_clamped",  # LBFS-clamped CDC walk, map-only
     "dedup_connected_clusters",  # CC keep-labels over the jaccard graph

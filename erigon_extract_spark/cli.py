@@ -11,13 +11,6 @@ reference binary (show_usage, erigon_extract.c:2595-2611), Spark-side.
     python -m erigon_extract_spark.cli state-at <merged.dat> --ref-file --block N --address hex [--slot hex]
     python -m erigon_extract_spark.cli profile <parquet> [--approx]  # per-column stats
     python -m erigon_extract_spark.cli compact <src> <dst> [--rows-per-file N] [--sort-by cols]
-    python -m erigon_extract_spark.cli ann-build <emb.parquet> <idx> # persisted IVFPQ
-    python -m erigon_extract_spark.cli ann-add <idx> <new.parquet>   # frozen codebooks, append
-    python -m erigon_extract_spark.cli ann-query <idx> <probes.parquet> -k 10
-    python -m erigon_extract_spark.cli index-build <docs.parquet> <idx>  # inverted text index
-    python -m erigon_extract_spark.cli index-query <idx> term1 term2 --mode and
-    python -m erigon_extract_spark.cli cluster-build <emb.parquet> <model> -k 8
-    python -m erigon_extract_spark.cli cluster-assign <model> <new.parquet> [--out dir]
 
 ``show`` mirrors the reference's output line formats (print_account /
 print_storage / the dim "(set ...)" trace lines, erigon_extract.c:361-424)
@@ -269,221 +262,6 @@ def _compact(args) -> int:
     return 0
 
 
-def _index_build(args) -> int:
-    """Build a persisted inverted text index from a documents parquet:
-    postings partitioned by term-hash bucket + JSON sidecar (the text
-    retrieval sibling of ann-build)."""
-    from erigon_extract_spark.operators.invindex import build_inverted_index
-    from erigon_extract_spark.session import get_spark
-
-    spark = get_spark(app_name="cli-index-build")
-    docs = spark.read.parquet(args.parquet)
-    build_inverted_index(
-        docs,
-        args.out_dir,
-        n_buckets=args.buckets,
-        text_col=args.text_col,
-        id_col=args.id_col,
-    )
-    n = spark.read.parquet(args.out_dir).count()
-    print(f"index at {args.out_dir}: {n} postings, {args.buckets} buckets")
-    return 0
-
-
-def _index_query(args) -> int:
-    """Boolean term search against a persisted inverted index; prints
-    (doc_id, n_terms, total_tf) ordered by total_tf desc."""
-    from erigon_extract_spark.operators.invindex import query_inverted_index
-    from erigon_extract_spark.session import get_spark
-
-    spark = get_spark(app_name="cli-index-query")
-    out = query_inverted_index(
-        spark, args.index, args.terms, mode=args.mode
-    )
-    rows = sorted(out.collect(), key=lambda r: (-r.total_tf, r.doc_id))
-    for r in rows[: args.limit]:
-        print(f"{r.doc_id}\t{r.n_terms}\t{r.total_tf}")
-    print(f"# {len(rows)} docs match ({args.mode} of {args.terms})")
-    return 0
-
-
-def _ann_build(args) -> int:
-    """Build a persisted ANN index (IVFPQ) from an embeddings parquet:
-    cells as partition directories, PQ codes + raw vectors inside, the
-    trained quantizer state in a JSON sidecar."""
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.similarity import (
-        build_ivfpq_index,
-        l2_norm,
-    )
-    from erigon_extract_spark.session import get_spark
-
-    spark = get_spark(app_name="cli-ann-build")
-    emb = spark.read.parquet(args.parquet).select(
-        args.id_col,
-        F.col(args.vec_col).cast("array<double>").alias(args.vec_col),
-    )
-    if args.normalize:
-        emb = emb.select(
-            args.id_col,
-            F.transform(
-                args.vec_col, lambda x: x / l2_norm(F.col(args.vec_col))
-            ).alias(args.vec_col),
-        )
-    build_ivfpq_index(
-        emb, args.out_dir,
-        n_lists=args.lists, m=args.m, n_codes=args.codes,
-        id_col=args.id_col, vec_col=args.vec_col,
-    )
-    import json
-    import os
-
-    with open(os.path.join(args.out_dir, "_ivfpq_meta.json")) as f:
-        meta = json.load(f)
-    n = spark.read.parquet(args.out_dir).count()
-    print(f"indexed {n} vectors into {meta['n_lists']} cells at "
-          f"{args.out_dir} (m={meta['m']}, {meta['n_codes']} codes/"
-          f"subspace, {1 + meta['m']} bytes/vector + refine vectors)")
-    return 0
-
-
-def _ann_add(args) -> int:
-    """Append new vectors to a persisted IVFPQ index without
-    retraining: the sidecar's frozen codebooks assign cells and PQ
-    codes, and only the touched cell directories gain files."""
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.similarity import (
-        add_to_ivfpq_index,
-        l2_norm,
-    )
-    from erigon_extract_spark.session import get_spark
-
-    spark = get_spark(app_name="cli-ann-add")
-    new = spark.read.parquet(args.parquet).select(
-        args.id_col,
-        F.col(args.vec_col).cast("array<double>").alias(args.vec_col),
-    )
-    if args.normalize:
-        new = new.select(
-            args.id_col,
-            F.transform(
-                args.vec_col, lambda x: x / l2_norm(F.col(args.vec_col))
-            ).alias(args.vec_col),
-        )
-    n = add_to_ivfpq_index(spark, args.index, new)
-    total = spark.read.parquet(args.index).count()
-    print(f"added {n} vectors to {args.index} (index now {total} rows)")
-    return 0
-
-
-def _ann_query(args) -> int:
-    """Query a persisted IVFPQ index with probe vectors from a parquet
-    (same column contract as ann-build); prints per-probe top-k."""
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.similarity import (
-        l2_norm,
-        query_ivfpq_index,
-    )
-    from erigon_extract_spark.session import get_spark
-
-    spark = get_spark(app_name="cli-ann-query")
-    probes = spark.read.parquet(args.probes).select(
-        F.col(args.id_col).alias("probe_id"),
-        F.col(args.vec_col).cast("array<double>").alias(args.vec_col),
-    )
-    if args.normalize:
-        probes = probes.select(
-            "probe_id",
-            F.transform(
-                args.vec_col, lambda x: x / l2_norm(F.col(args.vec_col))
-            ).alias(args.vec_col),
-        )
-    out_df = query_ivfpq_index(
-        spark, args.index, probes,
-        k=args.k, n_probe=args.probe_cells, vec_col=args.vec_col,
-        rerank=args.rerank,
-    )
-    id_name = out_df.columns[1]  # (probe_id, <index id col>, score)
-    by_probe: dict = {}
-    for r in out_df.collect():
-        by_probe.setdefault(r.probe_id, []).append(r)
-    for pid in sorted(by_probe):
-        hits = sorted(by_probe[pid], key=lambda r: -r.score)
-        ids = " ".join(f"{r[id_name]}:{r.score:.4f}" for r in hits)
-        print(f"probe {pid}: {ids}")
-    return 0
-
-
-def _cluster_build(args) -> int:
-    """Fit the deterministic k-means on an embeddings parquet, write the
-    assignment table + frozen-centroid sidecar (the cluster sibling of
-    ann-build: train once here, label forever with cluster-assign)."""
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.clustering import (
-        build_kmeans_model,
-    )
-    from erigon_extract_spark.session import get_spark
-
-    spark = get_spark(app_name="cli-cluster-build")
-    emb = spark.read.parquet(args.parquet)
-    centroids = build_kmeans_model(
-        emb, args.out_dir, k=args.k, iters=args.iters,
-        id_col=args.id_col, vec_col=args.vec_col,
-        persist=not args.no_persist,
-    )
-    sizes = {
-        r["cid"]: r["n"]
-        for r in spark.read.parquet(args.out_dir)
-        .groupBy("cid").agg(F.count("*").alias("n")).collect()
-    }
-    total = sum(sizes.values())
-    dist = " ".join(
-        f"{cid}:{sizes.get(cid, 0)}" for cid in range(len(centroids))
-    )
-    print(f"clustered {total} vectors into k={len(centroids)} "
-          f"(iters={args.iters}) at {args.out_dir}; sizes {dist}")
-    return 0
-
-
-def _cluster_assign(args) -> int:
-    """Label a new vector batch against a persisted cluster model's
-    frozen centroids — no retrain, no training-corpus read, one
-    stateless map pass (the k-means analogue of ann-add's
-    frozen-codebook discipline)."""
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.clustering import (
-        assign_with_model,
-        load_kmeans_model,
-    )
-    from erigon_extract_spark.session import get_spark
-
-    spark = get_spark(app_name="cli-cluster-assign")
-    meta = load_kmeans_model(args.model)
-    new = spark.read.parquet(args.parquet)
-    out = assign_with_model(new, args.model)
-    if args.out:
-        out.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
-        print(f"assigned {n} vectors against {args.model} "
-              f"(k={meta['k']}) -> {args.out}")
-    else:
-        sizes = {
-            r["cid"]: r["n"]
-            for r in out.groupBy("cid").agg(F.count("*").alias("n"))
-            .collect()
-        }
-        total = sum(sizes.values())
-        dist = " ".join(f"{c}:{sizes[c]}" for c in sorted(sizes))
-        print(f"assigned {total} vectors against {args.model} "
-              f"(k={meta['k']}); sizes {dist}")
-    return 0
-
-
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(prog="erigon_extract_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -545,84 +323,6 @@ def main(argv=None) -> int:
     p.add_argument("--rows-per-file", type=int, default=1_000_000)
     p.add_argument("--sort-by", default=None, help="comma-separated columns")
     p.set_defaults(fn=_compact)
-
-    p = sub.add_parser("ann-build",
-                       help="build a persisted IVFPQ ANN index")
-    p.add_argument("parquet")
-    p.add_argument("out_dir")
-    p.add_argument("--id-col", default="vec_id")
-    p.add_argument("--vec-col", default="embedding")
-    p.add_argument("--lists", type=int, default=16)
-    p.add_argument("--m", type=int, default=8)
-    p.add_argument("--codes", type=int, default=32)
-    p.add_argument("--normalize", action="store_true",
-                   help="L2-normalize vectors (cosine semantics)")
-    p.set_defaults(fn=_ann_build)
-
-    p = sub.add_parser("ann-add",
-                       help="add vectors to a persisted IVFPQ index "
-                            "(frozen codebooks, append-only)")
-    p.add_argument("index")
-    p.add_argument("parquet", help="parquet of vectors to add")
-    p.add_argument("--id-col", default="vec_id")
-    p.add_argument("--vec-col", default="embedding")
-    p.add_argument("--normalize", action="store_true",
-                   help="L2-normalize vectors (cosine semantics; must "
-                        "match how the index was built)")
-    p.set_defaults(fn=_ann_add)
-
-    p = sub.add_parser("ann-query",
-                       help="top-k probe against a persisted IVFPQ index")
-    p.add_argument("index")
-    p.add_argument("probes", help="parquet of probe vectors")
-    p.add_argument("--id-col", default="vec_id")
-    p.add_argument("--vec-col", default="embedding")
-    p.add_argument("-k", type=int, default=10)
-    p.add_argument("--probe-cells", type=int, default=4)
-    p.add_argument("--rerank", type=int, default=50)
-    p.add_argument("--normalize", action="store_true")
-    p.set_defaults(fn=_ann_query)
-
-    p = sub.add_parser("index-build",
-                       help="build a persisted inverted text index")
-    p.add_argument("parquet")
-    p.add_argument("out_dir")
-    p.add_argument("--id-col", default="doc_id")
-    p.add_argument("--text-col", default="text")
-    p.add_argument("--buckets", type=int, default=64)
-    p.set_defaults(fn=_index_build)
-
-    p = sub.add_parser("index-query",
-                       help="boolean term search against an inverted index")
-    p.add_argument("index")
-    p.add_argument("terms", nargs="+")
-    p.add_argument("--mode", choices=("and", "any"), default="and")
-    p.add_argument("--limit", type=int, default=20)
-    p.set_defaults(fn=_index_query)
-
-    p = sub.add_parser("cluster-build",
-                       help="fit deterministic k-means; persist "
-                            "assignments + centroid sidecar")
-    p.add_argument("parquet")
-    p.add_argument("out_dir")
-    p.add_argument("-k", type=int, default=8)
-    p.add_argument("--iters", type=int, default=3)
-    p.add_argument("--id-col", default="vec_id")
-    p.add_argument("--vec-col", default="embedding")
-    p.add_argument("--no-persist", action="store_true",
-                   help="skip caching the projected corpus across the "
-                        "iteration passes")
-    p.set_defaults(fn=_cluster_build)
-
-    p = sub.add_parser("cluster-assign",
-                       help="label new vectors with a persisted cluster "
-                            "model's frozen centroids")
-    p.add_argument("model", help="cluster-build output directory")
-    p.add_argument("parquet", help="parquet of vectors to label")
-    p.add_argument("--out", default=None,
-                   help="write (id, cid) parquet here instead of "
-                        "printing cluster sizes")
-    p.set_defaults(fn=_cluster_assign)
 
     args = ap.parse_args(argv)
     return args.fn(args)

@@ -471,13 +471,16 @@ def checked_header(head: bytes, size: int, source: str = "archive") -> dict:
     before it decodes: the file holds a whole header, the magic matches,
     and end_of_states is not past the file's end (a truncated archive, which
     would otherwise decode its remaining pages as if they were all).
-    Raises ``ValueError`` naming the defect."""
+    Raises ``ValueError`` naming ``source`` and the defect."""
     if len(head) < HEADER_SIZE:
         raise ValueError(
             f"{source}: {len(head)} bytes, shorter than the "
             f"{HEADER_SIZE}-byte archive header"
         )
-    hdr = decode_header(head)
+    try:
+        hdr = decode_header(head)
+    except ValueError as e:
+        raise ValueError(f"{source}: {e}") from None
     if hdr["end_of_states"] > size:
         raise ValueError(
             f"{source}: truncated archive: header end_of_states "
@@ -931,16 +934,22 @@ def read_ref_file_df(spark, path: str, strategy: int = 0,
     those into one file per 100k-block range, which Spark parallelizes
     across files.
 
-    The header magic, or a leading 0 (padding, which the writer emits only
-    at restart-page boundaries, never first), marks a merged file; its
-    header is checked (``checked_header``) before any task is planned.
+    The header magic, a leading 0 (padding, which the writer emits only
+    at restart-page boundaries, never first), or the writer's header_size
+    and page_shift words (header words 2-3, so a damaged magic is not read
+    as a headerless stream) mark a merged file; its header is checked
+    (``checked_header``) before any task is planned.
     """
     import pandas as pd
 
     size = os.path.getsize(path)
     with open(path, "rb") as f:
         head = f.read(HEADER_SIZE)
-    if head[:1] == b"\0" or head[:8] == struct.pack("<Q", HEADER_MAGIC):
+    if (
+        head[:1] == b"\0"
+        or head[:8] == struct.pack("<Q", HEADER_MAGIC)
+        or head[16:32] == struct.pack("<2Q", HEADER_SIZE, 12)
+    ):
         hdr = checked_header(head, size, path)
         ranges = page_tasks(
             hdr["end_of_states"],

@@ -1,6 +1,5 @@
 from erigon_extract_spark.functions.decode import (  # noqa: F401
     decode_account_blob,
-    decode_storage_blob,
     decode_body_rlp,
 )
 from erigon_extract_spark.functions.u256 import (  # noqa: F401

@@ -1,10 +1,13 @@
 """Binary blob decoders as Arrow-vectorized pandas UDFs.
 
-These are the P1/P2/F7 kernels from SURVEY.md §2.3/§2.9 — the only places
+These are the P1/F7 kernels from SURVEY.md §2.3/§2.9 — the only places
 the engine must drop out of JVM built-ins, because the inputs are ad-hoc
-byte encodings (Erigon's fieldset account blob, the packed storage blob,
-and a partial RLP list header). Each UDF maps a binary column to a struct
-column; everything downstream is plain DataFrame code.
+byte encodings (Erigon's fieldset account blob and a partial RLP list
+header). Each UDF maps a binary column to a struct column; everything
+downstream is plain DataFrame code. The packed storage blob (P2) needs no
+UDF: ``plans.extract.decode_storage_changesets`` decodes it with
+``substring`` + ``lpad``, and ``_decode_storage_one`` here is its Python
+oracle.
 
 Reference formats:
 - account blob: fieldset byte (bit 1=nonce, 2=balance, 4=incarnation,
@@ -88,28 +91,15 @@ def decode_account_blob(blobs: pd.Series) -> pd.DataFrame:
     )
 
 
-_STORAGE_STRUCT = T.StructType(
-    [
-        T.StructField("slot", T.BinaryType(), True),
-        T.StructField("value", T.BinaryType(), True),
-        T.StructField("decode_error", T.StringType(), True),
-    ]
-)
-
-
 def _decode_storage_one(blob: bytes | None):
+    """The storage-blob decode in Python: the oracle for the built-in
+    decode in ``plans.extract.decode_storage_changesets``."""
     if blob is None:
         return (None, None, "null blob")
     n = len(blob)
     if n < 32 or n > 64:
         return (None, None, f"blob len {n} outside 32..64")
     return (blob[:32], blob[32:].rjust(32, b"\x00"), None)
-
-
-@F.pandas_udf(_STORAGE_STRUCT)
-def decode_storage_blob(blobs: pd.Series) -> pd.DataFrame:
-    rows = [_decode_storage_one(b) for b in blobs]
-    return pd.DataFrame(rows, columns=["slot", "value", "decode_error"])
 
 
 _BODY_STRUCT = T.StructType(

@@ -1315,7 +1315,7 @@ def lsh_recall_report(
     """Recall of the banded minhash-LSH candidate set against EXACT
     Jaccard truth, per similarity threshold — the measurement that
     qualifies an (n_hashes, bands) configuration before it dedups a
-    corpus (the dedup twin of similarity.ann_recall_report).
+    corpus.
 
     Truth and candidates share ONE shingle definition (the widened
     ``shingle_n``-gram sets the portable minhash path hashes), so the

@@ -226,7 +226,7 @@ def triangle_count(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Global triangle count over an undirected simple graph — the
-    density/clustering diagnostic for near-duplicate pair graphs (a
+    density diagnostic for near-duplicate pair graphs (a
     dedup candidate set whose triangle density explodes is boilerplate,
     not chance collision).
 

@@ -1,23 +1,15 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Cosine similarity over embedding columns (``array<float>``).
 
-Baseline: brute-force cosine top-k — a crossJoin pruned by Catalyst into a
-broadcast nested loop when the probe side is small, with the dot product as
-a built-in higher-order function (``F.zip_with`` + ``F.aggregate``), fully
+Brute-force cosine top-k — a crossJoin pruned by Catalyst into a broadcast
+nested loop when the probe side is small, with the dot product as a
+built-in higher-order function (``F.zip_with`` + ``F.aggregate``), fully
 JVM-side, no UDF.
-
-Scale path: LSH bucketing via random hyperplanes (signed projections) —
-probe and corpus only join within matching hash buckets, turning the
-quadratic scan into an equi-join. (An IVF variant = k-means coarse
-quantizer would use Spark MLlib KMeans; the hyperplane LSH below needs no
-training pass, which suits one-shot pipelines.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from erigon_extract_spark.oracle_compat import round_half_away
 
 
 def dot(a, b) -> F.Column:
@@ -85,1482 +77,3 @@ def brute_force_topk(
         .filter(F.col("__rn") <= k)
         .drop("__rn")
     )
-
-
-def hard_negatives(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    anchor_id_col: str = "anchor_id",
-) -> DataFrame:
-    """For each anchor vector, the ``k`` most-cosine-similar corpus
-    vectors carrying a DIFFERENT label — contrastive-training hard
-    negatives (the negatives closest to the decision boundary, which
-    carry most of the gradient signal; easy random negatives teach
-    nothing once training warms up).
-
-    anchors: (anchor_id, embedding, label). Same scale shape as
-    brute_force_topk: the anchor batch broadcasts (it is a training
-    batch — small by construction), the corpus streams through map
-    tasks with zero corpus shuffle, and only the per-anchor top-k
-    aggregation exchanges rows. For corpus-scale anchor sets, generate
-    candidates with the sublinear paths first (lsh_bucket_topk /
-    ivf_topk) and re-rank with the same different-label filter — this
-    operator is the exact kernel those compositions share.
-    """
-    a = anchors.select(
-        F.col(anchor_id_col),
-        F.col(vec_col).alias("__avec"),
-        l2_norm(F.col(vec_col)).alias("__anorm"),
-        F.col(label_col).alias("__alabel"),
-    )
-    c = corpus.select(
-        id_col, vec_col, label_col, l2_norm(F.col(vec_col)).alias("__cnorm")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(a))
-        .filter(F.col(label_col) != F.col("__alabel"))
-        .select(
-            anchor_id_col,
-            id_col,
-            F.col(label_col).alias("negative_label"),
-            cosine_prenorm(
-                F.col(vec_col), F.col("__avec"),
-                F.col("__cnorm"), F.col("__anorm"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(anchor_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def mmr_select(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    k: int = 4,
-    n_candidates: int = 12,
-    lam: float = 0.7,
-    mu: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    anchor_id_col: str = "anchor_id",
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Maximal Marginal Relevance diverse selection — retrieve-then-rerank.
-
-    Per anchor, greedily pick ``k`` items maximizing
-    ``lam * relevance - mu * max(similarity to already-selected)``:
-    the classic MMR objective (Carbonell & Goldstein 1998) used for
-    diverse few-shot example selection and dedup-aware retrieval. The
-    relevance-only top-k returns near-duplicates of each other; the
-    penalty term forces coverage of distinct regions.
-
-    Scale shape — the two-stage retrieve-then-rerank pattern:
-
-    1. **Candidate generation is distributed**: the anchor batch
-       broadcasts, the corpus streams map-side with zero shuffle, one
-       per-anchor top-``n_candidates`` exchange (exactly the
-       brute_force_topk plan; swap in lsh_bucket_topk / ivf_topk for
-       sublinear candidate generation — this stage is pluggable).
-    2. **Rerank is per-anchor-bounded**: the greedy loop is inherently
-       sequential in ``k``, but its input is only ``n_candidates`` rows
-       per anchor, so it runs as one Arrow batch per anchor inside
-       applyInPandas — O(k * n_candidates) work on O(n_candidates * d)
-       data, never corpus-sized, never on the driver.
-
-    ``lam`` and ``mu`` are independent weights (NOT forced to sum to 1):
-    ``1 - 0.7`` in binary floating point is 0.30000000000000004, so a
-    derived ``mu`` could never be reproduced exactly by an oracle writing
-    the literal 0.3 — both engines must start from the same literals.
-
-    Anchors sharing the corpus id space are excluded from their own
-    candidate list (``id_col != anchor_id_col``).
-
-    ``candidates`` swaps the generation stage: pass a DataFrame of
-    (anchor_id, id, vec, relevance) from any retrieval path (LSH
-    buckets, IVF cells) and only the rerank runs — the top-
-    ``n_candidates`` cut and the greedy loop are identical either way.
-    """
-    import pandas as pd
-
-    if candidates is None:
-        a = anchors.select(
-            F.col(anchor_id_col),
-            F.col(vec_col).alias("__avec"),
-            l2_norm(F.col(vec_col)).alias("__anorm"),
-        )
-        c = corpus.select(
-            id_col, vec_col, l2_norm(F.col(vec_col)).alias("__cnorm")
-        )
-        candidates = (
-            c.crossJoin(F.broadcast(a))
-            .filter(F.col(id_col) != F.col(anchor_id_col))
-            .select(
-                anchor_id_col,
-                id_col,
-                vec_col,
-                cosine_prenorm(
-                    F.col(vec_col), F.col("__avec"),
-                    F.col("__cnorm"), F.col("__anorm"),
-                ).alias("relevance"),
-            )
-        )
-    w = Window.partitionBy(anchor_id_col).orderBy(
-        F.col("relevance").desc(), F.col(id_col).asc()
-    )
-    cand = (
-        candidates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_candidates)
-        .drop("__rn")
-    )
-
-    out_schema = (
-        f"{anchor_id_col} long, sel_rank int, {id_col} long, "
-        "relevance double, mmr_score double"
-    )
-
-    def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        anchor = pdf[anchor_id_col].iloc[0]
-        ids = pdf[id_col].to_numpy()
-        rel = pdf["relevance"].to_numpy(dtype=np.float64)
-        V = np.array(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-        )
-        norms = np.sqrt((V * V).sum(axis=1))
-        S = (V @ V.T) / np.outer(norms, norms)
-        n = len(ids)
-        selected: list[int] = []
-        remaining = list(range(n))
-        rows = []
-        for step in range(1, min(k, n) + 1):
-            best = None
-            best_key = None
-            for i in remaining:
-                pen = max(S[i, j] for j in selected) if selected else 0.0
-                # Quantize BEFORE the argmax: the engine computes S via
-                # BLAS (V @ V.T) while the SQL oracle folds
-                # list_dot_product sequentially — last-ulp differences
-                # are real, and an argmax decided at full precision can
-                # flip the SELECTION on a near-tie even though both
-                # engines round the reported score to 6 dp. At 9 dp the
-                # engines agree (float64 dot error ~1e-15 on unit
-                # vectors) and genuine ties collapse to the shared
-                # id-asc tie-break on both sides. The quantizer must be
-                # DuckDB ROUND semantics (half-away), not Python round
-                # (half-even): on a score landing exactly on the 0.5e-9
-                # grid the two rules pick different quantized values and
-                # the selection can diverge (tests/test_tie_semantics.py
-                # constructs this). The oracle tail
-                # (queries._MMR_UNROLL_TAIL) rounds with the same rule.
-                score = round_half_away(lam * rel[i] - mu * pen, 9)
-                key = (-score, ids[i])  # score desc, id asc tie-break
-                if best_key is None or key < best_key:
-                    best, best_key = i, key
-            rows.append(
-                (anchor, step, ids[best], rel[best], -best_key[0])
-            )
-            selected.append(best)
-            remaining.remove(best)
-        return pd.DataFrame(
-            rows,
-            columns=[
-                anchor_id_col, "sel_rank", id_col, "relevance", "mmr_score",
-            ],
-        )
-
-    return cand.groupBy(anchor_id_col).applyInPandas(rerank, out_schema)
-
-
-def pq_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    m: int = 4,
-    n_codes: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    seed: int = 42,
-    rerank: int | None = None,
-) -> DataFrame:
-    """Product-quantization top-k by inner product (ADC — asymmetric
-    distance computation): the corpus vector is replaced by ``m`` byte
-    codes (one per subvector, each the id of its nearest sub-codebook
-    centroid); a probe scores a corpus row by summing m table lookups
-    instead of a d-dim dot product.
-
-    The 100 TB memory path that completes brute→LSH→IVF: a 64-dim float
-    vector (256 B) becomes m=4 codes (4 B) — the codes table for 2B
-    vectors fits where raw embeddings cannot, and scan cost per probe is
-    m array lookups. Train the m KMeans sub-codebooks on a sample;
-    encoding is a map pass; scoring is pure Catalyst (the probe's lookup
-    table rides a broadcast, the aggregate is a JVM HOF fold — no Python
-    anywhere). Compose with IVF cells for sublinear scans.
-
-    ``rerank``: the standard two-stage refinement (FAISS's
-    IndexRefineFlat pattern) — ADC selects ``rerank`` candidates per
-    probe, then the TRUE INNER PRODUCT against the RAW candidate vectors
-    picks the final k (same metric as the ADC stage, so ``score`` keeps
-    one meaning end-to-end; L2-normalize inputs for cosine semantics).
-    Recall recovers most of what quantization loses for
-    the cost of ``rerank`` exact dot products per probe (measured here:
-    mean recall@10 on 2k random 64-dim vectors 0.22 ADC-only -> 0.62
-    with rerank=50 at k=10); the raw-vector fetch is a join on
-    candidate ids — at 100 TB that is n_probes x rerank point reads,
-    not a corpus scan.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = corpus.sparkSession
-    d = len(corpus.select(vec_col).first()[0])
-    dsub = d // m
-    assert m * dsub == d, f"dim {d} not divisible by m={m}"
-
-    def subvec(col, j):
-        return F.slice(col, j * dsub + 1, dsub)
-
-    # train one sub-codebook per subspace; encode via nearest centroid.
-    # The m fits are INDEPENDENT (disjoint subvector slices, per-j
-    # seeds), and each MLlib fit is a chain of tiny driver-synchronous
-    # jobs over the sample — run them from a thread pool so the next
-    # fit's jobs back-fill the scheduler while the previous one waits on
-    # the driver (guide §2.6 "overlap independent jobs"). Each model is
-    # deterministic given (input, seed), so thread scheduling cannot
-    # change any centroid; the encode chain below is still built in j
-    # order. Measured (r12, sf0.1 embeddings, m=8): sim_pq_topk
-    # construction 21.9 s -> 4.8 s, identical output rows (gate
-    # hash-green at sf0.01).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _fit(j):
-        train = corpus.select(
-            array_to_vector(subvec(F.col(vec_col), j)).alias("features")
-        )
-        return KMeans(
-            k=n_codes, seed=seed + j, featuresCol="features"
-        ).fit(train)
-
-    with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
-        models = list(pool.map(_fit, range(m)))
-
-    encoded = corpus.select(id_col, vec_col)
-    books = []  # flat python: [(j, code, centroid floats)]
-    for j, model in enumerate(models):
-        books.extend(
-            (j, c, [float(x) for x in cen])
-            for c, cen in enumerate(model.clusterCenters())
-        )
-        pred = model.transform(
-            encoded.withColumn(
-                "features", array_to_vector(subvec(F.col(vec_col), j))
-            )
-        )
-        encoded = pred.select(
-            *encoded.columns, F.col("prediction").alias(f"__c{j}")
-        )
-    codes = encoded.select(
-        id_col, F.array(*[F.col(f"__c{j}") for j in range(m)]).alias("codes")
-    )
-
-    # per-probe ADC lookup table: flat array indexed [j * n_codes + code]
-    # holding dot(probe_subvec_j, centroid_{j,code}) — built on the driver
-    # ONLY for the centroids (m*n_codes rows), then broadcast per probe
-    books_df = spark.createDataFrame(
-        books, "j int, code int, centroid array<double>"
-    )
-    p = probes.select(probe_id_col, F.col(vec_col).alias("__pvec"))
-    table = (
-        p.crossJoin(F.broadcast(books_df))
-        .select(
-            probe_id_col,
-            (F.col("j") * n_codes + F.col("code")).alias("slot"),
-            F.aggregate(
-                F.zip_with(
-                    subvec(F.col("__pvec"), F.col("j")),
-                    F.col("centroid"),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("partial"),
-        )
-        .groupBy(probe_id_col)
-        .agg(
-            # keyed map, NOT a positionally-dense array: KMeans may
-            # return FEWER than n_codes centers on degenerate data
-            # (heavy exact duplicates), and a dense-array table would
-            # silently shift every slot after a gap — map lookup by
-            # slot key is gap-safe (codes only ever reference centers
-            # the model actually has)
-            F.map_from_entries(
-                F.collect_list(F.struct("slot", "partial"))
-            ).alias("table")
-        )
-    )
-
-    scored = codes.crossJoin(F.broadcast(table)).select(
-        probe_id_col,
-        id_col,
-        F.aggregate(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda j: F.element_at(
-                    F.col("table"),
-                    (j * n_codes + F.element_at(F.col("codes"), j + 1))
-                    .cast("int"),
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("score"),
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    n_cand = max(k, rerank) if rerank else k
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_cand)
-        .drop("__rn")
-    )
-    if not rerank:
-        return out
-    cvec = corpus.select(id_col, F.col(vec_col).alias("__cv"))
-    pvec = probes.select(probe_id_col, F.col(vec_col).alias("__pv"))
-    exact = (
-        out.select(probe_id_col, id_col)
-        .join(cvec, id_col)
-        .join(F.broadcast(pvec), probe_id_col)
-        .select(
-            probe_id_col,
-            id_col,
-            dot(F.col("__cv"), F.col("__pv")).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy(probe_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF approximate top-k: KMeans coarse quantizer partitions the corpus
-    into n_lists cells; each probe scans only its n_probe nearest cells.
-
-    Scale path vs hyperplane LSH: the quantizer adapts to the data
-    distribution (better recall at the same scan fraction), at the price of
-    a training pass. Train on a sample at 100 TB; assignment is one map
-    pass, and the cell id becomes a partition/bucket column so a cell scan
-    is a pruned file read, not a full-corpus filter.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    spark = corpus.sparkSession
-    train = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_lists, seed=seed, featuresCol="features").fit(train)
-
-    assigned = model.transform(
-        corpus.select(
-            id_col, vec_col, array_to_vector(F.col(vec_col)).alias("features")
-        )
-    ).select(id_col, vec_col, F.col("prediction").alias("cell"))
-
-    centers = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, center array<double>",
-    )
-
-    # each probe picks its n_probe nearest cells by cosine to the centroid
-    p = probes.select(probe_id_col, F.col(vec_col).alias("__pvec"))
-    probe_cells = (
-        p.crossJoin(F.broadcast(centers))
-        .select(
-            probe_id_col,
-            "__pvec",
-            "cell",
-            cosine(F.col("__pvec"), F.col("center")).alias("__cd"),
-        )
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy(probe_id_col).orderBy(
-                    F.col("__cd").desc(), F.col("cell")
-                )
-            ),
-        )
-        .filter(F.col("__rn") <= n_probe)
-        .select(probe_id_col, "__pvec", "cell")
-    )
-
-    scored = (
-        assigned.withColumn("__cnorm", l2_norm(F.col(vec_col)))
-        .join(
-            F.broadcast(
-                probe_cells.withColumn("__pnorm", l2_norm(F.col("__pvec")))
-            ),
-            "cell",
-        )
-        .select(
-            probe_id_col,
-            id_col,
-            cosine_prenorm(
-                F.col(vec_col), F.col("__pvec"), F.col("__cnorm"), F.col("__pnorm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 3,
-    m: int = 4,
-    n_codes: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    seed: int = 42,
-    rerank: int | None = None,
-) -> DataFrame:
-    """IVF+PQ composed index (the FAISS IVFPQ layout, public and
-    standard): coarse KMeans cells bound WHICH rows a probe scans
-    (sublinear scan, the IVF part), product-quantized RESIDUALS bound
-    the BYTES per scanned row (the PQ part), and an optional exact
-    re-rank restores recall from raw vectors.
-
-    Residual encoding is what makes the composition work: a vector is
-    stored as (cell, codes(vec - centroid[cell])), and a probe scores a
-    row as dot(p, centroid[cell]) + Σ_j ADC_table[j, code_j] — the ADC
-    table depends only on the probe and the residual codebooks, NOT on
-    the cell, so one broadcast table serves every probed cell.
-
-    At 100 TB: 2B 64-dim float vectors (512 GB raw) become ~2B x (1+m)
-    bytes of cell+codes; the candidate join is a shuffle equi-join on
-    the cell id (CI plan tests forbid cartesian products), and with the
-    corpus persisted PARTITIONED BY cell the scan is a pruned file read.
-    Score is inner product — pass L2-normalized vectors for cosine
-    semantics (the registered query does).
-    """
-    _rows, _brows, codes, dsub, centers, books_df = _ivfpq_train(
-        corpus, m=m, n_lists=n_lists, n_codes=n_codes,
-        id_col=id_col, vec_col=vec_col, seed=seed,
-    )
-    rerank_vecs = (
-        corpus.select(id_col, F.col(vec_col).alias("__cv"))
-        if rerank else None
-    )
-    return _ivfpq_score(
-        codes, centers, books_df, probes,
-        k=k, n_probe=n_probe, m=m, n_codes=n_codes, dsub=dsub,
-        id_col=id_col, vec_col=vec_col, probe_id_col=probe_id_col,
-        rerank=rerank, rerank_vecs=rerank_vecs,
-    )
-
-
-def _ivfpq_train(
-    corpus: DataFrame, *, m, n_lists, n_codes, id_col, vec_col, seed
-):
-    """Train the IVFPQ state: coarse cells + residual sub-codebooks.
-    Returns (centers_rows, books_rows, codes_df, dsub, centers_df,
-    books_df) — the trained state both as plain python lists
-    (JSON-serializable, so ``build_ivfpq_index`` can persist the
-    sidecar) and as the DataFrames scoring consumes."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    d = len(corpus.select(vec_col).first()[0])
-    dsub = d // m
-    assert m * dsub == d, f"dim {d} not divisible by m={m}"
-
-    # 1. coarse quantizer: cell assignment + broadcastable centroids
-    train = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
-    coarse = KMeans(k=n_lists, seed=seed, featuresCol="features").fit(train)
-    centers_rows = [
-        (i, [float(x) for x in c])
-        for i, c in enumerate(coarse.clusterCenters())
-    ]
-    centers = corpus.sparkSession.createDataFrame(
-        centers_rows, "cell int, center array<double>"
-    )
-    assigned = (
-        coarse.transform(
-            corpus.select(
-                id_col, vec_col,
-                array_to_vector(F.col(vec_col)).alias("features"),
-            )
-        )
-        .select(id_col, vec_col, F.col("prediction").alias("cell"))
-        .join(F.broadcast(centers), "cell")
-        .select(
-            id_col,
-            "cell",
-            F.zip_with(
-                F.col(vec_col), F.col("center"), lambda a, b: a - b
-            ).alias("__res"),
-        )
-        # consumed by every residual sub-fit below plus the encode chain;
-        # without the checkpoint each consumer recomputes the coarse
-        # transform + centroid join over the corpus (guide §2.4/§5)
-        .localCheckpoint(eager=False)
-    )
-
-    # 2. residual PQ: m sub-codebooks trained on residual subvectors.
-    # Same thread-pool overlap as pq_topk (guide §2.6): the m fits are
-    # independent once the coarse model above is fixed, each is a chain
-    # of tiny driver-synchronous jobs, and each is deterministic given
-    # (input, seed) — thread scheduling cannot change a centroid.
-    # Measured (r12, sf0.1 embeddings, coarse + m=8 residual books,
-    # together with the `assigned` checkpoint above): sim_ivfpq_topk
-    # construction 35.6 s -> 7.1 s, identical output rows (gate
-    # hash-green at sf0.01).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _fit_sub(j):
-        sub_train = assigned.select(
-            array_to_vector(_subvec(F.col("__res"), j, dsub)).alias(
-                "features"
-            )
-        )
-        return KMeans(
-            k=n_codes, seed=seed + 100 + j, featuresCol="features"
-        ).fit(sub_train)
-
-    with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
-        models = list(pool.map(_fit_sub, range(m)))
-
-    encoded = assigned
-    books_rows = []
-    for j, model in enumerate(models):
-        books_rows.extend(
-            (j, c, [float(x) for x in cen])
-            for c, cen in enumerate(model.clusterCenters())
-        )
-        encoded = model.transform(
-            encoded.withColumn(
-                "features",
-                array_to_vector(_subvec(F.col("__res"), j, dsub)),
-            )
-        ).select(*encoded.columns, F.col("prediction").alias(f"__c{j}"))
-    codes = encoded.select(
-        id_col, "cell",
-        F.array(*[F.col(f"__c{j}") for j in range(m)]).alias("codes"),
-    )
-    books_df = corpus.sparkSession.createDataFrame(
-        books_rows, "j int, code int, centroid array<double>"
-    )
-    return centers_rows, books_rows, codes, dsub, centers, books_df
-
-
-def _subvec(col, j, dsub):
-    """j-th length-``dsub`` subvector (1-based slice)."""
-    return F.slice(col, j * dsub + 1, dsub)
-
-
-def _probe_cells(p: DataFrame, centers: DataFrame, n_probe: int,
-                 probe_id_col: str) -> DataFrame:
-    """Each probe's ``n_probe`` nearest cells by centroid inner product
-    -> (probe_id, cell, __cdot). ONE definition shared by scoring and by
-    the index query's pruning collect — if these diverged, the pruned
-    read could miss cells scoring selects (silently short results)."""
-    dotc = F.aggregate(
-        F.zip_with(F.col("__pvec"), F.col("center"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        p.crossJoin(F.broadcast(centers))
-        .select(probe_id_col, "cell", dotc.alias("__cdot"))
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy(probe_id_col).orderBy(
-                    F.col("__cdot").desc(), F.col("cell")
-                )
-            ),
-        )
-        .filter(F.col("__rn") <= n_probe)
-        .select(probe_id_col, "cell", "__cdot")
-    )
-
-
-def _ivfpq_score(
-    codes: DataFrame,
-    centers: DataFrame,
-    books_df: DataFrame,
-    probes: DataFrame,
-    *,
-    k, n_probe, m, n_codes, dsub, id_col, vec_col, probe_id_col,
-    rerank, rerank_vecs,
-):
-    """Score probes against an encoded IVFPQ corpus (in-memory or read
-    back from a persisted index): probe-cell selection, per-probe ADC
-    table, cell equi-join candidates, optional exact re-rank against
-    ``rerank_vecs`` — which must carry columns (id_col, "__cv") so the
-    probe table's and corpus's vector column names can differ.
-    ``vec_col`` names the PROBE frame's vector column."""
-
-    def subvec(col, j):
-        return _subvec(col, j, dsub)
-
-    # probe side: n_probe nearest cells by centroid inner product,
-    # plus the cell-independent ADC lookup table per probe
-    p = probes.select(probe_id_col, F.col(vec_col).alias("__pvec"))
-    probe_cells = _probe_cells(p, centers, n_probe, probe_id_col)
-    table = (
-        p.crossJoin(F.broadcast(books_df))
-        .select(
-            probe_id_col,
-            (F.col("j") * n_codes + F.col("code")).alias("slot"),
-            F.aggregate(
-                F.zip_with(
-                    subvec(F.col("__pvec"), F.col("j")),
-                    F.col("centroid"),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("partial"),
-        )
-        .groupBy(probe_id_col)
-        .agg(
-            # slot-keyed map (see pq_topk): gap-safe when a residual
-            # sub-codebook trains to fewer than n_codes centers
-            F.map_from_entries(
-                F.collect_list(F.struct("slot", "partial"))
-            ).alias("table")
-        )
-    )
-
-    # 4. candidates: equi-join on cell (NOT a corpus cross join), score
-    # via centroid dot + ADC residual sum
-    scored = (
-        codes.join(F.broadcast(probe_cells), "cell")
-        .join(F.broadcast(table), probe_id_col)
-        .select(
-            probe_id_col,
-            id_col,
-            (
-                F.col("__cdot")
-                + F.aggregate(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(m - 1)),
-                        lambda j: F.element_at(
-                            F.col("table"),
-                            (
-                                j * n_codes
-                                + F.element_at(F.col("codes"), j + 1)
-                            ).cast("int"),
-                        ),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    n_cand = max(k, rerank) if rerank else k
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_cand)
-        .drop("__rn")
-    )
-    if not rerank:
-        return out
-    cvec = rerank_vecs.select(id_col, "__cv")
-    exact = (
-        out.select(probe_id_col, id_col)
-        .join(cvec, id_col)
-        .join(F.broadcast(p), probe_id_col)
-        .select(
-            probe_id_col,
-            id_col,
-            dot(F.col("__cv"), F.col("__pvec")).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy(probe_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def _require_local_path(path: str) -> None:
-    """The persisted-index meta sidecar goes through plain ``open()``
-    (local FS only); fail BEFORE the parquet write on any URI-scheme
-    path (hdfs://, s3a://, even file:) rather than after it."""
-    if "://" in path or path.startswith("file:"):
-        raise ValueError(
-            f"persisted-index paths must be local filesystem paths (the "
-            f"meta sidecar uses local open()); got {path!r}"
-        )
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    *,
-    n_lists: int = 16,
-    m: int = 4,
-    n_codes: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> None:
-    """Persist the IVFPQ layout at rest: the encoded corpus PARTITIONED
-    BY cell (codes + the raw vector for the refine stage), plus a JSON
-    sidecar holding the trained state (coarse centroids + residual
-    sub-codebooks) so queries never retrain.
-
-    The at-rest composition completes the ANN ladder next to
-    ``build_lsh_index``: a probe's candidate read is PARTITION-PRUNED to
-    its n_probe cells at planning time (the reference's O(log N) page
-    seeks as partitioned-columnar layout), and within those files the
-    ADC scan touches (1+m)-byte codes, falling back to the stored raw
-    vectors only for the top-``rerank`` refine join. Drop ``vec_col``
-    from the written set for a pure-codes index if refine will join back
-    to the source table instead.
-
-    ``path`` must be a LOCAL filesystem path: the ``_ivfpq_meta.json``
-    sidecar is written with plain ``open()``, so an ``hdfs://``/``s3://``
-    destination would succeed for the parquet write and then fail on the
-    sidecar, leaving a meta-less (unqueryable) index behind — rejected up
-    front instead, BEFORE any data is written."""
-    import json
-    import os
-
-    _require_local_path(path)
-
-    centers_rows, books_rows, codes, dsub, _c, _b = _ivfpq_train(
-        corpus, m=m, n_lists=n_lists, n_codes=n_codes,
-        id_col=id_col, vec_col=vec_col, seed=seed,
-    )
-    (
-        codes.join(corpus.select(id_col, vec_col), id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    meta = {
-        "version": 1,
-        "m": m,
-        "n_lists": n_lists,
-        "n_codes": n_codes,
-        "dsub": dsub,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "centers": centers_rows,
-        "books": books_rows,
-    }
-    # underscore-prefixed: Spark's parquet reader ignores it as metadata
-    with open(os.path.join(path, "_ivfpq_meta.json"), "w") as f:
-        json.dump(meta, f)
-
-
-def query_ivfpq_index(
-    spark,
-    path: str,
-    probes: DataFrame,
-    *,
-    k: int = 10,
-    n_probe: int = 3,
-    probe_id_col: str = "probe_id",
-    vec_col: str = "embedding",
-    rerank: int | None = None,
-) -> DataFrame:
-    """Top-k against a persisted IVFPQ index via partition-pruned scan.
-
-    The probe batch's cell set (n_probe nearest centroids per probe,
-    centroids from the sidecar — no training, no corpus pass) collects
-    to the driver and becomes an ``isin`` partition filter, visible as
-    PartitionFilters in the scan node. Scoring and refine match
-    ``ivfpq_topk`` exactly — same ADC table, same tie-breaks (one shared
-    ``_probe_cells`` serves pruning AND scoring) — so a query answered
-    from the index equals the in-memory answer. ``vec_col`` names the
-    PROBE frame's vector column; the index's own column names come from
-    the sidecar. The probe batch is materialized once (localCheckpoint)
-    so a nondeterministic probe source (limit/sample) cannot make the
-    pruned read disagree with the cells scoring later selects."""
-    import json
-    import os
-
-    _require_local_path(path)
-    with open(os.path.join(path, "_ivfpq_meta.json")) as f:
-        meta = json.load(f)
-    centers = spark.createDataFrame(
-        [(c, v) for c, v in meta["centers"]],
-        "cell int, center array<double>",
-    )
-    books_df = spark.createDataFrame(
-        [(j, c, v) for j, c, v in meta["books"]],
-        "j int, code int, centroid array<double>",
-    )
-    probes = probes.select(
-        probe_id_col, F.col(vec_col).alias(vec_col)
-    ).localCheckpoint()
-    # driver-side cell list for PLANNING-time partition pruning (small
-    # by regime: n_probe cells per probe in the batch) — computed by the
-    # SAME _probe_cells scoring uses
-    p = probes.select(probe_id_col, F.col(vec_col).alias("__pvec"))
-    cells = [
-        r.cell
-        for r in _probe_cells(p, centers, n_probe, probe_id_col)
-        .select("cell").distinct().collect()
-    ]
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    codes = idx.select(meta["id_col"], "cell", "codes")
-    rerank_vecs = (
-        idx.select(
-            meta["id_col"], F.col(meta["vec_col"]).alias("__cv")
-        )
-        if rerank else None
-    )
-    return _ivfpq_score(
-        codes, centers, books_df, probes,
-        k=k, n_probe=n_probe, m=meta["m"], n_codes=meta["n_codes"],
-        dsub=meta["dsub"], id_col=meta["id_col"],
-        vec_col=vec_col, probe_id_col=probe_id_col,
-        rerank=rerank, rerank_vecs=rerank_vecs,
-    )
-
-
-def add_to_ivfpq_index(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-) -> int:
-    """Incrementally ADD vectors to a persisted IVFPQ index with the
-    codebooks FROZEN — the FAISS ``index.add()`` maintenance path: no
-    retraining, no rewrite of existing partitions, just new rows
-    appended into their cell directories. Returns the number of rows
-    added.
-
-    Assignment replays the trained state from the sidecar in pure
-    DataFrame math: each new vector goes to its nearest coarse centroid
-    by squared Euclidean distance (ties -> lowest cell id, matching
-    MLlib KMeans.transform), and each residual subvector to its nearest
-    sub-codebook entry the same way. Everything is a broadcast of
-    constant-size trained state against the new batch — cost is
-    O(batch * (n_lists + m*n_codes)), INDEPENDENT of the index size,
-    which is the point: at 100 TB an ingest batch never touches the
-    resident corpus. The append goes through
-    ``partitionBy(cell).mode(append)``, so only the touched cell
-    directories gain files and concurrent readers keep planning-time
-    pruning.
-
-    Duplicate ids are NOT checked (same as FAISS add): dedup upstream
-    if ids may repeat. Queries answered after an add are exactly the
-    queries an index would answer whose encode pass used these
-    assignments — the frozen-codebook contract, pinned by the
-    assignment differential in tests/test_round6_ops.py (literal-array
-    argmin vs MLlib transform agreement on every vector).
-    """
-    import json
-    import os
-
-    _require_local_path(path)
-    with open(os.path.join(path, "_ivfpq_meta.json")) as f:
-        meta = json.load(f)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    m, dsub = meta["m"], meta["dsub"]
-    books = {j: [] for j in range(m)}
-    for j, c, v in meta["books"]:
-        books[j].append((c, v))
-
-    def _argmin_lit(vec, entries, idx_name):
-        # entries: [(idx, centroid), ...] from the sidecar — inlined as
-        # a LITERAL struct array, so the argmin is a single per-row
-        # expression: no join, no shuffle, whole-stage codegen. The
-        # struct puts distance first, index second, so array_min's
-        # lexicographic struct ordering IS "min distance, ties -> lowest
-        # index" — the MLlib KMeans.transform rule.
-        cand = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            vec,
-                            F.array(*[F.lit(float(x)) for x in cen]),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("d"),
-                    F.lit(i).alias(idx_name),
-                )
-                for i, cen in entries
-            ]
-        )
-        return F.array_min(cand)[idx_name]
-
-    cell = _argmin_lit(F.col(vec_col), meta["centers"], "cell")
-    assigned = new_vectors.select(id_col, vec_col).withColumn(
-        "cell", cell
-    )
-    # residual = vec - chosen center, via one literal center lookup
-    center_arr = F.element_at(
-        F.array(
-            *[
-                F.array(*[F.lit(float(x)) for x in cen])
-                for _, cen in sorted(meta["centers"])
-            ]
-        ),
-        F.col("cell") + 1,
-    )
-    res = assigned.withColumn(
-        "__res", F.zip_with(F.col(vec_col), center_arr, lambda a, b: a - b)
-    )
-    codes = F.array(
-        *[
-            _argmin_lit(_subvec(F.col("__res"), j, dsub), books[j], "code")
-            for j in range(m)
-        ]
-    )
-    out = res.select(
-        id_col,
-        codes.alias("codes"),
-        vec_col,
-        F.col("cell").cast("int").alias("cell"),
-    ).localCheckpoint()
-    n = out.count()
-    out.write.mode("append").partitionBy("cell").parquet(path)
-    return n
-
-
-def _hyperplane(dim: int, seed: int) -> list[float]:
-    """Deterministic pseudo-random unit-free hyperplane (LCG, no numpy to
-    keep it importable everywhere)."""
-    out = []
-    state = (seed * 6364136223846793005 + 1442695040888963407) & (2**64 - 1)
-    for _ in range(dim):
-        state = (state * 6364136223846793005 + 1442695040888963407) & (2**64 - 1)
-        out.append(((state >> 11) / float(1 << 53)) * 2.0 - 1.0)
-    return out
-
-
-def lsh_bucket_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane LSH signature (n_planes sign
-    bits) buckets both sides; cosine is computed only within buckets.
-
-    At 100 TB the corpus-side signature is computed in one map pass and the
-    join is a plain equi-join on the bucket id — shuffle ∝ corpus size.
-    Recall tunes with n_planes (fewer planes → bigger buckets → higher
-    recall, more compute)."""
-
-    def signature(vec) -> F.Column:
-        return lsh_signature(vec, dim, n_planes)
-
-    c = (
-        corpus.select(id_col, vec_col)
-        .withColumn("__bucket", signature(F.col(vec_col)))
-        .withColumn("__cnorm", l2_norm(F.col(vec_col)))
-    )
-    p = (
-        probes.select(probe_id_col, F.col(vec_col).alias("__pvec"))
-        .withColumn("__bucket", signature(F.col("__pvec")))
-        .withColumn("__pnorm", l2_norm(F.col("__pvec")))
-    )
-    scored = c.join(F.broadcast(p), "__bucket").select(
-        probe_id_col,
-        id_col,
-        cosine_prenorm(
-            F.col(vec_col), F.col("__pvec"), F.col("__cnorm"), F.col("__pnorm")
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def ann_recall_report(
-    exact: DataFrame,
-    approx: DataFrame,
-    probe_id_col: str = "probe_id",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Per-probe recall of an approximate top-k against the exact top-k —
-    the measurement that decides whether an ANN configuration (n_planes,
-    n_probe, codebook size) is trustworthy before it serves a corpus.
-
-    Both inputs are top-k result sets: (probe_id, vec_id[, ...]). Output:
-    (probe_id, n_exact, n_hits, recall). Everything here is
-    evaluation-scale — k rows per probe on both sides — so the joins are
-    broadcast-trivial at any corpus size; the expensive part is producing
-    the inputs, which each carry their own scale story (brute force =
-    one corpus scan per probe batch; LSH/IVF = pruned candidate reads).
-    """
-    # Checkpoint both top-k inputs: they are tiny (k rows per probe) but
-    # ``e`` feeds TWO consumers (n_exact and the hits join) — without the
-    # checkpoint the whole exact arm (a corpus cross-join + window for
-    # brute_force_topk) is computed twice, one BroadcastNestedLoopJoin
-    # subtree per consumer in the before plan
-    # (plans/r11/sim_recall_eval_before.txt; r11 round, guide §2.4/§5).
-    e = exact.select(probe_id_col, id_col).localCheckpoint(eager=False)
-    a = approx.select(probe_id_col, id_col).localCheckpoint(eager=False)
-    n_exact = e.groupBy(probe_id_col).agg(F.count("*").alias("n_exact"))
-    # explicit broadcasts: checkpointed frames carry no catalyst size
-    # stats, so the planner falls back to sort-merge for these joins even
-    # though both sides are k-rows-per-probe tiny BY CONTRACT (guide §3.1:
-    # hint when you know a side is small and the estimate is wrong)
-    hits = (
-        e.join(F.broadcast(a), [probe_id_col, id_col])
-        .groupBy(probe_id_col)
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        n_exact.join(F.broadcast(hits), probe_id_col, "left")
-        .select(
-            probe_id_col,
-            "n_exact",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (
-                F.coalesce("n_hits", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double")
-            ).alias("recall"),
-        )
-    )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    *,
-    threshold: float = 0.95,
-    n_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cell_size: int | None = 10_000,
-    seed: int = 42,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): embedding-space near-duplicate removal
-    that only compares vectors WITHIN k-means clusters, making corpus-scale
-    semantic dedup sub-quadratic — pairwise work is Σ |cell|², not N².
-
-    Plan: train a coarse quantizer (on a sample at 100 TB), assign each
-    vector a cell in one map pass, self-equi-join on the cell id (shuffle
-    ∝ corpus — never an all-pairs product), keep pairs with cosine >=
-    threshold, and drop every vector that has a LOWER-id near-duplicate in
-    its cell. ``max_cell_size`` excludes degenerate cells (the embedding
-    analogue of the LSH bucket cap): a cell bigger than the cap keeps all
-    its members rather than paying |cell|² — at scale you re-cluster such
-    cells with a larger k instead.
-
-    Returns (vec_id, cell, dup_of, keep): ``dup_of`` = smallest-id
-    near-duplicate in the same cell (null ⇒ representative), ``keep`` =
-    dup_of is null. Trained quantizer ⇒ not SQL-expressible; correctness is
-    pinned by pytest against brute-force cosine on the same cells.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_lists, seed=seed, featuresCol="features").fit(train)
-    assigned = (
-        model.transform(
-            corpus.select(
-                id_col, vec_col, array_to_vector(F.col(vec_col)).alias("features")
-            )
-        )
-        .select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__vec"),
-            F.col("prediction").alias("cell"),
-        )
-        .withColumn("__norm", l2_norm(F.col("__vec")))
-    )
-    # the cap excludes oversized cells from PAIRING only — every vector
-    # stays in the output (an oversized cell's members all come back
-    # keep=True, per the contract above); filtering `assigned` itself
-    # would silently drop those rows from the result
-    paired = assigned
-    if max_cell_size is not None:
-        sizes = assigned.groupBy("cell").agg(F.count("*").alias("__n"))
-        paired = assigned.join(
-            F.broadcast(sizes.filter(F.col("__n") <= max_cell_size)), "cell"
-        ).drop("__n")
-    x = paired.select(
-        "cell",
-        F.col("__id").alias("__xid"),
-        F.col("__vec").alias("__xvec"),
-        F.col("__norm").alias("__xnorm"),
-    )
-    y = paired.select(
-        "cell",
-        F.col("__id").alias("__yid"),
-        F.col("__vec").alias("__yvec"),
-        F.col("__norm").alias("__ynorm"),
-    )
-    dup_of = (
-        x.join(y, "cell")
-        .filter(F.col("__xid") < F.col("__yid"))
-        .filter(
-            cosine_prenorm(
-                F.col("__xvec"),
-                F.col("__yvec"),
-                F.col("__xnorm"),
-                F.col("__ynorm"),
-            )
-            >= threshold
-        )
-        .groupBy(F.col("__yid"))
-        .agg(F.min("__xid").alias("dup_of"))
-    )
-    return (
-        assigned.join(dup_of, assigned["__id"] == dup_of["__yid"], "left")
-        .select(
-            F.col("__id").alias(id_col),
-            "cell",
-            "dup_of",
-            F.col("dup_of").isNull().alias("keep"),
-        )
-    )
-
-
-def random_projection(
-    corpus: DataFrame,
-    *,
-    dim: int,
-    out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """Johnson-Lindenstrauss random projection: dim → out_dim with
-    deterministic LCG planes (the dimensionality-reduction step embedding
-    pipelines run before storage/ANN when 4x fewer dims preserves enough
-    cosine geometry).
-
-    Pure map pass — one fold per output dim per row, no shuffle, no
-    training, nothing to broadcast but out_dim constant vectors baked into
-    the plan. The same plane constants embed as DOUBLE[] literals in the
-    oracle SQL (Python repr round-trips float64 exactly), so the entire
-    projection is value-gated. Returns (vec_id, p0..p{out_dim-1}).
-    """
-    planes = [_hyperplane(dim, seed * 1000 + j) for j in range(out_dim)]
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = corpus.select(F.col(id_col), v.alias("__v"))
-    outs = [
-        F.round(
-            dot(F.col("__v"), F.array(*[F.lit(float(x)) for x in planes[j]])),
-            6,
-        ).alias(f"p{j}")
-        for j in range(out_dim)
-    ]
-    return base.select(id_col, *outs)
-
-
-def quantize_int8(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-vector min/max int8 quantization — the 4x storage compressor
-    embedding stores apply before indexing (PQ's simpler sibling: no
-    codebook; scale 255 so mx lands exactly on code 255, reconstruction
-    mn + (code + 0.5) * (mx - mn) / 255, error <= one cell width).
-
-    Pure map pass, no shuffle. The min/max are projected as ATTRIBUTES
-    before the code transform: referencing a composed expression inside a
-    higher-order-function lambda re-evaluates it per element (the
-    measured 15-180x trap, NOTES.md). Codes are exact integer outputs of
-    one deterministic float expression, so the whole thing value-gates.
-
-    Returns one row per (vec_id, dim): (vec_id, dim, code, mn_r, mx_r).
-    """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = corpus.select(
-        F.col(id_col),
-        v.alias("__v"),
-    ).select(
-        id_col,
-        "__v",
-        F.array_min("__v").alias("__mn"),
-        F.array_max("__v").alias("__mx"),
-    )
-    code = F.when(
-        F.col("__mx") > F.col("__mn"),
-        F.least(
-            F.lit(255),
-            F.floor(
-                (F.col("x") - F.col("__mn"))
-                * F.lit(255.0)
-                / (F.col("__mx") - F.col("__mn"))
-            ),
-        ),
-    ).otherwise(F.lit(0))
-    return (
-        base.select(
-            id_col,
-            "__mn",
-            "__mx",
-            F.posexplode("__v").alias("dim", "x"),
-        )
-        .select(
-            id_col,
-            "dim",
-            code.cast("long").alias("code"),
-            F.round("__mn", 6).alias("mn_r"),
-            F.round("__mx", 6).alias("mx_r"),
-        )
-    )
-
-
-def lsh_signature(vec, dim: int, n_planes: int = 8) -> F.Column:
-    """Sign-bit hyperplane signature (shared by the in-memory bucket join
-    and the persisted index layout)."""
-    bits = []
-    for p in range(n_planes):
-        plane = _hyperplane(dim, p + 1)
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(x) for x in plane]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig.bitwiseOR(b)
-    return sig
-
-
-def build_lsh_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    *,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the corpus PARTITIONED BY its LSH bucket, with the L2 norm
-    precomputed — the at-rest ANN index layout.
-
-    The point of materializing the layout: a probe's candidate set becomes
-    a PARTITION-PRUNED read. ``query_lsh_index`` filters on the bucket
-    values its probes hash to, Spark's file index drops every other
-    partition directory at PLANNING time, and a 100 TB corpus answers a
-    probe batch by reading only the matching buckets' files — the same
-    pruning mechanism the reference gets from its sorted page index
-    (O(log N) seeks), re-expressed as partitioned-columnar layout.
-    """
-    (
-        corpus.select(id_col, vec_col)
-        .withColumn("bucket", lsh_signature(F.col(vec_col), dim, n_planes))
-        .withColumn("cnorm", l2_norm(F.col(vec_col)))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
-def query_lsh_index(
-    spark,
-    path: str,
-    probes: DataFrame,
-    dim: int,
-    *,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """Top-k against a persisted LSH index via partition-pruned scan.
-
-    The probe batch is small by regime (that's what makes ANN probing a
-    lookup, not a scan), so its bucket set collects to the driver and
-    becomes an ``isin`` partition filter — visible as PartitionFilters in
-    the scan node, asserted in tests. Scoring then matches
-    ``lsh_bucket_topk`` exactly: same signature, same prenormed cosine,
-    same deterministic tie-break."""
-    p = (
-        probes.select(probe_id_col, F.col(vec_col).alias("__pvec"))
-        .withColumn("bucket", lsh_signature(F.col("__pvec"), dim, n_planes))
-        .withColumn("__pnorm", l2_norm(F.col("__pvec")))
-    )
-    buckets = [r.bucket for r in p.select("bucket").distinct().collect()]
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    scored = idx.join(F.broadcast(p), "bucket").select(
-        probe_id_col,
-        id_col,
-        cosine_prenorm(
-            F.col(vec_col), F.col("__pvec"), F.col("cnorm"), F.col("__pnorm")
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def pca_fit_project(
-    corpus: DataFrame,
-    *,
-    dim: int,
-    k: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list[float], list[float], list[float]]:
-    """Distributed PCA: fit the population covariance in ONE pass over the
-    corpus, eigendecompose the tiny d x d matrix on the driver, and project
-    every vector onto the top-``k`` principal axes JVM-side.
-
-    Scale shape — the classic tall-skinny factorization split: N (rows) is
-    the big axis, d (dims) is small, so the only distributed work is
-    accumulating the d-vector sum and d*d Gram matrix. An Arrow-batched
-    ``mapInPandas`` emits one (count, sum, gram) partial per input batch
-    (constant size each), the partials are EXPLODED to (index, value) pairs
-    and reduced by a (1 + d + d^2)-key hash aggregation — never collected
-    raw, so 100k partitions cost a 4k-key shuffle, not a multi-GB driver
-    collect. Only the 1 + d + d^2 final sums land on the driver, where
-    ``numpy.linalg.eigh`` factors the d x d covariance (trivial for any d
-    this pattern applies to). The projection itself is pure Catalyst: k dot
-    products against eigenvector literals baked into the plan (same idiom
-    as ``random_projection``) — no Python in the per-row path.
-
-    Returns ``(projected, eigvals, mean, cov_diag)``: ``projected`` =
-    (id_col, proj array<double> of length k), ``eigvals`` descending,
-    ``mean`` the fitted center, ``cov_diag`` the per-axis variances (for
-    invariant checks: sum(eigvals) == sum(cov_diag) == trace, and
-    eigvals[0] >= max(cov_diag) by the Rayleigh quotient at a basis
-    vector).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if k is None:
-        k = dim
-    if not 1 <= k <= dim:
-        raise ValueError(f"k must be in [1, {dim}], got {k}")
-
-    base = corpus.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    )
-
-    def partials(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            if m.shape[1] != dim:
-                raise ValueError(
-                    f"expected {dim}-dim vectors, got {m.shape[1]}"
-                )
-            yield pd.DataFrame(
-                {
-                    "n": [float(len(m))],
-                    "s": [m.sum(axis=0)],
-                    "g": [(m.T @ m).ravel()],
-                }
-            )
-
-    flat = (
-        base.select("__v")
-        .mapInPandas(partials, schema="n double, s array<double>, g array<double>")
-        .select(
-            F.posexplode(
-                F.concat(F.array(F.col("n")), F.col("s"), F.col("g"))
-            ).alias("i", "v")
-        )
-    )
-    sums = {r.i: r.v for r in flat.groupBy("i").agg(F.sum("v").alias("v")).collect()}
-    n = sums.get(0, 0.0)
-    if n < 2:
-        raise ValueError("PCA needs at least 2 rows")
-    s = np.array([sums[1 + i] for i in range(dim)])
-    g = np.array(
-        [sums[1 + dim + i] for i in range(dim * dim)]
-    ).reshape(dim, dim)
-    mu = s / n
-    cov = g / n - np.outer(mu, mu)
-    # symmetrize: g/n is symmetric up to float noise; eigh wants exact
-    cov = (cov + cov.T) / 2.0
-    w, v = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1]
-    w, v = w[order], v[:, order]
-
-    # literals go in as TWO SQL-text expressions, not per-element F.lit
-    # Columns: k x d x 2 lit() calls are ~500k py4j round trips at d=64
-    # (measured: ~7 s of pure driver time); repr() round-trips float64
-    # exactly and the D suffix pins the SQL literal to DOUBLE
-    def _dvec_sql(xs) -> str:
-        return "array(" + ",".join(f"{float(x)!r}D" for x in xs) + ")"
-
-    vmat = F.expr(
-        "array(" + ",".join(_dvec_sql(v[:, j]) for j in range(k)) + ")"
-    )
-    centered = F.zip_with(
-        F.col("__v"), F.expr(_dvec_sql(mu)), lambda a, b: a - b
-    )
-    projected = base.select(
-        F.col(id_col),
-        F.transform(vmat, lambda axis: dot(centered, axis)).alias("proj"),
-    )
-    return projected, [float(x) for x in w], [float(x) for x in mu], [
-        float(x) for x in np.diag(cov)
-    ]

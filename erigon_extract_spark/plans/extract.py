@@ -14,10 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from erigon_extract_spark.functions.decode import (
-    decode_account_blob,
-    decode_storage_blob,
-)
+from erigon_extract_spark.functions.decode import decode_account_blob
 from erigon_extract_spark.schemas import EMPTY_CODE_HASH, ZERO_HASH
 
 
@@ -58,20 +55,32 @@ def decode_storage_changesets(
     block_end: int | None = None,
 ) -> DataFrame:
     """StorageChangeSet(block, address, incarnation, storage_blob) →
-    (block, address, incarnation, slot, value). Reference P2,
-    erigon_extract.c:320-349, 1568-1576."""
+    (block, address, incarnation, slot, value, decode_error). Reference P2,
+    erigon_extract.c:320-349, 1568-1576.
+
+    The blob is slot (32 bytes) ‖ value stripped of leading zeros, so the
+    decode is JVM built-ins (``substring`` + ``lpad``), no Python worker;
+    ``functions.decode._decode_storage_one`` is its Python oracle. A null
+    blob or one outside 32..64 bytes gives null slot/value and a
+    ``decode_error``."""
     if block_start is not None:
         scs = scs.filter(F.col("block") >= block_start)
     if block_end is not None:
         scs = scs.filter(F.col("block") <= block_end)
-    dec = scs.withColumn("__d", decode_storage_blob(F.col("storage_blob")))
-    return dec.select(
+    blob = F.col("storage_blob")
+    n = F.length(blob)
+    ok = n.between(32, 64)
+    return scs.select(
         "block",
         "address",
         "incarnation",
-        F.col("__d.slot").alias("slot"),
-        F.col("__d.value").alias("value"),
-        F.col("__d.decode_error").alias("decode_error"),
+        F.when(ok, F.substring(blob, 1, 32)).alias("slot"),
+        F.when(ok, F.lpad(F.substring(blob, 33, 32), 32, F.lit(b"\x00")))
+        .alias("value"),
+        F.when(blob.isNull(), F.lit("null blob"))
+        .when(~ok, F.concat(F.lit("blob len "), n.cast("string"),
+                            F.lit(" outside 32..64")))
+        .alias("decode_error"),
     )
 
 

@@ -105,120 +105,6 @@ def test_cli_profile_and_compact(spark, sf_dir, tmp_path, capsys):
             == spark.read.parquet(src).count())
 
 
-def test_cli_ann_build_and_query(spark, sf_dir, tmp_path, capsys):
-    """End-to-end persisted-ANN CLI: build an IVFPQ index from the
-    embeddings parquet, query it with a small probe set, and check the
-    self-match property (a probe vector's own id appears among its
-    top-k with the highest score on normalized vectors)."""
-    idx = str(tmp_path / "annidx")
-    rc, out = _run(
-        ["ann-build", f"{sf_dir}/embeddings.parquet", idx,
-         "--lists", "6", "--m", "8", "--codes", "16", "--normalize"],
-        capsys,
-    )
-    assert rc == 0
-    assert "cells at" in out and "bytes/vector" in out
-
-    probes = str(tmp_path / "probes.parquet")
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
-        "vec_id < 3"
-    ).write.parquet(probes)
-    rc, out = _run(
-        ["ann-query", idx, probes, "-k", "5", "--probe-cells", "3",
-         "--rerank", "20", "--normalize"],
-        capsys,
-    )
-    assert rc == 0
-    lines = [l for l in out.splitlines() if l.startswith("probe ")]
-    assert len(lines) == 3
-    for line in lines:
-        pid = int(line.split()[1].rstrip(":"))
-        first_hit = line.split(": ", 1)[1].split()[0]
-        hit_id, score = first_hit.split(":")
-        # the probe is IN the corpus: exact self-match ranks first
-        assert int(hit_id) == pid and float(score) > 0.999, line
-
-
-def test_cli_ann_add(spark, sf_dir, tmp_path, capsys):
-    """ann-add appends to a built index with frozen codebooks: build on
-    vec_id >= 10, add vec_id < 10, then a probe from the ADDED set must
-    self-match at top-1 (full-scan query: every cell probed, exact
-    rerank)."""
-    idx = str(tmp_path / "annidx_add")
-    base = str(tmp_path / "base.parquet")
-    extra = str(tmp_path / "extra.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    emb.filter("vec_id >= 10").write.parquet(base)
-    emb.filter("vec_id < 10").write.parquet(extra)
-    rc, out = _run(
-        ["ann-build", base, idx,
-         "--lists", "6", "--m", "8", "--codes", "16", "--normalize"],
-        capsys,
-    )
-    assert rc == 0
-    before = spark.read.parquet(idx).count()
-    rc, out = _run(["ann-add", idx, extra, "--normalize"], capsys)
-    assert rc == 0
-    assert "added 10 vectors" in out
-    assert spark.read.parquet(idx).count() == before + 10
-
-    probes = str(tmp_path / "probes_add.parquet")
-    emb.filter("vec_id < 3").write.parquet(probes)
-    rc, out = _run(
-        ["ann-query", idx, probes, "-k", "1", "--probe-cells", "6",
-         "--rerank", "100000", "--normalize"],
-        capsys,
-    )
-    assert rc == 0
-    lines = [l for l in out.splitlines() if l.startswith("probe ")]
-    assert len(lines) == 3
-    for line in lines:
-        pid = int(line.split()[1].rstrip(":"))
-        hit_id, score = line.split(": ", 1)[1].split()[0].split(":")
-        assert int(hit_id) == pid and float(score) > 0.999, line
-
-
-def test_cli_index_build_and_query(spark, sf_dir, tmp_path, capsys):
-    """End-to-end inverted-index CLI: build from the documents parquet,
-    AND-query two terms, and cross-check the doc set against a naive
-    text filter over the same corpus."""
-    idx = str(tmp_path / "invidx")
-    rc, out = _run(
-        ["index-build", f"{sf_dir}/documents.parquet", idx,
-         "--buckets", "16"],
-        capsys,
-    )
-    assert rc == 0 and "postings" in out
-
-    rc, out = _run(
-        ["index-query", idx, "spark", "merge", "--mode", "and",
-         "--limit", "5000"],
-        capsys,
-    )
-    assert rc == 0
-    got = {
-        int(l.split("\t")[0])
-        for l in out.splitlines()
-        if l and not l.startswith("#")
-    }
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.text import word_tokens
-
-    naive = {
-        r.doc_id
-        for r in docs.select(
-            "doc_id", word_tokens(F.col("text")).alias("t")
-        )
-        .filter(
-            F.array_contains("t", "spark") & F.array_contains("t", "merge")
-        )
-        .collect()
-    }
-    assert got == naive and got  # non-empty on this corpus
-
-
 def test_cli_state_at_ref_file_point_lookup(capsys):
     """state-at --ref-file: the O(log N) lookup INTO the encoded merged
     file (reference README.md:37-41) — answers must match the full
@@ -267,7 +153,6 @@ def test_cli_state_at_ref_file_point_lookup(capsys):
     assert rc == 1 and "(not found)" in cap.err
 
 
-
 def test_cli_state_at_parquet_slot_answers_storage(spark, tmp_path, capsys):
     """state-at <parquet> --slot answers the storage as-of lookup (one line
     per incarnation of the slot), not the account; the store holds the
@@ -310,81 +195,3 @@ def test_cli_state_at_parquet_slot_answers_storage(spark, tmp_path, capsys):
     assert [l for l in out.splitlines() if l] == [
         l for l in lines if f" inc={sp.incarnation} " in l
     ]
-
-def test_cli_cluster_build_and_assign(spark, sf_dir, tmp_path, capsys):
-    """End-to-end persisted-k-means CLI (VERDICT r10 stretch 8):
-    cluster-build fits the deterministic Lloyd k-means and writes the
-    assignment parquet + frozen-centroid sidecar; cluster-assign reloads
-    the sidecar and labels a held-out batch identically to the
-    in-process kmeans_assign, batch AND stream (availableNow)."""
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.clustering import (
-        assign_with_model,
-        kmeans_assign,
-        kmeans_lloyd,
-        load_kmeans_model,
-    )
-
-    model = str(tmp_path / "kmodel")
-    train = str(tmp_path / "train.parquet")
-    held = str(tmp_path / "held.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    emb.filter("vec_id < 300").write.parquet(train)
-    emb.filter("vec_id >= 300").write.parquet(held)
-
-    rc, out = _run(["cluster-build", train, model, "-k", "4",
-                    "--iters", "2"], capsys)
-    assert rc == 0 and "k=4" in out and "clustered 300 vectors" in out
-
-    # sidecar reload: centroids match an in-process retrain exactly
-    meta = load_kmeans_model(model)
-    _, cent = kmeans_lloyd(emb.filter("vec_id < 300"), k=4, iters=2)
-    assert meta["centroids"] == cent
-    # the persisted assignment table matches the in-process one
-    persisted = {
-        r["vec_id"]: r["cid"]
-        for r in spark.read.parquet(model).collect()
-    }
-    fresh, _ = kmeans_lloyd(emb.filter("vec_id < 300"), k=4, iters=2)
-    assert persisted == {r[0]: r[1] for r in fresh.collect()}
-
-    # cluster-assign on the held-out batch == in-process kmeans_assign
-    outdir = str(tmp_path / "assigned")
-    rc, out = _run(["cluster-assign", model, held, "--out", outdir],
-                   capsys)
-    assert rc == 0 and "assigned 200 vectors" in out
-    got = {
-        r["vec_id"]: r["cid"]
-        for r in spark.read.parquet(outdir).collect()
-    }
-    want = {
-        r[0]: r[1]
-        for r in kmeans_assign(
-            emb.filter("vec_id >= 300"), cent
-        ).collect()
-    }
-    assert got == want
-
-    # print-only mode reports cluster sizes
-    rc, out = _run(["cluster-assign", model, held], capsys)
-    assert rc == 0 and "sizes" in out
-
-    # batch == stream: the same model drives a readStream availableNow
-    # pass to the identical labels (kmeans_assign is stateless map-only)
-    stream_in = spark.readStream.schema(
-        emb.schema
-    ).parquet(held)
-    stream_out = assign_with_model(stream_in, model)
-    sink = str(tmp_path / "stream_sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = (
-        stream_out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        r["vec_id"]: r["cid"] for r in spark.read.parquet(sink).collect()
-    }
-    assert streamed == want

@@ -1,89 +1,19 @@
-"""Deterministic Lloyd k-means (operators/clustering) and CDC chunking
-(operators/dedup.cdc_chunks) — the two round-10 additions.
+"""CDC chunking (operators/dedup.cdc_chunks).
 
 The oracle gates cover cross-engine value equality; these tests pin the
-ALGORITHMIC invariants the gates can't see: determinism across runs and
-partitionings, the empty-cluster rule, Lloyd's non-increasing objective,
-CDC's boundary-resynchronization property (the reason CDC exists), and
-lossless chunk coverage.
+ALGORITHMIC invariants the gates can't see: CDC's
+boundary-resynchronization property (the reason CDC exists), lossless
+chunk coverage and the clamped walk's bounds.
 """
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from erigon_extract_spark.operators.clustering import (
-    kmeans_lloyd,
-    kmeans_summary,
-)
 from erigon_extract_spark.operators.dedup import cdc_chunks, cdc_savings
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def test_kmeans_deterministic_across_partitionings(emb):
-    a1, c1 = kmeans_lloyd(emb, k=8, iters=2)
-    a2, c2 = kmeans_lloyd(emb.repartition(13), k=8, iters=2)
-    assert c1 == c2  # partial-sum reduce must be partitioning-independent
-    r1 = {r[0]: r[1] for r in a1.collect()}
-    r2 = {r[0]: r[1] for r in a2.collect()}
-    assert r1 == r2
-
-
-def test_kmeans_objective_nonincreasing(emb):
-    """Lloyd's invariant: the within-cluster SSE after each
-    assign+update step never increases (quantization at 6/9 dp can
-    wiggle the last decimals, so allow a hair of slack)."""
-    X = np.asarray(
-        [np.asarray(r[0], dtype=np.float64)
-         for r in emb.select("embedding").orderBy("vec_id").collect()]
-    )
-
-    def sse(cent):
-        c = np.asarray(cent)
-        d2 = ((X[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        return float(d2.min(axis=1).sum())
-
-    losses = [
-        sse(kmeans_lloyd(emb, k=8, iters=i)[1]) for i in range(0, 3)
-    ]
-    for prev, cur in zip(losses, losses[1:]):
-        assert cur <= prev * (1 + 1e-9)
-
-
-def test_kmeans_empty_cluster_keeps_centroid(spark):
-    """Cluster 1 is PROVABLY empty at every iteration: seeds 0 and 1 are
-    coincident at [1.5, 2.5], so every point there ties at distance 0 and
-    the smallest-cid rule always awards it to cluster 0 — cluster 1 never
-    wins a point and must keep its init centroid verbatim (the nz-mask
-    branch in kmeans_lloyd and the summary's LEFT-join n=0 row)."""
-    pts = [(0, [1.5, 2.5]), (1, [1.5, 2.5]), (2, [100.0, 0.0])]
-    df = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
-    _, cent = kmeans_lloyd(df, k=3, iters=2)
-    assert len(cent) == 3
-    assert cent[1] == [1.5, 2.5]  # untouched init value
-    s = {r["cid"]: r for r in kmeans_summary(df, k=3, iters=2).collect()}
-    assert len(s) == 3
-    assert s[1]["n"] == 0  # genuinely empty, not merely small
-    assert s[1]["cent_sum"] == 4.0
-    assert s[0]["n"] == 2 and s[2]["n"] == 1
-    assert sum(r["n"] for r in s.values()) == 3
-
-
-def test_kmeans_summary_counts_match_assignments(emb):
-    s = {r["cid"]: r["n"] for r in kmeans_summary(emb, k=8, iters=3).collect()}
-    a, _ = kmeans_lloyd(emb, k=8, iters=3)
-    counts = {r[0]: r[1] for r in a.groupBy("cid").count().collect()}
-    for cid, n in s.items():
-        assert counts.get(cid, 0) == n
-    assert sum(s.values()) == emb.count()
 
 
 def test_cdc_chunks_cover_document_losslessly(spark, docs):
@@ -244,74 +174,6 @@ def test_cdc_kernel_differential_vs_naive_reference():
     check()
 
 
-def test_kmeans_empty_input_returns_empty(spark):
-    from erigon_extract_spark.operators.clustering import kmeans_lloyd
-
-    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assignments, cent = kmeans_lloyd(df, k=4, iters=2)
-    assert cent == []
-    assert assignments.count() == 0
-    assert [f.name for f in assignments.schema.fields] == ["vec_id", "cid"]
-
-
-def test_kmeans_assign_empty_centroids_returns_empty(spark):
-    """The train-once/assign-forever path with an empty centroid list
-    (kmeans_lloyd over an empty training subset) must yield the same
-    empty (id, cid) contract as kmeans_lloyd itself — not a numpy
-    broadcast error from inside the Arrow batch."""
-    from erigon_extract_spark.operators.clustering import kmeans_assign
-
-    df = spark.createDataFrame(
-        [(1, [0.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    out = kmeans_assign(df, [])
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["vec_id", "cid"]
-
-
-def test_kmeans_assign_empty_centroids_stays_streaming(spark, tmp_path):
-    """The empty-centroids guard must preserve the input's streaming-ness:
-    assign_with_model over readStream with a degenerate (empty-corpus)
-    model should still be a streaming frame, not a batch empty frame —
-    the docstring's 'composes with readStream unchanged' contract covers
-    this edge too."""
-    from erigon_extract_spark.operators.clustering import kmeans_assign
-
-    d = str(tmp_path / "vecs")
-    spark.createDataFrame(
-        [(1, [0.0, 1.0])], "vec_id long, embedding array<double>"
-    ).write.parquet(d)
-    stream = (
-        spark.readStream
-        .schema("vec_id long, embedding array<double>")
-        .parquet(d)
-    )
-    out = kmeans_assign(stream, [])
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == ["vec_id", "cid"]
-
-
-def test_build_kmeans_model_sidecar_records_actual_k(spark, tmp_path):
-    """A corpus smaller than the requested k yields fewer centroids;
-    the sidecar's `k` must be the truth (len(centroids)) with the
-    request preserved separately as `k_requested`."""
-    from erigon_extract_spark.operators.clustering import (
-        build_kmeans_model,
-        load_kmeans_model,
-    )
-
-    df = spark.createDataFrame(
-        [(i, [float(i), 0.0]) for i in range(3)],
-        "vec_id long, embedding array<double>",
-    )
-    out = str(tmp_path / "model")
-    cent = build_kmeans_model(df, out, k=8, iters=2)
-    meta = load_kmeans_model(out)
-    assert len(cent) == 3
-    assert meta["k"] == 3 == len(meta["centroids"])
-    assert meta["k_requested"] == 8
-
-
 def test_cdc_window_overflow_guard():
     """window/base are public parameters; at (window=9, base=131) the
     worst-case rolling hash exceeds 2^63 and int64 would silently wrap —
@@ -399,43 +261,6 @@ def test_cdc_clamp_parameter_validation():
     spans = cdc_chunk_spans("short doc", min_size=16)
     assert [(s, ln) for s, ln, _ in spans] == [(1, 9)]
     assert cdc_chunk_spans("x", min_size=5) == cdc_chunk_spans("x")
-
-
-def test_kmeans_persist_bounds_source_scans(spark):
-    """Scan-count evidence for the persist hint (VERDICT r10 item 5):
-    an accumulator inside a pass-through mapInPandas BELOW the cache
-    counts how many times source rows are actually produced. Without
-    persist the lifecycle reads the source iters+2 times; with
-    persist=True the init+iteration passes hit the cache, so the source
-    is produced at most twice (cache fill + the caller's evaluation of
-    the lazy final assignment) regardless of iters."""
-    import pandas as pd
-
-    n, iters = 256, 4
-    rng = np.random.default_rng(3)
-    pts = [(i, [float(v) for v in rng.normal(size=4)]) for i in range(n)]
-    base = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
-
-    def run(persist):
-        acc = spark.sparkContext.accumulator(0)
-
-        def tap(batches):
-            for pdf in batches:
-                acc.add(len(pdf))
-                yield pdf
-
-        counted = base.mapInPandas(
-            tap, schema="vec_id long, embedding array<double>"
-        )
-        a, c = kmeans_lloyd(counted, k=4, iters=iters, persist=persist)
-        a.count()  # evaluate the final assignment like a caller would
-        return acc.value // n, c
-
-    scans_plain, c_plain = run(False)
-    scans_persist, c_persist = run(True)
-    assert c_plain == c_persist  # the persist is a scan lever, not semantic
-    assert scans_plain == iters + 2
-    assert scans_persist <= 2
 
 
 def test_cdc_clamped_kernel_differential_vs_naive_reference():

@@ -1,69 +1,6 @@
-"""Inverted text index, per-key reservoir sampling, CSV roundtrip edges."""
+"""Per-key reservoir sampling and CSV roundtrip edges."""
 
 from __future__ import annotations
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    rows = [
-        (1, "spark merge fast table"),
-        (2, "spark spark merge"),
-        (3, "merge only here"),
-        (4, "spark alone"),
-        (5, "nothing relevant"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_invindex_and_any_semantics_and_pruning(spark, docs, tmp_path):
-    from erigon_extract_spark.operators.invindex import (
-        build_inverted_index,
-        query_inverted_index,
-    )
-
-    path = str(tmp_path / "idx")
-    build_inverted_index(docs, path, n_buckets=16)
-
-    got = query_inverted_index(spark, path, ["spark", "merge"], mode="and")
-    rows = {r.doc_id: (r.n_terms, r.total_tf) for r in got.collect()}
-    assert rows == {1: (2, 2), 2: (2, 3)}  # tf counts both 'spark' in doc 2
-
-    any_rows = {
-        r.doc_id
-        for r in query_inverted_index(
-            spark, path, ["spark", "merge"], mode="any"
-        ).collect()
-    }
-    assert any_rows == {1, 2, 3, 4}
-
-    # duplicate terms must not break AND (n_terms counts DISTINCT)
-    dup = {
-        r.doc_id
-        for r in query_inverted_index(
-            spark, path, ["spark", "spark", "merge"], mode="and"
-        ).collect()
-    }
-    assert dup == {1, 2}
-
-    # planning-time pruning: PartitionFilters on bucket, and fewer
-    # bucket directories admitted than exist on disk
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "bucket" in plan.split("PartitionFilters:")[1][:200]
-    n_dirs = sum(1 for d in os.listdir(path) if d.startswith("bucket="))
-    assert n_dirs > 2  # enough spread for pruning to mean something
-
-    with pytest.raises(ValueError, match="local filesystem"):
-        build_inverted_index(docs, "s3a://bucket/idx")
-    with pytest.raises(ValueError, match="mode"):
-        query_inverted_index(spark, path, ["spark"], mode="xor")
-    with pytest.raises(ValueError, match="non-empty"):
-        query_inverted_index(spark, path, [])
 
 
 def test_reservoir_per_key_deterministic_and_bounded(spark):
@@ -129,62 +66,3 @@ def test_csv_roundtrip_survives_quotes_commas_newlines(spark, tmp_path):
         .csv(path)
     )
     assert sorted(map(tuple, back.collect())) == sorted(rows)
-
-
-def test_invindex_differential_random_corpora(spark, tmp_path):
-    """Seeded-random differential: for random corpora and random query
-    term sets, index-answered AND/ANY results equal a pure-python
-    tokenize-and-filter reference exactly (the repo's randomized
-    differential pattern)."""
-    import random
-    import re
-
-    from erigon_extract_spark.operators.invindex import (
-        build_inverted_index,
-        query_inverted_index,
-    )
-
-    vocab = ["alpha", "beta", "gamma", "delta", "x1", "y2", "it's", "z"]
-    rng = random.Random(1306)
-    for trial in range(3):
-        rows = [
-            (
-                i,
-                " ".join(
-                    rng.choice(vocab)
-                    for _ in range(rng.randint(0, 12))
-                ),
-            )
-            for i in range(40)
-        ]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        path = str(tmp_path / f"idx{trial}")
-        build_inverted_index(docs, path, n_buckets=8)
-
-        def py_tokens(t):
-            return [w for w in re.split(r"[^a-z0-9']+", t.lower()) if w]
-
-        for _ in range(4):
-            terms = rng.sample(vocab, rng.randint(1, 3))
-            for mode in ("and", "any"):
-                got = {
-                    (r.doc_id, r.n_terms, r.total_tf)
-                    for r in query_inverted_index(
-                        spark, path, terms, mode=mode
-                    ).collect()
-                }
-                want = set()
-                for i, t in rows:
-                    toks = py_tokens(t)
-                    matched = {x for x in set(terms) if x in toks}
-                    if (mode == "and" and matched == set(terms)) or (
-                        mode == "any" and matched
-                    ):
-                        want.add(
-                            (
-                                i,
-                                len(matched),
-                                sum(toks.count(x) for x in matched),
-                            )
-                        )
-                assert got == want, (trial, terms, mode)

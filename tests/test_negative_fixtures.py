@@ -19,6 +19,7 @@ from erigon_extract_spark.operators.asserts import (
 )
 from erigon_extract_spark.plans.extract import (
     code_hash_inconsistencies,
+    decode_storage_changesets,
     plain_state_malformed,
 )
 from erigon_extract_spark.schemas import EMPTY_CODE_HASH, PLAIN_STATE
@@ -42,6 +43,28 @@ def test_malformed_storage_blobs_error():
     assert _decode_storage_one(b"\x00" * 31)[2] is not None
     assert _decode_storage_one(b"\x00" * 65)[2] is not None
     assert _decode_storage_one(None)[2] is not None
+
+
+def test_storage_decode_matches_python_oracle(spark):
+    """The built-in storage decode equals ``_decode_storage_one`` on a null
+    blob and at every length edge: valid (32, 33, 34, 64) or not (0, 31,
+    65), including the empty value of a 32-byte blob."""
+    blobs = [None] + [
+        bytes((7 * i + 1) % 256 for i in range(n))
+        for n in (0, 31, 32, 33, 34, 64, 65)
+    ]
+    scs = spark.createDataFrame(
+        [(block, b"\x01" * 20, 1, blob) for block, blob in enumerate(blobs)],
+        # nullable blob: the null case must reach the decode
+        "block long, address binary, incarnation long, storage_blob binary",
+    )
+    rows = decode_storage_changesets(scs).orderBy("block").collect()
+
+    def _bytes(b):
+        return None if b is None else bytes(b)
+
+    got = [(_bytes(r.slot), _bytes(r.value), r.decode_error) for r in rows]
+    assert got == [_decode_storage_one(b) for b in blobs]
 
 
 def test_malformed_rlp_errors():

@@ -222,37 +222,9 @@ def test_no_unexpected_quadratic_plans_across_all_queries(spark, sf_dir):
     quadratic BY DESIGN (brute-force oracle baselines over a bounded side)
     are allowlisted explicitly so a new accidental cartesian can't hide."""
     bnlj_by_design = {
-        # exact-cosine pair/topk baselines: bounded broadcast side, the
+        # exact-cosine topk baseline: bounded broadcast side, the
         # quadratic scan IS the documented algorithm (oracle baselines)
-        "dedup_embedding_cosine",
         "sim_bruteforce_topk",
-        # hard-negative mining: corpus x broadcast ANCHOR BATCH (a
-        # training batch — bounded by construction); the corpus scan is
-        # linear, the anchor side never exceeds batch size
-        "sim_hard_negatives",
-        # MMR retrieve-then-rerank: candidate generation is the same
-        # corpus x broadcast-anchor shape; the rerank stage is bounded
-        # at n_candidates rows per anchor group
-        "sim_mmr_rerank",
-        # recall evaluation: its EXACT arm is brute_force_topk (the
-        # documented baseline); the eval joins themselves are k-rows-
-        # per-probe scale
-        "sim_recall_eval",
-        # probes x centroids: the broadcast side is the n_lists centroid
-        # table (8 rows) — the cell-selection step of IVF, linear in probes
-        "sim_ivf_topk",
-        # PQ ADC: corpus codes x broadcast per-probe lookup tables (5 rows)
-        # and probes x sub-codebooks (m*n_codes rows) — both broadcast
-        # sides are constant-size; the scan is linear in the corpus
-        "sim_pq_topk",
-        # IVFPQ composition: the same constant-size broadcast shapes as
-        # sim_ivf (probes x n_lists centroids) and sim_pq (probes x
-        # m*n_codes codebooks, mean-recall scalar crossJoin); the
-        # candidate join itself is a cell equi-join, linear in the
-        # probed fraction of the corpus
-        "sim_ivfpq_topk",
-        # same shapes answered from the persisted, partition-pruned index
-        "sim_ivfpq_index_topk",
         # scalar-subquery shapes: BNLJ against a ONE-ROW global aggregate
         # (avg threshold / scalar combine) — linear by construction
         "erigon_txbodies_stats",
@@ -287,15 +259,9 @@ def test_no_unexpected_quadratic_plans_across_all_queries(spark, sf_dir):
         "corpus_curation_keep_list",
         # localCheckpoints its synthetic corpus at build time (perf probe)
         "curation_scale",
-        # writes the bucket-partitioned index at build time
-        "sim_lsh_index_topk",
-        # builds + incrementally appends the IVFPQ index at build time
-        "sim_ivfpq_index_add",
         # trains merges (iterative jobs) at build time
         "text_bpe_tokenize",
         "pack_by_bpe_budget",
-        # runs the covariance pass + driver eigh at build time
-        "embedding_pca_invariants",
     }
     offenders = {}
     for name, fn in q.QUERIES.items():
@@ -380,20 +346,6 @@ def test_prefix_sum_global_window_is_totals_only(spark, sf_dir):
     assert "__tot" in plan, plan
     # the row-side window partitions by the bucket id: a hash exchange
     assert "hashpartitioning(__b" in plan, plan
-
-
-def test_kmeans_assignment_pass_has_no_exchange(spark, sf_dir):
-    """The k-means scale contract: the final-assignment pass is ONE
-    MapInPandas stage over the corpus scan — zero Exchange. (The
-    per-iteration partial-sum passes have the same shape; the returned
-    DataFrame pins the representative plan.)"""
-    from erigon_extract_spark.operators.clustering import kmeans_lloyd
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assignments, _ = kmeans_lloyd(emb, k=8, iters=1)
-    plan = _plan(assignments)
-    assert "Exchange" not in plan, plan
-    assert "MapInPandas" in plan
 
 
 def test_cdc_chunker_is_map_only_and_savings_exchanges_triples(spark, sf_dir):

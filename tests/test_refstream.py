@@ -476,25 +476,35 @@ def _account_answer(path, item):
         (lambda blob: blob[: len(blob) - 100], "truncated archive"),
         (lambda blob: blob[: rs.HEADER_SIZE - 1], "shorter than the 256-byte archive header"),
         (lambda blob: b"\0" * 8 + blob[8:], "bad header magic"),
+        (lambda blob: blob[:3] + bytes([blob[3] ^ 1]) + blob[4:], "bad header magic"),
         (
             lambda blob: blob[: rs.merged_page_starts(rs.decode_header(blob), len(blob))[-1]],
             "truncated archive",
         ),
     ],
-    ids=["end_of_states_past_eof", "short_header", "bad_magic", "cut_at_page_boundary"],
+    ids=[
+        "end_of_states_past_eof",
+        "short_header",
+        "bad_magic",
+        "magic_byte_3_flipped",
+        "cut_at_page_boundary",
+    ],
 )
 def test_point_lookup_rejects_a_damaged_archive(spark, tmp_path, damage, message):
     """A damaged archive raises a ValueError naming the defect in every
     merged-layout reader; none answers from what is left (a lost tail
-    would otherwise yield an older version, None, or fewer rows)."""
+    would otherwise yield an older version, None, or fewer rows). The
+    readers given a path name it in the error."""
     items = _fixture_items()
     path = tmp_path / "damaged.dat"
     path.write_bytes(damage(rs.encode_full_history_file(items, 0, 121)))
     last = max(items, key=rs._item_sort_key)
-    with pytest.raises(ValueError, match=message):
+    with pytest.raises(ValueError, match=message) as lookup_err:
         rs.point_lookup(str(path), last.address, 10**9)
-    with pytest.raises(ValueError, match=message):
+    assert str(path) in str(lookup_err.value)
+    with pytest.raises(ValueError, match=message) as df_err:
         rs.read_ref_file_df(spark, str(path), strategy=0)
+    assert str(path) in str(df_err.value)
     with pytest.raises(ValueError, match=message):
         rs.decode_full_history_file(path.read_bytes())
 

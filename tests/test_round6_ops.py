@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -382,103 +381,6 @@ def test_tfidf_shingle_terms_mode(spark):
             for r in rows] == [(1, 2, 2, 1.0)]
 
 
-# ------------------------------------------------- add_to_ivfpq_index
-
-
-@pytest.fixture(scope="module")
-def ivfpq_halves(spark, tmp_path_factory):
-    """Index built on the even-id half of a deterministic vector set;
-    the odd half is the add batch."""
-    import math as _m
-
-    from erigon_extract_spark.operators.similarity import build_ivfpq_index
-
-    dim, n = 8, 120
-    rows = []
-    for i in range(n):
-        # LCG-derived components: well-separated vectors (no periodic
-        # near-duplicates — those collapse to identical PQ codes and
-        # make "self in the ADC top-rerank pool" tie-luck)
-        s = i * 2654435761 % (2**32)
-        v = []
-        for _j in range(dim):
-            s = (s * 6364136223846793005 + 1442695040888963407) % (2**64)
-            v.append((s >> 33) / 2**31 - 1.0)
-        # L2-normalize: the rerank stage scores by inner product, so
-        # self-recall (self IP = 1 is the max) needs unit vectors
-        nrm = _m.sqrt(sum(x * x for x in v))
-        rows.append((i, [x / nrm for x in v]))
-    _ = _m
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    base = vecs.filter(F.col("vec_id") % 2 == 0)
-    add = vecs.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    build_ivfpq_index(base, path, n_lists=4, m=2, n_codes=8)
-    return path, base, add
-
-
-def test_ivfpq_add_assignment_matches_mllib(spark, ivfpq_halves):
-    # The literal-array argmin in add_to_ivfpq_index must reproduce the
-    # MLlib KMeans.transform cell and every PQ code for vectors the
-    # BUILD already encoded: re-add the base half to a scratch copy and
-    # compare row-for-row against the build's own parquet rows.
-    import json
-    import shutil
-
-    from erigon_extract_spark.operators.similarity import add_to_ivfpq_index
-
-    path, base, _add = ivfpq_halves
-    scratch = path + "_scratch"
-    shutil.copytree(path, scratch)
-    # wipe the data files but keep the sidecar: re-encode from scratch
-    import os
-
-    for sub in os.listdir(scratch):
-        if sub.startswith("cell="):
-            shutil.rmtree(os.path.join(scratch, sub))
-    n = add_to_ivfpq_index(spark, scratch, base)
-    assert n == base.count()
-    orig = {
-        r.vec_id: (r.cell, list(r.codes))
-        for r in spark.read.parquet(path).collect()
-    }
-    readd = {
-        r.vec_id: (r.cell, list(r.codes))
-        for r in spark.read.parquet(scratch).collect()
-    }
-    assert readd == orig
-
-
-def test_ivfpq_add_self_recall_exact(spark, ivfpq_halves):
-    # After adding the odd half, querying with every added vector at
-    # n_probe = n_lists (no cell can be missed) and exact rerank must
-    # return the vector itself as top-1.
-    import shutil
-
-    from erigon_extract_spark.operators.similarity import (
-        add_to_ivfpq_index,
-        query_ivfpq_index,
-    )
-
-    path, _base, add = ivfpq_halves
-    grown = path + "_grown"
-    shutil.copytree(path, grown)
-    n = add_to_ivfpq_index(spark, grown, add)
-    assert n == add.count()
-    probes = add.select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    # rerank >= corpus size: with every cell probed and every candidate
-    # exactly re-scored, top-1 MUST be self (unit vectors) — this pins
-    # that added rows are reachable and carry intact vectors, with no
-    # dependence on ADC quantization luck
-    top1 = query_ivfpq_index(
-        spark, grown, probes, k=1, n_probe=4, rerank=200
-    )
-    got = {r.probe_id: r.vec_id for r in top1.collect()}
-    assert got == {r.vec_id: r.vec_id for r in add.collect()}
-
-
 # ------------------------------------------------------- interpolate_at
 
 
@@ -540,56 +442,6 @@ def test_interpolate_duplicate_ts_collapse_and_before_first(spark):
         for r in interpolate_at(samples, grid).collect()
     }
     assert got == {0: 7.0, 1: 7.0, 2: 7.0, 3: 8.0, 4: 9.0}
-
-
-# ---------------------------------------------------------------- pca
-
-
-def test_pca_matches_numpy_direct(spark):
-    # Distributed covariance + projection vs numpy.cov/eigh computed
-    # directly on the collected matrix: eigenvalues, covariance diagonal,
-    # and per-row projections must agree to float tolerance.
-    from erigon_extract_spark.operators.similarity import pca_fit_project
-
-    rng = np.random.default_rng(11)
-    m = rng.normal(size=(40, 6))
-    m[:, 0] *= 5.0  # make the spectrum non-degenerate
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in m[i]]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    ).repartition(7)
-    proj, w, mu, cd = pca_fit_project(df, dim=6)
-
-    mu_np = m.mean(axis=0)
-    cov_np = (m - mu_np).T @ (m - mu_np) / len(m)
-    w_np, v_np = np.linalg.eigh(cov_np)
-    assert np.allclose(sorted(w, reverse=True), w_np[::-1], atol=1e-9)
-    assert np.allclose(mu, mu_np, atol=1e-12)
-    assert np.allclose(cd, np.diag(cov_np), atol=1e-9)
-
-    got = {r.vec_id: np.array(r.proj) for r in proj.collect()}
-    centered = m - mu_np
-    for i in range(40):
-        # axes are sign/permutation-free only up to eigh's choice, so
-        # compare the rotation-invariant norm and the exact projection
-        # against THIS fit's eigenvectors is covered by norms + spectrum
-        assert abs(np.dot(got[i], got[i]) - np.dot(centered[i], centered[i])) < 1e-9
-
-
-def test_pca_k_truncation_and_validation(spark):
-    from erigon_extract_spark.operators.similarity import pca_fit_project
-
-    df = spark.createDataFrame(
-        [(i, [float(i), 2.0 * i, 0.5]) for i in range(10)],
-        "vec_id long, embedding array<double>",
-    )
-    proj, w, _mu, _cd = pca_fit_project(df, dim=3, k=1)
-    rows = proj.collect()
-    assert all(len(r.proj) == 1 for r in rows)
-    # rank-1 data: top component carries all variance
-    assert w[0] > 1e-6 and abs(w[1]) < 1e-9 and abs(w[2]) < 1e-9
-    with pytest.raises(ValueError):
-        pca_fit_project(df, dim=3, k=4)
 
 
 # ------------------------------------------------------ nearest as-of

@@ -1,15 +1,11 @@
-"""Similarity search: brute-force exactness and LSH/IVF recall."""
+"""Similarity search: brute-force exactness and the artifact cache."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from erigon_extract_spark.operators.similarity import (
-    brute_force_topk,
-    ivf_topk,
-    lsh_bucket_topk,
-)
+from erigon_extract_spark.operators.similarity import brute_force_topk
 
 
 @pytest.fixture(scope="module")
@@ -47,365 +43,6 @@ def test_bruteforce_self_is_top1(exact):
         assert ids[0] == pid  # a vector's nearest neighbor is itself
 
 
-def test_pq_recall_vs_exact(spark, emb):
-    """Product quantization at 8 codes x 64 centroids (32x compression of
-    a 64-dim float vector): mean recall@10 vs exact cosine must be far
-    above the ~0.02 random baseline on these unstructured synthetic
-    embeddings (real embedding manifolds cluster and do much better)."""
-    from erigon_extract_spark.operators.similarity import l2_norm, pq_topk
-
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    norm = base.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: x / l2_norm(F.col("embedding"))
-        ).alias("embedding"),
-    )
-    probes = norm.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    corpus = norm.filter(F.col("vec_id") >= 5)
-    approx = pq_topk(corpus, probes, k=10, m=8, n_codes=64)
-    got = {}
-    for r in approx.collect():
-        got.setdefault(r["probe_id"], set()).add(r["vec_id"])
-    ex = {}
-    for r in brute_force_topk(corpus, probes, k=10).collect():
-        ex.setdefault(r["probe_id"], set()).add(r["vec_id"])
-    recalls = [len(got[p] & ex[p]) / 10 for p in ex]
-    assert sum(recalls) / len(recalls) >= 0.3, recalls
-
-
-def test_ivf_recall_vs_exact(emb, probes, exact):
-    approx = ivf_topk(emb, probes, k=10, n_lists=8, n_probe=4)
-    got = {
-        pid: {r["vec_id"] for r in rows}
-        for pid, rows in _group(approx.collect(), "probe_id")
-    }
-    for pid, ids in exact.items():
-        recall = len(set(ids) & got.get(pid, set())) / len(ids)
-        assert recall >= 0.5, f"probe {pid}: recall {recall}"
-
-
-def test_lsh_returns_subset_scores_match(emb, probes, exact):
-    approx = lsh_bucket_topk(emb, probes, dim=64, k=10, n_planes=4)
-    rows = approx.collect()
-    assert len(rows) > 0
-    # every reported cosine must equal the true cosine (LSH prunes
-    # candidates, never alters scores): self-match cosine == 1
-    self_rows = [r for r in rows if r["probe_id"] == r["vec_id"]]
-    assert all(abs(r["cosine"] - 1.0) < 1e-9 for r in self_rows)
-
-
-def test_semantic_dedup_pins_brute_force_within_cells(spark, emb):
-    """SemDeDup semantics vs a brute-force python check: (a) every dropped
-    vector's dup_of is its SMALLEST same-cell neighbor with cosine >=
-    threshold; (b) every kept vector has NO lower-id same-cell neighbor
-    above threshold; (c) exact duplicate vectors always dedup (same point
-    -> same cell)."""
-    import math
-
-    from erigon_extract_spark.operators.similarity import semantic_dedup
-
-    base = emb.filter(F.col("vec_id") < 120)
-    # plant exact duplicates of vec 0 and 1
-    clones = base.filter(F.col("vec_id") < 2).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding", "label"
-    )
-    corpus = base.unionByName(clones)
-    thr = 0.92
-    out = {r.vec_id: r for r in semantic_dedup(
-        corpus, threshold=thr, n_lists=6
-    ).collect()}
-    assert len(out) == 122
-
-    vecs = {r.vec_id: r.embedding for r in corpus.collect()}
-    cells = {vid: out[vid].cell for vid in out}
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb)
-
-    for vid, r in out.items():
-        lower_dups = sorted(
-            o for o in out
-            if o < vid and cells[o] == cells[vid]
-            and cos(vecs[o], vecs[vid]) >= thr
-        )
-        if lower_dups:
-            assert r.dup_of == lower_dups[0] and not r.keep, (vid, r)
-        else:
-            assert r.dup_of is None and r.keep, (vid, r)
-
-    # exact clones: same cell as their source, deduped against it
-    assert not out[10_000].keep and out[10_000].dup_of == 0
-    assert not out[10_001].keep and out[10_001].dup_of == 1
-
-
-def test_random_projection_preserves_cosine_approximately(spark, emb):
-    """JL property on real vectors: 64->16 projection keeps cosine
-    neighborhoods roughly intact — projected cosine correlates with true
-    cosine across sampled pairs (loose bound; the exactness claim lives in
-    the oracle gate, this pins the geometry is sane)."""
-    import math
-
-    from erigon_extract_spark.operators.similarity import random_projection
-
-    sub = emb.filter(F.col("vec_id") < 40)
-    proj = {r.vec_id: [r[f"p{j}"] for j in range(16)]
-            for r in random_projection(sub, dim=64, out_dim=16).collect()}
-    orig = {r.vec_id: list(r.embedding) for r in sub.collect()}
-    assert set(proj) == set(orig) and len(proj[0]) == 16
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
-
-    pairs = [(i, j) for i in range(0, 40, 5) for j in range(i + 1, 40, 7)]
-    diffs = [abs(cos(orig[i], orig[j]) - cos(proj[i], proj[j])) for i, j in pairs]
-    # 16 random dims: expect rough preservation, not exactness
-    assert sum(diffs) / len(diffs) < 0.35
-    # projection is deterministic
-    again = {r.vec_id: [r[f"p{j}"] for j in range(16)]
-             for r in random_projection(sub, dim=64, out_dim=16).collect()}
-    assert again == proj
-
-
-def test_quantize_int8_codes_and_reconstruction_bound(spark, emb):
-    from erigon_extract_spark.operators.similarity import quantize_int8
-
-    sub = emb.filter(F.col("vec_id") < 30)
-    rows = quantize_int8(sub).collect()
-    orig = {r.vec_id: list(r.embedding) for r in sub.collect()}
-    assert len(rows) == 30 * 64
-    for r in rows:
-        assert 0 <= r.code <= 255
-        mn, mx = r.mn_r, r.mx_r
-        x = float(orig[r.vec_id][r.dim])
-        if mx > mn:
-            # scale is 255 (mx maps to code 255): cell width range/255,
-            # midpoint dequantization error bounded by one cell width
-            recon = mn + (r.code + 0.5) * (mx - mn) / 255.0
-            assert abs(x - recon) <= (mx - mn) / 255.0 + 1e-5, (r, x, recon)
-    # extremes map to the ends of the code range
-    by_vec = {}
-    for r in rows:
-        by_vec.setdefault(r.vec_id, []).append(r)
-    for vid, rs in by_vec.items():
-        codes = {r.dim: r.code for r in rs}
-        v = [float(x) for x in orig[vid]]
-        assert codes[v.index(min(v))] == 0
-        assert codes[v.index(max(v))] == 255
-
-
-def test_lsh_index_persist_prunes_partitions_and_matches(spark, emb, probes, tmp_path):
-    """Persisted LSH index: (a) querying it returns the SAME top-k as the
-    in-memory bucket join; (b) the scan is partition-pruned — only the
-    probes' bucket directories are read."""
-    from erigon_extract_spark.operators.similarity import (
-        build_lsh_index,
-        lsh_bucket_topk,
-        query_lsh_index,
-    )
-
-    path = str(tmp_path / "lsh_idx")
-    build_lsh_index(emb, path, dim=64, n_planes=4)
-
-    got = query_lsh_index(spark, path, probes, dim=64, k=10, n_planes=4)
-    expect = lsh_bucket_topk(emb, probes, dim=64, k=10, n_planes=4)
-    g = {(r.probe_id, r.vec_id): round(r.cosine, 9) for r in got.collect()}
-    e = {(r.probe_id, r.vec_id): round(r.cosine, 9) for r in expect.collect()}
-    assert g == e and len(g) > 0
-
-    # pruning: the scan node carries a non-trivial PartitionFilter on
-    # bucket (planning-time directory pruning), and the probes hit a
-    # strict subset of the bucket domain
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert scan_lines and any(
-        "bucket" in ln.split("PartitionFilters", 1)[1][:120] for ln in scan_lines
-    ), plan
-    import os
-
-    n_buckets = sum(1 for d in os.listdir(path) if d.startswith("bucket="))
-    probe_buckets = {r.probe_id for r in got.collect()}  # <=3 probes
-    assert len(probe_buckets) <= 3 < n_buckets
-
-
-def test_semantic_dedup_oversized_cells_keep_all_members(spark, emb):
-    """max_cell_size bounds PAIRING cost only: vectors in oversized cells
-    must still appear in the output, all keep=True — not silently vanish."""
-    from erigon_extract_spark.operators.similarity import semantic_dedup
-
-    sub = emb.filter(F.col("vec_id") < 60)
-    out = semantic_dedup(sub, threshold=0.35, n_lists=4, max_cell_size=5)
-    rows = out.collect()
-    assert len(rows) == 60  # every vector present
-    from collections import Counter
-
-    per_cell = Counter(r.cell for r in rows)
-    big_cells = {c for c, n in per_cell.items() if n > 5}
-    assert big_cells  # the cap actually binds on this data
-    for r in rows:
-        if r.cell in big_cells:
-            assert r.keep and r.dup_of is None, r
-
-
-def test_pq_rerank_recovers_recall(spark, emb, probes, exact):
-    """The two-stage ADC->exact-rerank path must strictly improve (or at
-    worst equal) ADC-only recall, and clear a higher floor — the property
-    the sim_pq_topk driver gate's recall witness rests on."""
-    from erigon_extract_spark.operators.similarity import pq_topk
-
-    corpus = emb
-    ex = {pid: set(ids) for pid, ids in exact.items()}
-
-    def recall(df):
-        got = {}
-        for r in df.select("probe_id", "vec_id").collect():
-            got.setdefault(r.probe_id, set()).add(r.vec_id)
-        return sum(len(got.get(p, set()) & ex[p]) / 10 for p in ex) / len(ex)
-
-    plain = recall(pq_topk(corpus, probes, k=10, m=8, n_codes=32))
-    rr = recall(pq_topk(corpus, probes, k=10, m=8, n_codes=32, rerank=50))
-    assert rr >= plain
-    assert rr >= 0.6, (plain, rr)
-
-
-def test_ivfpq_recall_and_candidate_bound(spark, emb, probes, exact):
-    """Composed IVF+PQ: recall@10 with re-rank clears the floor, and the
-    candidate universe is genuinely restricted to the probed cells (the
-    sublinear-scan property — candidates << corpus when n_probe < n_lists)."""
-    from erigon_extract_spark.operators.similarity import ivfpq_topk
-
-    ex = {pid: set(ids) for pid, ids in exact.items()}
-    out = ivfpq_topk(
-        emb, probes, k=10, n_lists=8, n_probe=3, m=8, n_codes=32, rerank=50
-    )
-    got = {}
-    for r in out.select("probe_id", "vec_id").collect():
-        got.setdefault(r.probe_id, set()).add(r.vec_id)
-    mean_recall = sum(
-        len(got.get(p, set()) & ex[p]) / 10 for p in ex
-    ) / len(ex)
-    assert mean_recall >= 0.3, mean_recall
-
-    # scan restriction: with 1 of 8 cells probed and no re-rank, ADC-only
-    # candidates for a probe are at most that cell's population
-    narrow = ivfpq_topk(
-        emb, probes, k=10_000, n_lists=8, n_probe=1, m=8, n_codes=32
-    )
-    per_probe = narrow.groupBy("probe_id").count().collect()
-    n = emb.count()
-    for r in per_probe:
-        assert r["count"] < n, "probe scanned the whole corpus"
-
-
-def test_pq_adc_table_gap_safe_on_degenerate_corpus(spark):
-    """r5 review: KMeans can return FEWER than n_codes centers on a
-    degenerate corpus (heavy exact duplicates — the dedup regime). The
-    ADC table is slot-KEYED, so missing codes must not shift later
-    subspaces' entries: the probe's exact duplicate must rank first with
-    a finite score."""
-    from erigon_extract_spark.operators.similarity import pq_topk
-
-    base = [[float((i * 7 + j * 3) % 5 - 2) for j in range(16)]
-            for i in range(3)]  # only 3 distinct vectors
-    rows = [(i, base[i % 3]) for i in range(90)]
-    corpus = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    probes = spark.createDataFrame(
-        [(0, base[1])], "probe_id long, embedding array<double>"
-    )
-    out = pq_topk(corpus, probes, k=5, m=4, n_codes=32).collect()
-    assert len(out) == 5
-    assert all(r.score is not None for r in out)
-    # the probe IS base[1]: its clones (vec_id % 3 == 1) carry the
-    # strictly-highest ADC score (dot(b1,b1) > dot(b1,b_other) — the
-    # vectors are non-parallel), and ties break by smallest id, so the
-    # first result must be vec_id 1 exactly
-    assert out[0].vec_id == 1, [(r.vec_id, r.score) for r in out]
-    top_score = max(r.score for r in out)
-    best = [r.vec_id for r in out if abs(r.score - top_score) < 1e-9]
-    assert all(v % 3 == 1 for v in best), best
-
-
-def test_ivfpq_persisted_index_matches_in_memory_and_prunes(
-    spark, emb, probes, tmp_path
-):
-    """The at-rest IVFPQ: (a) a query answered from the persisted index
-    equals the in-memory ivfpq_topk answer exactly (same seeds -> same
-    trained state -> same ADC scores and tie-breaks); (b) the probe
-    read is PARTITION-PRUNED (PartitionFilters on cell, and fewer cell
-    directories touched than exist)."""
-    import os
-
-    from erigon_extract_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-        query_ivfpq_index,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(emb, path, n_lists=8, m=8, n_codes=16)
-    got = query_ivfpq_index(
-        spark, path, probes, k=10, n_probe=3, rerank=30
-    )
-    want = ivfpq_topk(
-        emb, probes, k=10, n_lists=8, n_probe=3, m=8, n_codes=16,
-        rerank=30,
-    )
-    grows = sorted(
-        (r.probe_id, r.vec_id, round(r.score, 9)) for r in got.collect()
-    )
-    wrows = sorted(
-        (r.probe_id, r.vec_id, round(r.score, 9)) for r in want.collect()
-    )
-    assert grows == wrows
-
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    pf = plan.split("PartitionFilters:")[1][:200]
-    assert "cell" in pf, pf
-    n_dirs = sum(1 for d in os.listdir(path) if d.startswith("cell="))
-    probed = {r.cell for r in spark.read.parquet(path)
-              .filter("cell is not null").select("cell").distinct()
-              .collect()}
-    assert n_dirs == len(probed)  # all cells materialized
-    # pruning actually narrows the read: with n_probe=1 the single probe
-    # touches exactly one cell directory's worth of candidates
-    one = query_ivfpq_index(
-        spark, path, probes.limit(1), k=10_000, n_probe=1
-    )
-    cand_ids = {r.vec_id for r in one.collect()}
-    per_cell = {r.cell: r["count"] for r in spark.read.parquet(path)
-                .groupBy("cell").count().collect()}
-    assert len(cand_ids) in per_cell.values()
-    assert len(cand_ids) < sum(per_cell.values())
-
-
-def test_ivfpq_index_rejects_non_local_paths():
-    """r5 advice: the _ivfpq_meta.json sidecar goes through plain
-    open(), so a remote-URI destination would produce a meta-less
-    (unqueryable) index — both build and query must reject such paths
-    BEFORE touching the destination."""
-    from erigon_extract_spark.operators.similarity import (
-        build_ivfpq_index,
-        query_ivfpq_index,
-    )
-
-    for bad in ("hdfs://nn/idx", "s3a://bucket/idx", "file:/tmp/idx"):
-        with pytest.raises(ValueError, match="local filesystem"):
-            build_ivfpq_index(None, bad)
-        with pytest.raises(ValueError, match="local filesystem"):
-            query_ivfpq_index(None, bad, None)
-
-
 def test_cached_artifact_cleans_tmp_on_build_failure(tmp_path, monkeypatch):
     """r5 advice: a build() that raises must not leak its partial
     .build.<pid> directory into the uid cache (one per retry, forever)."""
@@ -441,143 +78,3 @@ def test_cached_artifact_cleans_tmp_on_build_failure(tmp_path, monkeypatch):
 
     final = _cached_artifact(src_dir, "embeddings", "fam", "p=1", ok_build)
     assert os.path.isfile(os.path.join(final, "ok"))
-
-
-def test_hard_negatives_label_guard_and_numpy_parity(spark, emb):
-    """Hard negatives never share the anchor's label, return exactly k
-    per anchor, and match an independent numpy derivation."""
-    import numpy as np
-
-    from erigon_extract_spark.operators.similarity import hard_negatives
-
-    embd = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    )
-    anchors = embd.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("anchor_id"), "embedding", "label"
-    )
-    got = hard_negatives(embd, anchors, k=5).collect()
-
-    rows = embd.collect()
-    ids = np.array([r.vec_id for r in rows])
-    labels = {r.vec_id: r.label for r in rows}
-    mat = np.array([r.embedding for r in rows], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    by_anchor = {}
-    for r in got:
-        by_anchor.setdefault(r.anchor_id, []).append(r)
-    assert set(by_anchor) == {0, 1, 2, 3}
-    for aid, negs in by_anchor.items():
-        assert len(negs) == 5
-        assert all(labels[n.vec_id] != labels[aid] for n in negs)
-        assert all(n.negative_label == labels[n.vec_id] for n in negs)
-        a = mat[ids == aid][0]
-        sims = mat @ a
-        mask = np.array([labels[i] != labels[aid] for i in ids])
-        order = sorted(
-            zip(-sims[mask], ids[mask])
-        )  # cosine desc, vec_id asc — the operator's tie order
-        want = [int(v) for _, v in order[:5]]
-        assert sorted(n.vec_id for n in negs) == sorted(want)
-
-def test_mmr_select_numpy_parity_and_diversity(spark, emb):
-    """MMR rerank matches an independent numpy greedy derivation exactly
-    (selection order, not just the set), and actually diversifies: on at
-    least one anchor the k selections differ from the relevance-only
-    top-k (if they never differ, the penalty term is dead code)."""
-    import numpy as np
-
-    from erigon_extract_spark.operators.similarity import mmr_select
-
-    K, N_CAND, LAM, MU = 4, 12, 0.7, 0.3
-    embd = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    anchors = embd.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("anchor_id"), "embedding"
-    )
-    got = mmr_select(embd, anchors, k=K, n_candidates=N_CAND,
-                     lam=LAM, mu=MU).collect()
-
-    rows = embd.collect()
-    ids = np.array([r.vec_id for r in rows])
-    mat = np.array([r.embedding for r in rows], dtype=np.float64)
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-
-    by_anchor = {}
-    for r in got:
-        by_anchor.setdefault(r.anchor_id, []).append(r)
-    assert set(by_anchor) == {0, 1, 2, 3}
-
-    any_diverged = False
-    for aid, sels in by_anchor.items():
-        sels.sort(key=lambda r: r.sel_rank)
-        assert [r.sel_rank for r in sels] == list(range(1, K + 1))
-        a = unit[ids == aid][0]
-        rel = unit @ a
-        mask = ids != aid
-        # candidate set: top-N_CAND by (rel desc, id asc)
-        order = sorted(zip(-rel[mask], ids[mask]))[:N_CAND]
-        cand_ids = [int(v) for _, v in order]
-        cand_rel = {int(v): -nr for nr, v in order}
-        # independent greedy MMR
-        selected, remaining = [], list(cand_ids)
-        for _ in range(K):
-            best, best_key = None, None
-            for cid in remaining:
-                ci = unit[ids == cid][0]
-                pen = max(
-                    (float(ci @ unit[ids == s][0]) for s in selected),
-                    default=0.0,
-                )
-                score = LAM * cand_rel[cid] - MU * pen
-                key = (-score, cid)
-                if best_key is None or key < best_key:
-                    best, best_key = cid, key
-            selected.append(best)
-            remaining.remove(best)
-        assert [r.vec_id for r in sels] == selected, (aid, sels, selected)
-        # mmr_score must be non-increasing is NOT guaranteed by MMR in
-        # general, but rank-1 is the pure-relevance argmax by definition
-        assert sels[0].vec_id == cand_ids[0]
-        if [r.vec_id for r in sels] != cand_ids[:K]:
-            any_diverged = True
-    assert any_diverged, "penalty term never changed a selection"
-
-def test_ann_recall_report_properties(spark, emb):
-    """Recall evaluator: identical inputs score 1.0; a deliberately
-    wrong approx arm scores 0 hits (and survives the left join); the
-    LSH arm's recall lands in (0, 1] with n_exact pinned at k."""
-    from erigon_extract_spark.operators.similarity import (
-        ann_recall_report,
-        brute_force_topk,
-        lsh_bucket_topk,
-    )
-
-    embd = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    probes = embd.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    exact = brute_force_topk(embd, probes, k=10)
-
-    perfect = ann_recall_report(exact, exact).collect()
-    assert {r.recall for r in perfect} == {1.0}
-    assert {r.n_exact for r in perfect} == {10}
-
-    # shift every approx id out of the corpus range: zero intersection
-    wrong = exact.withColumn("vec_id", F.col("vec_id") + 10_000_000)
-    zero = ann_recall_report(exact, wrong).collect()
-    assert {r.n_hits for r in zero} == {0}
-    assert {r.recall for r in zero} == {0.0}
-
-    approx = lsh_bucket_topk(embd, probes, dim=64, k=10, n_planes=6)
-    got = {r.probe_id: r for r in ann_recall_report(exact, approx).collect()}
-    assert set(got) == {0, 1, 2}
-    for pid, r in got.items():
-        assert r.n_exact == 10
-        assert 0 < r.recall <= 1.0  # self-match guarantees at least one hit
-        assert r.n_hits == round(r.recall * 10)

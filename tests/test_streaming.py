@@ -510,41 +510,3 @@ def test_stream_cdc_chunks_matches_batch(spark, sf_dir):
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_kmeans_assign_matches_batch(spark, sf_dir):
-    """Frozen-centroid k-means assignment over a file-drop vector stream
-    == the batch assignment: kmeans_assign is a stateless broadcastable
-    map (plan-pinned zero Exchange), so it streams unchanged — the
-    embedding-ingest half of the train-once/assign-forever lifecycle."""
-    import tempfile
-
-    from erigon_extract_spark.operators.clustering import (
-        kmeans_assign,
-        kmeans_lloyd,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _, cent = kmeans_lloyd(emb.filter(F.col("vec_id") < 300), k=4, iters=2)
-    new = emb.filter(F.col("vec_id") >= 300).select("vec_id", "embedding")
-    d = tempfile.mkdtemp(prefix="kma_stream_")
-    try:
-        new.filter(F.col("vec_id") < 400).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/drop1")
-        new.filter(F.col("vec_id") >= 400).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/drop2")
-        stream = (
-            spark.readStream.schema(new.schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(d)
-        )
-        _run_available_now(
-            kmeans_assign(stream, cent), "kma_stream", "append"
-        )
-        got = {r[0]: r[1] for r in spark.table("kma_stream").collect()}
-        expected = {r[0]: r[1] for r in kmeans_assign(new, cent).collect()}
-        assert got == expected and len(got) == new.count()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

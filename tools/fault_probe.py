@@ -21,9 +21,8 @@ Each operator's output with the injected retry must equal the
 undisturbed run exactly.
 
 Covered kernels: the CDC chunker (stateless Arrow map), the clamped
-walk, k-means (driver-reduced partials — retry re-emits a partition's
-partial sums), MinHash-LSH candidate pairs (shuffle above the tap),
-and exact dedup (hash agg above the tap).
+walk, MinHash-LSH candidate pairs (shuffle above the tap), and exact
+dedup (hash agg above the tap).
 
 Usage: python tools/fault_probe.py [sf_dir]
 Prints one PASS/FAIL line per operator and exits nonzero on any FAIL.
@@ -73,7 +72,6 @@ def main() -> None:
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from erigon_extract_spark.operators.clustering import kmeans_lloyd
     from erigon_extract_spark.operators.dedup import (
         cdc_chunks,
         exact_dedup,
@@ -83,10 +81,6 @@ def main() -> None:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
     doc_schema = "doc_id long, text string"
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    emb_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in emb.schema.fields
-    )
 
     n_fail = 0
     acc = spark.sparkContext.accumulator(0)
@@ -123,18 +117,6 @@ def main() -> None:
         minhash_lsh_pairs_portable(docs),
         minhash_lsh_pairs_portable(flaky_tap(docs, doc_schema, acc)),
     )
-
-    a_clean, c_clean = kmeans_lloyd(emb, k=4, iters=2)
-    before = acc.value
-    a_flaky, c_flaky = kmeans_lloyd(flaky_tap(emb, emb_schema, acc),
-                                    k=4, iters=2)
-    injected = acc.value - before
-    ok = c_clean == c_flaky and injected >= 1
-    print(f"{'PASS' if ok else 'FAIL'} kmeans_centroids: "
-          f"{len(c_flaky)} centroids equal={c_clean == c_flaky}, "
-          f"{injected} retried tasks", flush=True)
-    n_fail += not ok
-    check("kmeans_assignments", a_clean, a_flaky)
 
     print(f"== {'ALL PASS' if not n_fail else f'{n_fail} FAIL'} ==",
           flush=True)

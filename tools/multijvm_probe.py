@@ -19,8 +19,8 @@ probe is evidence about process-boundary correctness, not about network
 bandwidth or data locality — SCALE.md says exactly that next to the
 ledger.
 
-This probe runs the shuffle-heaviest oracle-backed gates (the same
-family selection rule as tools/sf1_sweep.py) through the IDENTICAL
+This probe runs the shuffle-heaviest oracle-backed gate of each family
+(see DEFAULT_PROBE) through the IDENTICAL
 driver-semantics compare (`run_gate.run_one`: type-tagged cells, column
 order, value equality vs the DuckDB oracle) on a 2-worker x 8-core
 local-cluster, and writes a driver-format ledger to MULTIJVM.json.
@@ -49,7 +49,7 @@ from erigon_extract_spark.session import get_spark  # noqa: E402
 # range-repartition + window (transpose/rekey), hash-exchange agg,
 # broadcast join, SMJ explode join, banded-LSH self-join, iterative
 # label propagation, salted skew join, sketch merge (treeAggregate of
-# numpy state), mapInPandas Arrow batches (k-means partials), and the
+# numpy state), mapInPandas Arrow batches (the CDC chunker), and the
 # encoded-file binary codec path (Arrow binary columns cross the wire).
 DEFAULT_PROBE = [
     "erigon_state_history",       # K-way merge via ONE rangepartitioning
@@ -59,7 +59,6 @@ DEFAULT_PROBE = [
     "dedup_minhash_portable",     # banded LSH bucket self-join
     "dedup_connected_clusters",   # iterative min-label propagation
     "dedup_cdc_chunks_clamped",   # Arrow mapInPandas kernel, map-only
-    "embedding_kmeans",           # driver-reduced k x n_batches partials
     "agg_cms_heavy_hitters",      # numpy sketch merge across executors
     "join_salted_skew",           # salted two-phase join
     "agg_salted_skew",            # salted two-phase aggregation
