@@ -26,3 +26,42 @@ def hostile_oracle_cols(columns, types) -> list[tuple[str, str]]:
         if s in _BAD_EXACT or s.startswith("DECIMAL"):
             out.append((name, s))
     return out
+
+
+def round_half_away(x: float, dp: int = 9) -> float:
+    """Exact mirror of DuckDB ``ROUND(DOUBLE, dp)``: std::round(x * 10^dp)
+    / 10^dp, half away from zero, sign-preserving (DuckDB emits -0.0 for
+    tiny negatives). Python's ``round``/np.round are half-EVEN — on a
+    value whose scaled form sits exactly on .5 (constructible from
+    coarse-decimal inputs: five (1e-5)^2 terms sum to 5e-10 exactly) the
+    two rules pick DIFFERENT quantized values, which can flip an
+    argmin/argmax winner between the engines. The naive
+    ``floor(y + 0.5)`` mirror is also wrong: for y = 0.49999999999999994
+    the float add rounds up to 1.0, while std::round keeps 0. This form
+    (compare the exact fractional part) matched DuckDB on a 90k-value
+    differential fuzz including those boundaries
+    (tests/test_tie_semantics.py keeps the fuzz alive)."""
+    import math
+
+    s = 10.0 ** dp
+    y = x * s
+    a = abs(y)
+    f = math.floor(a)
+    if a - f >= 0.5:
+        f += 1.0
+    return math.copysign(f, y) / s
+
+
+def np_round_half_away(arr, dp: int = 9):
+    """Vectorized :func:`round_half_away` over a numpy float64 array —
+    the quantize-before-argmin/argmax step for a numpy kernel whose tie
+    behavior must be identical to its DuckDB oracle's ``ROUND(...)`` by
+    construction, not by float luck."""
+    import numpy as np
+
+    s = 10.0 ** dp
+    y = np.asarray(arr, dtype=np.float64) * s
+    a = np.abs(y)
+    f = np.floor(a)
+    f = f + (a - f >= 0.5)
+    return np.copysign(f, y) / s

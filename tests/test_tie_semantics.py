@@ -1,20 +1,18 @@
-"""Quantize-before-argmin/argmax tie semantics, cross-engine (VERDICT r10
-item 3).
+"""Quantize-before-argmin/argmax tie semantics, cross-engine.
 
-The k-means and MMR kernels decide winners on ROUND(value, 9)-quantized
-scores, and their DuckDB oracles do the same — but "round to 9 dp" is not
+An oracle that decides a winner on ROUND(value, 9)-quantized scores must
+quantize the same way on the Python side — but "round to 9 dp" is not
 one rule: numpy/Python round half-EVEN, DuckDB (std::round) half-AWAY.
 On a value that lands exactly on the 0.5e-9 grid line (constructible from
 coarse-decimal inputs: e.g. five (1e-5)^2 terms sum to 5e-10 exactly) the
 two rules pick DIFFERENT quantized values and an argmin winner can flip
 between the engines — this file's `test_half_even_would_diverge` keeps a
-concrete such counterexample on record. The fix is a shared rule:
+concrete such counterexample on record. The shared rule:
 ``oracle_compat.round_half_away`` / ``np_round_half_away`` mirror DuckDB
 ROUND exactly, and these tests pin that mirror (differential fuzz against
 live DuckDB, including the float boundaries where the naive
-``floor(y+0.5)`` mirror breaks) plus the end-to-end property: on
-adversarial near-grid inputs the numpy kernels and a DuckDB-semantics
-re-derivation pick the same winner.
+``floor(y+0.5)`` mirror breaks) plus the property that on adversarial
+near-grid argmin/argmax inputs the mirror and DuckDB pick the same winner.
 """
 import math
 
@@ -151,18 +149,3 @@ def test_mmr_score_tie_matches_duckdb_rule(duck):
     for s, dref in zip(scores, got):
         assert round_half_away(s, 9) == dref
 
-
-def test_kmeans_gate_shape_survives_shared_rule(spark):
-    """Smoke: the deterministic k-means still fixes the same clustering
-    on continuous data after the rule swap (continuous float distances
-    essentially never sit on the grid, so half-even -> half-away must
-    not move real-data results)."""
-    from erigon_extract_spark.operators.clustering import kmeans_lloyd
-
-    rng = np.random.default_rng(7)
-    pts = [(i, [float(v) for v in rng.normal(size=8)]) for i in range(64)]
-    df = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
-    a1, c1 = kmeans_lloyd(df, k=4, iters=2)
-    a2, c2 = kmeans_lloyd(df.repartition(5), k=4, iters=2)
-    assert c1 == c2
-    assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
