@@ -125,117 +125,3 @@ def as_of_join(
         ],
         *[F.col("__rm").getField(c).alias(c) for c in right_cols],
     )
-
-
-def as_of_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_time: str,
-    right_time: str,
-    tolerance_us: int | None = None,
-) -> DataFrame:
-    """Nearest-match as-of join (pandas ``merge_asof(direction='nearest')``
-    semantics): for each left row, the right row whose time is CLOSEST in
-    either direction, optionally only if within ``tolerance_us``
-    microseconds. Every left row survives (nulls when nothing qualifies).
-    Equidistant prev/next ties go to the EARLIER right row; a right row at
-    exactly the left time matches with delta 0. Right rows should be
-    unique per (keys, time) — collapse duplicates first, or the bracket
-    choice among same-instant rows is partitioning-dependent.
-
-    Physical strategy: the same single-shuffle union-and-window merge as
-    ``as_of_join``, but BOTH brackets come from one sort — ``last`` over
-    the preceding frame (prev right row) and ``first`` over the following
-    frame (next right row) in the same window partitioning, so Spark
-    reuses one Exchange + one Sort for both directions. Cost stays
-    O(|L_k| + |R_k|) per key; no pair materialization, no per-row probe.
-
-    Time columns may be TIMESTAMP (compared in exact microseconds) or
-    integral versions (compared as-is; ``tolerance_us`` is then in the
-    column's own units). Returns left's columns + right's non-key columns
-    + ``nearest_delta_us`` (the signed right - left distance's absolute
-    value; null when unmatched).
-    """
-    on = list(on)
-    l_payload = [c for c in left.columns if c not in on]
-    right_cols = [c for c in right.columns if c not in on]
-    r_struct_type = (
-        "struct<"
-        + ",".join(
-            f"`{c}`:{right.schema[c].dataType.simpleString()}"
-            for c in right_cols
-        )
-        + ">"
-    )
-
-    def t_us(col, schema, name):
-        dt = schema[name].dataType.simpleString()
-        return F.unix_micros(col) if dt.startswith("timestamp") else col.cast("long")
-
-    l_tag = left.select(
-        *on,
-        t_us(F.col(left_time), left.schema, left_time).alias("__t"),
-        F.lit(1).alias("__side"),
-        *[F.col(c).alias(f"__l_{c}") for c in l_payload],
-        F.lit(None).cast(r_struct_type).alias("__rs"),
-    )
-    r_tag = right.filter(F.col(right_time).isNotNull()).select(
-        *on,
-        t_us(F.col(right_time), right.schema, right_time).alias("__t"),
-        F.lit(0).alias("__side"),
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(f"__l_{c}")
-            for c in l_payload
-        ],
-        F.struct(*[F.col(c) for c in right_cols]).alias("__rs"),
-    )
-    u = r_tag.unionByName(l_tag)
-    # right rows sort BEFORE left rows at the same instant, so an exact-
-    # time right row lands in the PREV bracket (delta 0, wins any tie)
-    order = [F.col("__t").asc_nulls_first(), F.col("__side").asc()]
-    wb = (
-        Window.partitionBy(*on)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy(*on)
-        .orderBy(*order)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    rt = F.when(F.col("__side") == 0, F.col("__t"))
-    rs = F.when(F.col("__side") == 0, F.col("__rs"))
-    br = (
-        u.select(
-            *on,
-            "__t",
-            "__side",
-            *[f"__l_{c}" for c in l_payload],
-            F.last(rs, ignorenulls=True).over(wb).alias("__rp"),
-            F.last(rt, ignorenulls=True).over(wb).alias("__pt"),
-            F.first(rs, ignorenulls=True).over(wf).alias("__rn"),
-            F.first(rt, ignorenulls=True).over(wf).alias("__nt"),
-        )
-        .filter(F.col("__side") == 1)
-    )
-    d_prev = F.col("__t") - F.col("__pt")
-    d_next = F.col("__nt") - F.col("__t")
-    if tolerance_us is not None:
-        d_prev = F.when(d_prev <= tolerance_us, d_prev)
-        d_next = F.when(d_next <= tolerance_us, d_next)
-    # prev wins ties (<=); either side may be null-ed by the tolerance
-    use_prev = F.col("__pt").isNotNull() & d_prev.isNotNull() & (
-        F.col("__nt").isNull() | d_next.isNull() | (d_prev <= d_next)
-    )
-    use_next = ~use_prev & F.col("__nt").isNotNull() & d_next.isNotNull()
-    pick = F.when(use_prev, F.col("__rp")).when(use_next, F.col("__rn"))
-    delta = F.when(use_prev, d_prev).when(use_next, d_next)
-    return br.select(
-        *[
-            F.col(c) if c in on else F.col(f"__l_{c}").alias(c)
-            for c in left.columns
-        ],
-        *[pick.getField(c).alias(c) for c in right_cols],
-        delta.alias("nearest_delta_us"),
-    )

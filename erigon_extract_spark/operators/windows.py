@@ -46,18 +46,6 @@ def rekey_first_block(
     return out
 
 
-def monotonic_violations(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    block_col: str = "block",
-    out_col: str = "block_from",
-) -> DataFrame:
-    """Rows where the re-keyed block did not step forward (reference warns
-    at erigon_extract.c:2421-2433). Empty on well-formed input — use with
-    ``assert_empty``."""
-    return df.filter((F.col(out_col) >= F.col(block_col)) & (F.col(out_col) != 0))
-
-
 def delta_encode(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -199,127 +187,6 @@ def dedup_keep_first(
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def intervalize(
-    df: DataFrame,
-    key_cols: list[str],
-    version_col: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Changelog → validity intervals (the SCD-type-2 / temporal-table
-    build): each key's versions become rows carrying
-    ``valid_from`` = own version, ``valid_to`` = next version (null while
-    current) and ``is_current``. The dual of ``state_at``/``as_of_join``:
-    those answer "state at time t" per query; this materializes ALL
-    states with their validity ranges so any t answers by a plain
-    BETWEEN predicate — the layout a warehouse keeps for history tables
-    (and what the reference's state-history output is, reference
-    README.md:37-41, generalized to any keyed changelog).
-
-    One hash shuffle on the keys; lead() runs inside the same
-    partitioning. Append-friendly: new versions only rewrite each key's
-    previously-open interval."""
-    w = Window.partitionBy(*key_cols).orderBy(F.col(version_col).asc())
-    return df.select(
-        *key_cols,
-        F.col(version_col).alias("valid_from"),
-        F.lead(version_col).over(w).alias("valid_to"),
-        *value_cols,
-    ).withColumn("is_current", F.col("valid_to").isNull())
-
-
-def interpolate_at(
-    samples: DataFrame,
-    grid: DataFrame,
-    *,
-    key_cols: Sequence[str] = ("user_id",),
-    time_col: str = "ts",
-    value_col: str = "value",
-    tick_col: str = "tick",
-) -> DataFrame:
-    """Time-series linear interpolation / gap-fill: for every (key,
-    tick) in ``grid``, the value linearly interpolated between the
-    key's bracketing samples — the time-series-alignment extension of
-    the as-of family (as-of answers "last value at t"; this answers
-    "value AT t" for irregular series resampled onto a grid).
-
-    Edge semantics: before the first sample or after the last, the
-    nearest sample's value is held (constant extrapolation); a tick
-    with no samples at all for its key yields NULL; a tick exactly on
-    a sample returns that sample's value (frac = 0 falls out of the
-    formula — no special case).
-
-    Determinism: samples are first collapsed to one row per (key, ts)
-    via MAX(value), so duplicate-timestamp ties cannot make the
-    bracketing values engine- or partitioning-dependent. The
-    interpolation itself is a fixed IEEE expression over exact inputs
-    (microsecond deltas are exact int64 -> double conversions), so
-    engines agree bit-for-bit before the 6 dp output round.
-
-    Scale shape: the union-and-window classic — grid markers are
-    unioned with the samples and BOTH directions of bracketing come
-    from one window over one hash shuffle on (key), ordered by (ts,
-    is_grid). No per-tick join, no correlated probes: cost is one sort
-    of |samples| + |grid| per key, the plan that survives a 100 TB
-    series. Returns (key_cols..., tick, value_interp).
-    """
-    keys = list(key_cols)
-    s = (
-        # a NULL-valued sample is NO sample: kept, it would desync the
-        # value bracket (ignorenulls skips it) from the time bracket
-        # (which would still see its timestamp)
-        samples.filter(F.col(value_col).isNotNull())
-        .groupBy(*keys, F.col(time_col).alias("__t"))
-        .agg(F.max(value_col).alias("__v"))
-        .withColumn("__is_grid", F.lit(0))
-    )
-    g = grid.select(
-        *keys, F.col(tick_col).alias("__t")
-    ).withColumn("__v", F.lit(None).cast("double")).withColumn(
-        "__is_grid", F.lit(1)
-    )
-    u = s.unionByName(g)
-    # sample rows sort BEFORE the grid marker at the same instant, so a
-    # tick exactly on a sample sees it as its "previous" bracket
-    order = [F.col("__t").asc(), F.col("__is_grid").asc()]
-    wb = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    sample_t = F.when(F.col("__is_grid") == 0, F.unix_micros(F.col("__t")))
-    bracketed = u.select(
-        *keys,
-        "__t",
-        "__is_grid",
-        F.last("__v", ignorenulls=True).over(wb).alias("__pv"),
-        F.last(sample_t, ignorenulls=True).over(wb).alias("__pt"),
-        F.first("__v", ignorenulls=True).over(wf).alias("__nv"),
-        F.first(sample_t, ignorenulls=True).over(wf).alias("__nt"),
-    ).filter(F.col("__is_grid") == 1)
-    t_us = F.unix_micros(F.col("__t"))
-    frac = (t_us - F.col("__pt")).cast("double") / (
-        F.col("__nt") - F.col("__pt")
-    ).cast("double")
-    interp = (
-        F.when(F.col("__pt").isNull(), F.col("__nv"))
-        .when(F.col("__nt").isNull(), F.col("__pv"))
-        .when(F.col("__nt") == F.col("__pt"), F.col("__pv"))
-        .otherwise(
-            F.col("__pv") + (F.col("__nv") - F.col("__pv")) * frac
-        )
-    )
-    return bracketed.select(
-        *keys,
-        F.col("__t").alias(tick_col),
-        F.round(interp, 6).alias("value_interp"),
     )
 
 

@@ -2,9 +2,8 @@
 
 Each entry pairs a Spark DataFrame implementation with an equivalent ANSI
 SQL string for the DuckDB oracle (run over the same parquet tables). Keys
-map to SURVEY.md §2 operators (s*/p*/j*/w*/a*/o* prefixes), TPC-H-style
-analytic queries (q*), and the beyond-reference training-data operators
-(dedup_*, text_*, sim_*).
+map to SURVEY.md §2 operators (s*/p*/j*/w*/a*/o* prefixes) and the
+beyond-reference training-data operators (dedup_*, text_*, sim_*).
 
 Rules for oracle parity (learned the hard way, encoded once here):
 - Alias every computed column identically on both sides.
@@ -92,7 +91,7 @@ def _events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dsum(col) -> F.Column:
     """Order-independent float sum: per-row cast to DECIMAL(18,6), exact
     decimal addition, result back to double. Large double sums rounded to
-    cents can flip on accumulation order alone (observed: one q9 group off
+    cents can flip on accumulation order alone (observed: one group off
     by a cent between two runs of the SAME engine); decimal sums cannot.
     The SQL mirror is ROUND(CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE), k).
 
@@ -226,45 +225,6 @@ def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q3_shipping_priority",
-    """
-    SELECT l_orderkey,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-           o_orderdate, o_orderpriority
-    FROM customer JOIN orders ON c_custkey = o_custkey
-                  JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-03-15'
-      AND l_shipdate > TIMESTAMP '1998-03-15'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, o_orderdate, l_orderkey
-    LIMIT 10
-    """,
-)
-def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
-    )
-    li = _load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-@query(
     "q5_local_supplier_volume",
     """
     SELECT n_name,
@@ -307,73 +267,6 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-    )
-
-
-@query(
-    "q6_revenue_change",
-    """
-    SELECT ROUND(CAST(SUM(CAST(l_extendedprice * l_discount
-                 AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
-           COUNT(*) AS n_rows
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l_shipdate < TIMESTAMP '1998-01-01'
-      AND l_discount BETWEEN 0.03 AND 0.07
-      AND l_quantity < 24
-    """,
-)
-def q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.03)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(_dsum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            ),
-            F.count("*").alias("n_rows"),
-        )
-    )
-
-
-@query(
-    "q10_returned_items",
-    """
-    SELECT c_custkey, c_name, n_name,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN nation   ON c_nationkey = n_nationkey
-    WHERE l_returnflag = 'R'
-    GROUP BY c_custkey, c_name, n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _load(spark, sf_dir, "customer")
-    orders = _load(spark, sf_dir, "orders")
-    li = _load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = _load(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
     )
 
 
@@ -1728,36 +1621,6 @@ def corpus_mixture_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# HLL sketch values are engine-specific, so the oracle can't reproduce
-# approx_parts — instead the ERROR BOUND rides through the value hash
-# (VERDICT r4 #5): Spark's HLL++ is deterministic for a fixed dataset
-# (register maxes are order-free), so the boolean is stable, and the
-# exact side is fully hash-gated.
-@query(
-    "agg_approx_distinct",
-    """
-    SELECT l_returnflag,
-           CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-           TRUE AS approx_within_10pct
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def approx_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _load(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey").alias("approx_parts"),
-        F.countDistinct("l_partkey").alias("exact_parts"),
-    )
-    return agg.select(
-        "l_returnflag",
-        "exact_parts",
-        (
-            F.abs(F.col("approx_parts") - F.col("exact_parts"))
-            <= 0.1 * F.col("exact_parts")
-        ).alias("approx_within_10pct"),
-    )
-
-
 def _u256_limb_sql() -> str:
     """DuckDB oracle for 256-bit add/sub: no 256-bit type exists there, so
     the oracle does SCHOOLBOOK LIMB ARITHMETIC — eight 32-bit limbs parsed
@@ -2907,726 +2770,9 @@ def erigon_ref_file_lookup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H-shaped analytic queries, part 2 (correlated subqueries, EXISTS /
-# NOT EXISTS, outer-join histograms, conditional-aggregate ratios,
-# disjunctive predicates, distinct aggregates). The classic q2/q9/q11/q16/
-# q20/q21 need a partsupp table or commit/receipt dates the test corpus
-# lacks; shapes are adapted to the available columns. Reference analog:
-# none (the reference has no query language, SURVEY.md §2.13) — this is the
-# generic analytics surface of the new engine.
+# Ranking, cube, grouping-set and time-window surface. Reference analog:
+# none (the reference has no query language, SURVEY.md §2.13).
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "q4_order_priority",
-    """
-    SELECT o_orderpriority, COUNT(*) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-      AND o_orderdate < TIMESTAMP '1997-04-01'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-    GROUP BY o_orderpriority
-    """,
-)
-def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated EXISTS → left-semi join with a mixed equi + range
-    predicate. Catalyst plans the equi part as the join key and the range
-    part as a join-time filter, so no cartesian blowup at scale."""
-    orders = _load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    li = _load(spark, sf_dir, "lineitem")
-    return (
-        orders.join(
-            li,
-            (orders.o_orderkey == li.l_orderkey)
-            & (li.l_shipdate > orders.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-@query(
-    "q7_volume_shipping",
-    """
-    SELECT supp_nation, cust_nation, l_year, ROUND(SUM(volume), 2) AS revenue
-    FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                 EXTRACT(year FROM l_shipdate) AS l_year,
-                 l_extendedprice * (1 - l_discount) AS volume
-          FROM supplier
-          JOIN lineitem ON s_suppkey = l_suppkey
-          JOIN orders   ON o_orderkey = l_orderkey
-          JOIN customer ON c_custkey = o_custkey
-          JOIN nation n1 ON s_nationkey = n1.n_nationkey
-          JOIN nation n2 ON c_nationkey = n2.n_nationkey
-          WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-              OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-            AND l_shipdate BETWEEN TIMESTAMP '1996-01-01'
-                               AND TIMESTAMP '1997-12-31') shipping
-    GROUP BY supp_nation, cust_nation, l_year
-    """,
-)
-def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two aliased copies of the nation dim (both broadcast) + a
-    disjunctive cross-nation predicate evaluated after both joins."""
-    li = _load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate").between(
-            F.lit("1996-01-01").cast("timestamp"),
-            F.lit("1997-12-31").cast("timestamp"),
-        )
-    )
-    n1 = _load(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = _load(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
-    )
-    df = (
-        _load(spark, sf_dir, "supplier")
-        .join(li, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(_load(spark, sf_dir, "orders"), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(_load(spark, sf_dir, "customer"), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .filter(
-            ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-        )
-    )
-    return df.groupBy(
-        "supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year")
-    ).agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-            "revenue"
-        )
-    )
-
-
-@query(
-    "q8_market_share",
-    """
-    SELECT o_year,
-           ROUND(SUM(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END)
-                 / SUM(volume), 4) AS mkt_share
-    FROM (SELECT EXTRACT(year FROM o_orderdate) AS o_year,
-                 l_extendedprice * (1 - l_discount) AS volume,
-                 n2.n_name AS nation
-          FROM part
-          JOIN lineitem ON p_partkey = l_partkey
-          JOIN supplier ON s_suppkey = l_suppkey
-          JOIN orders   ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation n1 ON c_nationkey = n1.n_nationkey
-          JOIN region   ON n1.n_regionkey = r_regionkey
-          JOIN nation n2 ON s_nationkey = n2.n_nationkey
-          WHERE r_name = 'ASIA' AND p_type = 'PROMO'
-            AND o_orderdate BETWEEN TIMESTAMP '1996-01-01'
-                                AND TIMESTAMP '1997-12-31') all_nations
-    GROUP BY o_year
-    """,
-)
-def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-table star join; every dim side is broadcast-sized, so the plan is
-    one pass over lineitem with chained broadcast hash joins — the shape
-    that survives a 100x fact-table scale-up."""
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    orders = _load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate").between(
-            F.lit("1996-01-01").cast("timestamp"),
-            F.lit("1997-12-31").cast("timestamp"),
-        )
-    )
-    n1 = _load(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk")
-    )
-    n2 = _load(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nation")
-    )
-    region = _load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    df = (
-        li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .join(_load(spark, sf_dir, "supplier"), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_load(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("c_nk"))
-        .join(F.broadcast(region), F.col("c_rk") == F.col("r_regionkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nk"))
-    )
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return df.groupBy(F.year("o_orderdate").cast("long").alias("o_year")).agg(
-        F.round(
-            F.sum(F.when(F.col("nation") == "NATION_3", vol).otherwise(F.lit(0.0)))
-            / F.sum(vol),
-            4,
-        ).alias("mkt_share")
-    )
-
-
-@query(
-    "q12_late_shipment_priority",
-    """
-    SELECT l_returnflag,
-           COUNT(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH'))
-               AS high_line_count,
-           COUNT(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH'))
-               AS low_line_count
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE l_shipdate >= o_orderdate + INTERVAL 60 DAY
-      AND l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate < TIMESTAMP '1998-01-01'
-    GROUP BY l_returnflag
-    """,
-)
-def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional-count aggregation over a join with a cross-column date
-    predicate (shipment >= 60 days after order)."""
-    orders = _load(spark, sf_dir, "orders")
-    li = _load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .filter(F.col("l_shipdate") >= F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.when(high, F.lit(1))).alias("high_line_count"),
-            F.count(F.when(~high, F.lit(1))).alias("low_line_count"),
-        )
-    )
-
-
-@query(
-    "q13_customer_distribution",
-    """
-    SELECT c_count, COUNT(*) AS custdist
-    FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
-          FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-          GROUP BY c_custkey) c_orders
-    GROUP BY c_count
-    """,
-)
-def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outer join + two-level aggregation (per-customer order count, then a
-    histogram of those counts). COUNT(col) semantics — nulls from the outer
-    join don't count — match between engines."""
-    cust = _load(spark, sf_dir, "customer")
-    orders = _load(spark, sf_dir, "orders")
-    per_cust = (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
-
-
-@query(
-    "q14_promo_effect",
-    """
-    SELECT ROUND(100.0 * SUM(CASE WHEN p_type = 'PROMO'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0 END)
-                 / SUM(l_extendedprice * (1 - l_discount)), 4) AS promo_revenue
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-      AND l_shipdate < TIMESTAMP '1997-10-01'
-    """,
-)
-def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional-aggregate ratio. Float parity rule: mirror the exact op
-    order — 100.0 * SUM(case) / SUM(all), rounded once at the end."""
-    li = _load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
-    )
-    part = _load(spark, sf_dir, "part")
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.join(
-        F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
-    ).agg(
-        F.round(
-            F.lit(100.0)
-            * F.sum(F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0)))
-            / F.sum(vol),
-            4,
-        ).alias("promo_revenue")
-    )
-
-
-@query(
-    "q15_top_supplier",
-    """
-    WITH revenue AS (
-      SELECT l_suppkey AS supplier_no,
-             ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                   AS DECIMAL(18,6))) AS DOUBLE), 2) AS total_revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        AND l_shipdate < TIMESTAMP '1997-04-01'
-      GROUP BY l_suppkey)
-    SELECT s_suppkey, s_name, total_revenue
-    FROM supplier JOIN revenue ON s_suppkey = supplier_no
-    WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-    """,
-)
-def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar MAX subquery against a derived revenue relation. Revenue is
-    rounded to cents BEFORE the max/equality so cross-engine float
-    accumulation order can't flip the argmax."""
-    li = _load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.round(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("total_revenue")
-    )
-    max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    return (
-        _load(spark, sf_dir, "supplier")
-        .join(revenue, F.col("s_suppkey") == F.col("supplier_no"))
-        .join(F.broadcast(max_rev), F.col("total_revenue") == F.col("max_revenue"))
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
-
-
-@query(
-    "q16_supplier_count_by_part",
-    """
-    SELECT p_brand, p_type, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand <> 'Brand#12' AND p_size IN (1, 5, 9, 13)
-    GROUP BY p_brand, p_type
-    """,
-)
-def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregate over a join (partsupp-free adaptation of the
-    classic parts/supplier relationship query)."""
-    part = _load(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#12") & F.col("p_size").isin(1, 5, 9, 13)
-    )
-    li = _load(spark, sf_dir, "lineitem")
-    return (
-        li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand", "p_type")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@query(
-    "q17_small_quantity_revenue",
-    """
-    SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#12'
-      AND l_quantity < (SELECT 0.2 * ROUND(AVG(l2.l_quantity), 6)
-                        FROM lineitem l2
-                        WHERE l2.l_partkey = lineitem.l_partkey)
-    """,
-)
-def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar-AVG subquery, decorrelated into a per-part
-    aggregate + broadcast join (what Catalyst does to the SQL form too).
-    The AVG is rounded to 6 decimals on both sides so the strict-< filter
-    can't flip on cross-engine accumulation order."""
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#12")
-    per_part_avg = li.groupBy(F.col("l_partkey").alias("avg_pk")).agg(
-        (F.lit(0.2) * F.round(F.avg("l_quantity"), 6)).alias("qty_threshold")
-    )
-    return (
-        li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .join(per_part_avg, F.col("l_partkey") == F.col("avg_pk"))
-        .filter(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg(F.round(F.sum("l_extendedprice") / F.lit(7.0), 2).alias("avg_yearly"))
-    )
-
-
-@query(
-    "q18_large_volume_customer",
-    """
-    SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-           ROUND(SUM(l_quantity), 2) AS sum_qty
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
-                         GROUP BY l_orderkey HAVING SUM(l_quantity) > 250)
-    GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-    """,
-)
-def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IN-subquery with HAVING → aggregate + left-semi join. Quantities are
-    integral doubles, so the >250 sum compares exactly in both engines."""
-    li = _load(spark, sf_dir, "lineitem")
-    big_orders = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("tot_qty"))
-        .filter(F.col("tot_qty") > 250)
-        .select("l_orderkey")
-    )
-    all_orders = _load(spark, sf_dir, "orders")
-    orders = all_orders.join(
-        big_orders, all_orders.o_orderkey == big_orders.l_orderkey, "left_semi"
-    )
-    return (
-        _load(spark, sf_dir, "customer")
-        .join(orders, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-    )
-
-
-@query(
-    "q19_disjunctive_revenue",
-    """
-    SELECT ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-           AND l_quantity BETWEEN 1 AND 11)
-       OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-           AND l_quantity BETWEEN 10 AND 20)
-       OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-           AND l_quantity BETWEEN 20 AND 30)
-    """,
-)
-def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Disjunctive multi-column predicate spanning both join sides; the
-    p_brand IN (...) implied superset is still pushdown-able to the part
-    scan while the full OR evaluates post-join."""
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part")
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .filter(cond)
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
-
-@query(
-    "q22_dormant_rich_customers",
-    """
-    SELECT n_name, COUNT(*) AS numcust, ROUND(SUM(c_acctbal), 2) AS totacctbal
-    FROM customer JOIN nation ON c_nationkey = n_nationkey
-    WHERE c_acctbal > (SELECT ROUND(AVG(c_acctbal), 6) FROM customer
-                       WHERE c_acctbal > 0.0)
-      AND NOT EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey
-                        AND o_orderdate >= TIMESTAMP '2000-01-01')
-    GROUP BY n_name
-    """,
-)
-def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-AVG subquery (kept in-plan as a broadcast cross join — no
-    driver collect) + NOT EXISTS anti join. Adapted from the classic
-    global-sales-opportunity shape: every synthetic customer has orders, so
-    dormancy = no order since 2000."""
-    cust = _load(spark, sf_dir, "customer")
-    nation = _load(spark, sf_dir, "nation")
-    recent = _load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
-    )
-    avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        F.round(F.avg("c_acctbal"), 6).alias("avg_bal")
-    )
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.count("*").alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-    )
-
-
-@query(
-    "q2_min_cost_supplier",
-    """
-    WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-    SELECT s_acctbal, s_name, n_name, p_partkey, p_type
-    FROM ps
-    JOIN part ON p_partkey = ps.l_partkey
-    JOIN supplier ON s_suppkey = ps.l_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE p_size = 15 AND p_type = 'STANDARD' AND r_name = 'EUROPE'
-      AND s_acctbal = (SELECT MIN(s2.s_acctbal)
-                       FROM ps ps2
-                       JOIN supplier s2 ON s2.s_suppkey = ps2.l_suppkey
-                       JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-                       JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-                       WHERE ps2.l_partkey = ps.l_partkey
-                         AND r2.r_name = 'EUROPE')
-    """,
-)
-def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 adaptation (min-cost supplier). The testdata has no
-    partsupp table, so the part↔supplier relation is the DISTINCT
-    (l_partkey, l_suppkey) projection of lineitem and the minimized "cost"
-    is s_acctbal. The correlated MIN subquery decorrelates into a window
-    min over p_partkey — one shuffle, no join-back. s_acctbal is compared
-    raw (no arithmetic on either side), so float equality is exact."""
-    ps = (
-        _load(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-    part = _load(spark, sf_dir, "part").filter(
-        (F.col("p_size") == 15) & (F.col("p_type") == "STANDARD")
-    )
-    region = _load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    supp_eu = (
-        _load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(_load(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        ps.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(supp_eu), F.col("l_suppkey") == F.col("s_suppkey"))
-        .withColumn("min_bal", F.min("s_acctbal").over(w))
-        .filter(F.col("s_acctbal") == F.col("min_bal"))
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_type")
-    )
-
-
-@query(
-    "q9_product_type_profit",
-    """
-    SELECT n_name AS nation,
-           CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS o_year,
-           ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                     - 0.6 * p_retailprice * l_quantity
-                     AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_profit
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
-    JOIN supplier ON s_suppkey = l_suppkey
-    JOIN orders ON o_orderkey = l_orderkey
-    JOIN nation ON s_nationkey = n_nationkey
-    WHERE p_name LIKE '%bolt%'
-    GROUP BY n_name, EXTRACT(year FROM o_orderdate)
-    """,
-)
-def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 adaptation (product-type profit). No partsupp →
-    supply cost proxied as 0.6 * p_retailprice. Star join: lineitem fact
-    vs three broadcast dims + orders; profit aggregated by supplier
-    nation × order year.
-
-    The per-row profit casts to DECIMAL(18,6) before SUM: decimal
-    addition is exact and therefore order-independent, so the cross-engine
-    hash can't flip at a ROUND boundary the way a double SUM did (observed
-    one group off by a cent at sf0.01 from accumulation order alone)."""
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
-    supp = _load(spark, sf_dir, "supplier")
-    orders = _load(spark, sf_dir, "orders")
-    nation = _load(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(0.6) * F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
-    return (
-        li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("int").alias("o_year"),
-        )
-        .agg(
-            F.round(
-                F.sum(profit.cast("decimal(18,6)")).cast("double"), 2
-            ).alias("sum_profit")
-        )
-    )
-
-
-@query(
-    "q11_important_stock",
-    """
-    SELECT l_partkey,
-           ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)))
-                 AS DOUBLE), 2) AS part_value
-    FROM lineitem
-    JOIN supplier ON s_suppkey = l_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
-    WHERE n_name = 'NATION_7'
-    GROUP BY l_partkey
-    HAVING ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)))
-                 AS DOUBLE), 2) >
-           (SELECT ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)))
-                   AS DOUBLE) * 0.0005, 2)
-            FROM lineitem
-            JOIN supplier ON s_suppkey = l_suppkey
-            JOIN nation ON s_nationkey = n_nationkey
-            WHERE n_name = 'NATION_7')
-    """,
-)
-def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 adaptation (important stock). Stock value per part =
-    SUM(l_extendedprice) over one nation's suppliers; keep parts above a
-    fraction of the nation total (global-aggregate scalar subquery, kept
-    in-plan via broadcast cross join — no driver collect). Both the group
-    sums and the threshold round to 2 decimals on both engines."""
-    li = _load(spark, sf_dir, "lineitem")
-    supp = (
-        _load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                _load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey")
-    )
-    base = li.join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-    threshold = base.agg(
-        F.round(_dsum(F.col("l_extendedprice")) * F.lit(0.0005), 2).alias(
-            "threshold"
-        )
-    )
-    return (
-        base.groupBy("l_partkey")
-        .agg(F.round(_dsum(F.col("l_extendedprice")), 2).alias("part_value"))
-        .crossJoin(F.broadcast(threshold))
-        .filter(F.col("part_value") > F.col("threshold"))
-        .select("l_partkey", "part_value")
-    )
-
-
-@query(
-    "q20_potential_promotion",
-    """
-    SELECT s_name, s_acctbal
-    FROM supplier
-    WHERE s_suppkey IN (SELECT l_suppkey
-                        FROM lineitem JOIN part ON p_partkey = l_partkey
-                        WHERE p_name LIKE 'small%'
-                        GROUP BY l_suppkey
-                        HAVING SUM(l_quantity) > 100)
-    """,
-)
-def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 adaptation (promotion-eligible suppliers). No partsupp →
-    eligibility is "shipped more than 100 units of small* parts", an
-    IN-subquery with HAVING → aggregate + left-semi join. Quantities are
-    integral doubles so the >100 sum is exact in both engines."""
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part").filter(F.col("p_name").like("small%"))
-    qualified = (
-        li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("tot_qty"))
-        .filter(F.col("tot_qty") > 100)
-        .select("l_suppkey")
-    )
-    supp = _load(spark, sf_dir, "supplier")
-    return supp.join(
-        qualified, supp.s_suppkey == qualified.l_suppkey, "left_semi"
-    ).select("s_name", "s_acctbal")
-
-
-@query(
-    "q21_waiting_supplier",
-    """
-    SELECT s_name, COUNT(*) AS numwait
-    FROM supplier
-    JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-    JOIN orders ON o_orderkey = l1.l_orderkey
-    WHERE o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-      AND EXISTS (SELECT 1 FROM lineitem l2
-                  WHERE l2.l_orderkey = l1.l_orderkey
-                    AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                      WHERE l3.l_orderkey = l1.l_orderkey
-                        AND l3.l_suppkey <> l1.l_suppkey
-                        AND l3.l_returnflag = 'R')
-    GROUP BY s_name
-    ORDER BY numwait DESC, s_name
-    LIMIT 20
-    """,
-)
-def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 adaptation (suppliers who kept orders waiting). No
-    receipt/commit dates → "late" is proxied by l_returnflag = 'R': count,
-    per supplier, finished multi-supplier orders where this supplier is
-    the ONLY one with a returned item. Exercises the correlated
-    EXISTS (left-semi with a non-equi residual) + NOT EXISTS (left-anti)
-    pair — the reference's only missing join shapes (SURVEY.md §2.13)."""
-    li = _load(spark, sf_dir, "lineitem")
-    l1 = li.filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_suppkey"
-    )
-    orders_f = _load(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F"
-    ).select("o_orderkey")
-    l2 = li.select(
-        F.col("l_orderkey").alias("l2_orderkey"),
-        F.col("l_suppkey").alias("l2_suppkey"),
-    )
-    l3 = li.filter(F.col("l_returnflag") == "R").select(
-        F.col("l_orderkey").alias("l3_orderkey"),
-        F.col("l_suppkey").alias("l3_suppkey"),
-    )
-    supp = _load(spark, sf_dir, "supplier")
-    base = (
-        l1.join(orders_f, F.col("l_orderkey") == F.col("o_orderkey"), "left_semi")
-        .join(
-            l2,
-            (F.col("l_orderkey") == F.col("l2_orderkey"))
-            & (F.col("l_suppkey") != F.col("l2_suppkey")),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (F.col("l_orderkey") == F.col("l3_orderkey"))
-            & (F.col("l_suppkey") != F.col("l3_suppkey")),
-            "left_anti",
-        )
-    )
-    return (
-        base.join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(20)
-    )
 
 
 @query(
@@ -3717,35 +2863,6 @@ def grouping_sets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.grouping("o_orderpriority").alias("g_prio"),
         F.count("*").alias("n_orders"),
         F.round(_dsum(F.col("o_totalprice")), 2).alias("total_price"),
-    )
-
-
-@query(
-    "agg_percentiles",
-    """
-    SELECT l_returnflag,
-           quantile_cont(l_extendedprice, 0.25) AS p25,
-           quantile_cont(l_extendedprice, 0.50) AS p50,
-           quantile_cont(l_extendedprice, 0.75) AS p75,
-           COUNT(*) AS n
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-)
-def agg_percentiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact continuous percentiles (SURVEY.md §2.13 distinct/ordered
-    aggregates). Both engines interpolate lo + frac*(hi-lo) on the sorted
-    group in float64, so values are compared at full precision — any
-    rounding here would CREATE tie-boundary mismatches (quartile fracs are
-    multiples of 0.0025, which always land on round-half ties at some
-    decimal). Exact ordered-agg is the correctness baseline for the
-    approx_percentile scale path."""
-    li = _load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.expr("percentile(l_extendedprice, 0.25)").alias("p25"),
-        F.expr("percentile(l_extendedprice, 0.50)").alias("p50"),
-        F.expr("percentile(l_extendedprice, 0.75)").alias("p75"),
-        F.count("*").alias("n"),
     )
 
 
@@ -4605,213 +3722,6 @@ def text_quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "agg_cms_heavy_hitters",
-    """
-    WITH r AS (
-      SELECT CAST(user_id AS VARCHAR) AS k, i
-      FROM events, UNNEST(generate_series(0, 3)) AS u(i)
-    ),
-    cells AS (
-      SELECT i,
-             CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '_' || k), 1, 8)
-                  AS BIGINT) % 64 AS b,
-             COUNT(*) AS cnt
-      FROM r GROUP BY 1, 2
-    ),
-    exact AS (
-      SELECT user_id, COUNT(*) AS true_count FROM events GROUP BY user_id
-    ),
-    probes AS (
-      SELECT e.user_id, u.i,
-             CAST('0x' || substr(md5(CAST(u.i AS VARCHAR) || '_'
-                                     || CAST(e.user_id AS VARCHAR)), 1, 8)
-                  AS BIGINT) % 64 AS b
-      FROM exact e, UNNEST(generate_series(0, 3)) AS u(i)
-    ),
-    est AS (
-      SELECT p.user_id, MIN(c.cnt) AS est_count
-      FROM probes p JOIN cells c ON p.i = c.i AND p.b = c.b
-      GROUP BY p.user_id
-    )
-    SELECT e.user_id, est_count, true_count,
-           est_count - true_count AS overestimate
-    FROM est JOIN exact e USING (user_id)
-    ORDER BY est_count DESC, user_id LIMIT 20
-    """,
-)
-def agg_cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitter detection via a count-min sketch (operators/sketch):
-    the frequency summary is a constant 4x64 cell table regardless of key
-    cardinality — the sketch aggregate a 100 TB job keeps INSTEAD of the
-    full groupBy. md5-derived hash rows make sketch + estimates exactly
-    reproducible in the DuckDB oracle; the exact counts ride along to
-    exhibit the one-sided (overestimate-only) error bound."""
-    from erigon_extract_spark.operators.sketch import cms_heavy_hitters
-
-    ev = _events(spark, sf_dir)
-    return cms_heavy_hitters(ev, "user_id", depth=4, width=64, top_k=20)
-
-
-@query(
-    "agg_bloom_membership",
-    """
-    WITH members AS (
-      -- every customer has orders in the synthetic tables, so a sparse
-      -- member subset is carved deterministically to exercise negatives
-      SELECT DISTINCT o_custkey AS key FROM orders WHERE o_custkey % 7 = 0
-    ),
-    mh AS (
-      SELECT key,
-             CAST('0x' || substr(md5(CAST(key AS VARCHAR)), 1, 8) AS BIGINT)
-               AS h1,
-             CAST('0x' || substr(md5(CAST(key AS VARCHAR)), 9, 8) AS BIGINT)
-               | 1 AS h2
-      FROM members
-    ),
-    pos AS (
-      SELECT ((h1 + i * h2) % 4096) AS p
-      FROM mh, UNNEST(generate_series(0, 3)) AS u(i)
-    ),
-    bloom AS (
-      SELECT p // 32 AS word,
-             bit_or(CAST(1 AS BIGINT) << CAST(p % 32 AS INTEGER)) AS bits
-      FROM pos GROUP BY 1
-    ),
-    ph AS (
-      SELECT c_custkey,
-             CAST('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8)
-                  AS BIGINT) AS h1,
-             CAST('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8)
-                  AS BIGINT) | 1 AS h2
-      FROM customer
-    ),
-    pp AS (
-      SELECT c_custkey, ((h1 + i * h2) % 4096) AS p
-      FROM ph, UNNEST(generate_series(0, 3)) AS u(i)
-    ),
-    hits AS (
-      SELECT c_custkey,
-             (COALESCE(b.bits, 0)
-              & (CAST(1 AS BIGINT) << CAST(p % 32 AS INTEGER)))
-               = (CAST(1 AS BIGINT) << CAST(p % 32 AS INTEGER)) AS h
-      FROM pp LEFT JOIN bloom b ON pp.p // 32 = b.word
-    )
-    SELECT c_custkey,
-           bool_and(h) AS maybe,
-           MAX(c_custkey IN (SELECT key FROM members)) AS actual
-    FROM hits GROUP BY c_custkey
-    """,
-)
-def agg_bloom_membership_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership (operators/sketch.bloom_build /
-    bloom_maybe_contains): the customers-with-orders key set reduced to a
-    4096-bit word table that BROADCASTS, probed by every customer with k
-    broadcast 1:1 joins — zero shuffles on the probe side (plan-asserted
-    in pytest). m is deliberately undersized (~1000 keys in 4096 bits) so
-    false positives exist and the gate pins WHICH keys false-positive:
-    the md5 double-hash family makes the exact bit pattern, not just the
-    rate, reproducible in ANSI SQL. ``actual`` rides along to exhibit the
-    no-false-negative guarantee. At 100 TB this is the semi-join prefilter
-    (bloom_prune_join): the fact table only shuffles Bloom survivors."""
-    from erigon_extract_spark.operators.sketch import (
-        bloom_build,
-        bloom_maybe_contains,
-    )
-
-    orders = _load(spark, sf_dir, "orders")
-    cust = _load(spark, sf_dir, "customer")
-    # full key coverage in the synthetic tables -> carve a sparse member
-    # subset so the probe set contains real negatives
-    members = (
-        orders.filter(F.col("o_custkey") % 7 == 0)
-        .select(F.col("o_custkey").alias("key"))
-        .distinct()
-    )
-    bloom = bloom_build(members, "key", m_bits=4096, k=4)
-    out = bloom_maybe_contains(
-        bloom, cust.select("c_custkey"), "c_custkey", m_bits=4096, k=4
-    )
-    truth = members.select(
-        F.col("key").alias("c_custkey"), F.lit(True).alias("__in")
-    )
-    return (
-        out.join(F.broadcast(truth), "c_custkey", "left")
-        .select(
-            "c_custkey",
-            "maybe",
-            F.coalesce("__in", F.lit(False)).alias("actual"),
-        )
-    )
-
-
-def _hll_oracle_sql() -> str:
-    m = 64
-    alpha_mm = (0.7213 / (1 + 1.079 / m)) * m * m
-    # repr round-trips the exact double, so DuckDB parses the identical
-    # value Spark embeds as a literal — the one float input to the gate
-    return f"""
-    WITH kr AS (
-      SELECT source,
-             CAST('0x' || substr(md5(text), 1, 8) AS BIGINT) % {m} AS bucket,
-             CASE WHEN CAST('0x' || substr(md5(text), 9, 8) AS BIGINT) = 0
-                  THEN 33
-                  ELSE 33 - length(to_base(
-                         CAST('0x' || substr(md5(text), 9, 8) AS BIGINT), 2))
-             END AS rho
-      FROM documents
-    ),
-    sk AS (
-      SELECT source, bucket, MAX(rho) AS r FROM kr GROUP BY 1, 2
-    ),
-    agg AS (
-      SELECT source,
-             COUNT(*) AS present,
-             CAST(SUM(CAST(1 AS BIGINT) << CAST(50 - r AS INTEGER))
-                  AS BIGINT) AS s_present
-      FROM sk GROUP BY source
-    ),
-    ex AS (
-      SELECT source, COUNT(DISTINCT text) AS true_distinct
-      FROM documents GROUP BY source
-    )
-    SELECT a.source, present,
-           {m} - present AS zeros,
-           CAST(s_present + ({m} - present) * (CAST(1 AS BIGINT) << 50)
-                AS BIGINT) AS harmonic_scaled,
-           -- CAST: DuckDB parses bare decimal literals as DECIMAL, whose
-           -- arithmetic overflows and differs from Spark's double path
-           ROUND(CAST({alpha_mm!r} AS DOUBLE)
-                 * CAST({float(1 << 50)!r} AS DOUBLE)
-                 / CAST(s_present + ({m} - present)
-                        * (CAST(1 AS BIGINT) << 50) AS DOUBLE), 2) AS est,
-           true_distinct
-    FROM agg a JOIN ex USING (source)
-    """
-
-
-@query("agg_hll_distinct", _hll_oracle_sql())
-def agg_hll_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-count estimation via HyperLogLog (operators/sketch):
-    64 integer registers per source replace COUNT(DISTINCT text)'s
-    key-wide shuffle — the profiling-at-scale primitive (a 100 TB column
-    profile keeps the mergeable sketch, not the key set). The harmonic
-    sum is an exact BIGINT over denominator 2^50 (order-independent — no
-    float accumulation anywhere), so the full sketch AND the estimate
-    hash-match the SQL oracle; exact distinct rides along to exhibit
-    accuracy. Completes the sketch family: CMS (frequency), Bloom
-    (membership), HLL (cardinality)."""
-    from erigon_extract_spark.operators.sketch import hll_build, hll_estimate
-
-    docs = _load(spark, sf_dir, "documents")
-    sk = hll_build(docs, "text", m=64, group_cols=["source"])
-    est = hll_estimate(sk, m=64, group_cols=["source"])
-    exact = docs.groupBy("source").agg(
-        F.countDistinct("text").alias("true_distinct")
-    )
-    return est.join(exact, "source")
-
-
-@query(
     "corpus_mixture_plan",
     """
     WITH supply AS (
@@ -4996,31 +3906,6 @@ def dedup_winnowing_matches_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "events_scd2_intervals",
-    """
-    SELECT user_id,
-           event_id AS valid_from,
-           LEAD(event_id) OVER (PARTITION BY user_id ORDER BY event_id)
-             AS valid_to,
-           event_type,
-           LEAD(event_id) OVER (PARTITION BY user_id ORDER BY event_id)
-             IS NULL AS is_current
-    FROM events
-    """,
-)
-def events_scd2_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Changelog -> validity intervals (operators/windows.intervalize):
-    the SCD-type-2 / temporal-table materialization, dual of the as-of
-    operators — all historical states with [valid_from, valid_to) ranges
-    so any point-in-time query is a BETWEEN predicate. One hash shuffle,
-    lead() inside the same partitioning."""
-    from erigon_extract_spark.operators.windows import intervalize
-
-    ev = _events_raw(spark, sf_dir)
-    return intervalize(ev, ["user_id"], "event_id", ["event_type"])
-
-
-@query(
     "graph_triangle_count",
     """
     WITH raw AS (SELECT i FROM UNNEST(generate_series(0, 599)) AS t(i)),
@@ -5060,53 +3945,6 @@ def graph_triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return triangle_count(base)
-
-
-@query(
-    "events_user_similarity",
-    f"""
-    WITH traj AS (
-      SELECT user_id AS doc_id,
-             string_agg(event_type, ' ' ORDER BY ts, event_id) AS text
-      FROM events GROUP BY user_id
-    ),
-    {_ngram_pair_ctes("traj")}
-    SELECT doc_id_a AS user_a, doc_id_b AS user_b, jaccard
-    FROM jpairs
-    WHERE jaccard >= 0.35
-    """,
-)
-def events_user_similarity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral trajectory similarity (the REPOSE/trajectory-top-k
-    problem class, re-expressed Spark-first): each user's ordered
-    event-type sequence becomes a document, and exact n-gram Jaccard
-    with prefix filtering finds similar behavior pairs — sequence
-    alignment's quadratic pair cost replaced by the bounded
-    inverted-index join the dedup family already proves. Ordering is
-    (ts, event_id) — a pure value sort, session-TZ-independent."""
-    ev = _events_raw(spark, sf_dir)
-    traj = (
-        ev.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "event_type"))
-            ).alias("__seq")
-        )
-        .select(
-            F.col("user_id").alias("doc_id"),
-            F.concat_ws(
-                " ", F.transform("__seq", lambda s: s["event_type"])
-            ).alias("text"),
-        )
-    )
-    pairs = ngram_jaccard_pairs(traj, shingle_n=3, threshold=0.2)
-    # 5-type alphabet makes ALL users mildly similar at the family's 0.2
-    # bar; the behavioral-pair report keeps the genuinely-similar tail
-    return pairs.filter(F.round("jaccard", 6) >= 0.35).select(
-        F.col("doc_id_a").alias("user_a"),
-        F.col("doc_id_b").alias("user_b"),
-        F.round("jaccard", 6).alias("jaccard"),
-    )
 
 
 @query(
@@ -5710,45 +4548,6 @@ def maintenance_file_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "agg_salted_skew",
-    """
-    SELECT event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(event_id) AS BIGINT) AS sum_event_id,
-           MIN(user_id) AS min_user,
-           MAX(user_id) AS max_user
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def agg_salted_skew_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted aggregation (operators/skew.salted_agg) under the
-    hash gate: event_type is the all-hot-keys case — a handful of values
-    owning every row, the aggregation shape AQE's skew handling does NOT
-    fix (it only splits join partitions). Salting fans each hot key over
-    16 sub-keys for the partial agg, then merges; the gate proves the
-    two-phase decomposition (count->sum, sum->sum, min/max->self) is
-    value-identical to the plain GROUP BY the oracle runs."""
-    from erigon_extract_spark.operators.skew import salted_agg
-
-    events = _load(spark, sf_dir, "events")
-    # salt on the unique event_id: deterministic under task retry
-    # (see operators/skew._salt_expr), and keeps the blanket plan audit's
-    # no-monotonically_increasing_id invariant
-    return salted_agg(
-        events,
-        ["event_type"],
-        {
-            "n_events": F.count(F.lit(1)),
-            "sum_event_id": F.sum("event_id"),
-            "min_user": F.min("user_id"),
-            "max_user": F.max("user_id"),
-        },
-        salt_col=F.col("event_id"),
-    )
-
-
-@query(
     "join_salted_skew",
     """
     SELECT c_mktsegment,
@@ -6304,46 +5103,6 @@ def snapshot_diff_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "events_zscore_outliers",
-    """
-    WITH stats AS (
-      SELECT event_type,
-             AVG(value) AS mu,
-             STDDEV_SAMP(value) AS sigma,
-             COUNT(*) AS n
-      FROM events GROUP BY event_type
-    )
-    SELECT e.event_id, e.event_type,
-           ROUND(e.value, 6) AS value,
-           ROUND((e.value - s.mu) / s.sigma, 3) AS z
-    FROM events e JOIN stats s USING (event_type)
-    WHERE s.sigma > 0 AND abs(ROUND((e.value - s.mu) / s.sigma, 3)) > 3
-    """,
-)
-def events_zscore_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group z-score outlier detection: one stats aggregate per
-    event_type (map-side combine), broadcast back onto the stream, flag
-    |z| > 3. The metric-anomaly primitive of event analytics; z rounded
-    to 3 (float aggregation tails differ across engines below that)."""
-    ev = _events(spark, sf_dir)
-    stats = ev.groupBy("event_type").agg(
-        F.avg("value").alias("mu"),
-        F.stddev_samp("value").alias("sigma"),
-    )
-    z = (F.col("value") - F.col("mu")) / F.col("sigma")
-    return (
-        ev.join(F.broadcast(stats), "event_type")
-        .filter((F.col("sigma") > 0) & (F.abs(F.round(z, 3)) > 3))
-        .select(
-            "event_id",
-            "event_type",
-            F.round("value", 6).alias("value"),
-            F.round(z, 3).alias("z"),
-        )
-    )
-
-
-@query(
     "w_rolling_time_window",
     """
     WITH e AS (
@@ -6415,109 +5174,6 @@ def corpus_balanced_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
     return balanced_sample(docs, ["lang", "source"], "doc_id", 10).select(
         "doc_id", "lang", "source"
-    )
-
-
-@query(
-    "events_funnel",
-    """
-    WITH e AS (
-      SELECT user_id, event_type, epoch_us(ts) AS tick
-      FROM events
-    ),
-    s1 AS (
-      SELECT user_id, MIN(tick) AS t1 FROM e
-      WHERE event_type = 'view' GROUP BY user_id
-    ),
-    s2 AS (
-      SELECT e.user_id, MIN(e.tick) AS t2
-      FROM e JOIN s1 USING (user_id)
-      WHERE e.event_type = 'click' AND e.tick > s1.t1
-      GROUP BY e.user_id
-    ),
-    s3 AS (
-      SELECT e.user_id, MIN(e.tick) AS t3
-      FROM e JOIN s2 USING (user_id)
-      WHERE e.event_type = 'purchase' AND e.tick > s2.t2
-      GROUP BY e.user_id
-    )
-    SELECT (SELECT COUNT(*) FROM s1) AS n_step1,
-           (SELECT COUNT(*) FROM s2) AS n_step2,
-           (SELECT COUNT(*) FROM s3) AS n_step3
-    """,
-)
-def events_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (view -> click -> purchase): each stage is the MIN
-    event time strictly AFTER the user's previous stage — the sequential-
-    conversion primitive of event analytics. Per-stage min-aggregates with
-    map-side combine; joins are user-keyed (co-locatable by bucketing);
-    ticks are epoch integers from the stored ntz value."""
-    ev = _events_raw(spark, sf_dir)
-    tick = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    e = ev.select("user_id", "event_type", tick.alias("tick"))
-    s1 = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("tick").alias("t1"))
-    )
-    s2 = (
-        e.join(s1, "user_id")
-        .filter((F.col("event_type") == "click") & (F.col("tick") > F.col("t1")))
-        .groupBy("user_id")
-        .agg(F.min("tick").alias("t2"))
-    )
-    s3 = (
-        e.join(s2, "user_id")
-        .filter(
-            (F.col("event_type") == "purchase") & (F.col("tick") > F.col("t2"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("tick").alias("t3"))
-    )
-    return (
-        s1.agg(F.count("*").alias("n_step1"))
-        .crossJoin(s2.agg(F.count("*").alias("n_step2")))
-        .crossJoin(s3.agg(F.count("*").alias("n_step3")))
-    )
-
-
-@query(
-    "events_retention_cohorts",
-    """
-    WITH e AS (
-      SELECT user_id,
-             CAST(epoch_us(ts) // (86400000000 * 7) AS BIGINT) AS week
-      FROM events
-    ),
-    first_seen AS (
-      SELECT user_id, MIN(week) AS cohort FROM e GROUP BY user_id
-    )
-    SELECT f.cohort, e.week - f.cohort AS week_offset,
-           COUNT(DISTINCT e.user_id) AS n_active
-    FROM e JOIN first_seen f USING (user_id)
-    GROUP BY f.cohort, e.week - f.cohort
-    """,
-)
-def events_retention_cohorts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention: users grouped by first-seen week, activity counted
-    per week offset — the long-format retention matrix. First-seen is a
-    min-agg (map-side combine) joined back on the user key; week derives
-    from integer epoch arithmetic so the bucketing is session-independent."""
-    ev = _events_raw(spark, sf_dir)
-    week = (
-        F.expr(
-            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        )
-        / F.lit(86400000000 * 7)
-    ).cast("long")
-    e = ev.select("user_id", week.alias("week"))
-    first_seen = e.groupBy("user_id").agg(F.min("week").alias("cohort"))
-    return (
-        e.join(first_seen, "user_id")
-        .groupBy("cohort", (F.col("week") - F.col("cohort")).alias("week_offset"))
-        .agg(F.count_distinct("user_id").alias("n_active"))
     )
 
 
@@ -7156,80 +5812,6 @@ ORACLES["dedup_lsh_then_levenshtein"] = f"""
 
 
 @query(
-    "events_interpolate_grid",
-    """
-    WITH ticks AS (
-      SELECT g.g AS tick
-      FROM generate_series(TIMESTAMP '2024-01-01 00:00:00',
-                           TIMESTAMP '2024-01-02 23:00:00',
-                           INTERVAL 1 HOUR) AS g(g)
-    ),
-    grid AS (
-      SELECT u.user_id, t.tick
-      FROM (SELECT DISTINCT user_id FROM events) u, ticks t
-    ),
-    samples AS (
-      -- NULL-valued samples are NO samples (the operator filters them
-      -- before bracketing; a kept NULL would desync value/time brackets)
-      SELECT user_id, ts, MAX(value) AS v FROM events
-      WHERE value IS NOT NULL GROUP BY 1, 2
-    ),
-    prevq AS (
-      SELECT g.user_id, g.tick,
-             arg_max(s.v, s.ts) AS pv, MAX(epoch_us(s.ts)) AS pt
-      FROM grid g LEFT JOIN samples s
-        ON s.user_id = g.user_id AND s.ts <= g.tick
-      GROUP BY 1, 2
-    ),
-    nextq AS (
-      SELECT g.user_id, g.tick,
-             arg_min(s.v, s.ts) AS nv, MIN(epoch_us(s.ts)) AS nt
-      FROM grid g LEFT JOIN samples s
-        ON s.user_id = g.user_id AND s.ts > g.tick
-      GROUP BY 1, 2
-    )
-    SELECT p.user_id, p.tick,
-           round(CASE
-             WHEN p.pt IS NULL THEN n.nv
-             WHEN n.nt IS NULL THEN p.pv
-             ELSE p.pv + (n.nv - p.pv)
-                  * ((epoch_us(p.tick) - p.pt) / (n.nt - p.pt))
-           END, 6) AS value_interp
-    FROM prevq p JOIN nextq n USING (user_id, tick)
-    """,
-)
-def events_interpolate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series linear interpolation / gap-fill
-    (operators/windows.interpolate_at): every user's irregular event
-    series resampled onto a 48-tick hourly grid — interpolated between
-    bracketing samples, nearest-value-held past the ends, NULL for
-    keys with no samples, duplicate-timestamp ties collapsed by
-    MAX(value) so bracketing is engine-exact. Spark side is the
-    union-and-window classic (both brackets from ONE window over one
-    hash shuffle — no per-tick probes); the oracle brackets each tick
-    independently with arg_max/arg_min lateral aggregates — same
-    fixpoint, structurally different plan. NOTE the oracle's tick-on-
-    sample case: Spark's '<= tick' prev bracket makes frac = 0, the
-    oracle's prev also uses '<=' — both return the sample itself."""
-    from erigon_extract_spark.operators.windows import interpolate_at
-
-    events = _load(spark, sf_dir, "events")
-    # grid = distinct users x 48 hourly ticks, built join-free: the tick
-    # list is a 48-element literal sequence exploded per user (zero
-    # shuffle, no BNLJ — the plan-quality CI forbids nested-loop grids)
-    grid = events.select("user_id").distinct().select(
-        "user_id",
-        F.explode(
-            F.expr(
-                "sequence(TIMESTAMP '2024-01-01 00:00:00',"
-                " TIMESTAMP '2024-01-02 23:00:00', INTERVAL 1 HOUR)"
-            )
-        ).alias("tick"),
-    )
-    return interpolate_at(events, grid)
-
-
-@query(
     "events_ohlc_hourly",
     """
     WITH e AS (
@@ -7287,136 +5869,6 @@ def events_ohlc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value",
         )
-    )
-
-
-@query(
-    "agg_quantile_bounds",
-    """
-    WITH a AS (
-      SELECT l_returnflag,
-             quantile_cont(l_extendedprice, [0.25, 0.5, 0.75, 0.95]) AS eq
-      FROM lineitem GROUP BY 1
-    )
-    SELECT l_returnflag,
-           unnest([0.25, 0.5, 0.75, 0.95])::DOUBLE AS q,
-           round(unnest(eq), 4) AS exact_q,
-           TRUE AS approx_within_bound
-    FROM a
-    """,
-)
-def quantile_bounds_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile sketch with its rank-error bound riding through the hash
-    (the agg_approx_distinct pattern for ORDER statistics): per return
-    flag, the exact interpolated quantile is value-gated at 4 dp, and the
-    KLL/GK sketch's guarantee — the approx value's rank is within eps*N
-    of q*N for eps = 1/accuracy — is CHECKED, not trusted: the approx
-    values join back against the table and c_le = count(x <= approx) /
-    c_lt = count(x < approx) must straddle the [q-eps, q+eps] rank band.
-    At 100 TB the sketch arm is the plan (mergeable, one pass, constant
-    state); the exact arm is the small-scale verifier. One extra shuffle:
-    lineitem x 12 broadcast (flag, q) rows -> conditional counts."""
-    qs = [0.25, 0.5, 0.75, 0.95]
-    eps = 0.01  # = 1/accuracy below
-    qs_sql = ", ".join(str(x) for x in qs)
-    li = _load(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_extendedprice"
-    )
-    agg = li.groupBy("l_returnflag").agg(
-        F.expr(
-            f"percentile(l_extendedprice, array({qs_sql}))"
-        ).alias("__ex"),
-        F.percentile_approx("l_extendedprice", qs, 100).alias("__ap"),
-        F.count("*").alias("__n"),
-    )
-    per_q = agg.select(
-        "l_returnflag",
-        "__n",
-        F.posexplode(F.arrays_zip("__ex", "__ap")).alias("__i", "__z"),
-    ).select(
-        "l_returnflag",
-        "__n",
-        F.element_at(F.array(*[F.lit(x) for x in qs]), F.col("__i") + 1)
-        .alias("q"),
-        F.col("__z.__ex").alias("__exact"),
-        F.col("__z.__ap").alias("__approx"),
-    )
-    ranks = (
-        li.join(F.broadcast(per_q), "l_returnflag")
-        .groupBy("l_returnflag", "q", "__exact", "__approx", "__n")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") <= F.col("__approx")).cast("long")
-            ).alias("__c_le"),
-            F.sum(
-                (F.col("l_extendedprice") < F.col("__approx")).cast("long")
-            ).alias("__c_lt"),
-        )
-    )
-    within = (
-        F.col("__c_le") >= (F.col("q") - eps) * F.col("__n") - 1
-    ) & (F.col("__c_lt") <= (F.col("q") + eps) * F.col("__n") + 1)
-    return ranks.select(
-        "l_returnflag",
-        "q",
-        F.round("__exact", 4).alias("exact_q"),
-        within.alias("approx_within_bound"),
-    )
-
-
-@query(
-    "events_asof_nearest",
-    """
-    WITH p AS (
-      SELECT user_id, event_id AS purchase_id, ts
-      FROM events WHERE event_type = 'purchase'
-    ),
-    c AS (
-      SELECT user_id, event_id AS click_id, ts AS click_ts
-      FROM events WHERE event_type = 'click'
-    ),
-    cand AS (
-      SELECT p.user_id, p.purchase_id, p.ts, c.click_id, c.click_ts,
-             abs(epoch_us(c.click_ts) - epoch_us(p.ts)) * 2
-             + CASE WHEN c.click_ts <= p.ts THEN 0 ELSE 1 END AS k,
-             abs(epoch_us(c.click_ts) - epoch_us(p.ts)) AS ad
-      FROM p LEFT JOIN c ON p.user_id = c.user_id
-         AND abs(epoch_us(c.click_ts) - epoch_us(p.ts)) <= 86400000000
-    )
-    SELECT user_id, purchase_id, ts,
-           arg_min(click_id, k) AS click_id,
-           arg_min(click_ts, k) AS click_ts,
-           min(ad) AS nearest_delta_us
-    FROM cand GROUP BY 1, 2, 3
-    """,
-)
-def events_asof_nearest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-match as-of join (operators/asof.as_of_join_nearest; pandas
-    merge_asof direction='nearest' + tolerance): every purchase matched to
-    the user's temporally CLOSEST click within 24 h, equidistant ties to
-    the earlier click. Spark side is the single-shuffle union-and-window
-    merge (both brackets out of ONE sort — O(|L|+|R|) per key, no pair
-    blowup); the oracle materializes every in-tolerance pair and arg_mins
-    a composite (2*|delta| + after-flag) key — quadratic-shaped but
-    bounded, the structurally-different verifier. Delta is an exact
-    integer microsecond count, so the TZ sweep cancels (both sides shift
-    with the session zone) and no float parity is in play. (user_id, ts)
-    is unique in events, so bracket choice is deterministic without a
-    pre-collapse."""
-    from erigon_extract_spark.operators.asof import as_of_join_nearest
-
-    e = _load(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), "ts"
-    )
-    c = e.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    return as_of_join_nearest(
-        p, c, on=["user_id"], left_time="ts", right_time="click_ts",
-        tolerance_us=86_400_000_000,
     )
 
 
@@ -7503,61 +5955,6 @@ def corpus_pps_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
     return pps_systematic_sample(
         docs, order_col="doc_id", weight_col="n_chars", stride=4096
-    )
-
-
-@query(
-    "agg_cms_join_size",
-    """
-    SELECT CAST(count(*) AS BIGINT) AS exact_join_size,
-           TRUE AS est_ge_exact,
-           TRUE AS est_le_bound
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    """,
-)
-def cms_join_size_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based join-cardinality estimation (operators/sketch.
-    cms_join_size) — the optimizer-statistics use case: estimate
-    |lineitem ⋈ orders| on the order key from two 4x1024-cell count-min
-    sketches WITHOUT executing the join, then verify the estimator's
-    contract against the exact size: est >= exact ALWAYS (collisions
-    only add), and est <= exact + 3 * depth-row expected slack
-    (3*|A|*|B|/width) — both booleans ride the hash per the
-    agg_approx_distinct pattern, the exact size is value-gated. At
-    100 TB the sketches are the only thing that scans; the estimation
-    itself is a kilobyte cell join. The exact arm here is the verifier
-    the sketch replaces."""
-    from erigon_extract_spark.operators.sketch import cms_build, cms_join_size
-
-    width = 1024
-    li = _load(spark, sf_dir, "lineitem").select("l_orderkey")
-    od = _load(spark, sf_dir, "orders").select("o_orderkey")
-    sa = cms_build(li, "l_orderkey", depth=4, width=width)
-    sb = cms_build(od, "o_orderkey", depth=4, width=width)
-    est = cms_join_size(sa, sb, depth=4)
-    exact = (
-        li.join(od, li["l_orderkey"] == od["o_orderkey"])
-        .agg(F.count("*").alias("exact_join_size"))
-    )
-    # |A| and |B| come from the sketches themselves (row 0's cell counts
-    # sum to N) — everything stays lazy, no plan-build actions
-    na = sa.filter(F.col("i") == 0).agg(F.sum("cnt").alias("na"))
-    nb = sb.filter(F.col("i") == 0).agg(F.sum("cnt").alias("nb"))
-    slack = 3.0 * F.col("na") * F.col("nb") / width
-    return (
-        exact.crossJoin(F.broadcast(est))
-        .crossJoin(F.broadcast(na))
-        .crossJoin(F.broadcast(nb))
-        .select(
-            "exact_join_size",
-            (F.col("est_join_size") >= F.col("exact_join_size")).alias(
-                "est_ge_exact"
-            ),
-            (
-                F.col("est_join_size")
-                <= F.col("exact_join_size") + slack
-            ).alias("est_le_bound"),
-        )
     )
 
 
@@ -9064,8 +7461,8 @@ def dedup_cdc_savings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ROUND-6 ROTATION — now MECHANICAL (VERDICT r5 directive #2). Rounds
 # 1-5 hand-maintained this list and produced exactly one systematic
-# miss: agg_approx_distinct went red in r1 (no_oracle), gained its
-# error-bound oracle, and then sat outside four consecutive windows
+# miss: an approximate-distinct query (since retired) went red in r1
+# (no_oracle), gained its error-bound oracle, and then sat outside four consecutive windows
 # while never-gated greens queued ahead of it. The window is now the
 # first 50 of a total order COMPUTED from the committed
 # CORRECTNESS_r*.json ledger itself (erigon_extract_spark/rotation.py):
@@ -9078,7 +7475,7 @@ def dedup_cdc_savings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      only re-record the same row count, so these never again displace
 #      hash-verifiable queries from the window)
 # with registration order breaking ties. On the r1-r5 ledger this
-# composes: agg_approx_distinct, then the 13 never-gated oracle-backed
+# composes: that approximate-distinct query, then the 13 never-gated oracle-backed
 # r5 additions (a since-retired codec roundtrip, the since-retired
 # vector-search gates, BPE/pack synthetic gates, the golden-value scale
 # probes),

@@ -4,10 +4,10 @@ The per-round driver verifies the FIRST 50 registered queries against
 their DuckDB oracles and records the outcome in ``CORRECTNESS_r{N}.json``
 at the repo root. Which 50 used to be a hand-maintained priority list in
 queries.py — and hand maintenance produced exactly the failure the r5
-verdict names: ``agg_approx_distinct`` went red in r1 (``no_oracle``),
-was fixed in r5, and then sat outside every subsequent window for four
-rounds because the list's author kept queueing never-gated greens ahead
-of it.
+verdict names: an approximate-distinct query (since retired) went red
+in r1 (``no_oracle``), was fixed in r5, and then sat outside every
+subsequent window for four rounds because the list's author kept
+queueing never-gated greens ahead of it.
 
 This module replaces the list with a RULE, computed from the committed
 ledger itself, so the window can never again forget a red row:
@@ -43,7 +43,7 @@ Evidence semantics per row:
     records a weaker check): green means the driver obtained a row count
     at all (``spark_rows`` present) and recorded no error other than the
     expected ``no_oracle`` tag. A query that IS oracle-backed but was
-    recorded ``no_oracle`` (the agg_approx_distinct r1 case: the oracle
+    recorded ``no_oracle`` (the approximate-distinct r1 case: the oracle
     was missing, a defect since fixed) counts RED — that is the very row
     tier 1 exists to re-admit.
 """

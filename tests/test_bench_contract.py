@@ -9,6 +9,7 @@ auxiliary fields shed first, per-query values re-rounded as a last
 resort, the map itself inviolable. Pure-python — no Spark session.
 """
 
+import copy
 import json
 
 from bench import HEADLINE, LINE_BUDGET, summary_line
@@ -60,7 +61,9 @@ def test_current_headline_set_fits_with_ratios():
 def test_aux_fields_shed_before_queries_touched():
     # 28-char synthetic names overflow deliberately, forcing a full shed
     s = _summary(len(HEADLINE))
+    before = copy.deepcopy(s)
     line = summary_line(s)
+    assert s == before  # the caller's dict is not shed or re-rounded
     parsed = json.loads(line)
     assert len(parsed["queries"]) == len(HEADLINE)
     # the bulky provenance fields are the first to go

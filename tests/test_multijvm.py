@@ -1,11 +1,11 @@
 """Multi-process executor parity (tools/multijvm_probe.py as a CI pin).
 
-The probe's full 13-gate ledger (MULTIJVM.json) is a round artifact; this
-test keeps the MECHANISM from regressing: a broadcast join and an Arrow
-``mapInPandas`` kernel must stay hash-green vs their DuckDB oracles when
-executors are real separate JVM processes (serialized closures and
-broadcasts, BlockManager shuffle transport) instead of threads inside
-the test session's single JVM.
+The probe's full ledger (MULTIJVM.json, one row per DEFAULT_PROBE gate)
+is a round artifact; this test keeps the MECHANISM from regressing: a
+broadcast join and an Arrow ``mapInPandas`` kernel must stay hash-green
+vs their DuckDB oracles when executors are real separate JVM processes
+(serialized closures and broadcasts, BlockManager shuffle transport)
+instead of threads inside the test session's single JVM.
 
 Runs in a subprocess because a ``local-cluster`` master cannot coexist
 with the suite's ``local[32]`` session in one JVM (getOrCreate would

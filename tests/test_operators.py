@@ -765,37 +765,6 @@ def test_winnowing_guarantee_density_and_reference(spark):
     assert len(got[3]) < 0.6 * n_grams
 
 
-def test_intervalize_scd2_semantics(spark):
-    from erigon_extract_spark.operators.windows import intervalize
-
-    df = spark.createDataFrame(
-        [(1, 10, "a"), (1, 20, "b"), (1, 35, "c"), (2, 5, "x")],
-        "k long, v long, s string",
-    )
-    out = sorted(
-        intervalize(df, ["k"], "v", ["s"]).collect(),
-        key=lambda r: (r.k, r.valid_from),
-    )
-    rows = [(r.k, r.valid_from, r.valid_to, r.s, r.is_current) for r in out]
-    assert rows == [
-        (1, 10, 20, "a", False),
-        (1, 20, 35, "b", False),
-        (1, 35, None, "c", True),
-        (2, 5, None, "x", True),
-    ]
-    # interval lookup == state_at for any t: t=22 -> version 20 ('b')
-    from erigon_extract_spark.operators.asof import state_at
-
-    got = intervalize(df, ["k"], "v", ["s"]).filter(
-        (F.col("valid_from") <= 22)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > 22))
-    )
-    want = state_at(df, ["k"], "v", 22)
-    assert sorted((r.k, r.s) for r in got.collect()) == sorted(
-        (r.k, r.s) for r in want.collect()
-    )
-
-
 def test_triangle_count_reference_and_star_graph(spark):
     import itertools
     import random

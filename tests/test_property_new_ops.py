@@ -141,31 +141,6 @@ def test_hll_merge_equals_union_random(spark):
     assert merged == direct
 
 
-def test_intervalize_partitions_version_line_random(spark):
-    """Property: per key, intervals are disjoint, cover exactly the
-    version range, chain correctly (valid_to == next valid_from), and
-    exactly one is_current."""
-    from erigon_extract_spark.operators.windows import intervalize
-
-    rng = random.Random(13)
-    rows = []
-    for k in range(10):
-        for v in rng.sample(range(1000), rng.randint(1, 12)):
-            rows.append((k, v, f"s{v}"))
-    df = spark.createDataFrame(rows, "k long, v long, s string")
-    by_key = {}
-    for r in intervalize(df, ["k"], "v", ["s"]).collect():
-        by_key.setdefault(r.k, []).append(r)
-    for k, ivs in by_key.items():
-        ivs.sort(key=lambda r: r.valid_from)
-        versions = sorted(v for kk, v, _ in rows if kk == k)
-        assert [r.valid_from for r in ivs] == versions
-        assert sum(1 for r in ivs if r.is_current) == 1
-        for prev, nxt in zip(ivs, ivs[1:]):
-            assert prev.valid_to == nxt.valid_from
-        assert ivs[-1].valid_to is None
-
-
 def test_length_bucket_batches_total_and_bounds_random(spark):
     """Every doc lands in exactly one batch; capacity and band bounds
     hold on random corpora."""
@@ -182,76 +157,3 @@ def test_length_bucket_batches_total_and_bounds_random(spark):
     for r in out:
         assert (1 << r.band) <= r.n_tokens < (1 << (r.band + 1))
         assert r.batch_size <= max(1, 512 >> (r.band + 1))
-
-
-def test_interpolate_at_matches_python_reference_random(spark):
-    """Random irregular series + random grid vs a plain-python bisect
-    recompute of the same semantics (MAX-collapse, bracket, hold,
-    NULL-if-empty) — pins the windowed formulation to the definition."""
-    import bisect
-
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.windows import interpolate_at
-
-    rng = random.Random(606)
-    base_us = 1_700_000_000_000_000
-    samples, grid, ref = [], [], {}
-    series = {}
-    for key in range(8):
-        n = rng.randint(0, 12)
-        pts = {}
-        for _ in range(n):
-            t = base_us + rng.randint(0, 1000) * 1_000_000
-            v = round(rng.uniform(-50, 50), 3)
-            pts[t] = max(pts.get(t, -1e18), v)  # MAX-collapse duplicates
-            samples.append((key, t, v))
-        series[key] = sorted(pts.items())
-    for key in range(8):
-        for _ in range(25):
-            g = base_us + rng.randint(0, 1000) * 1_000_000
-            grid.append((key, g))
-            pts = series[key]
-            if not pts:
-                ref[(key, g)] = None
-                continue
-            ts = [t for t, _ in pts]
-            i = bisect.bisect_right(ts, g)
-            if i == 0:
-                ref[(key, g)] = round(pts[0][1], 6)
-            elif i == len(pts):
-                ref[(key, g)] = round(pts[-1][1], 6)
-            else:
-                (t0, v0), (t1, v1) = pts[i - 1], pts[i]
-                frac = (g - t0) / (t1 - t0)
-                ref[(key, g)] = round(v0 + (v1 - v0) * frac, 6)
-    sdf = spark.createDataFrame(
-        samples, "user_id long, t_us long, value double"
-    ).select("user_id", F.timestamp_micros("t_us").alias("ts"), "value")
-    gdf = (
-        spark.createDataFrame(grid, "user_id long, t_us long")
-        .distinct()
-        .select("user_id", F.timestamp_micros("t_us").alias("tick"))
-    )
-    out = interpolate_at(sdf, gdf)
-    from datetime import timezone
-
-    got = {
-        (
-            r.user_id,
-            # collected ticks are session-naive; the session runs UTC, so
-            # pin the tz explicitly rather than trusting host localtime
-            int(r.tick.replace(tzinfo=timezone.utc).timestamp() * 1_000_000),
-        ): r.value_interp
-        for r in out.collect()
-    }
-    # grid had duplicates dropped by distinct(); compare the dedup'd set
-    want = {k: ref[k] for k in set(ref)}
-    assert set(got) == set(want)
-    for k in want:
-        if want[k] is None:
-            assert got[k] is None, k
-        else:
-            assert got[k] is not None and abs(got[k] - want[k]) < 1e-6, (
-                k, got[k], want[k]
-            )

@@ -381,108 +381,6 @@ def test_tfidf_shingle_terms_mode(spark):
             for r in rows] == [(1, 2, 2, 1.0)]
 
 
-# ------------------------------------------------------- interpolate_at
-
-
-def test_interpolate_linear_and_edges(spark):
-    # One key with samples at t=0h (v=10) and t=4h (v=30); grid ticks
-    # hourly 0..6h. Hand expectation: exact-on-sample at 0h and 4h,
-    # linear 15/20/25 between, hold 30 after the last sample, and a
-    # second key with NO samples yields NULL at every tick.
-    from erigon_extract_spark.operators.windows import interpolate_at
-
-    base = "2024-01-01 00:00:00"
-    samples = spark.createDataFrame(
-        [(1, 0, 10.0), (1, 4, 30.0)], "user_id long, h int, value double"
-    ).select(
-        "user_id",
-        F.expr(f"timestampadd(HOUR, h, TIMESTAMP '{base}')").alias("ts"),
-        "value",
-    )
-    grid = spark.createDataFrame(
-        [(u, h) for u in (1, 2) for h in range(7)],
-        "user_id long, h int",
-    ).select(
-        "user_id",
-        F.expr(f"timestampadd(HOUR, h, TIMESTAMP '{base}')").alias("tick"),
-    )
-    out = interpolate_at(samples, grid)
-    got = {
-        (r.user_id, r.tick.hour): r.value_interp for r in out.collect()
-    }
-    assert len(got) == 14
-    expect1 = {0: 10.0, 1: 15.0, 2: 20.0, 3: 25.0, 4: 30.0, 5: 30.0, 6: 30.0}
-    assert {h: got[(1, h)] for h in range(7)} == expect1
-    assert all(got[(2, h)] is None for h in range(7))
-
-
-def test_interpolate_duplicate_ts_collapse_and_before_first(spark):
-    # Duplicate samples at the same instant collapse via MAX (5.0 and
-    # 7.0 at t=2h -> 7.0), and a tick before the first sample holds the
-    # first value (constant extrapolation backwards).
-    from erigon_extract_spark.operators.windows import interpolate_at
-
-    base = "2024-01-01 00:00:00"
-    samples = spark.createDataFrame(
-        [(1, 2, 5.0), (1, 2, 7.0), (1, 4, 9.0)],
-        "user_id long, h int, value double",
-    ).select(
-        "user_id",
-        F.expr(f"timestampadd(HOUR, h, TIMESTAMP '{base}')").alias("ts"),
-        "value",
-    )
-    grid = spark.createDataFrame(
-        [(1, h) for h in range(5)], "user_id long, h int"
-    ).select(
-        "user_id",
-        F.expr(f"timestampadd(HOUR, h, TIMESTAMP '{base}')").alias("tick"),
-    )
-    got = {
-        r.tick.hour: r.value_interp
-        for r in interpolate_at(samples, grid).collect()
-    }
-    assert got == {0: 7.0, 1: 7.0, 2: 7.0, 3: 8.0, 4: 9.0}
-
-
-# ------------------------------------------------------ nearest as-of
-
-
-def test_asof_nearest_tie_prev_exact_and_tolerance(spark):
-    from erigon_extract_spark.operators.asof import as_of_join_nearest
-
-    left = spark.createDataFrame(
-        [(1, 100, "a"), (1, 205, "b"), (1, 400, "c"), (2, 50, "d")],
-        "k long, t long, lid string",
-    )
-    right = spark.createDataFrame(
-        [(1, 100, "r0"), (1, 200, "r1"), (1, 210, "r2"), (1, 600, "r3")],
-        "k long, rt long, rid string",
-    )
-    out = as_of_join_nearest(
-        left, right, on=["k"], left_time="t", right_time="rt",
-        tolerance_us=150,
-    )
-    got = {r.lid: (r.rid, r.nearest_delta_us) for r in out.collect()}
-    assert got["a"] == ("r0", 0)        # exact hit -> delta 0
-    assert got["b"] == ("r1", 5)        # 205: prev r1 @5 ties? next r2 @5 -> prev wins
-    assert got["c"] == (None, None)     # 400: nearest is 210 @190 > tolerance
-    assert got["d"] == (None, None)     # key with no right rows
-    assert len(got) == 4                # every left row survives
-
-
-def test_asof_nearest_prefers_closer_next(spark):
-    from erigon_extract_spark.operators.asof import as_of_join_nearest
-
-    left = spark.createDataFrame([(1, 95, "x")], "k long, t long, lid string")
-    right = spark.createDataFrame(
-        [(1, 10, "far"), (1, 100, "near")], "k long, rt long, rid string"
-    )
-    out = as_of_join_nearest(
-        left, right, on=["k"], left_time="t", right_time="rt"
-    ).collect()
-    assert out[0].rid == "near" and out[0].nearest_delta_us == 5
-
-
 # ------------------------------------------------------- unicode fold
 
 
@@ -611,35 +509,6 @@ def test_cms_join_size_disjoint_is_zero(spark):
     sb = cms_build(b, "k", depth=4, width=65536)
     est = cms_join_size(sa, sb, depth=4).collect()[0].est_join_size
     assert est == 0
-
-
-def test_interpolate_null_valued_samples_are_no_samples(spark):
-    # a NULL-valued sample must not poison bracketing: with only a null
-    # sample, every tick is NULL; with a null between real samples, the
-    # interpolation uses the real neighbors as if the null row never was
-    from erigon_extract_spark.operators.windows import interpolate_at
-
-    base = "2024-01-01 00:00:00"
-    samples = spark.createDataFrame(
-        [(1, 0, 10.0), (1, 2, None), (1, 4, 30.0), (2, 1, None)],
-        "user_id long, h int, value double",
-    ).select(
-        "user_id",
-        F.expr(f"timestampadd(HOUR, h, TIMESTAMP '{base}')").alias("ts"),
-        "value",
-    )
-    grid = spark.createDataFrame(
-        [(u, h) for u in (1, 2) for h in (0, 2, 4)], "user_id long, h int"
-    ).select(
-        "user_id",
-        F.expr(f"timestampadd(HOUR, h, TIMESTAMP '{base}')").alias("tick"),
-    )
-    got = {
-        (r.user_id, r.tick.hour): r.value_interp
-        for r in interpolate_at(samples, grid).collect()
-    }
-    assert got[(1, 0)] == 10.0 and got[(1, 2)] == 20.0 and got[(1, 4)] == 30.0
-    assert all(got[(2, h)] is None for h in (0, 2, 4))
 
 
 def test_global_prefix_sum_rejects_null_order(spark):

@@ -46,11 +46,10 @@ from erigon_extract_spark.session import get_spark  # noqa: E402
 
 # The shuffle/broadcast/serialization-heaviest gate per family — every
 # mechanism class that behaves differently across a process boundary:
-# range-repartition + window (transpose/rekey), hash-exchange agg,
-# broadcast join, SMJ explode join, banded-LSH self-join, iterative
-# label propagation, salted skew join, sketch merge (treeAggregate of
-# numpy state), mapInPandas Arrow batches (the CDC chunker), and the
-# encoded-file binary codec path (Arrow binary columns cross the wire).
+# range-repartition + window (transpose/rekey), broadcast join, SMJ
+# explode join, banded-LSH self-join, iterative label propagation,
+# salted skew join, session windows and mapInPandas Arrow batches (the
+# CDC chunker).
 DEFAULT_PROBE = [
     "erigon_state_history",       # K-way merge via ONE rangepartitioning
     "erigon_chained_increments",  # union + rekey window + broadcast semi
@@ -59,11 +58,8 @@ DEFAULT_PROBE = [
     "dedup_minhash_portable",     # banded LSH bucket self-join
     "dedup_connected_clusters",   # iterative min-label propagation
     "dedup_cdc_chunks_clamped",   # Arrow mapInPandas kernel, map-only
-    "agg_cms_heavy_hitters",      # numpy sketch merge across executors
     "join_salted_skew",           # salted two-phase join
-    "agg_salted_skew",            # salted two-phase aggregation
     "sessionize_events",          # session windows over event time
-    "q18_large_volume_customer",  # classic multi-join agg (AQE surface)
 ]
 
 
