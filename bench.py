@@ -25,7 +25,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-# The first 14 entries are what remains of the round-1 headline set, kept
+# The first 13 entries are what remains of the round-1 headline set, kept
 # so per-query times stay comparable across rounds. Entries after the marker
 # are round-2 additions (flagship pipeline + new operator families);
 # "value" sums ALL queries, so compare totals only over shared names.
@@ -38,10 +38,6 @@ HEADLINE = [
     "asof_join",
     "topk_per_group",
     "dedup_exact",
-    # dedup_minhash_lsh (xxhash fast path) was deregistered in r4 — the
-    # portable variant is the one registered gate path; per-query series
-    # for this slot restarts at r4 (same family, md5 permutation hashes).
-    "dedup_minhash_portable",
     "text_stats",
     "text_fingerprint",
     "sim_bruteforce_topk",
@@ -52,13 +48,11 @@ HEADLINE = [
     "ref_dialect_decode",
     "session_window_agg",
     "erigon_transpose_scale",  # 3M-row synthetic transpose+rekey throughput
-    "dedup_scale",  # 200k-doc synthetic minhash-LSH throughput
     # --- round-3 additions ---
     "curation_decontaminate",  # broadcast-benchmark shingle overlap
     "pack_sequences",  # concat-and-chunk packing window
     "keccak_scale",  # 200k-key batched numpy keccak throughput
     # --- late round-3 additions ---
-    "dedup_substring_spans",  # strided-gram duplicate-span detection
     "text_strip_boilerplate",  # cross-doc frequent-sentence strip
     "text_bigram_familiarity",  # two-pass corpus-LM scoring
     "curation_scale",  # 200k-doc classifier+familiarity throughput
@@ -78,16 +72,11 @@ HEADLINE = [
     "stream_band_join_batch",  # stream-stream band join, batch-mode gate
     "source_xml_documents",  # legacy-tokenizer XML ingest (fixture-bound)
     "source_warc_documents",  # WARC shard parse + quarantine (fixture-bound)
-    "dedup_recall_eval",  # banded-LSH vs exact-Jaccard recall s-curve
     "maintenance_file_stats",  # per-file layout health report
     "sample_leakage_safe_split",  # content-keyed dedup-aware split
     # --- round-10 additions ---
     "erigon_chained_increments",  # base + 2 appended increments == tip
     "erigon_ref_file_lookup",  # O(log N) page binary search, no Spark scan
-    "dedup_cdc_savings",  # map-only CDC chunking + chunk-store dedup report
-    # --- round-11 additions ---
-    "dedup_cdc_chunks_clamped",  # LBFS-clamped CDC walk, map-only
-    "dedup_connected_clusters",  # CC keep-labels over the jaccard graph
 ]
 
 
@@ -233,7 +222,7 @@ def main() -> None:
         times2 = _headline_pass("headline_retry")
         times = {k: min(times[k], times2.get(k, times[k])) for k in times}
 
-    # Scale curve (VERDICT r4 #2): the four synthetic throughput probes
+    # Scale curve (VERDICT r4 #2): the synthetic throughput probes
     # re-run at 10x volume via their `scale` parameter. Each probe's
     # work is ∝ scale by construction, so ratio ≈ 10 (modulo fixed
     # per-stage overheads, which push the ratio BELOW 10 on a warm
@@ -246,7 +235,6 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_SCALE10", "1") != "0":
         for name in (
             "erigon_transpose_scale",
-            "dedup_scale",
             "curation_scale",
         ):
             try:
@@ -273,12 +261,12 @@ def main() -> None:
     # at 10x the data (pyarrow-replicated, key-shifted — tools/make_sf1),
     # ratio'd against the sf0.1 min. Plans are codegen-warm from the
     # loop above, so this measures data scaling, not compilation. The
-    # six fixture/synthetic-bound queries don't read the sf dir; they
+    # five fixture/synthetic-bound queries don't read the sf dir; they
     # ride along tagged sf_independent (expect ratio ~1) rather than
     # silently padding the section. SPARK_GRAFT_SF1=0 skips.
     SF_INDEPENDENT = {
         "erigon_state_history", "ref_dialect_decode",
-        "erigon_transpose_scale", "dedup_scale", "keccak_scale",
+        "erigon_transpose_scale", "keccak_scale",
         "curation_scale",
     }
     # output-bound: the band self-join's pair count is a DATA property

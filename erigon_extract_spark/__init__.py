@@ -4,7 +4,7 @@ A from-scratch, Spark-first re-expression of the query and data-processing
 capabilities of the reference ETL (jlokier/erigon-extract): Ethereum state
 history extraction, transpose to address-major order, first-block re-keying,
 as-of state queries — plus large-scale training-data pipeline operators
-(dedup, text analysis).
+(exact-hash dedup, text analysis).
 
 Design notes
 ------------

@@ -24,7 +24,6 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from erigon_extract_spark.operators.dedup import exploded_shingles
 from erigon_extract_spark.operators.text import normalize_text
 
 # Patterns are deliberately written in the common subset of Java regex
@@ -35,6 +34,30 @@ IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 # anchored on a literal '+' so free-running digit sequences in prose never
 # match (and the engines' greedy-match details can't diverge)
 PHONE_RE = r"\+\d[\d\- ]{7,}\d"
+
+
+def exploded_shingles(
+    docs: DataFrame, text_col: str, n: int, id_col: str
+) -> DataFrame:
+    """(id_col, sh) — one row per distinct word n-gram shingle, with the
+    words array materialized as an attribute FIRST so the shingle lambda
+    reads a per-row array instead of re-splitting the text per index."""
+    pre = docs.select(
+        F.col(id_col),
+        F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
+    )
+    words = F.col("__words")
+    # slide an n-window over words; drop short tails
+    shingles = F.array_distinct(
+        F.filter(
+            F.transform(
+                F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
+                lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+            ),
+            lambda s: F.length(s) > 0,
+        )
+    )
+    return pre.select(id_col, F.explode(shingles).alias("sh"))
 
 
 def scrub_pii(

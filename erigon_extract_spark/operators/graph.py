@@ -61,8 +61,7 @@ def _cc_minlabel(
 ) -> tuple[DataFrame, int]:
     # Checkpoint the INPUT once before the self-union: the two union
     # branches are otherwise two full computations of the upstream
-    # pipeline (for dedup_clusters that upstream is the whole exact-
-    # jaccard pair join — measured at 2x the query's wall, r11 round).
+    # pipeline (measured at 2x the query's wall under a pair-join upstream).
     e0 = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=False)
@@ -198,28 +197,6 @@ def _cc_star(
     raise RuntimeError(
         f"connected_components(star) did not converge in {max_iter} rounds"
     )
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    all_ids: DataFrame | None = None,
-    id_col: str = "doc_id",
-    src: str = "doc_id_a",
-    dst: str = "doc_id_b",
-) -> DataFrame:
-    """(doc_id, cluster) dedup assignment from a near-dup pair list:
-    cluster = smallest doc id in the connected group. With ``all_ids``
-    given (the full corpus), singleton docs appear as their own cluster —
-    the frame to anti-join for "keep one representative per group"."""
-    comp = connected_components(pairs, src, dst).select(
-        F.col("node").alias(id_col), F.col("component").alias("cluster")
-    )
-    if all_ids is not None:
-        singles = all_ids.select(id_col).join(
-            comp.select(id_col), id_col, "left_anti"
-        ).withColumn("cluster", F.col(id_col))
-        comp = comp.unionByName(singles)
-    return comp
 
 
 def triangle_count(

@@ -272,10 +272,9 @@ def leakage_safe_split(
     canonicalization every content hash in the engine uses) makes split
     assignment a pure function of content, so exact/normalized
     duplicates co-locate BY CONSTRUCTION — no join against a dup table,
-    no extra shuffle; the split stays one stateless projection. For
-    NEAR-duplicate safety, assign by the cluster representative from the
-    LSH/connected-components path instead (dedup_connected_clusters) —
-    same mechanism, keyed on the cluster id.
+    no extra shuffle; the split stays one stateless projection. Near-
+    duplicates (texts that differ after normalization) are not
+    co-located: this split guards against exact leakage only.
     """
     from erigon_extract_spark.operators.text import normalize_text
 

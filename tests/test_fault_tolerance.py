@@ -7,9 +7,10 @@ where retries are steady state — never on the suite's retry-free
 fast, which is why this runs in a subprocess on ``local[8,2]``).
 
 The probe injects a first-attempt failure into one task underneath the
-Arrow-kernel operators (CDC chunker, clamped walk) and shuffle operators
-(exact dedup, MinHash-LSH pairs), asserts output equality with the
-undisturbed run, and PROVES each retry executed via
+archive's account-changeset decode (an Arrow UDF), its state-history
+build (range shuffle and re-key window) and exact dedup (a hash shuffle),
+asserts output equality with the undisturbed run, and PROVES each retry
+executed via
 an accumulator incremented only on attemptNumber > 0 (updates from
 failed tasks are discarded, so counting the raise would be vacuous —
 the probe's own development caught exactly that).

@@ -35,7 +35,7 @@ def test_probe_gates_pass_on_separate_executor_jvms(tmp_path):
             "/root/testdata/sf0.001",
             str(out),
             "j1_lookup_join",          # broadcast hash join across JVMs
-            "dedup_cdc_chunks_clamped",  # Arrow mapInPandas kernel
+            "ref_dialect_decode",      # Arrow mapInPandas page tasks
         ],
         env=env,
         capture_output=True,
@@ -47,5 +47,5 @@ def test_probe_gates_pass_on_separate_executor_jvms(tmp_path):
     # the topology must be REAL: two executor processes beyond the driver
     assert ledger["_meta"]["executor_processes"] == 2
     assert ledger["_meta"]["block_managers_incl_driver"] == 3
-    for name in ("j1_lookup_join", "dedup_cdc_chunks_clamped"):
+    for name in ("j1_lookup_join", "ref_dialect_decode"):
         assert ledger[name]["pass"], ledger[name]

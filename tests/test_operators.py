@@ -12,12 +12,7 @@ from erigon_extract_spark.operators.asserts import (
     assert_empty,
     assert_unique_keys,
 )
-from erigon_extract_spark.operators.dedup import (
-    exact_dedup,
-    minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    simhash_near_pairs,
-)
+from erigon_extract_spark.operators.dedup import exact_dedup
 from erigon_extract_spark.operators.windows import delta_encode, delta_decode
 
 
@@ -33,55 +28,6 @@ def test_exact_dedup_keeps_min_id(spark):
     )
     kept = sorted(r.doc_id for r in exact_dedup(docs).collect())
     assert kept == [1, 4]
-
-
-@pytest.fixture(scope="module")
-def near_dup_docs(spark):
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat watches "
-        "from a warm windowsill in the late afternoon sun of early spring"
-    )
-    rows = [
-        (1, base),
-        (2, base.replace("lazy", "sleepy")),  # near-dup of 1
-        (3, "completely different content about spark query engines and "
-            "distributed columnar execution at terabyte scale with shuffles"),
-        (4, base),  # exact dup of 1
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_minhash_lsh_finds_near_dups(spark, near_dup_docs):
-    pairs = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in minhash_lsh_candidates(
-            near_dup_docs, n_hashes=16, bands=8, shingle_n=3
-        ).collect()
-    }
-    assert (1, 4) in pairs  # exact dup always collides
-    assert (1, 2) in pairs or (2, 4) in pairs  # near-dup collides w.h.p.
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_ngram_jaccard_scores(spark, near_dup_docs):
-    got = {
-        (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            near_dup_docs, shingle_n=3, threshold=0.5
-        ).collect()
-    }
-    assert got[(1, 4)] == 1.0
-    assert 0.5 <= got[(1, 2)] < 1.0
-    assert (1, 3) not in got
-
-
-def test_simhash_near_pairs(spark, near_dup_docs):
-    pairs = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in simhash_near_pairs(near_dup_docs, max_hamming=3, shingle_n=2).collect()
-    }
-    assert (1, 4) in pairs
-    assert (1, 3) not in pairs
 
 
 def test_as_of_join_backward_and_left_preserving(spark):
@@ -133,84 +79,10 @@ def test_asserts(spark):
     assert_empty(df.filter(F.col("k") > 99))
 
 
-def test_lsh_bucket_cap_drops_degenerate_boilerplate(spark):
-    """A boilerplate corpus (every doc identical) lands in one LSH bucket;
-    the default cap must keep that bucket from emitting O(k^2) pairs, and
-    cap=None must restore the exhaustive behavior."""
-    n = 30
-    docs = spark.createDataFrame(
-        [(i, "the same license header repeated verbatim in every file") for i in range(n)]
-        + [(1000, "a completely different document about spark physical plans")],
-        "doc_id int, text string",
-    )
-    capped = minhash_lsh_candidates(docs, shingle_n=2, max_bucket_size=10)
-    assert capped.count() == 0
-    uncapped = minhash_lsh_candidates(docs, shingle_n=2, max_bucket_size=None)
-    assert uncapped.count() == n * (n - 1) // 2
-
-    sim_capped = simhash_near_pairs(docs, shingle_n=2, max_bucket_size=10)
-    assert sim_capped.count() == 0
-    sim_uncapped = simhash_near_pairs(docs, shingle_n=2, max_bucket_size=None)
-    assert sim_uncapped.count() == n * (n - 1) // 2
-
-
-def test_ngram_jaccard_prefix_filter_is_exact(spark, near_dup_docs):
-    """Prefix filtering must be a pure optimization: identical pairs and
-    jaccard values vs the naive inverted-index join, at several
-    thresholds, including a boilerplate-heavy corpus."""
-    docs = near_dup_docs.unionByName(
-        spark.createDataFrame(
-            [(100 + i, "common header text shared by every appended doc "
-              + f"unique tail {i}") for i in range(8)],
-            "doc_id int, text string",
-        )
-    )
-    for t in (0.2, 0.5, 0.8):
-        fast = {
-            (r.doc_id_a, r.doc_id_b): round(r.jaccard, 9)
-            for r in ngram_jaccard_pairs(
-                docs, shingle_n=2, threshold=t, prefix_filter=True
-            ).collect()
-        }
-        naive = {
-            (r.doc_id_a, r.doc_id_b): round(r.jaccard, 9)
-            for r in ngram_jaccard_pairs(
-                docs, shingle_n=2, threshold=t, prefix_filter=False
-            ).collect()
-        }
-        assert fast == naive, (t, fast, naive)
-    assert naive  # the corpus must actually produce pairs at the last t
-
-
-def test_ngram_jaccard_prefix_length_float_boundary(spark):
-    """Regression: binary floats make (1.0-0.8)*10 = 1.9999999999999996,
-    so the bare floor(n*(1-t))+1 prefix was ONE SHORTER than the theorem
-    requires and provably dropped a true pair. Fixture: A's 8 3-shingles
-    are a subset of B's 10 (jaccard exactly 0.8); B's two non-shared
-    shingles are rarest (df=1 < df=2) so they occupy prefix ranks 1-2 and
-    the first SHARED shingle sits at rank 3 — inside the correct prefix
-    length floor(10*0.2)+1 = 3, outside the float-shortfall length 2."""
-    words = [f"w{i:02d}" for i in range(12)]
-    docs = spark.createDataFrame(
-        [(1, " ".join(words)), (2, " ".join(words[2:]))],
-        "doc_id int, text string",
-    )
-    got = {
-        (r.doc_id_a, r.doc_id_b): round(r.jaccard, 9)
-        for r in ngram_jaccard_pairs(
-            docs, shingle_n=3, threshold=0.8, prefix_filter=True
-        ).collect()
-    }
-    assert got == {(1, 2): 0.8}, got
-
-
 def test_connected_components_chain_and_islands(spark):
-    from erigon_extract_spark.operators.graph import (
-        connected_components,
-        dedup_clusters,
-    )
+    from erigon_extract_spark.operators.graph import connected_components
 
-    # chain 1-2-3-4 (diameter 3), island pair 10-11, singleton 99 via all_ids
+    # chain 1-2-3-4 (diameter 3), island pair 10-11
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11)], "doc_id_a int, doc_id_b int"
     )
@@ -218,14 +90,6 @@ def test_connected_components_chain_and_islands(spark):
         r.node: r.component for r in connected_components(pairs).collect()
     }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-    all_ids = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 10, 11, 99)],
-                                    "doc_id int")
-    clusters = {
-        r.doc_id: r.cluster
-        for r in dedup_clusters(pairs, all_ids=all_ids).collect()
-    }
-    assert clusters[99] == 99 and clusters[4] == 1 and clusters[11] == 10
 
 
 def test_cc_star_matches_minlabel_in_fewer_rounds(spark):
@@ -265,54 +129,6 @@ def test_cc_star_matches_minlabel_in_fewer_rounds(spark):
 
     with _pytest.raises(ValueError, match="unknown method"):
         connected_components(pairs, method="bogus")
-
-
-def test_duplicate_spans_finds_shared_region(spark):
-    """Two docs share a 135-char verbatim region (at different, unaligned
-    offsets); a third doc repeats text only WITHIN itself. At stride=1
-    (the exact setting) the shared region must come back as ONE maximal
-    merged span per sharing doc with exact boundaries, and the
-    self-repeating doc must produce no spans (duplication is cross-doc)."""
-    from erigon_extract_spark.operators.dedup import duplicate_spans
-
-    # leading space inside `shared` + prefixes ending in DIFFERENT non-space
-    # chars ('1' vs '2') + suffixes differing at their first char: the
-    # maximal cross-doc substring is exactly `shared`, nothing more
-    shared = " " + "the quick brown fox jumps over the lazy dog " * 3
-    uniq_a = "alpha bravo charlie delta echo foxtrot golf hotel india1"
-    uniq_b = "zulu yankee xray whiskey victor uniform tango sierra2"
-    docs = spark.createDataFrame(
-        [
-            (1, uniq_a + shared + "end marker one"),
-            (2, uniq_b + shared + "closing words two"),
-            (3, "completely distinct text with no shared content here "
-                "repeated only within itself never across " * 3),
-        ],
-        "doc_id long, text string",
-    )
-    width = 40
-    spans = duplicate_spans(docs, width=width, stride=1).collect()
-    by_doc = {}
-    for r in spans:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert set(by_doc) == {1, 2}
-    for prefix, doc_id in ((uniq_a, 1), (uniq_b, 2)):
-        rows = by_doc[doc_id]
-        assert len(rows) == 1, rows
-        start = len(prefix) + 1  # 1-based offset of the shared region
-        # last matching gram starts at region_end - width + 1
-        assert rows[0].span_start == start
-        assert rows[0].span_end == start + len(shared) - 1
-        assert rows[0].span_len == len(shared)
-
-
-def test_duplicate_spans_short_docs_no_grams(spark):
-    from erigon_extract_spark.operators.dedup import duplicate_spans
-
-    docs = spark.createDataFrame(
-        [(1, "short"), (2, "short")], "doc_id long, text string"
-    )
-    assert duplicate_spans(docs, width=40, stride=10).count() == 0
 
 
 def test_hashed_linear_quality_order_independent(spark):
@@ -712,59 +528,6 @@ def test_hll_accuracy_merge_and_register_bound(spark):
     )
 
 
-def test_winnowing_guarantee_density_and_reference(spark):
-    """The Schleimer et al. guarantee: any shared substring of length
-    >= w + k - 1 yields a shared fingerprint; selection matches an
-    independent python reference (min-per-window, rightmost ties)."""
-    import hashlib
-    import random
-    import re as _re
-
-    from erigon_extract_spark.operators.dedup import winnowing_fingerprints
-
-    k, w = 5, 4
-
-    def ref_fps(text):
-        t = _re.sub(r"\s+", " ", text.lower()).strip()
-        if len(t) < k:
-            return set()
-        hs = [
-            int(hashlib.md5(t[i:i + k].encode()).hexdigest()[:8], 16)
-            for i in range(len(t) - k + 1)
-        ]
-        out = set()
-        for p in range(max(len(hs) - w + 1, 1)):
-            window = hs[p:p + w]
-            mh = min(window)
-            # rightmost occurrence of the min
-            mi = max(i for i, h in enumerate(window) if h == mh)
-            out.add((p + mi + 1, mh))
-        return out
-
-    rng = random.Random(7)
-    shared = "a very distinctive shared passage here"
-    rows = [
-        (1, "prefix one " + shared + " suffix alpha"),
-        (2, "totally different opening " + shared + " and ending"),
-        (3, "".join(rng.choice("abcdef ") for _ in range(200))),
-        (4, "tiny"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {}
-    for r in winnowing_fingerprints(docs, k=k, w=w).collect():
-        got.setdefault(r.doc_id, set()).add((r.pos, r.gram_hash))
-    # exact match vs the reference implementation, every doc
-    for doc_id, text in rows:
-        assert got.get(doc_id, set()) == ref_fps(text), doc_id
-    # guarantee: docs 1 and 2 share a long substring -> shared fingerprint
-    h1 = {h for _, h in got[1]}
-    h2 = {h for _, h in got[2]}
-    assert h1 & h2
-    # density: roughly 2/(w+1) of grams selected on random text
-    n_grams = len(_re.sub(r"\s+", " ", rows[2][1].lower()).strip()) - k + 1
-    assert len(got[3]) < 0.6 * n_grams
-
-
 def test_triangle_count_reference_and_star_graph(spark):
     import itertools
     import random
@@ -796,64 +559,3 @@ def test_triangle_count_reference_and_star_graph(spark):
     )
     (srow,) = triangle_count(star).collect()
     assert srow.n_triangles == 0
-
-
-def test_lsh_recall_report_scurve(spark, sf_dir):
-    """The banding s-curve: recall is non-decreasing in the threshold,
-    hits 1.0 on near-duplicates (planted: a doc and its 90%-overlap
-    mutation), and candidate hits never exceed true pairs."""
-    from pyspark.sql import functions as F
-
-    from erigon_extract_spark.operators.dedup import lsh_recall_report
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    # plant near-duplicates: copy every 10th doc with one word appended
-    # (jaccard over 5-gram shingles stays very high)
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" trailer")).alias("text"),
-    )
-    rep = {
-        float(r.threshold): r
-        for r in lsh_recall_report(docs.unionByName(dups)).collect()
-    }
-    assert rep, "no thresholds produced rows"
-    ts = sorted(rep)
-    recalls = [rep[t].recall for t in ts]
-    assert recalls == sorted(recalls), recalls  # s-curve: non-decreasing
-    for t in ts:
-        assert 0.0 <= rep[t].recall <= 1.0
-        assert rep[t].n_hit <= rep[t].n_true
-    # the planted near-dups sit far above the 4x4 band breakpoint
-    assert rep[ts[-1]].recall == 1.0, rep[ts[-1]]
-
-
-def test_ngram_jaccard_construction_no_driver_collect(spark, monkeypatch):
-    """Building the jaccard-pairs plan must not run a driver-side
-    ``collect()``/``toPandas()`` (ADVICE r11 medium: the dense-encode's
-    construction-time collect made every plan CONSTRUCTION — the bench
-    runs one per timed repeat, and five query builders call this
-    function — eagerly execute the full explode+freq pipeline,
-    regressing dedup_connected_clusters sf1 36.5 s -> 121.7 s at
-    local[32]). Constructions may still plan lazy checkpoints; they may
-    not pull rows to the driver."""
-    from pyspark.sql import DataFrame
-    from erigon_extract_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i}") for i in range(20)],
-        "`doc_id` BIGINT, `text` STRING",
-    )
-
-    def _no_collect(self, *a, **k):  # pragma: no cover - fails the test
-        raise AssertionError("driver collect() during plan construction")
-
-    monkeypatch.setattr(DataFrame, "collect", _no_collect)
-    monkeypatch.setattr(DataFrame, "toPandas", _no_collect)
-    pairs = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.2)
-    _ = pairs.columns  # forces analysis; still no driver pull
-    monkeypatch.undo()
-    # and the plan still computes: smoke the action once
-    assert pairs.count() >= 0

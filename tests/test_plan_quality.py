@@ -93,18 +93,6 @@ def test_point_lookup_prunes_with_filter_pushdown(spark, sf_dir):
     assert "isnotnull" in opt or "address" in opt  # filter survives into plan
 
 
-def test_minhash_lsh_has_no_self_join(spark, sf_dir):
-    """Bucket-local pair generation: the LSH plan must contain NO join at
-    all — pairs come from explode over grouped buckets, so the doc pipeline
-    is scanned once and shuffled bytes stay linear in data size."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from erigon_extract_spark.operators.dedup import minhash_lsh_candidates
-
-    plan = _plan(minhash_lsh_candidates(docs))
-    assert "Join" not in plan, plan
-    assert plan.count("FileScan") == 1, plan
-
-
 def test_grouping_sets_single_expand_single_shuffle(spark, sf_dir):
     """GROUPING SETS must plan one Expand + one aggregation pass over one
     scan — not one scan per grouping list."""
@@ -220,8 +208,6 @@ def test_no_unexpected_quadratic_plans_across_all_queries(spark, sf_dir):
     # their component plans are covered by their own tests
     skip_build = {
         "erigon_incremental_update",
-        "dedup_connected_clusters",
-        "corpus_curation_keep_list",
         # localCheckpoints its synthetic corpus at build time (perf probe)
         "curation_scale",
         # trains merges (iterative jobs) at build time
@@ -300,34 +286,3 @@ def test_prefix_sum_global_window_is_totals_only(spark, sf_dir):
     assert "__tot" in plan, plan
     # the row-side window partitions by the bucket id: a hash exchange
     assert "hashpartitioning(__b" in plan, plan
-
-
-def test_cdc_chunker_is_map_only_and_savings_exchanges_triples(spark, sf_dir):
-    """CDC scale contract: the chunker itself adds NO Exchange and NO
-    Generate (no per-character explode — the rolling hash stays inside
-    the Arrow batch); the savings aggregate exchanges only the
-    (source, chunk_md5) aggregation keys, with the map-side partial
-    aggregate present so the shuffle carries combined triples."""
-    from erigon_extract_spark.operators.dedup import cdc_chunks, cdc_savings
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    chunk_plan = _plan(cdc_chunks(docs))
-    assert "Exchange" not in chunk_plan, chunk_plan
-    assert "Generate" not in chunk_plan, chunk_plan
-    assert "MapInPandas" in chunk_plan
-
-    savings_plan = _plan(cdc_savings(docs))
-    # partial agg before each exchange (map-side combine)
-    assert savings_plan.count("HashAggregate") >= 4, savings_plan
-    # the chunk text column never reaches an exchange: every Exchange
-    # node's schema mentions only key/metric columns
-    for frag in savings_plan.split("Exchange")[1:]:
-        head = frag.splitlines()[0]
-        assert "text" not in head, head
-
-    # the LBFS-clamped walk lives entirely inside the per-document
-    # kernel: same zero-Exchange, zero-Generate map-only plan
-    clamped_plan = _plan(cdc_chunks(docs, min_size=32, max_size=128))
-    assert "Exchange" not in clamped_plan, clamped_plan
-    assert "Generate" not in clamped_plan, clamped_plan
-    assert "MapInPandas" in clamped_plan

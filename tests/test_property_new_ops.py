@@ -8,61 +8,6 @@ import hashlib
 import random
 
 
-def _norm(t: str) -> str:
-    return " ".join(t.lower().split())
-
-
-def _python_spans(texts: dict[int, str], width: int):
-    """Independent brute-force of the duplicate_spans definition at
-    stride=1: gram -> docs map, cross-doc hits, gaps-and-islands merge."""
-    grams: dict[str, set[int]] = {}
-    positions: dict[int, list[int]] = {d: [] for d in texts}
-    norm = {d: _norm(t) for d, t in texts.items()}
-    for d, t in norm.items():
-        if len(t) < width:
-            continue
-        for p in range(len(t) - width + 1):
-            grams.setdefault(t[p:p + width], set()).add(d)
-    for d, t in norm.items():
-        for p in range(max(0, len(t) - width + 1)):
-            if len(t) >= width and len(grams[t[p:p + width]]) >= 2:
-                positions[d].append(p + 1)  # 1-based
-    out = set()
-    for d, ps in positions.items():
-        if not ps:
-            continue
-        start = prev = ps[0]
-        for p in ps[1:]:
-            if p - prev <= width:
-                prev = p
-            else:
-                out.add((d, start, prev + width - 1, prev + width - start))
-                start = prev = p
-        out.add((d, start, prev + width - 1, prev + width - start))
-    return out
-
-
-def test_duplicate_spans_matches_python_reference_random(spark):
-    from erigon_extract_spark.operators.dedup import duplicate_spans
-
-    width = 12
-    for seed in (1, 7, 42):
-        rng = random.Random(seed)
-        vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
-        texts = {}
-        for d in range(12):
-            n = rng.randint(0, 30)
-            texts[d] = " ".join(rng.choice(vocab) for _ in range(n))
-        docs = spark.createDataFrame(
-            list(texts.items()), "doc_id long, text string"
-        )
-        got = {
-            (r.doc_id, r.span_start, r.span_end, r.span_len)
-            for r in duplicate_spans(docs, width=width, stride=1).collect()
-        }
-        assert got == _python_spans(texts, width), seed
-
-
 def _python_cms_bucket(i: int, k: str, width: int) -> int:
     return int(hashlib.md5(f"{i}_{k}".encode()).hexdigest()[:8], 16) % width
 

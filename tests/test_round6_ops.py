@@ -1,5 +1,5 @@
-"""Unit tests for the round-6 operators: integer PageRank, exact
-edit-distance dedup, and bigram-LM scoring.
+"""Unit tests for the round-6 operators: integer PageRank and bigram-LM
+scoring.
 
 Each pins the operator against an independently computed expectation
 (closed form or plain-python recompute), not against the engine's own
@@ -13,7 +13,6 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from erigon_extract_spark.operators.dedup import levenshtein_near_pairs
 from erigon_extract_spark.operators.graph import pagerank
 from erigon_extract_spark.operators.text import bigram_lm_logprob
 
@@ -62,55 +61,6 @@ def test_pagerank_zero_iters_is_uniform_and_negative_raises(spark):
     assert got == {0: SCALE, 1: SCALE}
     with pytest.raises(ValueError):
         pagerank(edges, n_iter=-1)
-
-
-# ------------------------------------------------- levenshtein_near_pairs
-
-
-def _lev_docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, lang string, text string")
-
-
-def test_levenshtein_pairs_exact_distances(spark):
-    docs = _lev_docs(
-        spark,
-        [
-            (1, "en", "the quick brown fox"),
-            (2, "en", "the quick brown cat"),  # dist 3 from 1
-            (3, "en", "the quick brown fox"),  # dist 0 from 1
-            (4, "en", "a completely different sentence entirely"),
-            (5, "de", "the quick brown fox"),  # other block: never paired
-        ],
-    )
-    got = {
-        (r.doc_id_a, r.doc_id_b): r.dist
-        for r in levenshtein_near_pairs(docs, max_dist=4).collect()
-    }
-    assert got == {(1, 2): 3, (1, 3): 0, (2, 3): 3}
-
-
-def test_levenshtein_blocking_is_complete_across_buckets(spark):
-    # Lengths straddling a bucket boundary (floor(len/k) differs by 1)
-    # must still pair: len 15 vs len 17 with k=16 sit in buckets 0 and
-    # 1. Also pin the no-duplicate-candidates property: exactly one
-    # output row per qualifying pair.
-    docs = _lev_docs(
-        spark,
-        [
-            (1, "en", "aaaaaaaaaaaaaaa"),  # len 15, bucket 0
-            (2, "en", "aaaaaaaaaaaaaaaaa"),  # len 17, bucket 1, dist 2
-        ],
-    )
-    rows = levenshtein_near_pairs(docs, max_dist=16).collect()
-    assert [(r.doc_id_a, r.doc_id_b, r.dist) for r in rows] == [(1, 2, 2)]
-
-
-def test_levenshtein_length_gap_beyond_k_excluded(spark):
-    docs = _lev_docs(
-        spark,
-        [(1, "en", "a" * 10), (2, "en", "a" * 40)],
-    )
-    assert levenshtein_near_pairs(docs, max_dist=16).count() == 0
 
 
 # ---------------------------------------------------- bigram_lm_logprob
@@ -163,72 +113,6 @@ def test_bigram_lm_probabilities_sum_below_one(spark):
     for r in rows:
         if r.n_bigrams:
             assert r.logprob_unats < 0
-
-
-# ---------------------------------------------------- containment_pairs
-
-
-def test_containment_quote_inclusion(spark):
-    from erigon_extract_spark.operators.dedup import containment_pairs
-
-    short = "alpha beta gamma delta epsilon"  # 3 distinct 3-grams
-    long = (
-        "intro words here alpha beta gamma delta epsilon and then a "
-        "very long unrelated tail about distributed query engines"
-    )
-    docs = spark.createDataFrame(
-        [(1, short), (2, long), (3, "totally different text entirely")],
-        "doc_id long, text string",
-    )
-    rows = {
-        (r.doc_id_a, r.doc_id_b): (r.n_common, r.n_a, r.containment_ppm)
-        for r in containment_pairs(docs, threshold=0.8).collect()
-    }
-    # all 3 of short's shingles appear in long -> containment(1 in 2)=1.0;
-    # the reverse direction is far below 0.8; doc 3 shares nothing.
-    assert set(rows) == {(1, 2)}
-    n_common, n_a, ppm = rows[(1, 2)]
-    assert (n_common, n_a, ppm) == (3, 3, 1_000_000)
-
-
-def test_containment_prefix_filter_matches_naive(spark):
-    # The prefix-filtered plan must equal the naive all-shingle join
-    # (identical-result guarantee) on a corpus with shared boilerplate.
-    from erigon_extract_spark.operators.dedup import containment_pairs
-
-    base = "the common header line shared by every single document here"
-    rows = [
-        (i, base + f" unique tail {i} with words {i * 7} and {i * 13}")
-        for i in range(8)
-    ] + [(100, base)]  # pure-boilerplate doc contained in all others
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r.doc_id_a, r.doc_id_b, r.n_common, r.n_a)
-        for r in containment_pairs(docs, threshold=0.9).collect()
-    }
-    # naive recompute in python
-    import re as _re
-
-    def shingles(t):
-        w = _re.sub(r"\s+", " ", t.lower()).strip().split(" ")
-        return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
-
-    sets = {d: shingles(t) for d, t in rows}
-    expect = set()
-    for a, sa in sets.items():
-        for b, sb in sets.items():
-            if a != b and len(sa & sb) * 1_000_000 >= 900_000 * len(sa):
-                expect.add((a, b, len(sa & sb), len(sa)))
-    assert got == expect
-    assert any(a == 100 for a, *_ in got)  # the contained doc is found
-
-
-def test_containment_threshold_validation(spark):
-    from erigon_extract_spark.operators.dedup import containment_pairs
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        containment_pairs(docs, threshold=0.0)
 
 
 # ------------------------------------------------- gopher_quality_rules

@@ -455,58 +455,3 @@ def test_stream_ohlc_matches_batch(spark, sf_dir, events_dir):
         for k, (o, h, lo, c, n) in got.items()
     }
     assert got_rounded == q
-
-
-def test_stream_cdc_chunks_matches_batch(spark, sf_dir):
-    """CDC chunking over a file-drop document stream == the batch chunk
-    table on the same docs. cdc_chunks is a STATELESS Arrow map
-    (plan-pinned: no Exchange), so it composes with readStream directly
-    — no watermark, no state store; this pins that the chunker really is
-    drop-in streamable (crawler ingest: chunk shards as they land).
-    Two file drops prove multi-micro-batch append, and the chunk set —
-    every boundary, length, md5 — must match batch exactly."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .filter(F.col("doc_id") < 200)
-    )
-    d = tempfile.mkdtemp(prefix="cdc_stream_")
-    try:
-        docs.filter(F.col("doc_id") < 100).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/drop1")
-        docs.filter(F.col("doc_id") >= 100).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/drop2")
-
-        from erigon_extract_spark.operators.dedup import cdc_chunks
-
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(d)
-        )
-        _run_available_now(cdc_chunks(stream), "cdc_stream", "append")
-        got = spark.table("cdc_stream")
-        expected = cdc_chunks(docs)
-        key = ["doc_id", "chunk_idx", "start", "len", "chunk_md5"]
-        assert (
-            sorted(map(tuple, got.select(*key).collect()))
-            == sorted(map(tuple, expected.select(*key).collect()))
-        )
-        assert got.count() > 200  # the chunking is real, not degenerate
-
-        # the LBFS-clamped walk is equally stateless (per-document
-        # kernel, no cross-row state), so the clamped chunker must be
-        # drop-in streamable too
-        _run_available_now(
-            cdc_chunks(stream, min_size=32, max_size=128),
-            "cdc_stream_clamped", "append",
-        )
-        got_c = spark.table("cdc_stream_clamped")
-        expected_c = cdc_chunks(docs, min_size=32, max_size=128)
-        assert (
-            sorted(map(tuple, got_c.select(*key).collect()))
-            == sorted(map(tuple, expected_c.select(*key).collect()))
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

@@ -20,9 +20,10 @@ and shuffle operators, on a ``local[8,2]`` master (the second slot is
 Each operator's output with the injected retry must equal the
 undisturbed run exactly.
 
-Covered kernels: the CDC chunker (stateless Arrow map), the clamped
-walk, MinHash-LSH candidate pairs (shuffle above the tap), and exact
-dedup (hash agg above the tap).
+Covered operators: the account-changeset decode (an Arrow UDF above the
+tap), the state-history build (the transpose's range shuffle and the
+re-key window above the tap), both over the raw fixture tables from
+``fixture_store.ensure()``, and exact dedup (hash agg above the tap).
 
 Usage: python tools/fault_probe.py [sf_dir]
 Prints one PASS/FAIL line per operator and exits nonzero on any FAIL.
@@ -72,11 +73,24 @@ def main() -> None:
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from erigon_extract_spark.operators.dedup import (
-        cdc_chunks,
-        exact_dedup,
-        minhash_lsh_pairs_portable,
+    from erigon_extract_spark import fixture_store
+    from erigon_extract_spark.operators.dedup import exact_dedup
+    from erigon_extract_spark.plans.extract import (
+        decode_account_changesets,
+        decode_storage_changesets,
     )
+    from erigon_extract_spark.plans.transpose import build_state_history
+
+    raw = fixture_store.ensure()
+    acs = spark.read.parquet(f"{raw}/account_changesets.parquet")
+    scs = spark.read.parquet(f"{raw}/storage_changesets.parquet")
+    acs_schema = "block long, address binary, account_blob binary"
+
+    def history(acs_df):
+        return build_state_history(
+            decode_account_changesets(acs_df).drop("decode_error"),
+            decode_storage_changesets(scs).drop("decode_error"),
+        )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
@@ -98,24 +112,19 @@ def main() -> None:
         n_fail += not ok
 
     check(
-        "cdc_chunks",
-        cdc_chunks(docs),
-        cdc_chunks(flaky_tap(docs, doc_schema, acc)),
+        "decode_account_changesets",
+        decode_account_changesets(acs),
+        decode_account_changesets(flaky_tap(acs, acs_schema, acc)),
     )
     check(
-        "cdc_chunks_clamped",
-        cdc_chunks(docs, min_size=32, max_size=128),
-        cdc_chunks(flaky_tap(docs, doc_schema, acc), min_size=32, max_size=128),
+        "build_state_history",
+        history(acs),
+        history(flaky_tap(acs, acs_schema, acc)),
     )
     check(
         "exact_dedup",
         exact_dedup(docs),
         exact_dedup(flaky_tap(docs, doc_schema, acc)),
-    )
-    check(
-        "minhash_lsh_portable",
-        minhash_lsh_pairs_portable(docs),
-        minhash_lsh_pairs_portable(flaky_tap(docs, doc_schema, acc)),
     )
 
     print(f"== {'ALL PASS' if not n_fail else f'{n_fail} FAIL'} ==",

@@ -47,17 +47,14 @@ from erigon_extract_spark.session import get_spark  # noqa: E402
 # The shuffle/broadcast/serialization-heaviest gate per family — every
 # mechanism class that behaves differently across a process boundary:
 # range-repartition + window (transpose/rekey), broadcast join, SMJ
-# explode join, banded-LSH self-join, iterative label propagation,
-# salted skew join, session windows and mapInPandas Arrow batches (the
-# CDC chunker).
+# explode join, mapInPandas Arrow batches (the archive's page-task
+# reader), salted skew join and session windows.
 DEFAULT_PROBE = [
     "erigon_state_history",       # K-way merge via ONE rangepartitioning
     "erigon_chained_increments",  # union + rekey window + broadcast semi
     "erigon_tx_bodies",           # explode(sequence) SMJ + RLP decode
     "j1_lookup_join",             # broadcast hash join
-    "dedup_minhash_portable",     # banded LSH bucket self-join
-    "dedup_connected_clusters",   # iterative min-label propagation
-    "dedup_cdc_chunks_clamped",   # Arrow mapInPandas kernel, map-only
+    "ref_dialect_decode",         # Arrow mapInPandas page tasks, map-only
     "join_salted_skew",           # salted two-phase join
     "sessionize_events",          # session windows over event time
 ]
