@@ -61,17 +61,13 @@ HEADLINE = [
     "events_ohlc_hourly",  # single-agg time-bucket OHLC rollup
     "dedup_unicode_fold",  # pandas-UDF fold + fingerprint shuffle
     # --- round-7 additions ---
-    "text_html_extract",  # zero-shuffle HTML extraction projection
-    "dedup_url",  # canonicalize + one hash-agg frontier dedup
     "text_topk_ngrams",  # count agg + TakeOrderedAndProject top-50
-    "graph_pagerank_web",  # links->host edges->10 integer PR iterations
     # --- round-8 additions ---
     "source_bucketed_join",  # zero-Exchange co-located bucketed SMJ
     "corpus_route_by_language",  # lang-id + broadcast policy routing
     # --- round-9 additions ---
     "stream_band_join_batch",  # stream-stream band join, batch-mode gate
     "source_xml_documents",  # legacy-tokenizer XML ingest (fixture-bound)
-    "source_warc_documents",  # WARC shard parse + quarantine (fixture-bound)
     "maintenance_file_stats",  # per-file layout health report
     "sample_leakage_safe_split",  # content-keyed dedup-aware split
     # --- round-10 additions ---

@@ -21,10 +21,6 @@ from pyspark.sql import types as T
 _MASK = (1 << 256) - 1
 
 
-def _to_int(b: bytes | None) -> int | None:
-    return None if b is None else int.from_bytes(b, "big")
-
-
 def _to_b32(v: int) -> bytes:
     return (v & _MASK).to_bytes(32, "big")
 

@@ -1,8 +1,8 @@
 """Exact document deduplication over a ``documents(doc_id, text, ...)``
-table: one hash-groupBy shuffle on a content fingerprint of the
-normalized text. Determinism: the fingerprint is Spark's built-in ``md5``
-and the winner is the smallest id, so results are reproducible across
-runs and partitionings.
+table: one hash shuffle on a content fingerprint of the normalized text,
+with a top-1 window per fingerprint. Determinism: the fingerprint is
+Spark's built-in ``md5`` and the winner is the smallest id, so results
+are reproducible across runs and partitionings.
 """
 
 from __future__ import annotations
@@ -17,8 +17,15 @@ def exact_dedup(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Keep one doc per exact (normalized) content hash — the winner is the
-    smallest id (deterministic). Single shuffle on the 128-bit fingerprint;
-    at 100 TB this is a straight hash-aggregate, no sort."""
+    smallest id (deterministic).
+
+    Plan: each task sorts its rows by ``(__fp, id)`` and keeps a partial
+    top-1 per fingerprint (``WindowGroupLimit``); one hash exchange on
+    ``__fp`` follows, then a second sort, the final ``WindowGroupLimit``
+    and the ``Window``. The window stays because only the per-task
+    winners cross the one shuffle; a
+    ``groupBy(__fp).agg(min(struct(id, text)))`` is no cheaper, since it
+    plans as a ``SortAggregate`` with the same two sorts."""
     fp = F.md5(normalize_text(F.col(text_col)))
     return (
         docs.withColumn("__fp", fp)

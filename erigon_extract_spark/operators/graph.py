@@ -305,8 +305,7 @@ def pagerank(
         raise ValueError("n_iter must be >= 0")
     # checkpoint the canonical edge set ONCE: nodes' self-union and the
     # outdeg attach below would otherwise recompute the upstream edge
-    # pipeline (for the web-graph query: HTML link extraction + URL
-    # parsing) three times over (r11 optimization round, guide §2.4)
+    # pipeline three times over (OPTIMIZATION_r11.md, item 2)
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .distinct()

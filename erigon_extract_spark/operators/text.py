@@ -51,12 +51,6 @@ def punct_ratio(col) -> F.Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(punct / n)
 
 
-def upper_ratio(col) -> F.Column:
-    n = F.length(col)
-    upp = n - F.length(F.regexp_replace(col, r"[A-Z]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(upp / n)
-
-
 def digit_ratio(col) -> F.Column:
     n = F.length(col)
     dig = n - F.length(F.regexp_replace(col, r"[0-9]", ""))
@@ -125,7 +119,7 @@ def rolling_fingerprint_df(
     ``fp = fold(chars, (a, c) -> (a*31 + code(c)) mod (2^31 - 1))``.
 
     Cross-engine deterministic (pure int64 arithmetic), so it has a DuckDB
-    oracle — unlike xxhash64-based ``fingerprint64``. Returns a DataFrame
+    oracle — unlike an xxhash64 fingerprint. Returns a DataFrame
     because the char->code array must be PROJECTED before the fold: Spark
     re-evaluates expressions referenced inside higher-order-function lambdas
     per element (NOTES.md: 42-184s vs 1-3s on this table), so composing
@@ -147,28 +141,6 @@ def rolling_fingerprint_df(
         lambda a, x: (a * F.lit(31) + x) % F.lit(2147483647),
     )
     return staged.select("doc_id", fp.alias("fp"))
-
-
-def fingerprint64(col) -> F.Column:
-    """Deterministic 64-bit content fingerprint of normalized text
-    (xxhash64 — stable across Spark versions and partitionings)."""
-    c = F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-    return F.xxhash64(c)
-
-
-def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One fused projection adding all text-analysis columns."""
-    c = F.col(text_col)
-    return (
-        docs.withColumn("token_count", token_count(c))
-        .withColumn("punct_ratio", punct_ratio(c))
-        .withColumn("digit_ratio", digit_ratio(c))
-        .withColumn("mean_word_len", mean_word_len(c))
-        .withColumn("stopword_ratio", stopword_ratio(c))
-        .withColumn("quality_score", quality_score(c))
-        .withColumn("lang_pred", lang_id(c))
-        .withColumn("fingerprint", fingerprint64(c))
-    )
 
 
 # Hashed-feature linear classifier (fasttext-style scoring head). The

@@ -3,8 +3,8 @@
 Each entry pairs a Spark DataFrame implementation with an equivalent ANSI
 SQL string for the DuckDB oracle (run over the same parquet tables). Keys
 map to SURVEY.md §2 operators (s*/p*/j*/w*/a*/o* prefixes) and the
-beyond-reference training-data operators (dedup_* for exact-hash, folded-text
-and URL dedup, text_*, sim_*).
+beyond-reference training-data operators (dedup_* for exact-hash and
+folded-text dedup, text_*, sim_*).
 
 Rules for oracle parity (learned the hard way, encoded once here):
 - Alias every computed column identically on both sides.
@@ -3468,63 +3468,6 @@ def source_csv_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clean.select("doc_id", "text", "lang", "source", "n_chars")
 
 
-_WARC_ORACLE_SQL = """
-    WITH gen AS (
-      SELECT i,
-             '<html><body>doc ' || i || ' & tail ' || (i * i)
-               || '</body></html>' AS rest
-      FROM generate_series(0, 29) t(i)
-    ),
-    body AS (
-      SELECT i,
-             CASE WHEN i % 7 = 0
-                  THEN 'line one ' || i || chr(13) || chr(10)
-                       || 'line two ' || i || chr(13) || chr(10) || rest
-                  ELSE rest
-             END AS payload_text
-      FROM gen
-    )
-    SELECT CAST(2 + 2 * i AS INT) AS rec_idx,
-           'https://example.org/page/' || i AS target_uri,
-           'text/html' AS content_type,
-           CAST(length(payload_text) AS BIGINT) AS content_length,
-           payload_text
-    FROM body
-    """
-
-
-@query("source_warc_documents", _WARC_ORACLE_SQL)
-def source_warc_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC ingest under the hash gate (sources/warc.py — the ISO 28500
-    crawl-archive format Common Crawl ships): binaryFile per-shard read,
-    Arrow-batched record parsing with resync-on-corruption quarantine
-    (one producer bug costs one record, not the shard tail), bomb caps on
-    header/record/shard sizes. DuckDB reads no WARC, so the oracle
-    reconstructs the 30 response records from the fixture's generating
-    formula — every 7th payload embeds CRLF pairs so framing is proven to
-    come from Content-Length, not separator scanning. The gzip twin
-    (one member per record, the CC layout) is pinned byte-identical in
-    tests/test_warc_source.py."""
-    from erigon_extract_spark.sources.warc import (
-        ensure_sample,
-        read_warc,
-        split_quarantine,
-    )
-
-    path = ensure_sample()
-    clean, _bad = split_quarantine(read_warc(spark, str(path)))
-    return (
-        clean.filter(F.col("warc_type") == "response")
-        .select(
-            "rec_idx",
-            "target_uri",
-            "content_type",
-            "content_length",
-            F.col("payload").cast("string").alias("payload_text"),
-        )
-    )
-
-
 def _xml_oracle_sql() -> str:
     # DuckDB has no XML reader, so the oracle reconstructs the fixture's
     # rows from the same generating formula (sources/xmlfile.ensure_sample
@@ -5077,529 +5020,6 @@ def corpus_pps_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- raw-web HTML -> text extraction (r6 verdict directive #5) ------------
-
-# The synthetic corpus is clean text, so both engines wrap every document
-# in the SAME deterministic HTML page before extracting — title/style in
-# <head>, a <script>, a comment, a pure-link nav <div> (link-density
-# boilerplate), a mixed text+link paragraph (density pass), an
-# entity-encoded paragraph (decode active), and a one-word <li> (min-words
-# drop) — so every branch of the extractor is demonstrably exercised
-# under the hash gate (the _PII_SYNTH_SQL pattern).
-
-
-def _synth_html_df(docs: DataFrame) -> DataFrame:
-    d = F.col("doc_id").cast("string")
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("<html><head><title>Doc "), d,
-            F.lit("</title><style>p {color: red}</style></head><body>"
-                  "<script>var n = "), d,
-            F.lit(";</script><h1>Section heading "), d,
-            F.lit("</h1><p>"), F.coalesce(F.col("text"), F.lit("")),
-            F.lit("</p><!-- crawler note "), d,
-            F.lit(' --><div class="nav"><a href="/home">Home</a> '
-                  '<a href="/about">About</a> <a href="/c">Contact</a>'
-                  '</div><p>Read the full <a href="/d">details page</a>'
-                  " now "), d,
-            F.lit("</p><p>See &lt;terms&gt; &amp; conditions &#39;v"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit("&#39;</p><ul><li>short</li></ul></body></html>"),
-        ).alias("html"),
-    )
-
-
-_HTML_SYNTH_SQL = """
-      SELECT doc_id,
-             concat('<html><head><title>Doc ', CAST(doc_id AS VARCHAR),
-                    '</title><style>p {color: red}</style></head><body>',
-                    '<script>var n = ', CAST(doc_id AS VARCHAR),
-                    ';</script><h1>Section heading ',
-                    CAST(doc_id AS VARCHAR),
-                    '</h1><p>', COALESCE(text, ''),
-                    '</p><!-- crawler note ', CAST(doc_id AS VARCHAR),
-                    ' --><div class="nav"><a href="/home">Home</a> ',
-                    '<a href="/about">About</a> <a href="/c">Contact</a>',
-                    '</div><p>Read the full <a href="/d">details page</a>',
-                    ' now ', CAST(doc_id AS VARCHAR),
-                    '</p><p>See &lt;terms&gt; &amp; conditions &#39;v',
-                    CAST(doc_id % 7 AS VARCHAR),
-                    '&#39;</p><ul><li>short</li></ul></body></html>')
-               AS html
-      FROM documents
-"""
-
-
-def _html_vis_sql(expr: str) -> str:
-    """The SQL mirror of operators/html._visible_text — strip tags, decode
-    entities in ENTITIES order ('&amp;' last), collapse whitespace, trim."""
-    from erigon_extract_spark.operators.html import ENTITIES
-
-    t = f"regexp_replace({expr}, '<[^>]*>', ' ', 'g')"
-    for ent, ch in ENTITIES:
-        t = f"replace({t}, '{ent}', '{ch.replace(chr(39), chr(39) * 2)}')"
-    return f"trim(regexp_replace({t}, '\\s+', ' ', 'g'))"
-
-
-def _html_extract_ctes() -> str:
-    """Shared CTE chain: synth page -> strip invisible -> block-split ->
-    per-block visible text + anchor length -> keep rule -> per-doc
-    reassembly. Mirrors operators/html.html_extract_text stage for stage
-    (RELATIONAL form here: UNNEST + GROUP BY instead of array HOFs, so the
-    oracle is a structurally different implementation of the same spec)."""
-    from erigon_extract_spark.operators.html import BLOCK_TAGS
-
-    anchor = ("array_to_string(regexp_extract_all(raw, "
-              r"'(?is)<a\b[^>]*>(.*?)</a\s*>', 1), ' ')")
-    strip = (
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-        "regexp_replace(html, '(?s)<!--.*?-->', ' ', 'g'), "
-        r"'(?is)<head\b[^>]*>.*?</head\s*>', ' ', 'g'), "
-        r"'(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g'), "
-        r"'(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g'), "
-        f"'(?i)</?(?:{BLOCK_TAGS})" + r"\b[^>]*>', chr(10), 'g')"
-    )
-    return f"""
-    synth AS ({_HTML_SYNTH_SQL}),
-    cleaned AS (SELECT doc_id, {strip} AS c FROM synth),
-    hblocks AS (
-      SELECT doc_id, i AS pos, parts[i] AS raw
-      FROM (SELECT doc_id, string_split(c, chr(10)) AS parts FROM cleaned),
-           UNNEST(generate_series(1, len(parts))) AS u(i)
-    ),
-    vis AS (
-      SELECT doc_id, pos, {_html_vis_sql('raw')} AS t,
-             -- DuckDB's array_to_string([]) is NULL where Spark's
-             -- array_join([]) is '' — pin the zero-anchor case to 0
-             COALESCE(length({_html_vis_sql(anchor)}), 0) AS alen
-      FROM hblocks
-    ),
-    nonempty AS (
-      SELECT doc_id, pos, t,
-             (len(string_split(t, ' ')) >= 3
-              AND alen * 100 <= length(t) * 50) AS is_kept
-      FROM vis WHERE t <> ''
-    ),
-    extracted AS (
-      SELECT d.doc_id,
-             COALESCE(a.text, '') AS text,
-             CAST(COALESCE(a.n_blocks_total, 0) AS BIGINT) AS n_blocks_total,
-             CAST(COALESCE(a.n_blocks_kept, 0) AS BIGINT) AS n_blocks_kept
-      FROM documents d LEFT JOIN (
-        SELECT doc_id,
-               COALESCE(string_agg(CASE WHEN is_kept THEN t END, chr(10)
-                                   ORDER BY pos), '') AS text,
-               COUNT(*) AS n_blocks_total,
-               SUM(CASE WHEN is_kept THEN 1 ELSE 0 END) AS n_blocks_kept
-        FROM nonempty GROUP BY doc_id
-      ) a USING (doc_id)
-    )
-"""
-
-
-@query(
-    "text_html_extract",
-    f"""
-    WITH {_html_extract_ctes()}
-    SELECT doc_id, text, n_blocks_total, n_blocks_kept FROM extracted
-    """,
-)
-def text_html_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML -> main-text extraction (operators/html.html_extract_text):
-    the jusText/Readability-class heuristic — strip script/style/head/
-    comments, segment on block tags, drop blocks that are >50% anchor
-    text or under 3 words, reassemble. One zero-shuffle Catalyst
-    projection (regexp chain + array HOFs, no UDF); the oracle rebuilds
-    the same spec relationally (UNNEST + GROUP BY)."""
-    from erigon_extract_spark.operators.html import html_extract_text
-
-    docs = _load(spark, sf_dir, "documents")
-    out = html_extract_text(_synth_html_df(docs))
-    return out.select("doc_id", "text", "n_blocks_total", "n_blocks_kept")
-
-
-@query(
-    "corpus_pipeline_v3",
-    f"""
-    WITH {_html_extract_ctes()},
-    tok AS (
-      SELECT doc_id, tok FROM (
-        SELECT doc_id,
-               UNNEST(string_split(
-                 trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '
-               )) AS tok
-        FROM extracted
-      ) WHERE length(tok) > 0
-    ),
-    w AS (
-      SELECT doc_id,
-             (CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % 1024)
-               * 2654435761 % 2001 - 1000 AS w
-      FROM tok
-    ),
-    agg AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             SUM(w) AS weight_sum
-      FROM w GROUP BY doc_id
-    ),
-    scored AS (
-      SELECT a.doc_id, e.n_blocks_total, e.n_blocks_kept, a.n_tokens,
-             ROUND(0.5 + (0.5 * (CAST(weight_sum AS DOUBLE)
-                                 / CAST(n_tokens * 1000 AS DOUBLE)))
-                         / (1.0 + abs(CAST(weight_sum AS DOUBLE)
-                                      / CAST(n_tokens * 1000 AS DOUBLE))), 6)
-               AS quality_score
-      FROM agg a JOIN extracted e USING (doc_id)
-    )
-    SELECT doc_id, n_blocks_total, n_blocks_kept, n_tokens, quality_score
-    FROM scored WHERE quality_score >= 0.5
-    """,
-)
-def corpus_pipeline_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The curation chain STARTING FROM RAW HTML (what corpus_pipeline_v2
-    assumed away): synthetic page -> html_extract_text -> model-based
-    quality filter on the EXTRACTED text -> keep list with per-doc block
-    stats. Witnesses that the extractor's output column contract feeds
-    the existing text operators without adaptation — the pipeline a
-    100 TB crawl actually runs (extract is a zero-shuffle map stage; the
-    only shuffle is the classifier's per-doc aggregate)."""
-    from erigon_extract_spark.operators.html import html_extract_text
-    from erigon_extract_spark.operators.text import hashed_linear_quality
-
-    docs = _load(spark, sf_dir, "documents")
-    ext = html_extract_text(_synth_html_df(docs))
-    scored = hashed_linear_quality(ext, text_col="text")
-    return (
-        scored.filter(F.col("keep"))
-        .join(ext.select("doc_id", "n_blocks_total", "n_blocks_kept"),
-              "doc_id")
-        .select("doc_id", "n_blocks_total", "n_blocks_kept", "n_tokens",
-                "quality_score")
-    )
-
-
-# --- URL canonicalization / link graph (crawl-frontier curation) ----------
-
-# Two deterministic messy variants per document that must collapse to ONE
-# canonical URL: uppercase scheme/host + default port + tracking param +
-# fragment + trailing slash vs the already-clean spelling with its query
-# params in a different order. Path case is deliberately preserved
-# (paths are case-sensitive); both engines build the same strings.
-
-
-def _synth_urls_df(docs: DataFrame) -> DataFrame:
-    d = lambda m: (F.col("doc_id") % m).cast("string")  # noqa: E731
-    v1 = docs.select(
-        "doc_id",
-        F.lit(1).alias("variant"),
-        F.concat(
-            F.lit("HTTP://Host"), d(50), F.lit(".Example.COM:80/Path"),
-            d(20), F.lit("/?utm_source=feed&b="), d(5), F.lit("&a=1#frag"),
-        ).alias("url"),
-    )
-    v2 = docs.select(
-        "doc_id",
-        F.lit(2).alias("variant"),
-        F.concat(
-            F.lit("http://host"), d(50), F.lit(".example.com/Path"),
-            d(20), F.lit("?a=1&b="), d(5),
-        ).alias("url"),
-    )
-    return v1.unionAll(v2)
-
-
-_URL_SYNTH_SQL = """
-      SELECT doc_id, 1 AS variant,
-             'HTTP://Host' || CAST(doc_id % 50 AS VARCHAR)
-               || '.Example.COM:80/Path' || CAST(doc_id % 20 AS VARCHAR)
-               || '/?utm_source=feed&b=' || CAST(doc_id % 5 AS VARCHAR)
-               || '&a=1#frag' AS url
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 2 AS variant,
-             'http://host' || CAST(doc_id % 50 AS VARCHAR)
-               || '.example.com/Path' || CAST(doc_id % 20 AS VARCHAR)
-               || '?a=1&b=' || CAST(doc_id % 5 AS VARCHAR) AS url
-      FROM documents
-"""
-
-# the SQL mirror of operators/urls.canonicalize_url, stage for stage
-_URL_CANON_CTES = (
-    """
-    u1 AS (
-      SELECT doc_id, variant, url,
-             lower(regexp_extract(url,
-               '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-             lower(regexp_extract(url,
-               '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-             regexp_extract(url,
-               '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS res
-      FROM urls
-    ),
-    u2 AS (
-      SELECT *,
-             CASE WHEN scheme = 'http' AND hostport LIKE '%:80'
-                    THEN substr(hostport, 1, length(hostport) - 3)
-                  WHEN scheme = 'https' AND hostport LIKE '%:443'
-                    THEN substr(hostport, 1, length(hostport) - 4)
-                  ELSE hostport END AS host,
-             regexp_replace(regexp_extract(res, '^([^?]*)', 1),
-                            '/+$', '') AS path0,
-             list_sort(list_filter(
-               string_split(regexp_extract(res, '\\?(.*)$', 1), '&'),
-               p -> p <> '' AND NOT regexp_matches(p,
-                 '^(utm_[^=]*|fbclid|gclid)(=.*)?$'))) AS params
-      FROM u1
-    ),
-    canon AS (
-      SELECT doc_id, variant,
-             CASE WHEN scheme = '' THEN '' ELSE
-               scheme || '://' || host
-                 || CASE WHEN path0 = '' THEN '/' ELSE path0 END
-                 || CASE WHEN len(params) > 0
-                      THEN '?' || array_to_string(params, '&')
-                      ELSE '' END
-             END AS canonical_url
-      FROM u2
-    )
-"""
-)
-
-
-@query(
-    "curation_url_canonical",
-    f"""
-    WITH urls AS ({_URL_SYNTH_SQL}),
-    {_URL_CANON_CTES}
-    SELECT doc_id, variant, canonical_url FROM canon
-    """,
-)
-def curation_url_canonical_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 3986-style URL canonicalization (operators/urls.
-    canonicalize_url): lowercase scheme/host, strip default port,
-    fragment, and tracking params (utm_*/fbclid/gclid), sort the
-    surviving query params, strip trailing path slashes. One zero-shuffle
-    Catalyst projection (regexp_extract splits + one array sort/filter
-    HOF); value-gated per (doc, variant) so every normalization rule is
-    under the hash."""
-    from erigon_extract_spark.operators.urls import canonicalize_url
-
-    docs = _load(spark, sf_dir, "documents")
-    urls = _synth_urls_df(docs)
-    return urls.select(
-        "doc_id", "variant",
-        canonicalize_url(F.col("url")).alias("canonical_url"),
-    )
-
-
-@query(
-    "dedup_url",
-    f"""
-    WITH urls AS ({_URL_SYNTH_SQL}),
-    {_URL_CANON_CTES}
-    SELECT canonical_url, CAST(COUNT(*) AS BIGINT) AS n_urls,
-           MIN(doc_id) AS keep_doc
-    FROM canon GROUP BY canonical_url
-    """,
-)
-def dedup_url_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level dedup — collapse crawl-frontier spellings BEFORE any
-    fetch/extract cost: canonicalize, then one hash-aggregate on the
-    canonical string (exact_dedup's shape: a single fingerprint-key
-    shuffle, map-side combined; at 100 TB the frontier is the cheapest
-    place a web corpus ever gets deduped). Keeper = smallest doc_id,
-    deterministic."""
-    from erigon_extract_spark.operators.urls import canonicalize_url
-
-    docs = _load(spark, sf_dir, "documents")
-    urls = _synth_urls_df(docs)
-    return (
-        urls.select(canonicalize_url(F.col("url")).alias("canonical_url"),
-                    "doc_id")
-        .groupBy("canonical_url")
-        .agg(F.count("*").alias("n_urls"), F.min("doc_id").alias("keep_doc"))
-    )
-
-
-# Link pages: every doc is a page on host (doc_id % 200) linking to the
-# two affine peers 7h+3 and 13h+5 (mod 200) — both maps invertible mod
-# 200, so the extracted host graph has no dangling nodes (the
-# graph_pagerank fixture, but REACHED THROUGH html+url extraction) —
-# plus a relative link and a mailto: (host-less rows the graph drops).
-
-
-def _synth_linkpages_df(docs: DataFrame) -> DataFrame:
-    h = F.col("doc_id") % 200
-    hs = h.cast("string")
-    d = F.col("doc_id").cast("string")
-    p1 = ((h * 7 + 3) % 200).cast("string")
-    p2 = ((h * 13 + 5) % 200).cast("string")
-    return docs.select(
-        "doc_id",
-        F.concat(F.lit("http://host"), hs, F.lit(".example.com/p"), d)
-          .alias("url"),
-        F.concat(
-            F.lit("<html><body><p>Index page for host"), hs, F.lit("</p>"),
-            F.lit('<a href="http://host'), p1,
-            F.lit(".example.com/p"), d, F.lit('">peer one</a>'),
-            F.lit('<a href="https://host'), p2,
-            F.lit(".example.com/q?id="), d,
-            F.lit('&amp;utm_source=x">peer two</a>'),
-            F.lit('<a href="/local/'), d, F.lit('">self</a>'),
-            F.lit('<a href="mailto:admin@host'), hs,
-            F.lit('.example.com">mail</a></body></html>'),
-        ).alias("html"),
-    )
-
-
-_LINKPAGES_SQL = """
-      SELECT doc_id,
-             'http://host' || CAST(doc_id % 200 AS VARCHAR)
-               || '.example.com/p' || CAST(doc_id AS VARCHAR) AS url,
-             '<html><body><p>Index page for host'
-               || CAST(doc_id % 200 AS VARCHAR) || '</p>'
-               || '<a href="http://host'
-               || CAST(((doc_id % 200) * 7 + 3) % 200 AS VARCHAR)
-               || '.example.com/p' || CAST(doc_id AS VARCHAR)
-               || '">peer one</a>'
-               || '<a href="https://host'
-               || CAST(((doc_id % 200) * 13 + 5) % 200 AS VARCHAR)
-               || '.example.com/q?id=' || CAST(doc_id AS VARCHAR)
-               || '&amp;utm_source=x">peer two</a>'
-               || '<a href="/local/' || CAST(doc_id AS VARCHAR)
-               || '">self</a>'
-               || '<a href="mailto:admin@host'
-               || CAST(doc_id % 200 AS VARCHAR)
-               || '.example.com">mail</a></body></html>' AS html
-      FROM documents
-"""
-
-# mirrors operators/urls.url_host: authority -> lowercase -> strip
-# userinfo (greedy up-to-last-'@') -> strip port
-_HOST_OF = (
-    "regexp_extract(lower(regexp_extract({col}, "
-    "'^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^(?:.*@)?([^:]*)', 1)"
-)
-
-# conformant HTML escapes '&' in attribute values as '&amp;': the
-# extractor entity-decodes the href (operators/html.extract_links), so
-# the oracle applies the same minimal replace chain, '&amp;' last
-_LINKS_SQL = r"""
-    rawlinks AS (
-      SELECT doc_id, url,
-             UNNEST(regexp_extract_all(html,
-               '(?is)<a\b[^>]*\bhref\s*=\s*"([^"]*)"', 1)) AS rawhref
-      FROM pages
-    ),
-    links AS (
-      SELECT doc_id, url,
-             replace(replace(replace(replace(replace(replace(rawhref,
-               '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-               '&nbsp;', ' '), '&amp;', '&') AS href
-      FROM rawlinks
-    )
-"""
-
-
-@query(
-    "text_html_links",
-    f"""
-    WITH pages AS ({_LINKPAGES_SQL}),
-    {_LINKS_SQL}
-    SELECT doc_id, href, {_HOST_OF.format(col='href')} AS host
-    FROM links
-    """,
-)
-def text_html_links_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link extraction (operators/html.extract_links + operators/urls.
-    url_host): one row per href in document order, with the lowercased
-    port-less host ('' for relative and mailto: links — the rows a web
-    graph drops). Zero-shuffle regexp_extract_all explode."""
-    from erigon_extract_spark.operators.html import extract_links
-    from erigon_extract_spark.operators.urls import url_host
-
-    docs = _load(spark, sf_dir, "documents")
-    pages = _synth_linkpages_df(docs)
-    links = extract_links(pages)
-    return links.select(
-        "doc_id", "href", url_host(F.col("href")).alias("host")
-    )
-
-
-def _pagerank_unrolled_sql(n_iter: int) -> str:
-    """pr0..pr{n}: each iteration is nodes LEFT JOIN the contribution
-    aggregate — the exact shape of the operator's loop, so zero-in-degree
-    nodes keep their base rank instead of silently vanishing (the
-    recursive-CTE formulation only re-emitted GROUP BY e.v nodes, which
-    happened to cover every host on the full fixture but dropped
-    source-only hosts on small/skewed inputs — review finding). Unrolled
-    rather than recursive, which also sidesteps DuckDB giving bare UNION
-    inside WITH RECURSIVE UNION ALL semantics."""
-    steps = ["pr0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_fp"
-             " FROM nodes)"]
-    for k in range(n_iter):
-        steps.append(f"""
-    pr{k + 1} AS (
-      SELECT nd.node,
-             CAST(150000000 + COALESCE(c.contrib, 0) AS BIGINT) AS rank_fp
-      FROM nodes nd LEFT JOIN (
-        SELECT e.v AS node,
-               SUM((85 * p.rank_fp) // (100 * d.outdeg)) AS contrib
-        FROM pr{k} p JOIN edges e ON e.u = p.node
-                     JOIN deg d ON d.u = p.node
-        GROUP BY e.v
-      ) c ON nd.node = c.node
-    )""")
-    return ",\n    ".join(steps)
-
-
-@query(
-    "graph_pagerank_web",
-    f"""
-    WITH pages AS ({_LINKPAGES_SQL}),
-    {_LINKS_SQL},
-    edges AS (
-      SELECT DISTINCT {_HOST_OF.format(col='url')} AS u,
-             {_HOST_OF.format(col='href')} AS v
-      FROM links
-      WHERE {_HOST_OF.format(col='href')} <> ''
-    ),
-    deg AS (SELECT u, COUNT(*) AS outdeg FROM edges GROUP BY u),
-    nodes AS (
-      SELECT DISTINCT node FROM (
-        SELECT u AS node FROM edges UNION ALL SELECT v AS node FROM edges
-      )
-    ),
-    {_pagerank_unrolled_sql(10)}
-    SELECT node, rank_fp FROM pr10
-    """,
-)
-def graph_pagerank_web_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The web-graph composition: synthetic pages -> extract_links ->
-    url_host vertices -> DISTINCT host edges -> fixed-point integer
-    PageRank (operators/graph.pagerank). Same affine two-map fixture as
-    graph_pagerank, but the graph is RECOVERED from HTML + URL parsing
-    rather than synthesized as an edge list — witnessing the crawl
-    pipeline end to end (extract and parse are zero-shuffle maps; edge
-    distinct + per-iteration join/agg shuffle on host keys only)."""
-    from erigon_extract_spark.operators.graph import pagerank
-    from erigon_extract_spark.operators.html import extract_links
-    from erigon_extract_spark.operators.urls import url_host
-
-    docs = _load(spark, sf_dir, "documents")
-    pages = _synth_linkpages_df(docs)
-    links = extract_links(pages, keep_cols=("doc_id", "url"))
-    edges = (
-        links.select(
-            url_host(F.col("url")).alias("u"),
-            url_host(F.col("href")).alias("v"),
-        )
-        .filter(F.col("v") != "")
-    )
-    return pagerank(edges, src="u", dst="v", n_iter=10)
-
-
 @query(
     "text_topk_ngrams",
     """
@@ -5642,585 +5062,6 @@ def text_topk_ngrams_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("bg"))
         .limit(50)
-    )
-
-
-@query(
-    "curation_domain_stats",
-    f"""
-    WITH pages AS ({_LINKPAGES_SQL}),
-    tok AS (
-      SELECT doc_id, tok FROM (
-        SELECT doc_id,
-               UNNEST(string_split(
-                 trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '
-               )) AS tok
-        FROM documents
-      ) WHERE length(tok) > 0
-    ),
-    w AS (
-      SELECT doc_id,
-             (CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % 1024)
-               * 2654435761 % 2001 - 1000 AS w
-      FROM tok
-    ),
-    agg AS (
-      SELECT doc_id, COUNT(*) AS n_tokens, SUM(w) AS weight_sum
-      FROM w GROUP BY doc_id
-    ),
-    scored AS (
-      SELECT doc_id, n_tokens, weight_sum,
-             (ROUND(0.5 + (0.5 * (CAST(weight_sum AS DOUBLE)
-                                  / CAST(n_tokens * 1000 AS DOUBLE)))
-                          / (1.0 + abs(CAST(weight_sum AS DOUBLE)
-                                       / CAST(n_tokens * 1000 AS DOUBLE))), 6)
-              >= 0.5) AS keep
-      FROM agg
-    ),
-    hosts AS (
-      SELECT p.doc_id,
-             {_HOST_OF.format(col='p.url')} AS host,
-             s.n_tokens, s.weight_sum, s.keep
-      FROM pages p JOIN scored s ON p.doc_id = s.doc_id
-    ),
-    dom AS (
-      SELECT host,
-             CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-             CAST(SUM(n_tokens) AS BIGINT) AS tokens_total,
-             CAST(SUM(weight_sum) AS BIGINT) AS weight_total
-      FROM hosts GROUP BY host
-    )
-    SELECT host, n_docs, n_keep, tokens_total, weight_total,
-           ROUND(0.5 + (0.5 * (CAST(weight_total AS DOUBLE)
-                               / CAST(tokens_total * 1000 AS DOUBLE)))
-                       / (1.0 + abs(CAST(weight_total AS DOUBLE)
-                                    / CAST(tokens_total * 1000 AS DOUBLE))), 6)
-             AS host_score
-    FROM dom
-    """,
-)
-def curation_domain_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-level curation rollup — the per-host filtering stage of web
-    pipelines (drop spam hosts wholesale, not doc by doc): page URL ->
-    host vertex, per-doc classifier sums aggregated to EXACT integer
-    host totals (weight/token sums are order-free BIGINTs; the one float
-    squash happens once per host AFTER aggregation, so the host score is
-    bit-stable at any parallelism — the hashed_linear_quality
-    discipline lifted one level). One doc-key shuffle for the classifier
-    plus one host-key agg."""
-    from erigon_extract_spark.operators.text import hashed_linear_quality
-    from erigon_extract_spark.operators.urls import url_host
-
-    docs = _load(spark, sf_dir, "documents")
-    pages = _synth_linkpages_df(docs).select(
-        "doc_id", url_host(F.col("url")).alias("host")
-    )
-    scored = hashed_linear_quality(docs)
-    dom = (
-        pages.join(scored, "doc_id")
-        .groupBy("host")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-            F.sum("n_tokens").cast("long").alias("tokens_total"),
-            F.sum("weight_sum").cast("long").alias("weight_total"),
-        )
-    )
-    raw = F.col("weight_total").cast("double") / (
-        F.col("tokens_total") * F.lit(1000)
-    ).cast("double")
-    return dom.select(
-        "host", "n_docs", "n_keep", "tokens_total", "weight_total",
-        F.round(
-            F.lit(0.5) + (F.lit(0.5) * raw) / (F.lit(1.0) + F.abs(raw)), 6
-        ).alias("host_score"),
-    )
-
-
-def _robots_hosts_df(spark: SparkSession) -> DataFrame:
-    """The shared robots fixture dimension: every host disallows
-    /private, odd hosts also disallow /p (so page URLs flip allowed by
-    host parity). Mirrored by the `hosts`/`rules` CTEs in the robots and
-    frontier oracles."""
-    return spark.range(200).select(
-        F.concat(F.lit("host"), F.col("id").cast("string"),
-                 F.lit(".example.com")).alias("host"),
-        F.when(F.col("id") % 2 == 1,
-               F.array(F.lit("/private"), F.lit("/p")))
-         .otherwise(F.array(F.lit("/private"))).alias("disallow"),
-    )
-
-
-@query(
-    "curation_robots_filter",
-    f"""
-    WITH pages AS ({_LINKPAGES_SQL}),
-    urls AS (
-      SELECT doc_id, url FROM pages
-      UNION ALL
-      SELECT doc_id,
-             'http://host' || CAST(doc_id % 200 AS VARCHAR)
-               || '.example.com/private/x' || CAST(doc_id AS VARCHAR)
-      FROM documents
-    ),
-    hosts AS (SELECT range AS h FROM range(200)),
-    rules AS (
-      SELECT 'host' || CAST(h AS VARCHAR) || '.example.com' AS host,
-             '/private' AS pfx
-      FROM hosts
-      UNION ALL
-      SELECT 'host' || CAST(h AS VARCHAR) || '.example.com', '/p'
-      FROM hosts WHERE h % 2 = 1
-    ),
-    flagged AS (
-      SELECT u.doc_id, u.url,
-             COALESCE(bool_or(
-               starts_with(
-                 regexp_extract(
-                   regexp_extract(u.url,
-                     '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1),
-                   '^([^?]*)', 1),
-                 r.pfx)), FALSE) AS blocked
-      FROM urls u
-      LEFT JOIN rules r
-        ON r.host = {_HOST_OF.format(col='u.url')}
-      GROUP BY u.doc_id, u.url
-    )
-    SELECT doc_id, url, NOT blocked AS allowed FROM flagged
-    """,
-)
-def curation_robots_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robots politeness filter (operators/urls.robots_filter): each
-    frontier URL flagged against its host's Disallow prefixes via a
-    BROADCAST join of the per-host rule dimension + an exists HOF over
-    the rule array — no extra shuffle at frontier scale. Fixture: every
-    host disallows /private, odd hosts also disallow /p (so the page
-    URLs themselves flip allowed by host parity); the oracle rebuilds
-    the rule table relationally and aggregates prefix hits with
-    bool_or."""
-    from erigon_extract_spark.operators.urls import robots_filter
-
-    docs = _load(spark, sf_dir, "documents")
-    pages = _synth_linkpages_df(docs).select("doc_id", "url")
-    private = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("http://host"), (F.col("doc_id") % 200).cast("string"),
-            F.lit(".example.com/private/x"), F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-    urls = pages.unionAll(private)
-    out = robots_filter(urls, _robots_hosts_df(spark))
-    return out.select("doc_id", "url", "allowed")
-
-
-@query(
-    "corpus_frontier_keep",
-    f"""
-    WITH raw_urls AS (
-      SELECT doc_id, 1 AS variant,
-             'http://host' || CAST(doc_id % 200 AS VARCHAR)
-               || '.example.com/p' || CAST(doc_id AS VARCHAR) AS url
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 2 AS variant,
-             'HTTP://Host' || CAST(doc_id % 200 AS VARCHAR)
-               || '.Example.COM:80/p' || CAST(doc_id AS VARCHAR)
-               || '?utm_source=feed#x'
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 3 AS variant,
-             'http://host' || CAST(doc_id % 200 AS VARCHAR)
-               || '.example.com/private/x' || CAST(doc_id AS VARCHAR)
-      FROM documents
-    ),
-    hosts AS (SELECT range AS h FROM range(200)),
-    rules AS (
-      SELECT 'host' || CAST(h AS VARCHAR) || '.example.com' AS host,
-             '/private' AS pfx
-      FROM hosts
-      UNION ALL
-      SELECT 'host' || CAST(h AS VARCHAR) || '.example.com', '/p'
-      FROM hosts WHERE h % 2 = 1
-    ),
-    blocked AS (
-      SELECT u.doc_id, u.variant, u.url,
-             COALESCE(bool_or(
-               starts_with(
-                 regexp_extract(
-                   regexp_extract(u.url,
-                     '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1),
-                   '^([^?]*)', 1),
-                 r.pfx)), FALSE) AS is_blocked
-      FROM raw_urls u
-      LEFT JOIN rules r
-        ON r.host = {_HOST_OF.format(col='u.url')}
-      GROUP BY u.doc_id, u.variant, u.url
-    ),
-    urls AS (
-      SELECT doc_id, variant, url FROM blocked WHERE NOT is_blocked
-    ),
-    {_URL_CANON_CTES}
-    SELECT canonical_url, CAST(COUNT(*) AS BIGINT) AS n_urls,
-           MIN(doc_id) AS keep_doc
-    FROM canon GROUP BY canonical_url
-    """,
-)
-def corpus_frontier_keep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole pre-fetch crawl frontier under ONE hash (the
-    corpus_pipeline composition pattern): three spellings per document
-    (clean page, messy duplicate with uppercase host + default port +
-    tracking param + fragment, and a robots-disallowed /private URL) ->
-    robots filter on the ORIGINAL spelling -> canonicalize survivors ->
-    frontier dedup. Expected shape: even-host docs survive with exactly
-    n_urls=2 spellings collapsing to one canonical; odd hosts (which
-    also disallow /p) contribute nothing. Plan: broadcast rule join +
-    projection + one hash-agg — the same stage budget as dedup_url."""
-    from erigon_extract_spark.operators.urls import (
-        canonicalize_url,
-        robots_filter,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    h = (F.col("doc_id") % 200).cast("string")
-    d = F.col("doc_id").cast("string")
-    variants = [
-        docs.select("doc_id", F.concat(
-            F.lit("http://host"), h, F.lit(".example.com/p"), d
-        ).alias("url")),
-        docs.select("doc_id", F.concat(
-            F.lit("HTTP://Host"), h, F.lit(".Example.COM:80/p"), d,
-            F.lit("?utm_source=feed#x"),
-        ).alias("url")),
-        docs.select("doc_id", F.concat(
-            F.lit("http://host"), h, F.lit(".example.com/private/x"), d
-        ).alias("url")),
-    ]
-    urls = variants[0].unionAll(variants[1]).unionAll(variants[2])
-    allowed = robots_filter(urls, _robots_hosts_df(spark)).filter(
-        F.col("allowed")
-    )
-    return (
-        allowed.select(
-            canonicalize_url(F.col("url")).alias("canonical_url"), "doc_id"
-        )
-        .groupBy("canonical_url")
-        .agg(F.count("*").alias("n_urls"), F.min("doc_id").alias("keep_doc"))
-    )
-
-
-@query(
-    "text_sitemap_locs",
-    """
-    WITH sitemaps AS (
-      SELECT doc_id,
-             concat('<?xml version="1.0" encoding="UTF-8"?>',
-                    '<urlset><url><loc>http://host',
-                    CAST(doc_id % 200 AS VARCHAR), '.example.com/p',
-                    CAST(doc_id AS VARCHAR), '</loc>',
-                    '<lastmod>2024-01-0', CAST(doc_id % 9 + 1 AS VARCHAR),
-                    '</lastmod></url><url><loc> http://host',
-                    CAST(doc_id % 200 AS VARCHAR),
-                    '.example.com/q?a=1&amp;b=',
-                    CAST(doc_id % 5 AS VARCHAR),
-                    ' </loc></url></urlset>') AS xml
-      FROM documents
-    ),
-    locs AS (
-      SELECT doc_id,
-             trim(UNNEST(regexp_extract_all(xml,
-               '(?is)<loc\\s*>\\s*(.*?)\\s*</loc\\s*>', 1))) AS raw
-      FROM sitemaps
-    )
-    SELECT doc_id,
-           replace(replace(replace(replace(replace(replace(raw,
-             '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-             '&nbsp;', ' '), '&amp;', '&') AS loc
-    FROM locs
-    """,
-)
-def text_sitemap_locs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap <loc> extraction (operators/html.extract_sitemap_locs) —
-    the second crawl-discovery feed besides page links: two <loc>
-    entries per synthetic sitemap (one clean, one whitespace-padded with
-    the &amp; escaping the sitemaps.org protocol REQUIRES inside loc),
-    entity-decoded, in document order. Zero-shuffle explode; the output
-    column feeds canonicalize_url/robots_filter/dedup_url unchanged."""
-    from erigon_extract_spark.operators.html import extract_sitemap_locs
-
-    docs = _load(spark, sf_dir, "documents")
-    h = (F.col("doc_id") % 200).cast("string")
-    d = F.col("doc_id").cast("string")
-    sitemaps = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit('<?xml version="1.0" encoding="UTF-8"?>'
-                  "<urlset><url><loc>http://host"), h,
-            F.lit(".example.com/p"), d, F.lit("</loc><lastmod>2024-01-0"),
-            (F.col("doc_id") % 9 + 1).cast("string"),
-            F.lit("</lastmod></url><url><loc> http://host"), h,
-            F.lit(".example.com/q?a=1&amp;b="),
-            (F.col("doc_id") % 5).cast("string"),
-            F.lit(" </loc></url></urlset>"),
-        ).alias("xml"),
-    )
-    return extract_sitemap_locs(sitemaps)
-
-
-# the SQL mirror of operators/html.decode_entities ('&amp;' last)
-def _decode_ent_sql(col: str) -> str:
-    return (
-        "replace(replace(replace(replace(replace(replace(" + col + ", "
-        "'&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', ''''), "
-        "'&nbsp;', ' '), '&amp;', '&')"
-    )
-
-
-# --- sitemap-index recursion + RSS/Atom feeds (crawl discovery, r8) -------
-
-# Sitemap corpus: every doc is a fetched <urlset> file smD.xml with two
-# page locs (one carrying the protocol-required &amp; escaping); every
-# 20th doc ALSO contributes an index file idxD.xml listing the child
-# sitemaps smD.xml and sm(D+1).xml — the (D+1) child is missing from the
-# corpus when D+1 >= n_docs, exercising the unresolved-reference path in
-# both engines identically (the join drops it).
-
-
-def _synth_sitemap_corpus_df(docs: DataFrame) -> DataFrame:
-    h = (F.col("doc_id") % 200).cast("string")
-    d = F.col("doc_id").cast("string")
-    base = F.concat(F.lit("http://host"), h, F.lit(".example.com"))
-    urlsets = docs.select(
-        F.concat(base, F.lit("/sm"), d, F.lit(".xml")).alias("url"),
-        F.concat(
-            F.lit("<urlset><url><loc>"), base, F.lit("/p"), d,
-            F.lit("</loc></url><url><loc>"), base,
-            F.lit("/q?a=1&amp;b="), (F.col("doc_id") % 5).cast("string"),
-            F.lit("</loc></url></urlset>"),
-        ).alias("xml"),
-    )
-    idx = docs.filter(F.col("doc_id") % 20 == 0)
-    h1 = ((F.col("doc_id") + 1) % 200).cast("string")
-    d1 = (F.col("doc_id") + 1).cast("string")
-    indexes = idx.select(
-        F.concat(base, F.lit("/idx"), d, F.lit(".xml")).alias("url"),
-        F.concat(
-            F.lit("<sitemapindex><sitemap><loc>"), base, F.lit("/sm"), d,
-            F.lit(".xml</loc></sitemap><sitemap><loc>http://host"), h1,
-            F.lit(".example.com/sm"), d1,
-            F.lit(".xml</loc></sitemap></sitemapindex>"),
-        ).alias("xml"),
-    )
-    return urlsets.unionByName(indexes)
-
-
-_SITEMAP_CORPUS_SQL = """
-      SELECT 'http://host' || CAST(doc_id % 200 AS VARCHAR)
-               || '.example.com/sm' || CAST(doc_id AS VARCHAR)
-               || '.xml' AS url,
-             '<urlset><url><loc>http://host'
-               || CAST(doc_id % 200 AS VARCHAR) || '.example.com/p'
-               || CAST(doc_id AS VARCHAR)
-               || '</loc></url><url><loc>http://host'
-               || CAST(doc_id % 200 AS VARCHAR) || '.example.com/q?a=1&amp;b='
-               || CAST(doc_id % 5 AS VARCHAR)
-               || '</loc></url></urlset>' AS xml
-      FROM documents
-      UNION ALL
-      SELECT 'http://host' || CAST(doc_id % 200 AS VARCHAR)
-               || '.example.com/idx' || CAST(doc_id AS VARCHAR)
-               || '.xml',
-             '<sitemapindex><sitemap><loc>http://host'
-               || CAST(doc_id % 200 AS VARCHAR) || '.example.com/sm'
-               || CAST(doc_id AS VARCHAR)
-               || '.xml</loc></sitemap><sitemap><loc>http://host'
-               || CAST((doc_id + 1) % 200 AS VARCHAR) || '.example.com/sm'
-               || CAST(doc_id + 1 AS VARCHAR)
-               || '.xml</loc></sitemap></sitemapindex>'
-      FROM documents WHERE doc_id % 20 = 0
-"""
-
-
-_SITEMAP_LOC_DECODED_SQL = _decode_ent_sql(
-    "trim(UNNEST(regexp_extract_all(xml,"
-    " '(?is)<loc\\s*>\\s*(.*?)\\s*</loc\\s*>', 1)))"
-)
-
-
-@query(
-    "text_sitemap_index_resolve",
-    f"""
-    WITH smdocs AS ({_SITEMAP_CORPUS_SQL}),
-    tagged AS (
-      SELECT url, xml,
-             regexp_matches(xml, '(?is)<sitemapindex[\\s>]') AS is_index
-      FROM smdocs
-    ),
-    locs AS (
-      SELECT url, is_index,
-             {_SITEMAP_LOC_DECODED_SQL} AS loc
-      FROM tagged
-    ),
-    pages0 AS (
-      SELECT url AS root_url, loc, 0 AS depth
-      FROM locs WHERE NOT is_index
-    ),
-    child_pages AS (
-      SELECT c.url AS root_url, l.loc, 1 AS depth
-      FROM locs c JOIN locs l ON l.url = c.loc AND NOT l.is_index
-      WHERE c.is_index
-    )
-    SELECT root_url, loc, depth FROM pages0
-    UNION ALL
-    SELECT root_url, loc, depth FROM child_pages
-    """,
-)
-def text_sitemap_index_resolve_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One-level <sitemapindex> resolution over a fetched sitemap corpus
-    (operators/html.resolve_sitemap_index): root-tag classification, page
-    locs from urlsets at depth 0, child-loc -> corpus equi-join pulling
-    pages from indexed child urlsets at depth 1, missing children
-    dropped. The protocol forbids nested indexes, so depth 1 is the
-    complete walk — no driver loop. Classification + extraction are
-    zero-shuffle projections; the resolution join is the one exchange."""
-    from erigon_extract_spark.operators.html import resolve_sitemap_index
-
-    docs = _load(spark, sf_dir, "documents")
-    corpus = _synth_sitemap_corpus_df(docs)
-    return resolve_sitemap_index(corpus)
-
-
-# Feed corpus: even docs publish RSS 2.0 (channel link + two item links,
-# one whitespace-padded with conformant &amp; escaping), odd docs publish
-# Atom (self link + two entry links, one with &amp; and one upper-cased
-# tag) — both syndication dialects under one extractor.
-
-
-def _synth_feeds_df(docs: DataFrame) -> DataFrame:
-    h = (F.col("doc_id") % 200).cast("string")
-    d = F.col("doc_id").cast("string")
-    base = F.concat(F.lit("http://host"), h, F.lit(".example.com"))
-    rss = F.concat(
-        F.lit("<rss><channel><link>"), base,
-        F.lit("/</link><item><title>t</title><link> "), base,
-        F.lit("/r"), d, F.lit("?a=1&amp;b="),
-        (F.col("doc_id") % 5).cast("string"),
-        F.lit(" </link></item><item><link>"), base, F.lit("/s"), d,
-        F.lit("</link></item></channel></rss>"),
-    )
-    atom = F.concat(
-        F.lit('<feed><link href="'), base,
-        F.lit('/feed.xml" rel="self"/><entry><link href="'), base,
-        F.lit("/e"), d, F.lit("?x=1&amp;y="),
-        (F.col("doc_id") % 7).cast("string"),
-        F.lit('"/></entry><entry><LINK HREF="'), base, F.lit("/f"), d,
-        F.lit('"/></entry></feed>'),
-    )
-    return docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 2 == 0, rss).otherwise(atom).alias("xml"),
-    )
-
-
-_FEEDS_SQL = """
-      SELECT doc_id,
-             CASE WHEN doc_id % 2 = 0 THEN
-               '<rss><channel><link>http://host'
-                 || CAST(doc_id % 200 AS VARCHAR)
-                 || '.example.com/</link><item><title>t</title><link> http://host'
-                 || CAST(doc_id % 200 AS VARCHAR) || '.example.com/r'
-                 || CAST(doc_id AS VARCHAR) || '?a=1&amp;b='
-                 || CAST(doc_id % 5 AS VARCHAR)
-                 || ' </link></item><item><link>http://host'
-                 || CAST(doc_id % 200 AS VARCHAR) || '.example.com/s'
-                 || CAST(doc_id AS VARCHAR)
-                 || '</link></item></channel></rss>'
-             ELSE
-               '<feed><link href="http://host'
-                 || CAST(doc_id % 200 AS VARCHAR)
-                 || '.example.com/feed.xml" rel="self"/><entry><link href="http://host'
-                 || CAST(doc_id % 200 AS VARCHAR) || '.example.com/e'
-                 || CAST(doc_id AS VARCHAR) || '?x=1&amp;y='
-                 || CAST(doc_id % 7 AS VARCHAR)
-                 || '"/></entry><entry><LINK HREF="http://host'
-                 || CAST(doc_id % 200 AS VARCHAR) || '.example.com/f'
-                 || CAST(doc_id AS VARCHAR) || '"/></entry></feed>'
-             END AS xml
-      FROM documents
-"""
-
-_FEED_LINKS_CTES = f"""
-    rawfeed AS (
-      SELECT doc_id,
-             UNNEST(regexp_extract_all(xml,
-               '(?is)<link\\s*>\\s*(.*?)\\s*</link\\s*>', 1)) AS raw
-      FROM feeds
-      UNION ALL
-      SELECT doc_id,
-             UNNEST(regexp_extract_all(xml,
-               '(?is)<link\\b[^>]*\\bhref\\s*=\\s*"([^"]*)"', 1))
-      FROM feeds
-    ),
-    feedlinks AS (
-      SELECT doc_id, {_decode_ent_sql("raw")} AS link FROM rawfeed
-    )
-"""
-
-
-@query(
-    "text_feed_links",
-    f"""
-    WITH feeds AS ({_FEEDS_SQL}),
-    {_FEED_LINKS_CTES}
-    SELECT doc_id, link FROM feedlinks
-    """,
-)
-def text_feed_links_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS/Atom link extraction (operators/html.extract_feed_links) —
-    the third crawl-discovery feed: RSS text-content <link> elements and
-    Atom <link href> attributes in one pass, entity-decoded and
-    whitespace-trimmed. Zero-shuffle: two regexp_extract_all arrays
-    concatenated and exploded in a single projection."""
-    from erigon_extract_spark.operators.html import extract_feed_links
-
-    docs = _load(spark, sf_dir, "documents")
-    return extract_feed_links(_synth_feeds_df(docs))
-
-
-@query(
-    "corpus_feed_frontier",
-    f"""
-    WITH feeds AS ({_FEEDS_SQL}),
-    {_FEED_LINKS_CTES},
-    urls AS (SELECT doc_id, 0 AS variant, link AS url FROM feedlinks),
-    {_URL_CANON_CTES}
-    SELECT canonical_url, CAST(COUNT(*) AS BIGINT) AS n_urls,
-           MIN(doc_id) AS keep_doc
-    FROM canon GROUP BY canonical_url
-    """,
-)
-def corpus_feed_frontier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The feed-discovery frontier end to end: RSS/Atom corpus ->
-    extract_feed_links -> canonicalize_url -> URL dedup (dedup_url's
-    one-hash-exchange shape; keeper = smallest doc_id). Witnesses that
-    the feed extractor's output column feeds the existing frontier chain
-    unchanged — channel/self links shared by same-host feeds collapse to
-    one frontier row here, exactly the pre-fetch dedup a crawl wants."""
-    from erigon_extract_spark.operators.html import extract_feed_links
-    from erigon_extract_spark.operators.urls import canonicalize_url
-
-    docs = _load(spark, sf_dir, "documents")
-    links = extract_feed_links(_synth_feeds_df(docs))
-    return (
-        links.select(
-            canonicalize_url(F.col("link")).alias("canonical_url"),
-            "doc_id",
-        )
-        .groupBy("canonical_url")
-        .agg(F.count("*").alias("n_urls"), F.min("doc_id").alias("keep_doc"))
     )
 
 

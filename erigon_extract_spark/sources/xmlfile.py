@@ -1,7 +1,5 @@
 """XML document source — the feed/archive interchange format (Spark 4's
-built-in ``xml`` data source; the crawl family already PARSES xml-in-a-
-column via pure Catalyst expressions — this module is the file-level
-ingest twin).
+built-in ``xml`` data source).
 
 Rules this module encodes (mirroring sources/csvfile.py — each one a
 100 TB lesson):

@@ -3,7 +3,6 @@ from erigon_extract_spark.streaming.latest_state import (  # noqa: F401
     stream_latest_state,
     stream_ohlc,
     stream_session_windows,
-    stream_url_frontier,
     stream_windowed_counts,
 )
 from erigon_extract_spark.streaming.sessionize import (  # noqa: F401

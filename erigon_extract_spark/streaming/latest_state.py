@@ -140,43 +140,6 @@ def stream_dedup_within_watermark(
     ).dropDuplicatesWithinWatermark(dedup_cols)
 
 
-def stream_url_frontier(
-    stream: DataFrame,
-    robots: DataFrame,
-    *,
-    url_col: str = "url",
-    watermark_col: str = "ts",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """The crawl frontier as a stream: canonicalize each discovered URL
-    (operators/urls.canonicalize_url), drop robots-disallowed ones
-    against the BROADCAST per-host rule dimension, and emit each
-    canonical URL once — the streaming form of the batch
-    canonicalize -> robots_filter -> dedup_url chain (all three gated).
-
-    State shape: the only stateful operator is the watermark-bounded
-    dedup on the canonical string, so state is O(URLs inside the
-    lateness window), not O(crawl history); the canonicalize and robots
-    stages are stateless projections/broadcast joins that run map-side
-    in every micro-batch. At-least-once sources (Kafka replays, file
-    re-lists) re-emitting the same spelling OR a different spelling of
-    the same page inside the window dedup to one frontier row."""
-    from erigon_extract_spark.operators.urls import (
-        canonicalize_url,
-        robots_filter,
-    )
-
-    canon = stream.withColumn(
-        "canonical_url", canonicalize_url(F.col(url_col))
-    ).filter(F.col("canonical_url") != "")
-    allowed = robots_filter(canon, robots, url_col=url_col).filter(
-        F.col("allowed")
-    )
-    return allowed.withWatermark(
-        watermark_col, watermark_delay
-    ).dropDuplicatesWithinWatermark(["canonical_url"])
-
-
 def stream_cms(
     stream: DataFrame,
     key_col: str,

@@ -59,8 +59,9 @@ def test_current_headline_set_fits_with_ratios():
 
 
 def test_aux_fields_shed_before_queries_touched():
-    # 28-char synthetic names overflow deliberately, forcing a full shed
-    s = _summary(len(HEADLINE))
+    # names with a 28-char run overflow deliberately at the real headline
+    # count, forcing the provenance fields to shed
+    s = _summary(len(HEADLINE), name_len=28)
     before = copy.deepcopy(s)
     line = summary_line(s)
     assert s == before  # the caller's dict is not shed or re-rounded

@@ -1,5 +1,5 @@
 """Unit cases for operators/urls — each normalization rule pinned on a
-hand-written URL (the crafted-fixture strategy of tests/test_html.py)."""
+hand-written URL."""
 
 from __future__ import annotations
 
@@ -93,15 +93,3 @@ def test_robots_filter_column_collision(spark):
     assert [r["__host"] for r in out] == ["keepme", "keepme"]
     assert [r["__rules"] for r in out] == ["keep2", "keep2"]
 
-
-def test_extract_links(spark):
-    from erigon_extract_spark.operators.html import extract_links
-
-    html = ('<a href="http://x.com/1">one</a><A HREF="/two">2</A>'
-            "<a name=anchor>no href</a>"
-            '<a href="/q?a=1&amp;b=2">conformant escaping</a>')
-    df = spark.createDataFrame([(1, html)], "doc_id long, html string")
-    hrefs = [r["href"] for r in extract_links(df).collect()]
-    # conformant HTML escapes '&' as '&amp;' in attributes: the extractor
-    # entity-decodes so canonicalize_url sees the real param separator
-    assert hrefs == ["http://x.com/1", "/two", "/q?a=1&b=2"]
